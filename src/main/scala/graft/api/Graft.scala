@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 
 import graft.link.{LinkOptions, Mention}
@@ -210,6 +210,31 @@ object Graft {
         else DocTriples.fromDoc(if (id == null) "" else id, text, bc.value, opts)))
   }
 
+  /** The table operator annotate, annotateTerms and triples run
+    * through. ANY id type is cast to string (a bigint doc_id would
+    * otherwise fail encoder resolution before any work runs) and rows
+    * with a null text are skipped. Under --sldi / --sldiID / --blanklines
+    * N the text cell is a raw input STREAM, segmented into records
+    * before `f` (skr_text_processing.pl:142-178); AAs are record-local,
+    * exactly like the reference's per-record text objects.
+    * MedlineReader.records is the single shared dispatch, so ids and
+    * record boundaries cannot drift between these entries and the server.
+    */
+  private def perRecord[T: Encoder](df: DataFrame, idCol: String, textCol: String,
+      opts: LinkOptions, umls: Broadcast[UmlsTables])(
+      f: (String, String, UmlsTables) => IterableOnce[T]): Dataset[T] = {
+    import df.sparkSession.implicits._
+    df.select(df.col(idCol).cast("string"), df.col(textCol).cast("string"))
+      .as[(String, String)].mapPartitions { it =>
+        val t = umls.value
+        it.flatMap { case (id, text) =>
+          if (text == null) Iterator.empty
+          else graft.sources.MedlineReader.records(id, text, opts)
+            .iterator.flatMap { case (url, rt) => f(url, rt, t) }
+        }
+      }
+  }
+
   /** Annotate any table: one mention row per linked concept occurrence.
     * `textCol` must hold plain text (use Extract.htmlToText upstream for
     * html). Runs the full per-document kernel map-side against the
@@ -224,25 +249,8 @@ object Graft {
     val bc = umls.getOrElse(Pipeline.broadcastUmls(spark))
     // -z dispatches to term processing: annotate is THE flag-driven entry
     if (opts.termProcessing) return annotateTerms(df, idCol, textCol, opts, Some(bc))
-    // ANY id type: cast to string (a bigint doc_id would otherwise fail
-    // encoder resolution before any work runs)
-    // --sldi / --sldiID / --blanklines N: the text cell is a raw input
-    // STREAM, segmented into records before the kernel
-    // (skr_text_processing.pl:142-178). AAs are record-local, exactly
-    // like the reference's per-record text objects. MedlineReader
-    // .records is the single shared dispatch (ids must not drift
-    // between annotate, triples, and the server).
-    df.select(df.col(idCol).cast("string"), df.col(textCol).cast("string"))
-      .as[(String, String)].mapPartitions { it =>
-        val t = bc.value
-        it.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty
-          else graft.sources.MedlineReader.records(id, text, opts)
-            .iterator.flatMap { case (url, rt) =>
-              DocKernel.mentions(url, rt, t, opts)
-            }
-        }
-      }.toDF()
+    perRecord(df, idCol, textCol, opts, bc)((url, text, t) =>
+      DocKernel.mentions(url, text, t, opts)).toDF()
   }
 
   /** Term processing (-z): each row's text is ONE dictionary term; the
@@ -254,23 +262,10 @@ object Graft {
       umls: Option[Broadcast[UmlsTables]] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val bc = umls.getOrElse(Pipeline.broadcastUmls(spark))
-    df.select(df.col(idCol).cast("string"), df.col(termCol).cast("string"))
-      .as[(String, String)].mapPartitions { it =>
-        val t = bc.value
-        it.flatMap { case (id, term) =>
-          if (term == null) Iterator.empty
-          // segmentation applies in term mode too (-z --sldi = one TERM
-          // per line): records() is the single shared dispatch, so ids
-          // and record boundaries cannot drift between annotate,
-          // annotateTerms, and the server (which routes -z through the
-          // same path)
-          else graft.sources.MedlineReader.records(id, term, opts)
-            .iterator.flatMap { case (url, rt) =>
-              DocKernel.termMentions(url, rt, t, opts)
-            }
-        }
-      }.toDF()
+    // segmentation applies in term mode too (-z --sldi = one TERM per
+    // line), through the same table operator as annotate
+    perRecord(df, idCol, termCol, opts, umls.getOrElse(Pipeline.broadcastUmls(spark)))(
+      (url, term, t) => DocKernel.termMentions(url, term, t, opts)).toDF()
   }
 
   /** Triples from any table, map-side end to end (document-local WSD +
@@ -281,18 +276,9 @@ object Graft {
       umls: Option[Broadcast[UmlsTables]] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val bc = umls.getOrElse(Pipeline.broadcastUmls(spark))
-    df.select(df.col(idCol).cast("string"), df.col(textCol).cast("string"))
-      .as[(String, String)].mapPartitions { it =>
-        val t = bc.value
-        it.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty
-          else graft.sources.MedlineReader.records(id, text, opts)
-            .iterator.flatMap { case (url, rt) =>
-              DocTriples.fromDoc(url, rt, t, opts)
-            }
-        }
-      }.toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
+    perRecord(df, idCol, textCol, opts, umls.getOrElse(Pipeline.broadcastUmls(spark)))(
+      (url, text, t) => DocTriples.fromDoc(url, text, t, opts))
+      .toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
   }
 
   /** Canonicalized graph from any table (annotate -> triples -> rollup). */

@@ -238,8 +238,15 @@ object GraftFunctions {
       CappedCollectSetLong(exprs.head, cap)
     }
 
+  /** Registers the graft functions on the session once: a session whose
+    * registry already holds them (an earlier call, or a session built
+    * with [[GraftExtensions]]) is left as it is, so repeated calls do not
+    * log "replaced a previously registered function" warnings.
+    */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
+    if (registry.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine"))) return
     registry.createOrReplaceTempFunction("graft_cosine",
       (exprs: Seq[Expression]) => CosineSimilarity(exprs.head, exprs(1)),
       "built-in")

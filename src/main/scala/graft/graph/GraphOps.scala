@@ -103,6 +103,7 @@ object GraphOps {
     */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 64,
       preOriented: Boolean = false): DataFrame = {
+    require(maxRounds >= 1, s"connectedComponents needs maxRounds >= 1, got $maxRounds")
     def orient(df: DataFrame): DataFrame =
       if (preOriented) df
       else df

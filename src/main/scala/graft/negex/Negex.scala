@@ -68,19 +68,14 @@ object Negex {
     */
   def mark(sentToks: Vector[Tok], mentions: Vector[Mention], umls: UmlsTables,
       opts: LinkOptions = LinkOptions.default): Vector[Mention] =
-    analyze(sentToks, mentions, umls, opts)._1
+    markWithRecords(sentToks, mentions, umls, opts)._1
 
-  /** The negation records of one sentence — same decision procedure as
-    * [[mark]] (one shared pass), grouped per trigger in trigger order;
-    * triggers that negate nothing emit no record, exactly like the
-    * reference's template list.
+  /** [[mark]] plus the negation records of the sentence from the same
+    * pass, grouped per trigger in trigger order; triggers that negate
+    * nothing emit no record, exactly like the reference's template list.
     */
-  def negations(sentToks: Vector[Tok], mentions: Vector[Mention],
-      umls: UmlsTables, opts: LinkOptions = LinkOptions.default): Vector[NegRecord] =
-    analyze(sentToks, mentions, umls, opts)._2
-
-  private def analyze(sentToks: Vector[Tok], mentions: Vector[Mention],
-      umls: UmlsTables, opts: LinkOptions)
+  def markWithRecords(sentToks: Vector[Tok], mentions: Vector[Mention],
+      umls: UmlsTables, opts: LinkOptions = LinkOptions.default)
       : (Vector[Mention], Vector[NegRecord]) = {
     if (mentions.isEmpty) return (mentions, Vector.empty)
     val words = Tokenizer.wordToks(sentToks)

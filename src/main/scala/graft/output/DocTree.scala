@@ -1,16 +1,15 @@
 package graft.output
 
-import graft.aa.AaDetector
-import graft.link.{Candidate, Mention}
+import graft.link.{Candidate, Mention, PhraseChunker}
 import graft.negex.Negex
-import graft.text.Tokenizer
+import graft.pipeline.DocKernel
 import graft.umls.UmlsTables
 
 /** The per-document serialization tree both structured writers render —
-  * one kernel walk ([[graft.pipeline.DocKernel.phraseMmo]] + AA
-  * detection + the shared NegEx pass), two renderers
-  * ([[JsonMmoOutput]] --JSONf, [[XmlMmoOutput]] --XMLf), so the two
-  * formats can never disagree on content.
+  * a projection of one [[graft.pipeline.DocKernel.analyze]] (its phrase
+  * traces, AA records and a NegEx pass under the run's options), two
+  * renderers ([[JsonMmoOutput]] --JSONf, [[XmlMmoOutput]] --XMLf), so
+  * the two formats can never disagree on content.
   */
 private[output] object DocTree {
 
@@ -37,33 +36,27 @@ private[output] object DocTree {
 
   def build(url: String, text: String, umls: UmlsTables,
       opts: graft.link.LinkOptions = graft.link.LinkOptions.default): Doc = {
-    val byPhrase = graft.pipeline.DocKernel.phraseMmo(url, text, umls, opts)
-    val toks = Tokenizer.tokenize(text)
-    val aaRecs = AaDetector.findAaRecords(toks)
-    val bySent = byPhrase.groupBy(_.sent.sentNo).toVector.sortBy(_._1)
-
-    // one shared NegEx pass per sentence over the mapping candidates —
-    // the same decision procedure the mention path runs, so the
-    // per-candidate Negated flags and the Negations section can never
-    // disagree
-    val sentNeg: Map[Int, (Set[(Int, String)], Vector[Negex.NegRecord])] =
-      bySent.map { case (sentNo, ps) =>
-        val sent = ps.head.sent
-        val ms = ps.flatMap(_.mappings.flatMap(_._2)).distinct.map(c =>
-          Mention(url, sentNo, c.start, c.end - c.start, c.cui, c.score,
+    val a = DocKernel.analyze(url, text, umls, opts)
+    // one NegEx pass per sentence over the mapping candidates under the
+    // run's options — the decision procedure the mention rows run, so
+    // the per-candidate Negated flags, the Negations section and the
+    // mentions can never disagree
+    val sentNeg: Vector[(Set[(Int, String)], Vector[Negex.NegRecord])] =
+      a.sentences.map { s =>
+        val ms = s.phrases.flatMap(_.bestMappings.flatMap(_._2)).distinct.map(c =>
+          Mention(url, s.sent.sentNo, c.start, c.end - c.start, c.cui, c.score,
             c.semTypes, negated = false, text.substring(c.start, c.end),
             c.posInfo, c.sources, term = c.str))
-        val marked = Negex.mark(sent.toks, ms, umls)
-        val negKeys = marked.filter(_.negated).map(m => (m.start, m.cui)).toSet
-        sentNo -> ((negKeys, Negex.negations(sent.toks, ms, umls)))
-      }.toMap
+        val (marked, records) = Negex.markWithRecords(s.sent.toks, ms, umls, opts)
+        (marked.filter(_.negated).map(m => (m.start, m.cui)).toSet, records)
+      }
 
     // AACUIs: the concepts whose mapped surface form IS the AA (the
     // reference carries the CUI list resolved for the acronym's own
     // occurrences)
-    val allCands = byPhrase.flatMap(_.mappings.flatMap(_._2))
+    val allCands = a.sentences.flatMap(_.phrases.flatMap(_.bestMappings.flatMap(_._2)))
     val seenAa = scala.collection.mutable.Set[String]()
-    val aaNodes = aaRecs.flatMap { r =>
+    val aaNodes = a.aaRecs.flatMap { r =>
       val key = r.acronymText.toLowerCase
       if (key.isEmpty || seenAa.contains(key)) None
       else {
@@ -77,29 +70,27 @@ private[output] object DocTree {
       }
     }
 
-    val uttNodes = bySent.map { case (sentNo, ps) =>
-      val sent = ps.head.sent
-      val negKeys = sentNeg(sentNo)._1
-      val phraseNodes = ps.filter(_.phrase.words.nonEmpty).map { p =>
+    val uttNodes = a.sentences.zip(sentNeg).map { case (s, (negKeys, _)) =>
+      val phraseNodes = s.phrases.filter(_.phrase.words.nonEmpty).map { p =>
         val pStart = p.phrase.words.head.start
         val pEnd = p.phrase.words.last.end
-        val syn = graft.link.PhraseChunker.syntaxMap(p.phrase, umls)
+        val syn = PhraseChunker.syntaxMap(p.phrase, umls, s.tagsByStart)
         val units = p.phrase.words.zipWithIndex.map { case (w, i) =>
           SyntaxUnit(if (i == p.phrase.headIdx) "head" else "mod",
             text.substring(w.start, w.end),
             syn.getOrElse(w.word, "noun"), Vector(w.word))
         }
-        val mappings = p.mappings.map { case (score, cands) =>
+        val mappings = p.bestMappings.map { case (score, cands) =>
           MappingNode(score,
             cands.map(c => CandNode(c, negKeys((c.start, c.cui)))))
         }
         PhraseNode(text.substring(pStart, pEnd), units, pStart, pEnd - pStart,
           p.total, p.excluded, p.pruned, p.remaining, mappings)
       }
-      UttNode(url, "tx", sentNo + 1, text.substring(sent.start, sent.end),
-        sent.start, sent.end - sent.start, phraseNodes)
+      UttNode(url, "tx", s.sent.sentNo + 1, text.substring(s.sent.start, s.sent.end),
+        s.sent.start, s.sent.end - s.sent.start, phraseNodes)
     }
 
-    Doc(aaNodes, bySent.flatMap(s => sentNeg(s._1)._2), uttNodes)
+    Doc(aaNodes, sentNeg.flatMap(_._2), uttNodes)
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
 
 import graft.aa.AaDetector
-import graft.pipeline.Page
-import graft.text.{Extract, Tokenizer}
+import graft.pipeline.{Page, Pipeline}
+import graft.text.Tokenizer
 import graft.umls.UmlsTables
 
 /** Output writers re-expressing the reference's serialization surface
@@ -106,37 +106,34 @@ object JsonOutput {
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val udas = opts.udas
-    pages.flatMap { p =>
-      if (p.lang != "en") Iterator.empty
-      else {
-        val toks = Tokenizer.tokenize(Extract.htmlToText(p.html))
-        val recs = AaDetector.findAaRecords(toks)
-        val seen = scala.collection.mutable.Set[String]()
-        val docRows = recs.iterator.flatMap { r =>
-          val key = r.acronymText.toLowerCase
-          // first definition wins (add_to_avl_once) and a UDA overrides
-          if (key.isEmpty || seen.contains(key) || udas.contains(key))
-            None
-          else {
-            seen += key
-            val aaText = r.acronymText
-            val expText = r.expansionText
-            Some((p.url, key,
-              r.expToks.filter(t => !t.isWs && !t.isPunct && t.typ != "pe")
-                .flatMap(t => Tokenizer.tokenizeMmLc(t.lc)).mkString(" "),
-              aaText, expText, r.aaToks.length, aaText.length,
-              r.expToks.length, expText.length,
-              s"${r.aaToks.head.start}:${aaText.length}"))
-          }
+    Pipeline.perPage(pages, umls) { (p, text, _) =>
+      val toks = Tokenizer.tokenize(text)
+      val recs = AaDetector.findAaRecords(toks)
+      val seen = scala.collection.mutable.Set[String]()
+      val docRows = recs.iterator.flatMap { r =>
+        val key = r.acronymText.toLowerCase
+        // first definition wins (add_to_avl_once) and a UDA overrides
+        if (key.isEmpty || seen.contains(key) || udas.contains(key))
+          None
+        else {
+          seen += key
+          val aaText = r.acronymText
+          val expText = r.expansionText
+          Some((p.url, key,
+            r.expToks.filter(t => !t.isWs && !t.isPunct && t.typ != "pe")
+              .flatMap(t => Tokenizer.tokenizeMmLc(t.lc)).mkString(" "),
+            aaText, expText, r.aaToks.length, aaText.length,
+            r.expToks.length, expText.length,
+            s"${r.aaToks.head.start}:${aaText.length}"))
         }
-        val udaRows = udas.iterator.map { case (k, exp) =>
-          val expText = exp.mkString(" ")
-          (p.url, k, exp.mkString(" "), k, expText,
-            Tokenizer.tokenize(k).length, k.length,
-            Tokenizer.tokenize(expText).length, expText.length, "")
-        }
-        (docRows ++ udaRows).toVector
       }
+      val udaRows = udas.iterator.map { case (k, exp) =>
+        val expText = exp.mkString(" ")
+        (p.url, k, exp.mkString(" "), k, expText,
+          Tokenizer.tokenize(k).length, k.length,
+          Tokenizer.tokenize(expText).length, expText.length, "")
+      }
+      docRows ++ udaRows
     }.toDF("url", "acronym", "expansion", "aa_text", "exp_text",
       "aa_tokens", "aa_length", "exp_tokens", "exp_length", "pos_info")
   }

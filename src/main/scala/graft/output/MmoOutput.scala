@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 
 import graft.link.Candidate
-import graft.pipeline.{DocKernel, Page}
-import graft.text.Extract
+import graft.pipeline.{DocKernel, Page, Pipeline}
 import graft.umls.UmlsTables
 
 /** MMO machine-output term writer: the reference's --machine_output
@@ -67,34 +66,32 @@ object MmoOutput {
   def document(url: String, text: String, umls: UmlsTables,
       label: String => Int => String = u => n => s"$u.tx.$n",
       opts: graft.link.LinkOptions = graft.link.LinkOptions.default): Vector[String] = {
-    val byPhrase = DocKernel.phraseMmo(url, text, umls, opts)
-    byPhrase.groupBy(_.sent.sentNo).toVector.sortBy(_._1).flatMap {
-      case (sentNo, ps) =>
-        val sent = ps.head.sent
-        val sentText = text.substring(sent.start, sent.end)
-        val utt = s"utterance(${q(label(url)(sentNo + 1))},${dq(sentText)}," +
-          s"${sent.start}/${sent.end - sent.start},[])."
-        val phraseLines = ps.flatMap { p =>
-          if (p.phrase.words.isEmpty) Vector.empty
-          else {
-            val pStart = p.phrase.words.head.start
-            val pEnd = p.phrase.words.last.end
-            val pText = text.substring(pStart, pEnd)
-            val syntax = p.phrase.words.zipWithIndex.map { case (w, i) =>
-              val role = if (i == p.phrase.headIdx) "head" else "mod"
-              s"$role([inputmatch([${q(text.substring(w.start, w.end))}])," +
-                s"tokens([${q(w.word)}])])"
-            }.mkString("[", ",", "]")
-            val maps = p.mappings.map { case (s, cs) =>
-              s"map(${-s},${cs.map(evTerm).mkString("[", ",", "]")})"
-            }.mkString("[", ",", "]")
-            Vector(
-              s"phrase(${q(pText)},$syntax,$pStart/${pEnd - pStart},[]).",
-              s"candidates(${p.total},${p.excluded},${p.pruned},${p.remaining},[]).",
-              s"mappings($maps).")
-          }
+    DocKernel.analyze(url, text, umls, opts).sentences.flatMap { sa =>
+      val sent = sa.sent
+      val sentText = text.substring(sent.start, sent.end)
+      val utt = s"utterance(${q(label(url)(sent.sentNo + 1))},${dq(sentText)}," +
+        s"${sent.start}/${sent.end - sent.start},[])."
+      val phraseLines = sa.phrases.flatMap { p =>
+        if (p.phrase.words.isEmpty) Vector.empty
+        else {
+          val pStart = p.phrase.words.head.start
+          val pEnd = p.phrase.words.last.end
+          val pText = text.substring(pStart, pEnd)
+          val syntax = p.phrase.words.zipWithIndex.map { case (w, i) =>
+            val role = if (i == p.phrase.headIdx) "head" else "mod"
+            s"$role([inputmatch([${q(text.substring(w.start, w.end))}])," +
+              s"tokens([${q(w.word)}])])"
+          }.mkString("[", ",", "]")
+          val maps = p.bestMappings.map { case (s, cs) =>
+            s"map(${-s},${cs.map(evTerm).mkString("[", ",", "]")})"
+          }.mkString("[", ",", "]")
+          Vector(
+            s"phrase(${q(pText)},$syntax,$pStart/${pEnd - pStart},[]).",
+            s"candidates(${p.total},${p.excluded},${p.pruned},${p.remaining},[]).",
+            s"mappings($maps).")
         }
-        (utt +: phraseLines) :+ "'EOU'."
+      }
+      (utt +: phraseLines) :+ "'EOU'."
     }
   }
 
@@ -104,15 +101,8 @@ object MmoOutput {
   def mmoLines(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    pages.mapPartitions { it =>
-      val t = umls.value
-      it.flatMap { p =>
-        if (p.lang != "en") Iterator.empty
-        else {
-          val lines = document(p.url, Extract.htmlToText(p.html), t)
-          lines.zipWithIndex.iterator.map { case (l, i) => (p.url, i, l) }
-        }
-      }
+    Pipeline.perPage(pages, umls) { (p, text, t) =>
+      document(p.url, text, t).zipWithIndex.iterator.map { case (l, i) => (p.url, i, l) }
     }.toDF("url", "line_no", "mmo")
   }
 }

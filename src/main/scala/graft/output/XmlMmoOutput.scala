@@ -3,8 +3,7 @@ package graft.output
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 
-import graft.pipeline.Page
-import graft.text.Extract
+import graft.pipeline.{Page, Pipeline}
 import graft.umls.UmlsTables
 
 /** The reference's --XMLf document element (generate_and_print_xml,
@@ -163,12 +162,7 @@ object XmlMmoOutput {
   def xmlDocs(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    pages.mapPartitions { it =>
-      val t = umls.value
-      it.flatMap { p =>
-        if (p.lang != "en") Iterator.empty
-        else Iterator((p.url, document(p.url, Extract.htmlToText(p.html), t)))
-      }
-    }.toDF("url", "xml")
+    Pipeline.perPage(pages, umls)((p, text, t) => Iterator((p.url, document(p.url, text, t))))
+      .toDF("url", "xml")
   }
 }

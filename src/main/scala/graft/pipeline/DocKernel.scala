@@ -3,15 +3,20 @@ package graft.pipeline
 import graft.aa.AaDetector
 import graft.link._
 import graft.negex.Negex
-import graft.text.{Sentences, Tokenizer}
+import graft.text.{Sentence, Sentences, Tok, Tokenizer}
 import graft.umls.UmlsTables
 
-/** The per-document NLP kernel: text -> candidate mentions. Pure function
-  * over one document plus the broadcast UMLS tables — embarrassingly
-  * parallel, no cross-document state (AAs are document-local, SURVEY §2.3).
-  * Runs inside `mapPartitions` on executors; emits ALL best-mapping
-  * candidates — the WSD pass (window-ranked dedup per span) happens
-  * corpus-level in the DataFrame plan (SURVEY §2.11 W1).
+/** The per-document NLP kernel: one [[DocKernel.analyze]] of a document
+  * (text -> sentences -> phrases -> per-phrase candidates and mappings)
+  * and projections of its result — the mention rows, the MMO phrase view
+  * and the JSON/XML document tree (graft.output.DocTree) — so every
+  * output reads the same structures, like the reference's
+  * generate_MMO_terms. Pure function over one document plus the broadcast
+  * UMLS tables — embarrassingly parallel, no cross-document state (AAs
+  * are document-local, SURVEY §2.3). Runs inside `mapPartitions` on
+  * executors; emits ALL best-mapping candidates — the WSD pass
+  * (window-ranked dedup per span) happens corpus-level in the DataFrame
+  * plan (SURVEY §2.11 W1).
   */
 object DocKernel {
 
@@ -19,9 +24,7 @@ object DocKernel {
     * -o/-g/-K/-D in force — check_generate_initial_evaluations_
     * control_options_1, skr.pl:4853-4859), a phrase whose full text is a
     * stop phrase under a category overlapping the phrase's tags produces
-    * NO evaluations; -K ignore_stop_phrases disables the skip. ONE
-    * implementation — the mentions and MMO paths must never disagree on
-    * when this fires (the reference's skip sits upstream of both).
+    * NO evaluations; -K ignore_stop_phrases disables the skip.
     */
   private def stopAnalysisSkip(phrase: Phrase, umls: UmlsTables,
       tagsByStart: Map[Int, String], opts: LinkOptions): Boolean = {
@@ -61,21 +64,43 @@ object DocKernel {
       cands.filter(coveredWords(_) == maxCov)
     }
 
-  /** -y WSD applied document-locally: one concept per span, ranked
-    * exactly like the corpus-level Pipeline.wsdDedup window. ONE
-    * implementation of the ranking exists — DocTriples.wsdLocal (the
-    * /triples path uses it too); this wrapper only adds the
-    * deterministic output ordering.
+  /** One phrase's pass through the per-phrase chain (generate_MMO_terms,
+    * skr/skr_utilities.pl:1273-1416 + the MMOPhraseTerm shape,
+    * skr/skr.pl:946-959): the candidate COUNTS the MMO/JSON/XML writers
+    * print (Total/Excluded/Pruned/Remaining) and the kept mappings, whose
+    * flattened union is what the mention rows carry.
     */
-  private def wsdLocal(ms: Vector[Mention], umls: UmlsTables): Vector[Mention] =
-    DocTriples.wsdLocal(ms, umls)
-      .sortBy(m => (m.sentNo, m.start, m.len, m.cui))
+  final case class PhraseTrace(phrase: Phrase,
+      total: Int, excluded: Int, pruned: Int, remaining: Int,
+      bestMappings: Vector[(Int, Vector[Candidate])]) {
+    /** The mapping candidates, one per (cui, start, end). */
+    def candidates: Vector[Candidate] =
+      bestMappings.flatMap(_._2).distinctBy(c => (c.cui, c.start, c.end))
+  }
 
-  def mentions(url: String, text: String, umls: UmlsTables,
-      opts: LinkOptions = LinkOptions.default): Vector[Mention] = {
-    if (text.isEmpty) return Vector.empty
+  /** One sentence of an [[Analysis]]: its tagger categories (empty
+    * unless --tagged) and the trace of every phrase it chunks to, in
+    * order; a punctuation-only sentence has no phrases.
+    */
+  final case class SentenceAnalysis(sent: Sentence, tagsByStart: Map[Int, String],
+      phrases: Vector[PhraseTrace])
+
+  /** The whole per-document analysis every output is a projection of:
+    * [[mentions]], the MMO writer and the JSON/XML document tree.
+    */
+  final case class Analysis(url: String, text: String, opts: LinkOptions,
+      toks: Vector[Tok], sents: Vector[Sentence], aaRecs: Vector[AaDetector.AaRecord],
+      aas: VariantGather.AaDict, sentences: Vector[SentenceAnalysis])
+
+  /** Tokenize, split, find AAs, tag, chunk with the composite/AA-span/
+    * conj glue, drop --aadef_exact definition phrases and run the
+    * per-phrase chain on every phrase stop_analysis does not skip — once
+    * per document, whatever the output.
+    */
+  def analyze(url: String, text: String, umls: UmlsTables,
+      opts: LinkOptions = LinkOptions.default): Analysis = {
     val toks = Tokenizer.tokenize(text)
-    val sents = Sentences.split(toks)
+    val sents = if (toks.isEmpty) Vector.empty[Sentence] else Sentences.split(toks)
     // A6: user-defined AAs overlay the document-discovered ones
     val aaRecs = AaDetector.findAaRecords(toks, sents)
     val aas = AaDetector.toMap(aaRecs) ++ opts.udas
@@ -85,9 +110,9 @@ object DocKernel {
     val defSpans: Vector[(Int, Int)] =
       if (opts.aaDefExact) aaRecs.map(r => (r.defStart, r.defEnd)).distinct
       else Vector.empty
-    def inAaDef(pStart: Int, pEnd: Int): Boolean =
-      defSpans.exists(s => pStart >= s._1 && pEnd <= s._2)
-    val out = sents.flatMap { sent =>
+    def inAaDef(p: Phrase): Boolean = p.words.nonEmpty && defSpans.exists(s =>
+      p.words.head.start >= s._1 && p.words.last.end <= s._2)
+    val sentences = sents.map { sent =>
       // tagged mode (P1): the deterministic bigram tagger assigns one
       // category per word; tags drive chunk membership (P5 analogue) and
       // V10 variant filtering. Default OFF = the pinned --no_tagging mode.
@@ -111,122 +136,82 @@ object DocKernel {
       val phrases1 =
         if (opts.aaSpanMerge) PhraseChunker.aaSpanGlue(phrases0, sent.toks, aas)
         else phrases0
-      val phrases =
+      val phrases2 =
         if (opts.conjMerge) PhraseChunker.conjGlue(phrases1, sent.toks, umls)
         else phrases1
-      def stopAnalysis(phrase: Phrase): Boolean =
-        stopAnalysisSkip(phrase, umls, tagsByStart, opts)
-      val sentMentions = phrases.flatMap { phrase =>
-        // stop-phrase analogue: single closed-class or 1-char phrases skip
+      val phrases = if (defSpans.isEmpty) phrases2 else phrases2.filterNot(inAaDef)
+      SentenceAnalysis(sent, tagsByStart, phrases.map { phrase =>
+        // stop-phrase analogue: single closed-class or 1-char phrases
+        // skip; the writers show a skipped phrase with 0 candidates
         if (phrase.words.isEmpty ||
           (phrase.words.length == 1 && phrase.words.head.word.length <= 1) ||
-          inAaDef(phrase.words.head.start, phrase.words.last.end) ||
-          stopAnalysis(phrase)) Vector.empty
-        else {
-          // a reference-exact composite phrase evaluates under
-          // CompositeOptions = [term_processing, ignore_word_order]
-          // (get_composite_phrases, skr.pl:4629): -i scoring plus the
-          // term-mode best-coverage discard
-          val phOpts =
-            if (phrase.composite) opts.copy(ignoreWordOrder = true) else opts
-          val varIndex = VariantGather.gather(phrase, umls, aas, tagsByStart, phOpts)
-          val cands0 = Evaluator.evaluatePhrase(phrase, umls, varIndex, phOpts)
-          // reference order: filter first (skr.pl:913,1408), then the F3
-          // subsumption filter (skr.pl:1312-1318), THEN prune inside
-          // mapping construction (skr.pl:3452-3459) with the adaptive
-          // threshold + grid gate (G1/G3)
-          val pruned = graft.link.Pruning.adaptivePrune(
-            Evaluator.filterSubsumed(optionFilters(cands0, phOpts), phOpts),
-            phrase.words.length, phOpts)
-          val cands = if (phrase.composite) bestCoverageOnly(pruned) else pruned
-          val best = Evaluator.bestMappingCandidates(cands, phrase.words.length,
-            phOpts, varIndex.keySet)
-          lazy val syntax = PhraseChunker.syntaxMap(phrase, umls, tagsByStart)
-          best.map { c =>
-            val mText = text.substring(c.start, c.end)
-            Mention(url, sent.sentNo, c.start, c.end - c.start, c.cui, c.score,
-              c.semTypes, negated = false,
-              mText, c.posInfo, c.sources,
-              term = c.str, lexCat = mentionLexCat(mText, c, syntax, aas))
-          }
-        }
-      }
-      Negex.mark(sent.toks, sentMentions, umls, opts)
+          stopAnalysisSkip(phrase, umls, tagsByStart, opts))
+          PhraseTrace(phrase, 0, 0, 0, 0, Vector.empty)
+        else phraseTrace(phrase, umls, aas, tagsByStart, opts, termMode = false)
+      })
     }
-    if (opts.wsd) wsdLocal(out, umls) else out
+    Analysis(url, text, opts, toks, sents, aaRecs, aas, sentences)
   }
 
-  /** Rich per-phrase analysis for the MMO machine-output writer
-    * (generate_MMO_terms, skr/skr_utilities.pl:1273-1416 + the
-    * MMOPhraseTerm shape, skr/skr.pl:946-959): the same stages as
-    * [[mentions]] — chunk, gather, evaluate, filter, prune, map — but
-    * keeping the per-phrase candidate COUNTS (Total/Excluded/Pruned/
-    * Remaining) and the kept mappings instead of flattening to mentions.
+  /** The per-phrase chain: gather, evaluate, filter, prune, map.
+    * `termMode` is -z term processing: best-coverage-only always, and
+    * mapping construction without the variant-index words.
     */
-  final case class PhraseMmo(
-      sent: graft.text.Sentence, phrase: Phrase,
-      total: Int, excluded: Int, pruned: Int, remaining: Int,
-      mappings: Vector[(Int, Vector[Candidate])])
+  private def phraseTrace(phrase: Phrase, umls: UmlsTables,
+      aas: VariantGather.AaDict, tagsByStart: Map[Int, String],
+      opts: LinkOptions, termMode: Boolean): PhraseTrace = {
+    // a reference-exact composite phrase evaluates under
+    // CompositeOptions = [term_processing, ignore_word_order]
+    // (get_composite_phrases, skr.pl:4629): -i scoring plus the
+    // term-mode best-coverage discard
+    val phOpts = if (phrase.composite) opts.copy(ignoreWordOrder = true) else opts
+    val varIndex = VariantGather.gather(phrase, umls, aas, tagsByStart, phOpts)
+    // reference order: filter first (skr.pl:913,1408), then the F3
+    // subsumption filter (skr.pl:1312-1318), THEN prune inside mapping
+    // construction (skr.pl:3452-3459) with the adaptive threshold + grid
+    // gate (G1/G3)
+    val filtered = optionFilters(
+      Evaluator.evaluatePhrase(phrase, umls, varIndex, phOpts), phOpts)
+    val unsubsumed = Evaluator.filterSubsumed(filtered, phOpts)
+    val pruned = Pruning.adaptivePrune(unsubsumed, phrase.words.length, phOpts)
+    val cands = if (phrase.composite || termMode) bestCoverageOnly(pruned) else pruned
+    val maps = Evaluator.bestMappings(cands, phrase.words.length, phOpts,
+      if (termMode) Set.empty else varIndex.keySet)
+    // reference count semantics (skr.pl:914-929): Total = after the
+    // option filters, Excluded = dropped by F3 subsumption, Pruned =
+    // dropped by G1/G2, Remaining = what mappings see
+    PhraseTrace(phrase, filtered.length, filtered.length - unsubsumed.length,
+      unsubsumed.length - cands.length, cands.length, maps)
+  }
 
-  def phraseMmo(url: String, text: String, umls: UmlsTables,
-      opts: LinkOptions = LinkOptions.default): Vector[PhraseMmo] = {
-    if (text.isEmpty) return Vector.empty
-    val toks = Tokenizer.tokenize(text)
-    val sents = Sentences.split(toks)
-    val aaRecs = AaDetector.findAaRecords(toks, sents)
-    val aas = AaDetector.toMap(aaRecs) ++ opts.udas
-    val defSpans: Vector[(Int, Int)] =
-      if (opts.aaDefExact) aaRecs.map(r => (r.defStart, r.defEnd)).distinct
-      else Vector.empty
-    sents.flatMap { sent =>
-      val phrasesR = PhraseChunker.chunk(sent.toks, umls, Map.empty,
-        if (opts.compositeExact) 0 else opts.compositePhrases, opts.taglessExact)
-      val phrases0 =
-        if (opts.compositeExact)
-          PhraseChunker.compositeGlomExact(phrasesR, sent.toks, umls,
-            opts.compositePhrases)
-        else phrasesR
-      // --aadef_exact: the defining parenthetical's phrases never exist
-      // in the reference EXP stream (lib/pos_info.pl:410-470)
-      val phrases =
-        if (defSpans.isEmpty) phrases0
-        else phrases0.filterNot(p => p.words.nonEmpty && defSpans.exists(s =>
-          p.words.head.start >= s._1 && p.words.last.end <= s._2))
-      // stop_analysis applies here exactly as in [[mentions]]: MMO shows
-      // a skipped phrase with 0 candidates
-      def stopAnalysis(phrase: Phrase): Boolean =
-        stopAnalysisSkip(phrase, umls, Map.empty, opts)
-      // a sentence that chunks to ZERO phrases (punctuation-only) still
-      // owns an utterance(...)/'EOU'. block in the reference's term
-      // stream — emit an empty-phrase sentinel so the writer prints it
-      if (phrases.isEmpty)
-        Vector(PhraseMmo(sent, Phrase(Vector.empty, 0), 0, 0, 0, 0, Vector.empty))
-      else phrases.map { phrase =>
-        if (phrase.words.isEmpty ||
-          (phrase.words.length == 1 && phrase.words.head.word.length <= 1) ||
-          stopAnalysis(phrase))
-          PhraseMmo(sent, phrase, 0, 0, 0, 0, Vector.empty)
-        else {
-          val phOpts =
-            if (phrase.composite) opts.copy(ignoreWordOrder = true) else opts
-          val varIndex = VariantGather.gather(phrase, umls, aas, Map.empty, phOpts)
-          val cands0 = Evaluator.evaluatePhrase(phrase, umls, varIndex, phOpts)
-          val filtered = optionFilters(cands0, phOpts)
-          // reference count semantics (skr.pl:914-929): Total = after the
-          // option filters, Excluded = dropped by F3 subsumption,
-          // Pruned = dropped by G1/G2, Remaining = what mappings see
-          val unsubsumed = Evaluator.filterSubsumed(filtered, phOpts)
-          val pruned = graft.link.Pruning.adaptivePrune(
-            unsubsumed, phrase.words.length, phOpts)
-          val cands = if (phrase.composite) bestCoverageOnly(pruned) else pruned
-          val maps = Evaluator.bestMappings(cands, phrase.words.length,
-            phOpts, varIndex.keySet)
-          PhraseMmo(sent, phrase, filtered.length,
-            filtered.length - unsubsumed.length, unsubsumed.length - cands.length,
-            cands.length, maps)
-        }
+  def mentions(url: String, text: String, umls: UmlsTables,
+      opts: LinkOptions = LinkOptions.default): Vector[Mention] =
+    mentions(analyze(url, text, umls, opts), umls)
+
+  /** The mention rows of an analysis: each phrase's mapping candidates,
+    * NegEx-marked per sentence; -y keeps one concept per span, ranked
+    * exactly like the corpus-level Pipeline.wsdDedup window.
+    */
+  def mentions(a: Analysis, umls: UmlsTables): Vector[Mention] = {
+    val out = a.sentences.flatMap { s =>
+      val sentMentions = s.phrases.flatMap { t =>
+        lazy val syntax = PhraseChunker.syntaxMap(t.phrase, umls, s.tagsByStart)
+        t.candidates.map(c =>
+          mention(a.url, s.sent.sentNo, a.text, c, syntax, a.aas))
       }
+      Negex.mark(s.sent.toks, sentMentions, umls, a.opts)
     }
+    if (a.opts.wsd)
+      DocTriples.wsdLocal(out, umls).sortBy(m => (m.sentNo, m.start, m.len, m.cui))
+    else out
+  }
+
+  private def mention(url: String, sentNo: Int, text: String, c: Candidate,
+      syntax: Map[String, String], aas: VariantGather.AaDict): Mention = {
+    val mText = text.substring(c.start, c.end)
+    Mention(url, sentNo, c.start, c.end - c.start, c.cui, c.score,
+      c.semTypes, negated = false, mText, c.posInfo, c.sources,
+      term = c.str, lexCat = mentionLexCat(mText, c, syntax, aas))
   }
 
   /** F1 threshold (-r), F5 numerical filter (--no_nums), F4 semtype
@@ -322,34 +307,11 @@ object DocKernel {
       .map(t => PWord(PhraseChunker.mmWord(t), t.start, t.end))
     if (words.isEmpty) return Vector.empty
     val phrase = Phrase(words, words.length - 1)
-    val varIndex = VariantGather.gather(phrase, umls, Map.empty, opts = opts)
-    val cands = graft.link.Pruning.adaptivePrune(
-      Evaluator.filterSubsumed(optionFilters(
-        Evaluator.evaluatePhrase(phrase, umls, varIndex, opts), opts), opts),
-      phrase.words.length, opts)
-    if (cands.isEmpty) return Vector.empty
-    // F6: best-coverage-only — discard evaluations covering fewer phrase
-    // words than the widest one
-    val kept = bestCoverageOnly(cands)
-    val syntax = PhraseChunker.syntaxMap(phrase, umls)
-    Evaluator.bestMappingCandidates(kept, phrase.words.length, opts).map { c =>
-      val mText = normTerm.substring(c.start, c.end)
-      Mention(url, 0, c.start, c.end - c.start, c.cui, c.score,
-        c.semTypes, negated = false, mText,
-        c.posInfo, c.sources,
-        term = c.str, lexCat = mentionLexCat(mText, c, syntax, Map.empty))
-    }
+    lazy val syntax = PhraseChunker.syntaxMap(phrase, umls)
+    phraseTrace(phrase, umls, Map.empty, Map.empty, opts, termMode = true)
+      .candidates.map(c => mention(url, 0, normTerm, c, syntax, Map.empty))
   }
 
-  /** get_lexcat (mmi.pl:452-491): resolve the mention's word forms — AA
-    * expansion tokens when a token of the mention text is a detected AA,
-    * the mention text's own tokens, the lowercased concept/term strings'
-    * tokens and the meta words — against the phrase's categories (the
-    * Syntax analogue) and keep the minimum-weight category: noun 0 < adj
-    * 1 < verb 2 < everything else 3, alphabetically first within a tied
-    * weight (the reference sorts Weight-LexCat pairs and takes the head);
-    * UNKNOWN when nothing resolves.
-    */
   /** Bounded per-executor memo for tokenize_text_mm of BROADCAST-table
     * strings (concept names / Metathesaurus strings): their vocabulary is
     * fixed by the tables, so the cap is a guard, never a correctness
@@ -367,6 +329,15 @@ object DocKernel {
     }
   }
 
+  /** get_lexcat (mmi.pl:452-491): resolve the mention's word forms — AA
+    * expansion tokens when a token of the mention text is a detected AA,
+    * the mention text's own tokens, the lowercased concept/term strings'
+    * tokens and the meta words — against the phrase's categories (the
+    * Syntax analogue) and keep the minimum-weight category: noun 0 < adj
+    * 1 < verb 2 < everything else 3, alphabetically first within a tied
+    * weight (the reference sorts Weight-LexCat pairs and takes the head);
+    * UNKNOWN when nothing resolves.
+    */
   private def mentionLexCat(mentionText: String, c: Candidate,
       syntax: Map[String, String],
       aas: graft.link.VariantGather.AaDict): String = {

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.broadcast.Broadcast
@@ -27,6 +27,19 @@ object Pipeline {
   def broadcastUmls(spark: SparkSession): Broadcast[UmlsTables] =
     spark.sparkContext.broadcast(MiniUmls.tables)
 
+  /** The page operator every page-level stage and writer runs through:
+    * the broadcast tables dereferenced once per partition, non-English
+    * rows skipped (FIXTURES.md: they yield nothing), the text extracted
+    * from the html, then `f` per page.
+    */
+  def perPage[T: Encoder](pages: Dataset[Page], umls: Broadcast[UmlsTables])(
+      f: (Page, String, UmlsTables) => IterableOnce[T]): Dataset[T] =
+    pages.mapPartitions { it =>
+      val t = umls.value
+      it.flatMap(p =>
+        if (p.lang != "en") Iterator.empty else f(p, Extract.htmlToText(p.html), t))
+    }
+
   /** Stage 1: extraction. Uses the html column; the corpus `text` column is
     * the expected value (byte-identical invariant, asserted in tests).
     */
@@ -42,13 +55,7 @@ object Pipeline {
   def mentions(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
-    pages.mapPartitions { it =>
-      val t = umls.value
-      it.flatMap { p =>
-        if (p.lang != "en") Iterator.empty
-        else DocKernel.mentions(p.url, Extract.htmlToText(p.html), t).iterator
-      }
-    }
+    perPage(pages, umls)((p, text, t) => DocKernel.mentions(p.url, text, t))
   }
 
   /** Stage 3: WSD as window-ranked dedup per mention span (SURVEY §2.11 W1):
@@ -166,14 +173,8 @@ object Pipeline {
     */
   def run(pages: Dataset[Page])(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val umls = broadcastUmls(spark)
-    pages.mapPartitions { it =>
-      val t = umls.value
-      it.flatMap { p =>
-        if (p.lang != "en") Iterator.empty
-        else DocTriples.fromDoc(p.url, Extract.htmlToText(p.html), t).iterator
-      }
-    }.toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
+    perPage(pages, broadcastUmls(spark))((p, text, t) => DocTriples.fromDoc(p.url, text, t))
+      .toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
   }
 
   /** The corpus-level shuffled form: window-ranked WSD + sentence-window

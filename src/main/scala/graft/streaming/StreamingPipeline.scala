@@ -4,9 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
 
-import graft.link.Mention
-import graft.pipeline.{DocKernel, DocTriples, Page}
-import graft.text.Extract
+import graft.pipeline.{DocTriples, Page, Pipeline}
 import graft.umls.UmlsTables
 
 /** Structured Streaming front-end for the KG pipeline.
@@ -50,27 +48,15 @@ object StreamingPipeline {
     spark.table(name).select("subj_cui", "pred", "obj_cui", "url", "sentNo")
   }
 
-  /** Streaming mention detection over a streaming Dataset[Page]. */
-  def mentionsStream(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
-      implicit spark: SparkSession): Dataset[(Mention, java.sql.Timestamp)] = {
-    import spark.implicits._
-    pages.flatMap { p =>
-      if (p.lang != "en") Iterator.empty
-      else DocKernel.mentions(p.url, Extract.htmlToText(p.html), umls.value)
-        .iterator.map(m => (m, p.warc_ts))
-    }
-  }
-
   /** Streaming triples: the sentence-window pair "join" never crosses a
-    * document, so it runs inside the same flatMap — no stream-stream join,
+    * document, so it runs inside the page operator — no stream-stream join,
     * no shuffle; the plan stays map-side until the sink.
     */
   def triplesStream(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    pages.flatMap { p =>
-      if (p.lang != "en") Iterator.empty
-      else DocTriples.fromDoc(p.url, Extract.htmlToText(p.html), umls.value)
+    Pipeline.perPage(pages, umls) { (p, text, t) =>
+      DocTriples.fromDoc(p.url, text, t)
         .iterator.map { case (s, r, o, url, sn) => (s, r, o, url, sn, p.warc_ts) }
     }.toDF("subj_cui", "pred", "obj_cui", "url", "sentNo", "warc_ts")
   }

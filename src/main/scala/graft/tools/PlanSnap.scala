@@ -9,16 +9,22 @@ import graft.SparkEntry
 /** Writes `.explain("formatted")` for named queries to a directory —
   * the per-round plan evidence (plans/rNN/<query>_{before,after}.txt).
   *
-  * Usage: sbt "runMain graft.tools.PlanSnap <outDir> <suffix> [query ...]"
-  * e.g.   sbt "runMain graft.tools.PlanSnap plans/r07 before dedup_minhash_lsh"
-  * Defaults to every bench headline query when no names are given.
+  * Usage: sbt "runMain graft.tools.PlanSnap <outDir> [suffix] [query ...]"
+  * e.g.   sbt "runMain graft.tools.PlanSnap plans/r08 before dedup_minhash_lsh"
+  * The output directory is required (an existing round's evidence is
+  * never overwritten by default); the suffix defaults to "before" and
+  * the queries to every bench headline query.
   * Session shape matches graft.Bench (local[N], shuffle.partitions=N,
   * AQE on) so the captured initial plans are the bench's plans.
   */
 object PlanSnap {
 
   def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("plans/r07")
+    if (args.isEmpty) {
+      System.err.println("usage: graft.tools.PlanSnap <outDir> [suffix] [query ...]")
+      sys.exit(2)
+    }
+    val outDir = args(0)
     val suffix = args.lift(1).getOrElse("before")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

@@ -56,4 +56,13 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(cc == Map("C1" -> "C1", "C2" -> "C1", "C3" -> "C1",
       "C8" -> "C8", "C9" -> "C8"))
   }
+
+  test("connected components: an empty edge set gives an empty result") {
+    import spark.implicits._
+    val e = Seq.empty[(String, String)].toDF("u", "v")
+    assert(GraphOps.connectedComponents(e).collect().isEmpty)
+    val err = intercept[IllegalArgumentException](
+      GraphOps.connectedComponents(e, maxRounds = 0))
+    assert(err.getMessage.contains("maxRounds >= 1"))
+  }
 }

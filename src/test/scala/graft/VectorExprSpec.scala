@@ -104,6 +104,26 @@ class VectorExprSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** The registered builder of each graft function on `s`. */
+  private def builders(s: org.apache.spark.sql.SparkSession) =
+    Seq("graft_cosine", "graft_dot", "graft_capped_collect_set").map(n =>
+      s.sessionState.functionRegistry.lookupFunctionBuilder(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+
+  test("register twice: the second call keeps the registration, functions resolve") {
+    GraftFunctions.register(spark)
+    val first = builders(spark)
+    assert(first.forall(_.isDefined))
+    GraftFunctions.register(spark)
+    val second = builders(spark)
+    assert(first.zip(second).forall { case (a, b) => a.get eq b.get })
+    import spark.implicits._
+    val df = Seq((Array(3.0f, 4.0f), Array(3.0f, 4.0f), 7L)).toDF("a", "b", "id")
+    val r = df.selectExpr("graft_cosine(a, b)", "graft_dot(a, b)").head
+    assert(math.abs(r.getDouble(0) - 1.0) < 1e-12 && r.getDouble(1) == 25.0)
+    assert(df.selectExpr("graft_capped_collect_set(id, 5)").head.getSeq[Long](0) == Seq(7L))
+  }
+
   test("GraftExtensions: config-driven session picks up graft_cosine") {
     // build a sibling session on the same context with the extensions
     // config — the deployment path (spark.sql.extensions=...GraftExtensions)
@@ -123,6 +143,13 @@ class VectorExprSpec extends AnyFunSuite with SparkTestBase {
         .toDF("a", "b")
         .selectExpr("graft_cosine(a, b) AS c").head.getDouble(0)
       assert(math.abs(v - 1.0) < 1e-12)
+      // the extension already registered the functions: register keeps them
+      val injected = builders(s2)
+      GraftFunctions.register(s2)
+      assert(injected.forall(_.isDefined))
+      assert(injected.zip(builders(s2)).forall { case (a, b) => a.get eq b.get })
+      assert(Seq((Array(1.0f, 2.0f), Array(3.0f, 4.0f))).toDF("a", "b")
+        .selectExpr("graft_dot(a, b)").head.getDouble(0) == 11.0)
     } finally {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)
