@@ -220,7 +220,6 @@ object KgQueries {
     * the semtype filters are live, each a full kernel run.
     */
   def kgOptionProfiles(spark: SparkSession, sfDir: String): DataFrame = {
-    implicit val s = spark
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, sum}
     import graft.link.LinkOptions
@@ -278,27 +277,16 @@ object KgQueries {
     // folded by a keyed agg — one Spark job instead of one sequential
     // full-corpus job per profile (a zero count per profile survives
     // because every document emits every mode).
-    CorpusGen.pages(spark, 100).mapPartitions { it =>
-      val t = umls.value
-      it.flatMap { p =>
-        if (p.lang != "en") Iterator.empty
-        else {
-          val text = graft.text.Extract.htmlToText(p.html)
-          profiles.iterator.map { case (name, o) =>
-            // negex_negated_* profiles pin the semtype GATE: they count
-            // negated mentions, every other profile counts mentions
-            def count(ms: Vector[graft.link.Mention]): Int =
-              if (name.startsWith("negex_negated")) ms.count(_.negated) else ms.size
-            val n = sources.MedlineReader.segModeOf(o) match {
-              case None => count(pipeline.DocKernel.mentions(p.url, text, t, o))
-              case Some(m) => sources.MedlineReader.segment(text, m)
-                .iterator.map { case (rid, rt) =>
-                  count(pipeline.DocKernel.mentions(s"${p.url}.$rid", rt, t, o))
-                }.sum
-            }
-            (name, n.toLong)
-          }
-        }
+    Pipeline.perPage(CorpusGen.pages(spark, 100), umls) { (p, text, t) =>
+      profiles.iterator.map { case (name, o) =>
+        // negex_negated_* profiles pin the semtype GATE: they count
+        // negated mentions, every other profile counts mentions
+        def count(ms: Vector[graft.link.Mention]): Int =
+          if (name.startsWith("negex_negated")) ms.count(_.negated) else ms.size
+        val n = sources.MedlineReader.records(p.url, text, o).iterator.map {
+          case (id, rt) => count(pipeline.DocKernel.mentions(id, rt, t, o))
+        }.sum
+        (name, n.toLong)
       }
     }.toDF("mode", "n")
       .groupBy(col("mode")).agg(sum(col("n")).as("n_mentions"))

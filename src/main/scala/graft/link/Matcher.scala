@@ -35,12 +35,6 @@ object Matcher {
   final case class MatchResult(matchMap: Vector[MatchEntry], involvesHead: Boolean,
       isOvermatch: Boolean, extraMetaIdx: Vector[Int])
 
-  def matchPhrase(metaWords: Vector[String],
-      varIndex: Map[String, Vector[VInfo]],
-      headless: Boolean): Option[(Vector[MatchEntry], Boolean)] =
-    matchPhraseOpt(metaWords, varIndex, headless, LinkOptions.default)
-      .map(r => (r.matchMap, r.involvesHead))
-
   /** @return Some(MatchResult) for an accepted match, else None. */
   def matchPhraseOpt(metaWords: Vector[String],
       varIndex: Map[String, Vector[VInfo]],

@@ -40,15 +40,6 @@ object Pipeline {
         if (p.lang != "en") Iterator.empty else f(p, Extract.htmlToText(p.html), t))
     }
 
-  /** Stage 1: extraction. Uses the html column; the corpus `text` column is
-    * the expected value (byte-identical invariant, asserted in tests).
-    */
-  def extractText(pages: Dataset[Page])(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    pages.map(p => (p.url, Extract.htmlToText(p.html), p.lang))
-      .toDF("url", "extracted_text", "lang")
-  }
-
   /** Stage 2: per-document mention detection. Non-English rows pass
     * through unprocessed (FIXTURES.md: must yield no mentions).
     */

@@ -124,12 +124,6 @@ final case class UmlsTables(
   @transient lazy val dynVariantMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Vector[Variant]]()
 
-  /** Closed-class categories that never start a concept-bearing phrase. */
-  def isClosedClass(w: String): Boolean = {
-    val cats = lexCats.getOrElse(w, Set.empty)
-    cats.nonEmpty && cats.subsetOf(UmlsTables.closedCats)
-  }
-
   /** all_words index (lib/word_index.pl:80-85): word -> entries whose
     * normalized string contains the word ANYWHERE. Only probed in
     * overmatch mode (metamap_candidates.pl:298-310); derived lazily per

@@ -741,5 +741,18 @@ class OptionsSpec extends AnyFunSuite {
     assert(rows("aadef_exact") < rows("default"))
     assert(rows("negex_negated_gated") <= rows("negex_negated_default"))
     assert(rows("negex_negated_default") <= rows("default"))
+    // the exact (mode, n_mentions) rows over the 100-page profile corpus
+    assert(rows == Map(
+      "aa_span_merge" -> 358L, "aadef_exact" -> 358L, "all_mappings" -> 369L,
+      "allow_concept_gaps" -> 359L, "allow_overmatches" -> 369L,
+      "blanklines_2" -> 359L, "cascade" -> 194L, "cascade_exclude_noop" -> 282L,
+      "composite_0" -> 359L, "composite_exact" -> 358L, "conj_merge" -> 359L,
+      "default" -> 359L, "exclude_sosy" -> 282L, "exclude_src_msh" -> 121L,
+      "ignore_stop_phrases" -> 359L, "ignore_word_order" -> 359L,
+      "min_length_8" -> 153L, "negex_negated_default" -> 24L,
+      "negex_negated_gated" -> 23L, "no_deriv" -> 359L, "no_prune" -> 359L,
+      "nomap" -> 358L, "prefer_multiple" -> 363L, "restrict_dsyn" -> 197L,
+      "restrict_src_rxnorm" -> 40L, "sldi" -> 358L, "tagged" -> 358L,
+      "tagless_exact" -> 359L, "threshold_900" -> 287L, "wsd" -> 358L))
   }
 }
