@@ -37,8 +37,11 @@ import graft.umls.UmlsTables
   */
 object JsonMmoOutput {
 
-  private def esc(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
+  /** `s` as a JSON string literal; also the string escaper of
+    * [[graft.api.GraftServer]]'s responses. */
+  private[graft] def js(s: String): String = {
+    val b = new StringBuilder(s.length + 10)
+    b.append('"')
     s.foreach {
       case '"' => b.append("\\\"")
       case '\\' => b.append("\\\\")
@@ -48,10 +51,9 @@ object JsonMmoOutput {
       case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
       case c => b.append(c)
     }
-    b.toString
+    b.append('"').toString
   }
 
-  private def js(v: String): String = "\"" + esc(v) + "\""
   private def pair(k: String, v: String): String = js(k) + ":" + js(v)
   private def rawPair(k: String, v: String): String = js(k) + ":" + v
   private def obj(pairs: Seq[String]): String = pairs.mkString("{", ",", "}")

@@ -195,7 +195,7 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
       val (c5, r5) = post("/annotate?id=again", "Fever persisted.")
       assert(c5 == 200 && r5.contains("C0015967"))
       assert(handle.requestCount == 10L)
-      // CONCURRENT requests: the server runs on a small fixed pool (the
+      // CONCURRENT requests: the server runs one thread per connection (the
       // kernel is a pure function over the broadcast tables), so parallel
       // /annotate calls must all succeed — and /health must answer while
       // they are in flight rather than queue behind them
@@ -211,5 +211,160 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
       assert(results.forall(_._1 == 200), results.map(_._1))
       assert(results.init.forall(_._2.contains("C0032285")))
     } finally handle.stop()
+  }
+
+  /** A raw HTTP/1.1 client socket left at its default options, as a plain
+    * client opens it (no TCP_NODELAY): one write per request, responses
+    * framed by their Content-Length.
+    */
+  private final class RawConn(port: Int) extends AutoCloseable {
+    private val socket = new java.net.Socket("127.0.0.1", port)
+    socket.setSoTimeout(2000)
+    private val in = new java.io.BufferedInputStream(socket.getInputStream)
+
+    def send(raw: String): Unit = socket.getOutputStream.write(raw.getBytes("UTF-8"))
+
+    private def line(): String = {
+      val b = new StringBuilder
+      var c = in.read()
+      while (c != '\n') {
+        if (c < 0) throw new java.io.EOFException("connection closed")
+        if (c != '\r') b.append(c.toChar)
+        c = in.read()
+      }
+      b.toString
+    }
+
+    /** (status, body) of the next response. */
+    def read(): (Int, String) = {
+      val status = line().split(' ')(1).toInt
+      var length = -1
+      var h = line()
+      while (h.nonEmpty) {
+        val i = h.indexOf(':')
+        if (h.take(i).equalsIgnoreCase("Content-Length")) length = h.drop(i + 1).trim.toInt
+        h = line()
+      }
+      assert(length >= 0, "response without a Content-Length")
+      (status, new String(in.readNBytes(length), "UTF-8"))
+    }
+
+    /** The server closed its side: the next read is the end of the stream. */
+    def atEof: Boolean = in.read() == -1
+
+    def close(): Unit = socket.close()
+  }
+
+  private def postReq(path: String, body: String, headers: String = ""): String =
+    s"POST $path HTTP/1.1\r\nHost: 127.0.0.1\r\n$headers" +
+      s"Content-Length: ${body.getBytes("UTF-8").length}\r\n\r\n$body"
+
+  private lazy val serverUmls = graft.pipeline.Pipeline.broadcastUmls(spark)
+
+  private def withServer(f: graft.api.GraftServer.Handle => Unit): Unit = {
+    val handle = graft.api.GraftServer.start(spark, umls = Some(serverUmls))
+    try f(handle) finally handle.stop()
+  }
+
+  private def withConn[T](port: Int)(f: RawConn => T): T = {
+    val c = new RawConn(port)
+    try f(c) finally c.close()
+  }
+
+  test("GraftServer: keep-alive requests from a plain socket take no delayed-ACK stall") {
+    withServer { handle =>
+      withConn(handle.port) { c =>
+        val ms = (1 to 20).map { i =>
+          val t0 = System.nanoTime()
+          c.send(postReq(s"/annotate?id=n$i", "The patient had pneumonia."))
+          val (code, body) = c.read()
+          assert(code == 200 && body.contains("C0032285"), body)
+          (System.nanoTime() - t0) / 1e6
+        }.sorted
+        // a response split across two segments without TCP_NODELAY waits
+        // for the client's delayed ACK: about 40 ms per request on Linux
+        assert(ms(ms.length / 2) < 10.0, ms)
+      }
+    }
+  }
+
+  test("GraftServer protocol: pipelining, Connection: close, 411, 400, 404, health") {
+    withServer { handle =>
+      def conn[T](f: RawConn => T): T = withConn(handle.port)(f)
+      // two requests in one write get two responses, in order
+      conn { c =>
+        c.send(postReq("/annotate?id=first", "Fever persisted.") +
+          postReq("/annotate?id=second", "Fever persisted."))
+        val (c1, r1) = c.read()
+        val (c2, r2) = c.read()
+        assert(c1 == 200 && r1.contains("\"url\":\"first\""), r1)
+        assert(c2 == 200 && r2.contains("\"url\":\"second\""), r2)
+      }
+      // Connection: close is answered, then the server closes
+      conn { c =>
+        c.send(postReq("/triples?id=t", "The patient had pneumonia and fever.",
+          "Connection: close\r\n"))
+        val (code, body) = c.read()
+        assert(code == 200 && body.contains("\"pred\":\"causes\""), body)
+        assert(c.atEof)
+      }
+      // a body without a Content-Length is refused
+      conn { c =>
+        c.send("POST /annotate HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+          "Transfer-Encoding: chunked\r\n\r\n5\r\nFever\r\n0\r\n\r\n")
+        assert(c.read()._1 == 411)
+        assert(c.atEof)
+      }
+      // malformed requests: 400, then the connection closes
+      Seq(
+        "POST /annotate HTTP/1.1\r\nContent-Length: abc\r\n\r\n",
+        "POST /annotate HTTP/1.1\r\nContent-Length: -1\r\n\r\n",
+        "GARBAGE\r\n\r\n"
+      ).foreach { raw =>
+        conn { c =>
+          c.send(raw)
+          val (code, body) = c.read()
+          assert(code == 400, body)
+          assert(c.atEof, raw)
+        }
+      }
+      // an unknown path is a 404 on a connection that stays open
+      conn { c =>
+        c.send("GET /nope HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n")
+        assert(c.read()._1 == 404)
+        c.send("GET /health HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n")
+        val (code, body) = c.read()
+        assert(code == 200 && body == "{\"status\":\"ok\",\"requests\":3}", body)
+      }
+    }
+  }
+
+  test("GraftServer lifecycle: idle connections starve no one; stop() closes everything") {
+    import scala.jdk.CollectionConverters._
+    withServer { handle =>
+      val idle = scala.collection.mutable.Buffer.empty[RawConn]
+      try {
+        (1 to Runtime.getRuntime.availableProcessors() + 2).foreach { _ =>
+          val c = new RawConn(handle.port)
+          idle += c
+          c.send("GET /health HTTP/1.1\r\nHost: 127.0.0.1\r\n\r\n")
+          assert(c.read()._1 == 200)
+        }
+        withConn(handle.port) { c =>
+          c.send(postReq("/annotate?id=late", "The patient had pneumonia."))
+          val (code, body) = c.read()
+          assert(code == 200 && body.contains("C0032285"), body)
+        }
+        handle.stop()
+        idle.foreach(c => assert(c.atEof))
+        intercept[java.io.IOException](new java.net.Socket("127.0.0.1", handle.port).close())
+        // a leftover thread would outlive the server (and a non-daemon one
+        // would keep its JVM alive)
+        def serverThreads = Thread.getAllStackTraces.keySet.asScala
+          .filter(t => t.getName.startsWith("graft-server") && t.isAlive)
+        serverThreads.foreach(_.join(2000))
+        assert(serverThreads.isEmpty, serverThreads.map(_.getName))
+      } finally idle.foreach(_.close())
+    }
   }
 }
