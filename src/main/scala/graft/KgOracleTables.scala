@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.corpus.CorpusGen
+import graft.ops.SnapshotCache
 import graft.pipeline.Pipeline
 
 /** Oracle-aux materialization for the corpus-level KG stages.
@@ -25,78 +26,72 @@ import graft.pipeline.Pipeline
   * checkpoints for resume), so verifying downstream-of-mentions is
   * verifying exactly the stages that shuffle.
   *
-  * Freshness: the aux is rewritten once per JVM (overwrite mode, tracked
-  * in-memory) so a stale dump from an older build can never poison an
-  * oracle; within one Verify process every kg query reuses the same dump.
+  * The four tables are `SnapshotCache` snapshots (`kg_mentions`,
+  * `kg_semnet`, `kg_cui_pref`, `kg_treecodes`), so each JVM writes its
+  * own version once and every kg query in that process reuses it; a
+  * dump left by an older build is never read.
   */
 object KgOracleTables {
 
-  /** Aux root: under the repo's target/ (absolute), keyed by sf basename —
-    * the DuckDB side of the oracle embeds this absolute path.
+  /** The sf dir of the LAST ensure() call — Verify dumps oracle_sql AFTER
+    * running the queries, so by dump time the globs below name the
+    * snapshot versions the queries ran against. Before any ensure() the
+    * globs name a version no JVM writes, so the oracles find no files.
     */
-  def rootFor(sfDir: String): String = {
-    val base = new java.io.File(sfDir).getName
-    new java.io.File(s"target/graft_oracle_aux/$base").getAbsolutePath
-  }
+  @volatile private var lastSf: String = "sf0.01"
 
-  /** The aux root the LAST ensure() call wrote — Verify dumps oracle_sql
-    * AFTER running the queries, so by dump time this points at the dump
-    * the queries ran against. Defaults to the driver's sf0.01.
+  /** Write (once per JVM per sf dir) the pre-WSD mention table and the
+    * broadcast dims; return the mention table. Deterministic content:
+    * same corpus generator, same kernel, so any process writing the same
+    * build's dump writes the same rows.
     */
-  @volatile private var lastRoot: String = rootFor("/root/testdata/sf0.01")
-  private val written = scala.collection.mutable.Set[String]()
-
-  def auxRoot: String = lastRoot
-
-  /** Write (once per JVM per sf dir) the pre-WSD mention table and the two
-    * broadcast dims. Deterministic content: same corpus generator, same
-    * kernel, so any process writing the same build's dump writes the same
-    * rows.
-    */
-  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
+  def ensure(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val root = rootFor(sfDir)
-    lastRoot = root
-    if (written.contains(root)) return root
-    val umls = Pipeline.broadcastUmls(spark)
+    lastSf = sfDir
+    lazy val umls = Pipeline.broadcastUmls(spark)
     implicit val s: SparkSession = spark
-    val ms = Pipeline.mentions(CorpusGen.pages(spark, KgQueries.pagesFor(sfDir)), umls)
-    ms.toDF()
-      .withColumn("st_prio", Pipeline.stPrioCol(umls.value))
-      // the json forms are EXACTLY GateSafe's to_json, so oracles over the
-      // stringified gate projections compare byte-for-byte
-      .withColumn("semTypes_json", to_json(col("semTypes")))
-      .withColumn("posInfo_json", to_json(col("posInfo")))
-      .withColumn("sources_json", to_json(col("sources")))
-      // the rendered StartPos/Length chunk (shared Column with the
-      // fielded builder, so the two engines aggregate identical strings)
-      .withColumn("pos_str", ops.MmiRank.posChunkCol)
-      // the rendered long-name semtype display (shared Column with the
-      // human builder)
-      .withColumn("st_disp", output.JsonOutput.stDisplayCol)
-      .drop("posInfo", "sources")
-      .coalesce(4)
-      .write.mode("overwrite").parquet(s"$root/mentions")
-    Pipeline.semnetRows(umls.value).toDF("st1", "rel", "st2")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/semnet")
-    umls.value.cuiPreferred.toSeq.toDF("pcui", "pname")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/cui_pref")
-    umls.value.treecodes.toSeq
-      .map { case (c, tcs) =>
-        (c, tcs.map(_.split('.').length).max, tcs.sorted.mkString(";"))
-      }
-      .toDF("tcui", "tree_depth", "codes")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/treecodes")
-    written += root
-    root
+    val mentions = SnapshotCache.ensure(spark, sfDir, "kg_mentions") {
+      Pipeline.mentions(CorpusGen.pages(spark, KgQueries.pagesFor(sfDir)), umls).toDF()
+        .withColumn("st_prio", Pipeline.stPrioCol(umls.value))
+        // the json forms are EXACTLY GateSafe's to_json, so oracles over the
+        // stringified gate projections compare byte-for-byte
+        .withColumn("semTypes_json", to_json(col("semTypes")))
+        .withColumn("posInfo_json", to_json(col("posInfo")))
+        .withColumn("sources_json", to_json(col("sources")))
+        // the rendered StartPos/Length chunk (shared Column with the
+        // fielded builder, so the two engines aggregate identical strings)
+        .withColumn("pos_str", ops.MmiRank.posChunkCol)
+        // the rendered long-name semtype display (shared Column with the
+        // human builder)
+        .withColumn("st_disp", output.JsonOutput.stDisplayCol)
+        .drop("posInfo", "sources")
+        .coalesce(4)
+    }
+    SnapshotCache.ensure(spark, sfDir, "kg_semnet") {
+      Pipeline.semnetRows(umls.value).toDF("st1", "rel", "st2").coalesce(1)
+    }
+    SnapshotCache.ensure(spark, sfDir, "kg_cui_pref") {
+      umls.value.cuiPreferred.toSeq.toDF("pcui", "pname").coalesce(1)
+    }
+    SnapshotCache.ensure(spark, sfDir, "kg_treecodes") {
+      umls.value.treecodes.toSeq
+        .map { case (c, tcs) =>
+          (c, tcs.map(_.split('.').length).max, tcs.sorted.mkString(";"))
+        }
+        .toDF("tcui", "tree_depth", "codes")
+        .coalesce(1)
+    }
+    mentions
   }
 
   // ---------- DuckDB oracle SQL (built at dump time so the embedded
   // absolute paths point at the dump the queries ran against) ----------
 
-  private def mentionsGlob = s"'$auxRoot/mentions/*.parquet'"
-  private def semnetGlob = s"'$auxRoot/semnet/*.parquet'"
-  private def prefGlob = s"'$auxRoot/cui_pref/*.parquet'"
+  private def glob(name: String) = s"'${SnapshotCache.currentPath(lastSf, name)}/*.parquet'"
+  private def mentionsGlob = glob("kg_mentions")
+  private def semnetGlob = glob("kg_semnet")
+  private def prefGlob = glob("kg_cui_pref")
+  private def treecodesGlob = glob("kg_treecodes")
 
   /** WSD window dedup over the raw mention table (W1: exactly one CUI per
     * span; score desc, semtype prior, cui).
@@ -243,7 +238,7 @@ object KgOracleTables {
     val (a5, b5) = (math.exp(5) + 1.0, math.exp(5) - 1.0)
     val (a10, b10) = (math.exp(10) + 1.0, math.exp(10) - 1.0)
     s"""$wsdCte,
-       |tc AS (SELECT * FROM read_parquet('$auxRoot/treecodes/*.parquet')),
+       |tc AS (SELECT * FROM read_parquet($treecodesGlob)),
        |pref AS (SELECT * FROM read_parquet($prefGlob)),
        |tf AS (SELECT url, cui, CAST(COUNT(*) AS BIGINT) freq_count,
        |         CAST(SUM(score) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) mm_value,
@@ -292,7 +287,7 @@ object KgOracleTables {
     */
   def kgMmiFieldedSql: String =
     s"""WITH $mmiCte,
-       |tcd AS (SELECT tcui, codes FROM read_parquet('$auxRoot/treecodes/*.parquet')),
+       |tcd AS (SELECT tcui, codes FROM read_parquet($treecodesGlob)),
        |md AS (SELECT DISTINCT url, cui, term, "sentNo" nsent, text,
        |         "lexCat" lex_cat, CASE WHEN negated THEN 1 ELSE 0 END neg,
        |         "start" st, pos_str
@@ -390,7 +385,7 @@ object KgOracleTables {
        |FROM u GROUP BY url""".stripMargin
   }
 
-  /** Built at Verify dump time (defs, not vals) so auxRoot is final. */
+  /** Built at Verify dump time (defs, not vals) so lastSf is final. */
   def oracleSql: Map[String, String] = Map(
     "kg_mentions" -> kgMentionsSql,
     "kg_negated_mentions" -> kgNegatedSql,

@@ -40,10 +40,9 @@ object KgQueries {
   def kgWsdDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val root = KgOracleTables.ensure(spark, sfDir)
     val w = Window.partitionBy(col("url"), col("sentNo"), col("start"), col("len"))
       .orderBy(col("score").desc, col("st_prio"), col("cui"))
-    spark.read.parquet(s"$root/mentions")
+    KgOracleTables.ensure(spark, sfDir)
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .select(col("url"), col("sentNo"), col("start"), col("len"),

@@ -126,7 +126,7 @@ object Multimodal {
 
   /** Media-table size of the LAST gate query run — the oracle generator
     * SQL embeds it (Verify dumps oracle_sql AFTER running the queries,
-    * same pattern as KgOracleTables.auxRoot). Default = the driver's
+    * same pattern as KgOracleTables' last sf dir). Default = the driver's
     * sf0.01 gate size.
     */
   @volatile private var lastN: Long = 400L * 5

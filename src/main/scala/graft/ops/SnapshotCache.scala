@@ -4,52 +4,44 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-corpus-snapshot materialization of expensive curation signals.
+/** Per-corpus-snapshot materialization of derived tables: the expensive
+  * curation signals and the kg oracle checkpoint (`KgOracleTables`).
   *
   * At 100 TB the near-dup cluster table (connected components over the
   * MinHash pair graph) is THE dominant curation job; a pipeline that
   * recomputes it per consumer (canonical selection, the fused curation
   * decision, ad-hoc analytics) doubles or triples the cluster bill. The
   * deployment shape is: run the cluster job once per corpus snapshot,
-  * materialize the table, and have every consumer read it — exactly the
-  * checkpoint pattern `KgOracleTables.ensure` already uses for the
-  * mention table at the kernel/shuffle boundary.
+  * materialize the table, and have every consumer read it.
   *
   * Semantics here:
   *  - `materialize(name)` — the signal's OWN query entry calls this: it
-  *    always recomputes and rewrites (it IS the materialization job), so
-  *    benchmarking the entry still measures the true compute cost and a
-  *    stale dump from an older build can never be served to the gate.
-  *  - `ensure(name)` — downstream consumers call this: reuse the
-  *    snapshot if this JVM already wrote it; else ADOPT a matching
-  *    on-disk snapshot left by an earlier session (manifest must carry
-  *    the same corpus-path digest AND the same input content signature,
-  *    so a snapshot of a different or since-modified corpus can never be
-  *    served); else materialize once.
+  *    always recomputes and writes a new version (it IS the
+  *    materialization job), so benchmarking the entry still measures the
+  *    true compute cost.
+  *  - `ensure(name)` — downstream consumers call this: read this JVM's
+  *    current version if there is one; else materialize.
   *
-  * Content is deterministic (same corpus, same md5-derived hashing), so
-  * whichever caller materializes first writes identical rows; the DuckDB
-  * oracles are unaffected — they recompute from scratch either way.
+  * Snapshots are scoped to the session: a version written by an earlier
+  * JVM is never read, because nothing on disk records the build that
+  * computed it, and serving its rows could pass off an older build's
+  * output as this one's.
   *
-  * Versioning + GC: re-materializations write to a NEW versioned
-  * directory (v1, v2, …) instead of overwriting in place — a DataFrame
-  * returned earlier captured its parquet file listing at read time, and
-  * deleting those files under it would make any later evaluation of that
-  * (still valid) plan throw FileNotFoundException. After writing vN,
-  * versions older than v(N-1) are deleted: the previous version is kept
-  * for exactly that held-DataFrame safety window, so disk usage is
-  * bounded at two versions per snapshot regardless of how many
-  * materialize() calls a session makes.
+  * Versioning + GC: every materialization writes a NEW versioned
+  * directory (v1, v2, …, continuing past any version on disk) instead of
+  * overwriting in place — a DataFrame returned earlier captured its
+  * parquet file listing at read time, and deleting those files under it
+  * would make any later evaluation of that (still valid) plan throw
+  * FileNotFoundException. After writing vN, versions older than v(N-1)
+  * are deleted: the previous version is kept for exactly that
+  * held-DataFrame safety window, so disk usage is bounded at two versions
+  * per snapshot regardless of how many materialize() calls a session
+  * makes.
   */
 object SnapshotCache {
 
-  /** Latest known-good VERSION per snapshot base path, for this JVM. */
+  /** This JVM's current VERSION per snapshot base path. */
   private val versions = scala.collection.mutable.Map[String, Int]()
-
-  // leading underscore: Hadoop/Spark input listing skips _ and . files,
-  // so the manifest can live INSIDE the parquet version dir without the
-  // reader trying to parse it as data
-  private val ManifestName = "_graft_manifest.properties"
 
   private[graft] def baseFor(sfDir: String, name: String): String = {
     // key by basename + a digest of the FULL path: two corpora whose
@@ -63,26 +55,6 @@ object SnapshotCache {
     val abs = new File(sfDir).getAbsolutePath
     java.security.MessageDigest.getInstance("MD5")
       .digest(abs.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-  }
-
-  /** Content signature of the snapshot's INPUT corpus: (relative path,
-    * length, mtime) of every file under sfDir, sorted, digested. A
-    * metadata-only walk — no data read — so it costs one directory
-    * listing per ensure() in a fresh JVM; any rewrite of any input table
-    * (new driver round, regenerated parquet) changes the signature and
-    * invalidates adoption. Conservatively covers ALL tables in the dir:
-    * a false invalidation costs one recompute, a false adoption would
-    * corrupt the gate.
-    */
-  private[graft] def inputSignature(sfDir: String): String = {
-    val root = new File(sfDir)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def walk(f: File, rel: String): Unit =
-      if (f.isDirectory)
-        f.listFiles().sortBy(_.getName).foreach(c => walk(c, s"$rel/${c.getName}"))
-      else md.update(s"$rel|${f.length}|${f.lastModified}\n".getBytes("UTF-8"))
-    if (root.exists()) walk(root, "")
-    md.digest().map("%02x".format(_)).mkString
   }
 
   private def versionDirs(base: String): Vector[(Int, File)] = {
@@ -99,35 +71,13 @@ object SnapshotCache {
     f.delete(): Unit
   }
 
-  private def writeManifest(versionDir: String, sfDir: String): Unit = {
-    val props = new java.util.Properties()
-    props.setProperty("corpusPath", new File(sfDir).getAbsolutePath)
-    props.setProperty("pathDigest", pathDigest(sfDir))
-    props.setProperty("inputSignature", inputSignature(sfDir))
-    // written AFTER the parquet job committed (_SUCCESS exists), via
-    // temp + atomic rename: a manifest's presence implies a complete,
-    // adoptable snapshot — a crash mid-write leaves no manifest and the
-    // next session simply recomputes
-    val tmp = new File(versionDir, s".$ManifestName.tmp")
-    val out = new java.io.FileOutputStream(tmp)
-    try props.store(out, "graft snapshot manifest") finally out.close()
-    if (!tmp.renameTo(new File(versionDir, ManifestName)))
-      throw new java.io.IOException(s"manifest rename failed under $versionDir")
-  }
-
-  /** True when vDir holds a complete snapshot of THIS corpus at its
-    * CURRENT content (manifest present, path digest and input signature
-    * both match).
+  /** Directory of this JVM's current version of the snapshot. Before this
+    * JVM has written it, this names `v0`, which is never written, so a
+    * reader of the path finds no files rather than an older session's.
     */
-  private def manifestMatches(vDir: File, sfDir: String): Boolean = {
-    val mf = new File(vDir, ManifestName)
-    mf.isFile && {
-      val props = new java.util.Properties()
-      val in = new java.io.FileInputStream(mf)
-      try props.load(in) finally in.close()
-      props.getProperty("pathDigest") == pathDigest(sfDir) &&
-        props.getProperty("inputSignature") == inputSignature(sfDir)
-    }
+  def currentPath(sfDir: String, name: String): String = synchronized {
+    val base = baseFor(sfDir, name)
+    s"$base/v${versions.getOrElse(base, 0)}"
   }
 
   /** Recompute + write the snapshot (to a fresh version), return the
@@ -145,7 +95,6 @@ object SnapshotCache {
     val v = math.max(versions.getOrElse(base, 0), onDisk.lastOption.map(_._1).getOrElse(0)) + 1
     val p = s"$base/v$v"
     compute.write.mode("overwrite").parquet(p)
-    writeManifest(p, sfDir)
     versions(base) = v
     // GC: keep vN and v(N-1); anything older has had a full
     // materialization cycle for held plans to drain
@@ -155,30 +104,21 @@ object SnapshotCache {
     spark.read.parquet(p)
   }
 
-  /** Reuse this JVM's latest snapshot if present; else adopt a matching
-    * on-disk snapshot from a previous session; else materialize.
-    */
+  /** This JVM's current version of the snapshot; else materialize. */
   def ensure(spark: SparkSession, sfDir: String, name: String)(
       compute: => DataFrame): DataFrame = synchronized {
     val base = baseFor(sfDir, name)
     versions.get(base) match {
       case Some(v) => spark.read.parquet(s"$base/v$v")
-      case None =>
-        // cross-session adoption: the HIGHEST complete version whose
-        // manifest matches this corpus path + current content
-        versionDirs(base).reverse.find { case (_, dir) =>
-          manifestMatches(dir, sfDir)
-        } match {
-          case Some((v, dir)) =>
-            versions(base) = v
-            spark.read.parquet(dir.getAbsolutePath)
-          case None => materialize(spark, sfDir, name)(compute)
-        }
+      case None => materialize(spark, sfDir, name)(compute)
     }
   }
 
-  /** Test hook: forget this JVM's version bookkeeping (simulates a fresh
-    * session against whatever is on disk).
+  /** Test hook: forget this JVM's version of one snapshot (simulates a
+    * fresh session against whatever is on disk), leaving the snapshots
+    * other tests in this JVM rely on current.
     */
-  private[graft] def resetForTest(): Unit = synchronized { versions.clear() }
+  private[graft] def resetForTest(sfDir: String, name: String): Unit = synchronized {
+    versions -= baseFor(sfDir, name)
+  }
 }

@@ -177,41 +177,37 @@ class CorpusOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(held.count() == before)
   }
 
-  test("snapshot manifest: cross-session adoption, staleness rejection, bounded GC") {
+  test("snapshot store: a fresh session recomputes, never adopts; bounded GC") {
     import graft.ops.SnapshotCache
+    import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_snapcorpus").toFile
-    val marker = new java.io.File(tmp, "marker.txt")
-    java.nio.file.Files.write(marker.toPath, "one".getBytes("UTF-8"))
     val sfDir = tmp.getAbsolutePath
-    var computes = 0
-    def compute() = {
-      computes += 1
-      import spark.implicits._
-      Seq((1, "a"), (2, "b")).toDF("id", "v")
+    val corpusBase = new java.io.File(SnapshotCache.baseFor(sfDir, "t")).getParentFile
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getInt(0)).sorted.toVector
+    try {
+      var computes = 0
+      def computeA() = { computes += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
+      def computeB() = { computes += 1; Seq((3, "c")).toDF("id", "v") }
+      assert(ids(SnapshotCache.materialize(spark, sfDir, "t")(computeA())) == Vector(1, 2))
+      // within the session, consumers read the current version
+      assert(ids(SnapshotCache.ensure(spark, sfDir, "t")(computeB())) == Vector(1, 2))
+      assert(computes == 1)
+      // a FRESH session (simulated by forgetting this JVM's version) runs
+      // its own compute: the rows on disk may come from an older build
+      SnapshotCache.resetForTest(sfDir, "t")
+      val fresh = SnapshotCache.ensure(spark, sfDir, "t")(computeB())
+      assert(computes == 2, "a fresh session's ensure must recompute, not adopt")
+      assert(ids(fresh) == Vector(3))
+      // repeated re-materialization keeps at most TWO versions on disk
+      // (current + previous for held-DataFrame safety)
+      (1 to 4).foreach(_ => SnapshotCache.materialize(spark, sfDir, "t")(computeA()))
+      val base = new java.io.File(SnapshotCache.baseFor(sfDir, "t"))
+      val vDirs = base.listFiles().filter(f => f.isDirectory && f.getName.matches("v\\d+"))
+      assert(vDirs.length == 2, vDirs.map(_.getName).mkString(","))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(corpusBase)
+      org.apache.commons.io.FileUtils.deleteQuietly(tmp)
     }
-    assert(SnapshotCache.materialize(spark, sfDir, "t")(compute()).count() == 2)
-    assert(computes == 1)
-    // a FRESH session (simulated by clearing the JVM bookkeeping) must
-    // ADOPT the on-disk snapshot via its manifest — no recompute
-    SnapshotCache.resetForTest()
-    val adopted = SnapshotCache.ensure(spark, sfDir, "t")(compute())
-    assert(computes == 1, "cross-session ensure must adopt, not recompute")
-    assert(adopted.collect().map(_.getInt(0)).sorted.toVector == Vector(1, 2))
-    // changed input content -> signature mismatch -> the stale snapshot
-    // is REJECTED and the signal recomputes
-    SnapshotCache.resetForTest()
-    java.nio.file.Files.write(marker.toPath, "two!".getBytes("UTF-8"))
-    SnapshotCache.ensure(spark, sfDir, "t")(compute())
-    assert(computes == 2, "stale-input snapshot must not be adopted")
-    // repeated re-materialization keeps at most TWO versions on disk
-    // (current + previous for held-DataFrame safety)
-    (1 to 4).foreach(_ => SnapshotCache.materialize(spark, sfDir, "t")(compute()))
-    val base = new java.io.File(SnapshotCache.baseFor(sfDir, "t"))
-    val vDirs = base.listFiles().filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-    assert(vDirs.length == 2, vDirs.map(_.getName).mkString(","))
-    // ...and a fresh session adopts the HIGHEST surviving version
-    SnapshotCache.resetForTest()
-    assert(SnapshotCache.ensure(spark, sfDir, "t")(compute()).count() == 2)
-    assert(computes == 6, "post-GC ensure must adopt the newest version")
   }
 }

@@ -111,18 +111,24 @@ class OpsSpec extends AnyFunSuite with SparkTestBase {
     // n-gram slices crash on 1- and 2-token docs (DuckDB's
     // generate_series is just empty) — pin the guard with a tiny corpus
     val dir = java.nio.file.Files.createTempDirectory("graft_tiny").toString
-    Seq((0L, "one", "en", "web", 3L), (1L, "two words", "en", "web", 9L),
-      (2L, "a b c a b c", "en", "web", 11L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = DocOps.docRepetition(spark, dir).collect()
-    assert(r.length == 3)
-    assert(r(0).getDouble(1) == 0.0 && r(0).getDouble(3) == 0.0) // no grams
-    assert(r(2).getDouble(3) > 0.0) // repeated trigrams measured
-    // the trigram-shingle paths survive the 1-token doc too
-    assert(DocOps.docFingerprint(spark, dir).count() == 3)
-    assert(DocOps.dedupMinhashLsh(spark, dir).collect() != null)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    // dedupMinhashLsh materializes a snapshot keyed by this temp corpus
+    val snapshots = new java.io.File(graft.ops.SnapshotCache.baseFor(dir, "x")).getParentFile
+    try {
+      Seq((0L, "one", "en", "web", 3L), (1L, "two words", "en", "web", 9L),
+        (2L, "a b c a b c", "en", "web", 11L))
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val r = DocOps.docRepetition(spark, dir).collect()
+      assert(r.length == 3)
+      assert(r(0).getDouble(1) == 0.0 && r(0).getDouble(3) == 0.0) // no grams
+      assert(r(2).getDouble(3) > 0.0) // repeated trigrams measured
+      // the trigram-shingle paths survive the 1-token doc too
+      assert(DocOps.docFingerprint(spark, dir).count() == 3)
+      assert(DocOps.dedupMinhashLsh(spark, dir).collect() != null)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(snapshots)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    }
   }
 
   test("CC clusters: star-contraction agrees with a driver-side union-find") {

@@ -180,6 +180,22 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(p.contains("Partial"), s"no map-side window group limit:\n$p")
   }
 
+  test("kg oracle parquet globs name this JVM's current snapshot versions") {
+    // the DuckDB oracles embed absolute globs: each must resolve to the
+    // version this JVM wrote, not to a dump left by an earlier session
+    graft.KgOracleTables.ensure(spark, sf)
+    val current = Seq("kg_mentions", "kg_semnet", "kg_cui_pref", "kg_treecodes")
+      .map(graft.ops.SnapshotCache.currentPath(sf, _))
+    val globs = graft.KgQueries.oracleSql.values
+      .flatMap("read_parquet\\('([^']*)'\\)".r.findAllMatchIn(_).map(_.group(1))).toSet
+    assert(globs.size == current.size, globs.mkString("\n"))
+    globs.foreach { g =>
+      val dir = new java.io.File(g).getParentFile
+      assert(g.endsWith("/*.parquet") && current.contains(dir.getPath), g)
+      assert(dir.listFiles().exists(_.getName.endsWith(".parquet")), s"no parquet under $dir")
+    }
+  }
+
   test("CC contraction and pack plan never buffer per-key collections") {
     // star contraction: min-agg + join-back only — a collect_set here
     // would hold a converged star's whole component at its root. The
