@@ -282,10 +282,7 @@ object KgQueries {
         // negated mentions, every other profile counts mentions
         def count(ms: Vector[graft.link.Mention]): Int =
           if (name.startsWith("negex_negated")) ms.count(_.negated) else ms.size
-        val n = sources.MedlineReader.records(p.url, text, o).iterator.map {
-          case (id, rt) => count(pipeline.DocKernel.mentions(id, rt, t, o))
-        }.sum
-        (name, n.toLong)
+        (name, count(pipeline.DocKernel.annotate(p.url, text, t, o)).toLong)
       }
     }.toDF("mode", "n")
       .groupBy(col("mode")).agg(sum(col("n")).as("n_mentions"))
@@ -326,7 +323,11 @@ object KgQueries {
         val abField = if (ab.isEmpty) "" else s"\nAB  - ${wrapped.result()}"
         s"PMID- ${p.url}\nTI  - $ti$abField"
       }
-    sources.MedlineReader.mentions(raw, umls).toDF()
+    import org.apache.spark.sql.functions.{col, concat_ws}
+    // url = "<pmid>.<field>", so (url, sentNo) is the `<id>.<ti|ab>.<n>` label
+    val fields = sources.MedlineReader.textFields(raw)
+      .select(concat_ws(".", col("pmid"), col("field")).as("url"), col("text"))
+    graft.api.Graft.annotate(fields, "url", "text", umls = Some(umls))
       .orderBy("url", "sentNo", "start", "cui")
   }
 

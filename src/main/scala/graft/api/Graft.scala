@@ -194,8 +194,10 @@ object Graft {
     *                FROM docs LATERAL VIEW explode(graft_mentions(id, body)) AS m""")
     * }}}
     * `graft_mentions(id, text)` returns the full typed mention array;
-    * `graft_triples(id, text)` the document-local triples. The broadcast
-    * tables are captured once at registration.
+    * `graft_triples(id, text)` the document-local triples. Both run the
+    * same record path as [[annotate]] and [[triples]], so `opts`'
+    * segmentation and -z apply. The broadcast tables are captured once
+    * at registration.
     */
   def registerSql(spark: SparkSession, opts: LinkOptions = LinkOptions.default,
       umls: Option[Broadcast[UmlsTables]] = None): Unit = {
@@ -203,54 +205,45 @@ object Graft {
     spark.udf.register("graft_mentions",
       org.apache.spark.sql.functions.udf((id: String, text: String) =>
         if (text == null) Seq.empty[Mention]
-        else DocKernel.mentions(if (id == null) "" else id, text, bc.value, opts)))
+        else DocKernel.annotate(if (id == null) "" else id, text, bc.value, opts)))
     spark.udf.register("graft_triples",
       org.apache.spark.sql.functions.udf((id: String, text: String) =>
         if (text == null) Seq.empty[(String, String, String, String, Int)]
-        else DocTriples.fromDoc(if (id == null) "" else id, text, bc.value, opts)))
+        else DocTriples.fromText(if (id == null) "" else id, text, bc.value, opts)))
   }
 
-  /** The table operator annotate, annotateTerms and triples run
-    * through. ANY id type is cast to string (a bigint doc_id would
-    * otherwise fail encoder resolution before any work runs) and rows
-    * with a null text are skipped. Under --sldi / --sldiID / --blanklines
-    * N the text cell is a raw input STREAM, segmented into records
-    * before `f` (skr_text_processing.pl:142-178); AAs are record-local,
-    * exactly like the reference's per-record text objects.
-    * MedlineReader.records is the single shared dispatch, so ids and
-    * record boundaries cannot drift between these entries and the server.
+  /** The table operator annotate and triples run through: ANY id type is
+    * cast to string (a bigint doc_id would otherwise fail encoder
+    * resolution before any work runs), rows with a null text are
+    * skipped, and `f` is one of the record functions
+    * ([[DocKernel.annotate]], [[DocTriples.fromText]]).
     */
   private def perRecord[T: Encoder](df: DataFrame, idCol: String, textCol: String,
-      opts: LinkOptions, umls: Broadcast[UmlsTables])(
+      umls: Broadcast[UmlsTables])(
       f: (String, String, UmlsTables) => IterableOnce[T]): Dataset[T] = {
     import df.sparkSession.implicits._
     df.select(df.col(idCol).cast("string"), df.col(textCol).cast("string"))
       .as[(String, String)].mapPartitions { it =>
         val t = umls.value
         it.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty
-          else graft.sources.MedlineReader.records(id, text, opts)
-            .iterator.flatMap { case (url, rt) => f(url, rt, t) }
+          if (text == null) Iterator.empty else f(id, text, t)
         }
       }
   }
 
   /** Annotate any table: one mention row per linked concept occurrence.
     * `textCol` must hold plain text (use Extract.htmlToText upstream for
-    * html). Runs the full per-document kernel map-side against the
-    * broadcast tables — shape-identical to Pipeline.mentions but free of
-    * the Page schema.
+    * html). Runs the record path ([[DocKernel.annotate]]: segmentation,
+    * then running text or -z terms) map-side against the broadcast
+    * tables — shape-identical to Pipeline.mentions but free of the Page
+    * schema.
     */
   def annotate(df: DataFrame, idCol: String, textCol: String,
       opts: LinkOptions = LinkOptions.default,
       umls: Option[Broadcast[UmlsTables]] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bc = umls.getOrElse(Pipeline.broadcastUmls(spark))
-    // -z dispatches to term processing: annotate is THE flag-driven entry
-    if (opts.termProcessing) return annotateTerms(df, idCol, textCol, opts, Some(bc))
-    perRecord(df, idCol, textCol, opts, bc)((url, text, t) =>
-      DocKernel.mentions(url, text, t, opts)).toDF()
+    import df.sparkSession.implicits._
+    perRecord(df, idCol, textCol, umls.getOrElse(Pipeline.broadcastUmls(df.sparkSession)))(
+      (id, text, t) => DocKernel.annotate(id, text, t, opts)).toDF()
   }
 
   /** Term processing (-z): each row's text is ONE dictionary term; the
@@ -259,14 +252,8 @@ object Graft {
     */
   def annotateTerms(df: DataFrame, idCol: String, termCol: String,
       opts: LinkOptions = LinkOptions.default,
-      umls: Option[Broadcast[UmlsTables]] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // segmentation applies in term mode too (-z --sldi = one TERM per
-    // line), through the same table operator as annotate
-    perRecord(df, idCol, termCol, opts, umls.getOrElse(Pipeline.broadcastUmls(spark)))(
-      (url, term, t) => DocKernel.termMentions(url, term, t, opts)).toDF()
-  }
+      umls: Option[Broadcast[UmlsTables]] = None): DataFrame =
+    annotate(df, idCol, termCol, opts.copy(termProcessing = true), umls)
 
   /** Triples from any table, map-side end to end (document-local WSD +
     * sentence-window pairing; see DocTriples).
@@ -274,10 +261,9 @@ object Graft {
   def triples(df: DataFrame, idCol: String, textCol: String,
       opts: LinkOptions = LinkOptions.default,
       umls: Option[Broadcast[UmlsTables]] = None): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    perRecord(df, idCol, textCol, opts, umls.getOrElse(Pipeline.broadcastUmls(spark)))(
-      (url, text, t) => DocTriples.fromDoc(url, text, t, opts))
+    import df.sparkSession.implicits._
+    perRecord(df, idCol, textCol, umls.getOrElse(Pipeline.broadcastUmls(df.sparkSession)))(
+      (id, text, t) => DocTriples.fromText(id, text, t, opts))
       .toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
   }
 

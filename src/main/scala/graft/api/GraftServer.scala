@@ -226,14 +226,11 @@ object GraftServer {
       // <MMOs>-framed --XMLf stream, `mmo` the machine-output term
       // lines; default = the mention rows
       val format = params.getOrElse("format", "mentions")
-      val records = graft.sources.MedlineReader.records(id, req.body, opts)
+      // the reference writers print one document per segmented record
+      lazy val records = graft.sources.MedlineReader.records(id, req.body, opts)
       format match {
         case "mentions" =>
-          val ms = records.flatMap { case (url, rt) =>
-            if (opts.termProcessing) DocKernel.termMentions(url, rt, bc.value, opts)
-            else DocKernel.mentions(url, rt, bc.value, opts)
-          }
-          ms.map { m =>
+          DocKernel.annotate(id, req.body, bc.value, opts).map { m =>
             s"""{"url":${jsonStr(m.url)},"sentNo":${m.sentNo},"start":${m.start},""" +
               s""""len":${m.len},"cui":${jsonStr(m.cui)},"score":${m.score},""" +
               s""""semTypes":${m.semTypes.map(jsonStr).mkString("[", ",", "]")},""" +
@@ -262,11 +259,7 @@ object GraftServer {
       val params = queryParams(req.uri)
       val id = params.getOrElse("id", "doc")
       val opts = optsFor(params)
-      val ts = graft.sources.MedlineReader.records(id, req.body, opts)
-        .flatMap { case (url, rt) =>
-          DocTriples.fromDoc(url, rt, bc.value, opts)
-        }
-      ts.map { case (s, p, o, url, sentNo) =>
+      DocTriples.fromText(id, req.body, bc.value, opts).map { case (s, p, o, url, sentNo) =>
         s"""{"subj_cui":${jsonStr(s)},"pred":${jsonStr(p)},""" +
           s""""obj_cui":${jsonStr(o)},"url":${jsonStr(url)},"sentNo":$sentNo}"""
       }.mkString("[", ",", "]")

@@ -257,16 +257,20 @@ object GraftFunctions {
       cappedCollectSetBuilder, "built-in")
   }
 
-  /** Requires register(spark) once per session. */
-  def cosine(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
+  // The Column facade registers the functions on the active session
+  // before naming them, so callers never register by hand.
+  private def call(name: String, args: Column*): Column = {
+    register(SparkSession.active)
+    call_function(name, args: _*)
+  }
 
-  /** Dot product (see [[DotProduct]]); requires register(spark). */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+  /** Cosine similarity (see [[CosineSimilarity]]). */
+  def cosine(a: Column, b: Column): Column = call("graft_cosine", a, b)
 
-  /** Capped distinct-collect (see [[CappedCollectSetLong]]); requires
-    * register(spark) once per session.
-    */
+  /** Dot product (see [[DotProduct]]). */
+  def dot(a: Column, b: Column): Column = call("graft_dot", a, b)
+
+  /** Capped distinct-collect (see [[CappedCollectSetLong]]). */
   def cappedCollectSet(c: Column, cap: Int): Column =
-    call_function("graft_capped_collect_set", c,
-      org.apache.spark.sql.functions.lit(cap))
+    call("graft_capped_collect_set", c, org.apache.spark.sql.functions.lit(cap))
 }

@@ -1,7 +1,7 @@
 package graft.graph
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -34,6 +34,16 @@ object IcebergLite {
   final case class Snapshot(snapshotId: Int, partitions: Vector[PartitionMeta])
 
   private def manifestDir(root: String) = Paths.get(root, "_manifest")
+
+  /** Whether a table's data dir holds any parquet file (bucket dirs are
+    * one level down).
+    */
+  private def hasParquet(dataDir: Path): Boolean =
+    Files.isDirectory(dataDir) && {
+      val walk = Files.walk(dataDir, 2)
+      try walk.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
+      finally walk.close()
+    }
 
   def latestSnapshot(root: String): Option[Snapshot] = {
     val dir = manifestDir(root)
@@ -147,17 +157,8 @@ object IcebergLite {
     // checked EXPLICITLY (a broad AnalysisException catch here would turn
     // any unrelated read failure into an empty snapshot that orphans the
     // just-written buckets and duplicates them on the next write)
-    val hasDataFiles = {
-      val dp = Paths.get(dataDir)
-      Files.isDirectory(dp) && {
-        val stream = Files.walk(dp, 2)
-        try stream.iterator().asScala.exists(
-          p => p.getFileName.toString.endsWith(".parquet"))
-        finally stream.close()
-      }
-    }
     val metrics =
-      if (!hasDataFiles) Vector.empty[PartitionMeta]
+      if (!hasParquet(Paths.get(dataDir))) Vector.empty[PartitionMeta]
       else {
         val written = spark.read.parquet(dataDir)
         val fresh = if (committed.isEmpty) written
@@ -221,28 +222,12 @@ object IcebergLite {
     // empty committed table's data dir holds no parquet to infer a
     // schema from (or may not exist at all), and the eager read would
     // throw instead of returning the documented empty view
-    def hasParquet: Boolean = Files.isDirectory(dataDir) && {
-      val walk = Files.walk(dataDir, 2)
-      try walk.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-      finally walk.close()
-    }
     if (ok.isEmpty) {
-      if (hasParquet) spark.read.parquet(dataDir.toString).limit(0)
+      if (hasParquet(dataDir)) spark.read.parquet(dataDir.toString).limit(0)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("subj_cui",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("pred",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("obj_cui",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("url",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("sentNo",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("part_bucket",
-            org.apache.spark.sql.types.IntegerType))))
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "subj_cui STRING, pred STRING, obj_cui STRING, url STRING, sentNo INT, part_bucket INT"))
     }
     else spark.read.parquet(dataDir.toString)
       .filter(col("part_bucket").isin(ok: _*))

@@ -72,10 +72,6 @@ final case class LinkOptions(
     // instead of the default adj<->noun filter (filter_an_variants,
     // metamap_variants.pl:1005-1143)
     allDerivationalVariants: Boolean = false,
-    // runtime variant closure for generators missing from the static
-    // table — the reference's automatic static->dynamic fallback
-    // (metamap_variants.pl:356-364); ON by default like the reference
-    dynamicVariants: Boolean = true,
     // --nomap: user exclusion pairs (term, cui); "" on either side is a
     // wildcard matching anything, like the reference's partially-
     // instantiated NoMap pairs (filter_evaluations_by_user_exclusions,

@@ -109,8 +109,7 @@ object VariantGather {
         def lookupVars(table: Map[String, Vector[Variant]]): Vector[Variant] = {
           val static = table.getOrElse(gen, Vector.empty)
           if (static.nonEmpty) static.filterNot(_.word == gen)
-          else if (isSingle && opts.dynamicVariants &&
-            gen.length >= 3 && gen.forall(_.isLetter))
+          else if (isSingle && gen.length >= 3 && gen.forall(_.isLetter))
             graft.umls.DynamicVariants.closure(gen, umls,
               allDeriv = opts.allDerivationalVariants,
               noDeriv = opts.noDerivationalVariants)

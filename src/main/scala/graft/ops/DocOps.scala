@@ -272,7 +272,6 @@ object DocOps {
     // aggregate) stops buffering a hot bucket at cap+1 ids, so the size
     // filter below drops overflowed buckets WITHOUT the aggregation ever
     // holding a corpus-sized array in one buffer.
-    graft.functions.GraftFunctions.register(spark)
     val buckets = minhashBands(spark, sfDir, unigram, blockCols)
       .groupBy(blockCols.map(col) :+ col("band") :+ col("sig"): _*)
       .agg(graft.functions.GraftFunctions
@@ -557,8 +556,6 @@ object DocOps {
     * intermediate arrays — bit-identical to the previous
     * aggregate(zip_with(...)) formulation and the DuckDB
     * list_dot_product oracle (same sequential double accumulation).
-    * Sessions must call GraftFunctions.register first (each ANN query
-    * entry does).
     */
   private def cosineCol(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosine(a, b)
@@ -574,7 +571,6 @@ object DocOps {
     */
   private def ivfScoredWith(spark: SparkSession, sfDir: String,
       cents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, sfDir, "embeddings")
       .crossJoin(broadcast(cents))
       .withColumn("ccos", round(cosineCol(col("embedding"), col("ce")), 6))
@@ -656,7 +652,6 @@ object DocOps {
     * k = 5; ties broken by rounded cosine then neighbor id.
     */
   def annTopkBruteforce(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.load(spark, sfDir, "embeddings")
     val q = e.filter(col("vec_id") < 20).toDF("query_id", "qe", "ql")
     val c = e.toDF("neighbor_id", "ne", "nl")
@@ -704,7 +699,6 @@ object DocOps {
     * verified exactly by the DuckDB oracle (integer hyperplanes).
     */
   def annLshBucketed(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.load(spark, sfDir, "embeddings")
     val planes: Array[Array[Double]] = lshPlanes.map(_.map(_.toDouble))
     // hyperplane side test as NATIVE column algebra: the codegen'd dot
@@ -884,7 +878,6 @@ object DocOps {
   private[graft] val hybridTopN = 1000
 
   def hybridSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val kwTerms = Seq("spark", "join", "window")
     val d = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), array_distinct(toks(col("text"))).as("ts"))

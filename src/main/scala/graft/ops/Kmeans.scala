@@ -26,7 +26,6 @@ object Kmeans {
   def fit(embeddings: DataFrame, k: Int, iterations: Int): Vector[(Int, Array[Double])] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val vecs = embeddings
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
 
@@ -73,7 +72,6 @@ object Kmeans {
   def fitIntSpherical(embeddings: DataFrame, k: Int, iterations: Int): Vector[(Int, Array[Double])] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val vecs = embeddings
       .select(col("vec_id"),
         transform(col("embedding"), x => round(x.cast("double") * 256)).as("v"))

@@ -152,7 +152,6 @@ object Multimodal {
     * multimodal -> embedding -> similarity plumbing end to end.
     */
   def mediaFeaturesTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val f = extractFeatures(tableFor(spark, sfDir))
     val q = f.filter(col("media_id") < 8).toDF("query_id", "qk", "qe")
     val c = f.toDF("neighbor_id", "nk", "ne")

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.aa.AaDetector
 import graft.link._
 import graft.negex.Negex
+import graft.sources.MedlineReader
 import graft.text.{Sentence, Sentences, Tok, Tokenizer}
 import graft.umls.UmlsTables
 
@@ -187,6 +188,19 @@ object DocKernel {
   def mentions(url: String, text: String, umls: UmlsTables,
       opts: LinkOptions = LinkOptions.default): Vector[Mention] =
     mentions(analyze(url, text, umls, opts), umls)
+
+  /** The mention rows of one input cell, the record path every entry
+    * (Graft.annotate, graft_mentions, the server) runs: the cell is
+    * segmented into records under --sldi / --sldiID / --blanklines N
+    * (skr_text_processing.pl:142-178; AAs stay record-local), then each
+    * record is linked as running text, or as one dictionary term under -z.
+    */
+  def annotate(id: String, text: String, umls: UmlsTables,
+      opts: LinkOptions): Vector[Mention] =
+    MedlineReader.records(id, text, opts).flatMap { case (url, rt) =>
+      if (opts.termProcessing) termMentions(url, rt, umls, opts)
+      else mentions(url, rt, umls, opts)
+    }
 
   /** The mention rows of an analysis: each phrase's mapping candidates,
     * NegEx-marked per sentence; -y keeps one concept per span, ranked

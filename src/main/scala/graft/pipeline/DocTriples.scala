@@ -70,4 +70,14 @@ object DocTriples {
     val ms = wsdLocal(DocKernel.mentions(url, text, umls, opts), umls)
     pairsLocal(ms, umls).map { case (s, r, o, sn) => (s, r, o, url, sn) }
   }
+
+  /** The triples of one input cell: the record path of
+    * [[DocKernel.annotate]] (segmentation, record-qualified urls), then
+    * [[fromDoc]] per record.
+    */
+  def fromText(id: String, text: String, umls: UmlsTables,
+      opts: graft.link.LinkOptions): Vector[(String, String, String, String, Int)] =
+    graft.sources.MedlineReader.records(id, text, opts).flatMap { case (url, rt) =>
+      fromDoc(url, rt, umls, opts)
+    }
 }

@@ -2,10 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-import graft.link.Mention
-import graft.pipeline.DocKernel
-import graft.umls.UmlsTables
-
 /** Fielded MEDLINE / RIS citation input (S1 parity): the first input a
   * MetaMap-parity user feeds the engine. Re-expresses the reference's
   * citation reader (/root/reference/skr/skr_text_processing.pl:189-361):
@@ -26,10 +22,11 @@ import graft.umls.UmlsTables
   *  - continuation lines are joined with a single space (the reference
   *    gloms whitespace fields with a space, :230-236).
   *
-  * Spark shape: parsing is a pure per-citation function run inside
-  * mapPartitions (embarrassingly parallel, like the page kernel); one
-  * output row per (pmid, field) with utterance labels `<pmid>.<ti|ab>.<n>`
-  * carried as url = "<pmid>.<field>" + the kernel's per-field sentNo.
+  * Spark shape: parsing is a pure per-body function run map-side
+  * (embarrassingly parallel, like the page kernel) into one row per
+  * (pmid, field); annotating those rows with url = "<pmid>.<field>"
+  * (Graft.annotate) carries the utterance labels `<pmid>.<ti|ab>.<n>`
+  * as url + the kernel's per-field sentNo.
   */
 object MedlineReader {
 
@@ -248,9 +245,10 @@ object MedlineReader {
     else if (opts.sldi) Some(SegMode.Sldi)
     else opts.blankLines.map(SegMode.BlankLines(_))
 
-  /** THE segmentation dispatch, shared by Graft.annotate/triples and the
-    * server endpoints (one copy — the id scheme must not drift between
-    * entry points): no mode → the text IS one document under the row id;
+  /** THE segmentation dispatch, shared by the record functions
+    * (DocKernel.annotate, DocTriples.fromText) and the server's reference
+    * writers (one copy — the id scheme must not drift between entry
+    * points): no mode → the text IS one document under the row id;
     * sldiID record ids are AUTHORITATIVE (the reference labels output
     * with the provided ID verbatim — id collisions across rows are the
     * same user error as duplicate ids in the id column itself); ordinal
@@ -335,39 +333,15 @@ object MedlineReader {
   }
 
   /** Distributed parse: raw citation bodies -> one row per TEXT field,
-    * (pmid, field, text), field lowercased for the utterance label.
-    * Non-text fields are dropped here (the reference carries them to
-    * output formatting only).
+    * (pmid, field, text), field lowercased for the utterance label
+    * `<pmid>.<field>.<n>`. Non-text fields are dropped here (the
+    * reference carries them to output formatting only).
     */
-  /** THE text-field row shaper — (id, lowercased field, text) — shared
-    * by [[textFields]] and [[mentions]] so the url/label convention and
-    * the text-field filter cannot desynchronize between the two tables.
-    */
-  private def textFieldRows(body: String): Vector[(String, String, String)] =
-    parseBlocks(body).flatMap { c =>
-      c.fields.filter(f => textFieldNames(f.name) && f.value.nonEmpty)
-        .map(f => (c.id, f.name.toLowerCase, f.value))
-    }
-
   def textFields(raw: Dataset[String])(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    raw.flatMap(textFieldRows).toDF("pmid", "field", "text")
-  }
-
-  /** Run the per-document kernel over each text field: mentions carry
-    * url = "<pmid>.<field>" so the reference's `<id>.<ti|ab>.<n>`
-    * utterance labels are (url, sentNo).
-    */
-  def mentions(raw: Dataset[String], umls: org.apache.spark.broadcast.Broadcast[UmlsTables])(
-      implicit spark: SparkSession): Dataset[Mention] = {
-    import spark.implicits._
-    raw.mapPartitions { it =>
-      val t = umls.value
-      it.flatMap { body =>
-        textFieldRows(body).iterator.flatMap { case (id, fn, v) =>
-          DocKernel.mentions(s"$id.$fn", v, t)
-        }
-      }
-    }
+    raw.flatMap(body => parseBlocks(body).flatMap { c =>
+      c.fields.filter(f => textFieldNames(f.name) && f.value.nonEmpty)
+        .map(f => (c.id, f.name.toLowerCase, f.value))
+    }).toDF("pmid", "field", "text")
   }
 }

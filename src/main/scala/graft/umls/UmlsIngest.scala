@@ -543,21 +543,10 @@ object UmlsIngest {
     * the schemas [[fromDataFrames]] consumes — both the round-trip proof
     * and the recommended deployment shape (build once, load per job).
     */
-  /** @param variantPartitions parallelism for the VARIANT table writes —
-    *   the only tables that can reach ~10⁷ rows at full-Metathesaurus
-    *   scale (a real vars table). 1 (the default) keeps the single-file
-    *   layout for dictionary-scale dumps; pass more to parallelize the
-    *   big writes. Every other side table is small and stays one file.
-    */
-  def dump(t: UmlsTables, dir: String, variantPartitions: Int = 1)(
-      implicit spark: SparkSession): Unit = {
+  def dump(t: UmlsTables, dir: String)(implicit spark: SparkSession): Unit = {
     import spark.implicits._
     def write(df: DataFrame, name: String): Unit =
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
-    def writeBig(df: DataFrame, name: String): Unit =
-      (if (variantPartitions <= 1) df.coalesce(1)
-       else df.repartition(variantPartitions))
-        .write.mode("overwrite").parquet(s"$dir/$name")
 
     val indexed: Set[(String, String)] =
       t.firstWordIndex.valuesIterator.flatten.map(e => (e.cui, e.str)).toSet
@@ -583,15 +572,15 @@ object UmlsIngest {
       cs.toVector.sorted.map(w -> _)
     } ++ t.lexiconForms.toVector.sorted.map(_ -> "form"))
       .toDF("word", "cat"), "lexicon")
-    writeBig(variantDf(spark, t.variants), "variants")
+    write(variantDf(spark, t.variants), "variants")
     if (t.variantsByCat.nonEmpty)
-      writeBig(t.variantsByCat.toVector.sortBy(_._1).map { case (c, m) =>
+      write(t.variantsByCat.toVector.sortBy(_._1).map { case (c, m) =>
         variantDf(spark, m).withColumn("cat", lit(c))
       }.reduce(_ unionByName _), "variants_by_cat")
     if (t.variantsAllDeriv.nonEmpty)
-      writeBig(variantDf(spark, t.variantsAllDeriv), "variants_all_deriv")
+      write(variantDf(spark, t.variantsAllDeriv), "variants_all_deriv")
     if (t.variantsNoDeriv.nonEmpty)
-      writeBig(variantDf(spark, t.variantsNoDeriv), "variants_no_deriv")
+      write(variantDf(spark, t.variantsNoDeriv), "variants_no_deriv")
     write(t.semnet.toVector.sortBy(_._1).flatMap { case ((s1, s2), rels) =>
       rels.map(r => (s1, r, s2))
     }.toDF("st1", "rel", "st2"), "semnet")

@@ -367,4 +367,92 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
       } finally idle.foreach(_.close())
     }
   }
+
+  /** (url, sentNo, start, len, cui, score, negated) */
+  private type RecordMention = (String, Int, Int, Int, String, Int, Boolean)
+  /** (subj_cui, pred, obj_cui, url, sentNo) */
+  private type RecordTriple = (String, String, String, String, Int)
+
+  test("the record path agrees: annotate/triples, graft_* SQL and the server under segmentation and -z") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // every line is ID|Text so --sldiID accepts each document; "aa"
+    // defines CA on line 1 and reuses it on line 2, and "tx" has a blank
+    // line for --blanklines 1
+    val docs = Seq(
+      "aa" -> "a1|Coronary artery (CA) disease was present.\na2|CA was severe.",
+      "tx" -> "p1|The patient had pneumonia and fever.\n\np2|No sign of myocardial infarction.",
+      "terms" -> "t1|heart attack\nt2|coronary artery disease")
+    val profiles = Seq(Nil, Seq("--sldi"), Seq("--sldiID"), Seq("--blanklines", "1"), Seq("-z"))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def rows(body: String) = json.readTree(body).elements.asScala.toVector
+    val df = docs.toDF("id", "body")
+    withServer { handle =>
+      withConn(handle.port) { c =>
+        def post(path: String, id: String, flags: Seq[String], body: String): String = {
+          val q = if (flags.isEmpty) "" else "&flags=" + flags.mkString("%20")
+          c.send(postReq(s"$path?id=$id$q", body))
+          val (code, resp) = c.read()
+          assert(code == 200, resp)
+          resp
+        }
+        val outputs = profiles.map { flags =>
+          val opts = Graft.parseFlags(flags)
+          val lib: Vector[RecordMention] = Graft.annotate(df, "id", "body", opts, Some(serverUmls))
+            .as[graft.link.Mention].collect().toVector
+            .map(m => (m.url, m.sentNo, m.start, m.len, m.cui, m.score, m.negated))
+          val libT = Graft.triples(df, "id", "body", opts, Some(serverUmls))
+            .as[(String, String, String, String, Int)].collect().toVector
+          // a fresh session per profile: re-registering graft_* on one
+          // session would replace its functions
+          val session = spark.newSession()
+          Graft.registerSql(session, opts, Some(serverUmls))
+          session.createDataFrame(docs).toDF("id", "body").createOrReplaceTempView("rp_docs")
+          val sql = session.sql(
+            "SELECT graft_mentions(id, body) AS ms, graft_triples(id, body) AS ts FROM rp_docs")
+            .collect().toVector
+          val sqlM: Vector[RecordMention] = sql.flatMap(_.getSeq[org.apache.spark.sql.Row](0)).map(r =>
+            (r.getAs[String]("url"), r.getAs[Int]("sentNo"), r.getAs[Int]("start"),
+              r.getAs[Int]("len"), r.getAs[String]("cui"), r.getAs[Int]("score"),
+              r.getAs[Boolean]("negated")))
+          val sqlT: Vector[RecordTriple] = sql.flatMap(_.getSeq[org.apache.spark.sql.Row](1)).map(r =>
+            (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
+          val srvM: Vector[RecordMention] = docs.flatMap { case (id, body) =>
+            rows(post("/annotate", id, flags, body)).map(n =>
+              (n.get("url").asText, n.get("sentNo").asInt, n.get("start").asInt,
+                n.get("len").asInt, n.get("cui").asText, n.get("score").asInt,
+                n.get("negated").asBoolean))
+          }.toVector
+          val srvT: Vector[RecordTriple] = docs.flatMap { case (id, body) =>
+            rows(post("/triples", id, flags, body)).map(n =>
+              (n.get("subj_cui").asText, n.get("pred").asText, n.get("obj_cui").asText,
+                n.get("url").asText, n.get("sentNo").asInt))
+          }.toVector
+          val name = if (flags.isEmpty) "default" else flags.mkString(" ")
+          val m = lib.sorted
+          assert(m.nonEmpty, name)
+          assert(sqlM.sorted == m, s"$name: graft_mentions ${sqlM.sorted} vs annotate $m")
+          assert(srvM.sorted == m, s"$name: /annotate ${srvM.sorted} vs annotate $m")
+          val t = libT.sorted
+          assert(sqlT.sorted == t, s"$name: graft_triples ${sqlT.sorted} vs triples $t")
+          assert(srvT.sorted == t, s"$name: /triples ${srvT.sorted} vs triples $t")
+          name -> (m, t)
+        }.toMap
+        // the profiles really differ: segmentation qualifies urls and
+        // breaks the cross-line AA, -z links terms
+        val default = outputs("default")._1
+        Seq("--sldi", "--sldiID", "--blanklines 1", "-z").foreach { p =>
+          assert(outputs(p)._1 != default, p)
+        }
+        // line 2's CA links through line 1's AA only when both lines are
+        // one record
+        val aaText = docs.head._2
+        assert(outputs("default")._1.exists(m =>
+          m._1 == "aa" && m._3 == aaText.lastIndexOf("CA") && m._4 == 2))
+        assert(!outputs("--sldi")._1.exists(m => m._1 == "aa.1" && m._3 == 3 && m._4 == 2))
+        assert(outputs("default")._2.exists(_._2 == "causes"))
+        assert(outputs("--sldi")._2.exists(_._4 == "tx.0"))
+      }
+    }
+  }
 }

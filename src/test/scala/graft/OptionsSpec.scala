@@ -376,13 +376,6 @@ class OptionsSpec extends AnyFunSuite {
     val withFallback = mentions("Patient denies asthmatics.")
     assert(withFallback.exists(_.cui == "C0004096"),
       s"OOV closure must reach asthma: $withFallback")
-    val noFallback = mentions("Patient denies asthmatics.",
-      LinkOptions(dynamicVariants = false))
-    assert(!noFallback.exists(_.cui == "C0004096"),
-      "static-only mode must not link the OOV form")
-    // static-mode results for in-table words are unchanged by the fallback
-    val t = "Aspirin treats heart attack and asthma."
-    assert(mentions(t) == mentions(t, LinkOptions(dynamicVariants = false)))
   }
 
   test("class-conditioned lm.rules link end-to-end (P13 pin)") {
