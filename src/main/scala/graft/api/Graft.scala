@@ -196,8 +196,8 @@ object Graft {
     * `graft_mentions(id, text)` returns the full typed mention array;
     * `graft_triples(id, text)` the document-local triples. Both run the
     * same record path as [[annotate]] and [[triples]], so `opts`'
-    * segmentation and -z apply. The broadcast tables are captured once
-    * at registration.
+    * segmentation, -z and the null-id rule apply. The broadcast tables
+    * are captured once at registration.
     */
   def registerSql(spark: SparkSession, opts: LinkOptions = LinkOptions.default,
       umls: Option[Broadcast[UmlsTables]] = None): Unit = {
@@ -205,11 +205,11 @@ object Graft {
     spark.udf.register("graft_mentions",
       org.apache.spark.sql.functions.udf((id: String, text: String) =>
         if (text == null) Seq.empty[Mention]
-        else DocKernel.annotate(if (id == null) "" else id, text, bc.value, opts)))
+        else DocKernel.annotate(id, text, bc.value, opts)))
     spark.udf.register("graft_triples",
       org.apache.spark.sql.functions.udf((id: String, text: String) =>
         if (text == null) Seq.empty[(String, String, String, String, Int)]
-        else DocTriples.fromText(if (id == null) "" else id, text, bc.value, opts)))
+        else DocTriples.fromText(id, text, bc.value, opts)))
   }
 
   /** The table operator annotate and triples run through: ANY id type is

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-style partitioned table layout with snapshot manifests and
   * per-partition lineage/metrics rows enabling checkpoint-resume
@@ -34,6 +35,18 @@ object IcebergLite {
   final case class Snapshot(snapshotId: Int, partitions: Vector[PartitionMeta])
 
   private def manifestDir(root: String) = Paths.get(root, "_manifest")
+
+  /** The table's own schema: the five triple columns, then the bucket.
+    * Reads pass it to the parquet source, which then skips its footer
+    * inference job.
+    */
+  private val TableSchema = StructType.fromDDL(
+    "subj_cui STRING, pred STRING, obj_cui STRING, url STRING, sentNo INT, part_bucket INT")
+
+  private val TripleColumns = TableSchema.fields.init.map(f => f.name -> f.dataType).toSeq
+
+  private def scan(spark: SparkSession, dataDir: Path): DataFrame =
+    spark.read.schema(TableSchema).parquet(dataDir.toString)
 
   /** Whether a table's data dir holds any parquet file (bucket dirs are
     * one level down).
@@ -85,13 +98,18 @@ object IcebergLite {
   /** Write `triples` (columns subj_cui, pred, obj_cui, url, sentNo) to the
     * table at `root`, bucketed on subj_cui. Buckets already committed in
     * the latest snapshot are skipped (checkpoint-resume). Returns the new
-    * snapshot.
+    * snapshot. Any other input columns are rejected before anything is
+    * written: reads use the fixed table schema, so an extra or retyped
+    * column would be dropped silently.
     */
   def write(triples: DataFrame, root: String, nBuckets: Int = 32): Snapshot = {
+    val got = triples.schema.fields.map(f => f.name -> f.dataType).toSeq
+    require(got == TripleColumns,
+      s"IcebergLite.write takes the columns ${TripleColumns.mkString(", ")}, got ${got.mkString(", ")}")
     val spark = triples.sparkSession
     val prev = latestSnapshot(root)
     val committed = prev.map(_.partitions.map(_.bucket).toSet).getOrElse(Set.empty)
-    val dataDir = Paths.get(root, "data").toString
+    val dataDir = Paths.get(root, "data")
 
     def commit(metrics: Vector[PartitionMeta]): Snapshot = {
       val snap = Snapshot(prev.map(_.snapshotId).getOrElse(0) + 1,
@@ -120,9 +138,8 @@ object IcebergLite {
     // delete any bucket directory on disk that is not committed — all
     // legitimately-present data is, by construction.
     {
-      val dp = Paths.get(dataDir)
-      if (Files.isDirectory(dp)) {
-        val stream = Files.list(dp)
+      if (Files.isDirectory(dataDir)) {
+        val stream = Files.list(dataDir)
         val orphans =
           try stream.iterator().asScala.filter { d =>
             val n = d.getFileName.toString
@@ -151,16 +168,16 @@ object IcebergLite {
     // instead of aggregating the (possibly very expensive) input plan a
     // second time. At 100 TB the input here is the full kernel pipeline;
     // running it twice would double the most expensive job in the system.
-    todo.write.mode("append").partitionBy("part_bucket").parquet(dataDir)
+    todo.write.mode("append").partitionBy("part_bucket").parquet(dataDir.toString)
 
     // first-ever write of an empty input leaves only _SUCCESS behind —
     // checked EXPLICITLY (a broad AnalysisException catch here would turn
     // any unrelated read failure into an empty snapshot that orphans the
     // just-written buckets and duplicates them on the next write)
     val metrics =
-      if (!hasParquet(Paths.get(dataDir))) Vector.empty[PartitionMeta]
+      if (!hasParquet(dataDir)) Vector.empty[PartitionMeta]
       else {
-        val written = spark.read.parquet(dataDir)
+        val written = scan(spark, dataDir)
         val fresh = if (committed.isEmpty) written
           else written.filter(!col("part_bucket").isin(committed.toSeq: _*))
         fresh.groupBy(col("part_bucket"))
@@ -217,19 +234,11 @@ object IcebergLite {
       case None => latestSnapshot(root).getOrElse(Snapshot(0, Vector.empty))
     }
     val ok = snap.partitions.map(_.bucket)
-    val dataDir = Paths.get(root, "data")
-    // the empty-snapshot guard must run BEFORE the parquet read: an
-    // empty committed table's data dir holds no parquet to infer a
-    // schema from (or may not exist at all), and the eager read would
-    // throw instead of returning the documented empty view
-    if (ok.isEmpty) {
-      if (hasParquet(dataDir)) spark.read.parquet(dataDir.toString).limit(0)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "subj_cui STRING, pred STRING, obj_cui STRING, url STRING, sentNo INT, part_bucket INT"))
-    }
-    else spark.read.parquet(dataDir.toString)
+    // an empty committed table's data dir may not exist at all, and the
+    // parquet read would throw instead of returning the empty view
+    if (ok.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], TableSchema)
+    else scan(spark, Paths.get(root, "data"))
       .filter(col("part_bucket").isin(ok: _*))
   }
 }

@@ -192,8 +192,9 @@ object DocKernel {
   /** The mention rows of one input cell, the record path every entry
     * (Graft.annotate, graft_mentions, the server) runs: the cell is
     * segmented into records under --sldi / --sldiID / --blanklines N
-    * (skr_text_processing.pl:142-178; AAs stay record-local), then each
-    * record is linked as running text, or as one dictionary term under -z.
+    * (skr_text_processing.pl:142-178; AAs stay record-local; a null id is
+    * the empty id), then each record is linked as running text, or as one
+    * dictionary term under -z.
     */
   def annotate(id: String, text: String, umls: UmlsTables,
       opts: LinkOptions): Vector[Mention] =

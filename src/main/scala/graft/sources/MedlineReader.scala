@@ -252,16 +252,20 @@ object MedlineReader {
     * sldiID record ids are AUTHORITATIVE (the reference labels output
     * with the provided ID verbatim — id collisions across rows are the
     * same user error as duplicate ids in the id column itself); ordinal
-    * modes qualify with the row id.
+    * modes qualify with the row id. A null row id is the empty id, so
+    * every entry gives it the url "" (".0", ".1" under --sldi), never
+    * "null".
     */
   def records(id: String, text: String,
-      opts: graft.link.LinkOptions): Vector[(String, String)] =
+      opts: graft.link.LinkOptions): Vector[(String, String)] = {
+    val rowId = if (id == null) "" else id
     segModeOf(opts) match {
-      case None => Vector((id, text))
+      case None => Vector((rowId, text))
       case Some(m) => segment(text, m).map { case (rid, rt) =>
-        (if (opts.sldiId) rid else s"$id.$rid", rt)
+        (if (opts.sldiId) rid else s"$rowId.$rid", rt)
       }
     }
+  }
 
   /** Non-citation input becomes a pseudo-citation with the whole text as
     * one TX field and a dummy id (form_dummy_citation,

@@ -36,6 +36,7 @@ final case class Variant(word: String, varLevel: Int, history: String) {
   */
 final case class UmlsTables(
     // word -> index entries whose normalized string STARTS with that word
+    // (every table set here builds it with WordIndex.from)
     firstWordIndex: Map[String, Vector[IndexEntry]],
     // word -> index entries whose normalized string CONTAINS that word
     // (all_words analogue, used only in overmatch mode; kept for parity)
@@ -616,16 +617,14 @@ object MiniUmls {
   def scaledTables(nExtraStrings: Int): UmlsTables = {
     val base = tables
     def w(i: Int): String = "zq" + java.lang.Integer.toString(i, 36)
-    val extra = Vector.tabulate(nExtraStrings) { i =>
+    val extra = Iterator.tabulate(nExtraStrings) { i =>
       val len = 1 + (i % 3)
       val words = Vector.tabulate(len)(k => w((i * 7 + k * 131) % 900000))
       val s = words.mkString(" ")
       IndexEntry(words, s, f"C9${i % 500000}%06d", s)
     }
-    val merged = (base.firstWordIndex.toVector.flatMap { case (k, es) => es.map(k -> _) } ++
-      extra.map(e => e.nmWords.head -> e))
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    base.copy(firstWordIndex = merged)
+    base.copy(firstWordIndex =
+      WordIndex.from(base.firstWordIndex.valuesIterator.flatten ++ extra))
   }
 
   /** Assemble the full broadcastable table set. */
@@ -636,9 +635,6 @@ object MiniUmls {
       nm = normalizeString(s)
       if nm.nonEmpty
     } yield IndexEntry(nm, s, cui, pref)
-    val byFirst = entries.groupBy(_.nmWords.head).map { case (k, v) =>
-      k -> v.sortBy(e => (e.nmWords.length, e.cui, e.str))
-    }
 
     val lexCats: Map[String, Set[String]] = {
       val m = scala.collection.mutable.Map[String, Set[String]]()
@@ -651,7 +647,7 @@ object MiniUmls {
     }
 
     UmlsTables(
-      firstWordIndex = byFirst,
+      firstWordIndex = WordIndex.from(entries),
       wordCounts = Map("of" -> 9000, "the" -> 9500, "no" -> 5000, "ca" -> 1200),
       cuiPreferred = concepts.map(c => c._1 -> c._2).toMap,
       cuiSemTypes = concepts.map(c => c._1 -> c._3).toMap,

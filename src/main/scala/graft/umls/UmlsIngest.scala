@@ -154,29 +154,18 @@ object UmlsIngest {
 
     // index entries from unsuppressed strings: normalize exactly like the
     // fixture build (uninversion + NOS strip + mm tokenization), executed
-    // on executors; first-word grouping is a distributed groupByKey with
-    // the per-group canonical sort applied before collect
-    val firstWordIndex: Map[String, Vector[IndexEntry]] =
+    // on executors; (cui, str) is distinct per row, and WordIndex.from
+    // groups by first word and applies the canonical per-key order
+    val firstWordIndex = WordIndex.from(
       base.filter(col("suppress") =!= "Y").select(col("cui"), col("str"))
         .distinct()
         .join(prefDf, "cui")
         .as[(String, String, String)]
         .mapPartitions(_.flatMap { case (cui, str, pref) =>
           val nm = MiniUmls.normalizeString(str)
-          if (nm.isEmpty) None else Some((nm.head, nm, str, cui, pref))
+          if (nm.isEmpty) None else Some(IndexEntry(nm, str, cui, pref))
         })
-        .groupByKey(_._1)
-        .mapGroups { (k, it) =>
-          val es = it.map { case (_, nm, str, cui, pref) =>
-            (nm, str, cui, pref)
-          }.toVector.distinctBy(e => (e._3, e._2))
-            .sortBy(e => (e._1.length, e._3, e._2))
-          (k, es)
-        }
-        .collect()
-        .iterator.map { case (k, es) =>
-          k -> es.map { case (nm, str, cui, pref) => IndexEntry(nm, str, cui, pref) }
-        }.toMap
+        .collect())
 
     val cuiSources: Map[String, Vector[String]] = aux.cuiSourceInfo match {
       case Some(df) => orderedList(withOptPos(df, "cui", "sab"))

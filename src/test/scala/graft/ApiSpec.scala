@@ -377,12 +377,14 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     // every line is ID|Text so --sldiID accepts each document; "aa"
-    // defines CA on line 1 and reuses it on line 2, and "tx" has a blank
-    // line for --blanklines 1
+    // defines CA on line 1 and reuses it on line 2, "tx" has a blank
+    // line for --blanklines 1, and the last row has a null id (the
+    // server's id parameter is then empty)
     val docs = Seq(
       "aa" -> "a1|Coronary artery (CA) disease was present.\na2|CA was severe.",
       "tx" -> "p1|The patient had pneumonia and fever.\n\np2|No sign of myocardial infarction.",
-      "terms" -> "t1|heart attack\nt2|coronary artery disease")
+      "terms" -> "t1|heart attack\nt2|coronary artery disease",
+      (null: String) -> "n1|The patient had pneumonia.\nn2|Fever persisted.")
     val profiles = Seq(Nil, Seq("--sldi"), Seq("--sldiID"), Seq("--blanklines", "1"), Seq("-z"))
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
     def rows(body: String) = json.readTree(body).elements.asScala.toVector
@@ -400,7 +402,7 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
           val opts = Graft.parseFlags(flags)
           val lib: Vector[RecordMention] = Graft.annotate(df, "id", "body", opts, Some(serverUmls))
             .as[graft.link.Mention].collect().toVector
-            .map(m => (m.url, m.sentNo, m.start, m.len, m.cui, m.score, m.negated))
+            .map(m => (String.valueOf(m.url), m.sentNo, m.start, m.len, m.cui, m.score, m.negated))
           val libT = Graft.triples(df, "id", "body", opts, Some(serverUmls))
             .as[(String, String, String, String, Int)].collect().toVector
           // a fresh session per profile: re-registering graft_* on one
@@ -412,19 +414,19 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
             "SELECT graft_mentions(id, body) AS ms, graft_triples(id, body) AS ts FROM rp_docs")
             .collect().toVector
           val sqlM: Vector[RecordMention] = sql.flatMap(_.getSeq[org.apache.spark.sql.Row](0)).map(r =>
-            (r.getAs[String]("url"), r.getAs[Int]("sentNo"), r.getAs[Int]("start"),
+            (String.valueOf(r.getAs[String]("url")), r.getAs[Int]("sentNo"), r.getAs[Int]("start"),
               r.getAs[Int]("len"), r.getAs[String]("cui"), r.getAs[Int]("score"),
               r.getAs[Boolean]("negated")))
           val sqlT: Vector[RecordTriple] = sql.flatMap(_.getSeq[org.apache.spark.sql.Row](1)).map(r =>
             (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
           val srvM: Vector[RecordMention] = docs.flatMap { case (id, body) =>
-            rows(post("/annotate", id, flags, body)).map(n =>
+            rows(post("/annotate", Option(id).getOrElse(""), flags, body)).map(n =>
               (n.get("url").asText, n.get("sentNo").asInt, n.get("start").asInt,
                 n.get("len").asInt, n.get("cui").asText, n.get("score").asInt,
                 n.get("negated").asBoolean))
           }.toVector
           val srvT: Vector[RecordTriple] = docs.flatMap { case (id, body) =>
-            rows(post("/triples", id, flags, body)).map(n =>
+            rows(post("/triples", Option(id).getOrElse(""), flags, body)).map(n =>
               (n.get("subj_cui").asText, n.get("pred").asText, n.get("obj_cui").asText,
                 n.get("url").asText, n.get("sentNo").asInt))
           }.toVector
@@ -452,6 +454,11 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
         assert(!outputs("--sldi")._1.exists(m => m._1 == "aa.1" && m._3 == 3 && m._4 == 2))
         assert(outputs("default")._2.exists(_._2 == "causes"))
         assert(outputs("--sldi")._2.exists(_._4 == "tx.0"))
+        // a null id is the empty id at every entry, never null or "null"
+        // (urls above pass through String.valueOf so a null shows as one)
+        assert(outputs("default")._1.exists(_._1 == ""))
+        assert(outputs("--sldi")._1.map(_._1).toSet.intersect(Set(".0", ".1")) == Set(".0", ".1"))
+        assert(!outputs.valuesIterator.exists(_._1.exists(_._1.startsWith("null"))))
       }
     }
   }

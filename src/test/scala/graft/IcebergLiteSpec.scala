@@ -25,10 +25,38 @@ class IcebergLiteSpec extends AnyFunSuite with SparkTestBase {
     val snap = IcebergLite.write(triples, root)
     assert(snap.snapshotId == 1)
     assert(snap.partitions.map(_.rows).sum == expected)
-    assert(snap.partitions.forall(p => p.nSubjCuis > 0 && p.minSubj <= p.maxSubj))
     val back = IcebergLite.read(spark, root)
     assert(back.count() == expected)
+    // every manifest metric equals the same aggregate over the read-back
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
+    val fromData = back.groupBy(col("part_bucket"))
+      .agg(count(lit(1)), countDistinct(col("subj_cui")), min(col("subj_cui")), max(col("subj_cui")))
+      .collect().toVector
+      .map(r => IcebergLite.PartitionMeta(r.getInt(0), r.getLong(1), r.getLong(2),
+        r.getString(3), r.getString(4)))
+      .sortBy(_.bucket)
+    assert(snap.partitions.nonEmpty)
+    assert(snap.partitions == fromData)
     rm(java.nio.file.Paths.get(root))
+  }
+
+  test("write rejects input whose columns are not the five triple columns") {
+    implicit val s = spark
+    import s.implicits._
+    val root = tmpDir()
+    val ok = Seq(("C1", "treats", "C2", "u", 0)).toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
+    val bad = Seq(
+      ok.withColumn("extra", org.apache.spark.sql.functions.lit(1)),
+      ok.drop("url"),
+      ok.withColumn("sentNo", ok("sentNo").cast("long")),
+      ok.withColumnRenamed("pred", "predicate"))
+    bad.foreach { df =>
+      val e = intercept[IllegalArgumentException](IcebergLite.write(df, root.toString))
+      assert(e.getMessage.contains("subj_cui"), e.getMessage)
+    }
+    // nothing was written or committed
+    assert(!Files.exists(root.resolve("data")) && !Files.exists(root.resolve("_manifest")))
+    rm(root)
   }
 
   test("resume: a second write with the same input is a no-op") {

@@ -11,7 +11,8 @@ import graft.umls.MiniUmls
   * (hash probes keyed by phrase words, never index scans) and the
   * broadcast itself must stay cheap at real-Metathesaurus scale — the
   * reference lexicon holds 491,635 entries (skr/skr.pl:1451-1462); at
-  * 10^12 docs the index is built once and shipped to every executor.
+  * 10^12 docs the index is built once and shipped to every executor, so
+  * its serialized form must stay compact and exact.
   */
 class LexiconScaleSpec extends AnyFunSuite with SparkTestBase {
 
@@ -40,12 +41,21 @@ class LexiconScaleSpec extends AnyFunSuite with SparkTestBase {
     // 2500x index growth; 3x tolerates JIT/GC noise in a unit test
     assert(tBig <= tSmall * 3 + 0.5, f"kernel cost grew with index size: $tSmall vs $tBig")
 
-    // the broadcast round-trips (Spark serializes it to executors)
-    val bc = spark.sparkContext.broadcast(big)
-    import spark.implicits._
-    val n = spark.range(0, 4, 1, 4)
-      .map(_ => bc.value.firstWordIndex.size).collect()
-    assert(n.forall(_ == big.firstWordIndex.size))
-    bc.destroy()
+    // the broadcast's serialized form round-trips: in local mode
+    // bc.value is the very object that was broadcast, so serialize
+    // through Spark's JavaSerializer (the broadcast's serializer) directly
+    val ser = new org.apache.spark.serializer.JavaSerializer(spark.sparkContext.getConf)
+      .newInstance()
+    val bytes = ser.serialize(big)
+    val mb = bytes.remaining / 1e6
+    info(f"scaledTables(500000) serialized: $mb%.1f MB")
+    assert(mb <= 35.0, f"the serialized table set grew to $mb%.1f MB")
+    val back = ser.deserialize[graft.umls.UmlsTables](bytes)
+    assert(back.firstWordIndex.size == big.firstWordIndex.size)
+    val changed = big.firstWordIndex.iterator.collect {
+      case (k, es) if back.firstWordIndex.getOrElse(k, Vector.empty) != es => k
+    }.take(5).toVector
+    assert(changed.isEmpty, s"entries changed in the round trip for $changed")
+    assert(run(back) == a, "mentions changed with the round-tripped tables")
   }
 }
