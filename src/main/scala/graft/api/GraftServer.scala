@@ -238,9 +238,13 @@ object GraftServer {
               s""""negated":${m.negated},"text":${jsonStr(m.text)}}"""
           }.mkString("[", ",", "]")
         case "jsonf" =>
-          records.map { case (url, rt) =>
-            graft.output.JsonMmoOutput.document(url, rt, bc.value, opts)
-          }.mkString("[", ",", "]")
+          val b = new java.lang.StringBuilder(4096)
+          b.append('[')
+          records.zipWithIndex.foreach { case ((url, rt), i) =>
+            if (i > 0) b.append(',')
+            graft.output.JsonMmoOutput.render(b, url, rt, bc.value, opts)
+          }
+          b.append(']').toString
         case "xmlf" =>
           records.map { case (url, rt) =>
             graft.output.XmlMmoOutput.document(url, rt, bc.value, opts)

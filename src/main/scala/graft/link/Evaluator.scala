@@ -1,5 +1,7 @@
 package graft.link
 
+import scala.jdk.CollectionConverters._
+
 import graft.umls.{IndexEntry, UmlsTables}
 
 /** Per-phrase candidate retrieval, evaluation, filtering and mapping
@@ -36,23 +38,32 @@ object Evaluator {
         count > 4000 || (count > 2000 && w.length < 2)
       })
 
-    val probed = scala.collection.mutable.Set[(String, String)]()
-    val seenStrings = scala.collection.mutable.Set[(String, String)]()
-    val out = scala.collection.mutable.ArrayBuffer[Candidate]()
+    val probed = new ProbedSet
+    val seenStrings = new StringPairSet
+    val out = Vector.newBuilder[Candidate]
+    var nOut = 0
 
-    // deterministic probe order: vinfo sequence order
-    val probeWords = {
-      val buf = new scala.collection.mutable.ArrayBuffer[(Int, String, VInfo)](varIndex.size)
-      varIndex.foreach { case (w, vis) => vis.foreach(vi => buf += ((vi.seq, w, vi))) }
-      buf.sortInPlaceBy(_._1)
+    // deterministic probe order: vinfo sequence order (the gathered index
+    // holds its vinfos in that order already)
+    val (probeWords, probeInfos) = varIndex match {
+      case ix: VariantIndex => (null, ix.inSeqOrder)
+      case _ =>
+        val buf = new scala.collection.mutable.ArrayBuffer[(Int, String, VInfo)](varIndex.size)
+        varIndex.foreach { case (w, vis) => vis.foreach(vi => buf += ((vi.seq, w, vi))) }
+        buf.sortInPlaceBy(_._1)
+        (buf.iterator.map(_._2).toArray, buf.iterator.map(_._3).toArray)
     }
+    // the probed word: the index key, which the gathered index keys by
+    // the variant's first word
+    @inline def probeWord(i: Int): String =
+      if (probeWords != null) probeWords(i) else probeInfos(i).words.head
 
     // last words of all gathered variants, for first_wordsb routing
     // (word_is_last_word_of_some_variant, metamap_candidates.pl:381-387)
     // and the matcher's last-meta-word guard — built once per phrase
     val lastVariantWords: scala.collection.Set[String] = {
-      val s = new scala.collection.mutable.HashSet[String]
-      varIndex.foreach { case (_, vis) => vis.foreach(v => s += v.lastWord) }
+      val s = new WordSet
+      probeInfos.foreach(v => s.add(v.lastWord))
       s
     }
 
@@ -71,25 +82,27 @@ object Evaluator {
     // metamap_candidates.pl:180-186): a phrase STARTING with a frequent
     // short token (e.g. "ca 125") must still probe it, or strings keyed
     // under that first word are unreachable
-    val firstGen: String = probeWords.headOption.map(_._3.genWord).getOrElse("")
+    val firstGen: String = if (probeInfos.isEmpty) "" else probeInfos(0).genWord
 
     // probe once per (word, table): narrower tables are retrieval
     // optimizations — the union of per-variant retrievals is evaluated,
     // exactly as the reference's per-variant get_meta_uscs with its USC
     // cache keyed on (word, table)
     var pi = 0
-    while (pi < probeWords.length) {
-      val (_, w, vi) = probeWords(pi)
+    while (pi < probeInfos.length) {
+      val vi = probeInfos(pi)
+      val w = probeWord(pi)
       if ((vi.genWord == firstGen || probeOk(w)) && !stopPhraseBlocked(vi.genWord)) {
-        val (tableName, index) = indexFor(vi, nPhrase, lastVariantWords, umls, opts)
-        if (probed.add((w, tableName))) {
-          val entries = index.getOrElse(w, Vector.empty)
+        val table = tableFor(vi, nPhrase, lastVariantWords, umls, opts)
+        if (probed.add(w, table)) {
+          val entries = tableIndex(table, umls).getOrElse(w, Vector.empty)
           var ei = 0
           while (ei < entries.length) {
             val e = entries(ei)
-            if (seenStrings.add((e.cui, e.str)))
-              evaluateOne(e, phrase, nPhrase, umls, varIndex, opts,
-                lastVariantWords).foreach(out += _)
+            if (seenStrings.add(e.cui, e.str)) {
+              val c = evaluateOne(e, phrase, nPhrase, umls, varIndex, opts, lastVariantWords)
+              if (c != null) { out += c; nOut += 1 }
+            }
             ei += 1
           }
         }
@@ -97,7 +110,7 @@ object Evaluator {
       pi += 1
     }
 
-    filterRedundant(out.toVector)
+    if (nOut == 0) Vector.empty else filterRedundant(out.result())
   }
 
   /** F2 redundancy filter (filter_out_redundant_evaluations,
@@ -114,18 +127,54 @@ object Evaluator {
     * mapping construction (skr.pl:3452-3459); DocKernel applies
     * Pruning.prune AFTER the option filters.
     */
-  private[graft] def filterRedundant(cands: Vector[Candidate]): Vector[Candidate] = {
-    val byCui = cands.sortBy(c => (c.cui, c.score, c.str))
-    val comps = byCui.map(c =>
-      c.matchMap.flatMap(e => e.pBegin to e.pEnd).distinct.sorted)
-    val kept = byCui.indices.filter { i =>
-      !(i + 1 until byCui.length).exists { j =>
-        byCui(j).cui == byCui(i).cui && comps(j) == comps(i)
+  private[graft] def filterRedundant(cands: Vector[Candidate]): Vector[Candidate] =
+    if (cands.length <= 1) cands
+    else {
+      val byCui = cands.toArray
+      // stable sorts, as sortBy's
+      java.util.Arrays.sort(byCui, cuiScoreStr)
+      val comps = byCui.map(coveredPositions)
+      val kept = Array.newBuilder[Candidate]
+      var i = 0
+      while (i < byCui.length) {
+        var j = i + 1
+        while (j < byCui.length &&
+          !(byCui(j).cui == byCui(i).cui && java.util.Arrays.equals(comps(j), comps(i)))) j += 1
+        if (j == byCui.length) kept += byCui(i)
+        i += 1
       }
-    }.map(byCui)
-    // final order: the reference re-sorts to standard ev-term order =
-    // (negscore, cui, metaterm) — skr.pl:4479 + :1407
-    kept.toVector.sortBy(c => (-c.score, c.cui, c.str))
+      // final order: the reference re-sorts to standard ev-term order =
+      // (negscore, cui, metaterm) — skr.pl:4479 + :1407
+      val k = kept.result()
+      java.util.Arrays.sort(k, negScoreCuiStr)
+      k.toVector
+    }
+
+  private val cuiScoreStr: java.util.Comparator[Candidate] = (a, b) => {
+    val c = a.cui.compareTo(b.cui)
+    if (c != 0) c
+    else {
+      val d = Integer.compare(a.score, b.score)
+      if (d != 0) d else a.str.compareTo(b.str)
+    }
+  }
+
+  private val negScoreCuiStr: java.util.Comparator[Candidate] = (a, b) => {
+    val d = Integer.compare(-a.score, -b.score)
+    if (d != 0) d
+    else {
+      val c = a.cui.compareTo(b.cui)
+      if (c != 0) c else a.str.compareTo(b.str)
+    }
+  }
+
+  /** The consolidated phrase components of a candidate: its covered
+    * phrase positions, ascending and distinct.
+    */
+  private def coveredPositions(c: Candidate): Array[Int] = {
+    val bits = new java.util.BitSet()
+    c.matchMap.foreach(e => bits.set(e.pBegin, e.pEnd + 1))
+    bits.stream().toArray
   }
 
   /** C2 full index selection (determine_table + get_meta_uscs_2,
@@ -142,27 +191,45 @@ object Evaluator {
   private[graft] def indexFor(vi: VInfo, nPhrase: Int,
       lastVariantWords: => scala.collection.Set[String], umls: UmlsTables, opts: LinkOptions)
       : (String, Map[String, Vector[IndexEntry]]) = {
-    def firstWordsOrB(w: String): (String, Map[String, Vector[IndexEntry]]) = {
+    val t = tableFor(vi, nPhrase, lastVariantWords, umls, opts)
+    (TableNames(t), tableIndex(t, umls))
+  }
+
+  private val TableNames =
+    Array("all_words", "first_words_of_one", "first_words_of_two", "first_words", "first_wordsb")
+
+  private def tableIndex(t: Int, umls: UmlsTables): Map[String, Vector[IndexEntry]] = t match {
+    case 0 => umls.allWordIndex
+    case 1 => umls.firstWordsOfOne
+    case 2 => umls.firstWordsOfTwo
+    case 3 => umls.firstWordIndex
+    case _ => umls.firstWordsB
+  }
+
+  /** [[indexFor]]'s choice as a position in `TableNames`. */
+  private def tableFor(vi: VInfo, nPhrase: Int,
+      lastVariantWords: => scala.collection.Set[String], umls: UmlsTables, opts: LinkOptions)
+      : Int = {
+    def firstWordsOrB(w: String): Int = {
       val hot = umls.frequentFirstWordPairs.getOrElse(w, Set.empty)
-      if (hot.nonEmpty && hot.exists(lastVariantWords)) ("first_words", umls.firstWordIndex)
-      else ("first_wordsb", umls.firstWordsB)
+      if (hot.nonEmpty && hot.exists(lastVariantWords)) 3 else 4
     }
     val avail = vi.words.length + (nPhrase - vi.genPos._2)
-    if (opts.allowOvermatches) ("all_words", umls.allWordIndex)
-    else if (avail == 1 && !opts.ignoreWordOrder)
-      ("first_words_of_one", umls.firstWordsOfOne)
-    else if (opts.allowConceptGaps || opts.ignoreWordOrder)
-      firstWordsOrB(vi.words.head)
-    else if (avail == 2) ("first_words_of_two", umls.firstWordsOfTwo)
+    if (opts.allowOvermatches) 0
+    else if (avail == 1 && !opts.ignoreWordOrder) 1
+    else if (opts.allowConceptGaps || opts.ignoreWordOrder) firstWordsOrB(vi.words.head)
+    else if (avail == 2) 2
     else firstWordsOrB(vi.words.head)
   }
 
   private def evaluateOne(e: IndexEntry, phrase: Phrase, nPhrase: Int,
       umls: UmlsTables, varIndex: Map[String, Vector[VInfo]],
-      opts: LinkOptions, lastWords: scala.collection.Set[String] = null): Option[Candidate] = {
+      opts: LinkOptions, lastWords: scala.collection.Set[String]): Candidate = {
     val metaWords = e.nmWords
     val headless = false // chunker always assigns a head
-    Matcher.matchPhraseOpt(metaWords, varIndex, headless, opts, lastWords).flatMap { r =>
+    val r = Matcher.matchPhrase(metaWords, varIndex, headless, opts, lastWords)
+    if (r == null) null
+    else {
       val mm = r.matchMap
       // covered phrase positions (1-based) as one bit pass; phrase
       // positions are bounded by nPhrase
@@ -176,7 +243,7 @@ object Evaluator {
         matchedLen += phrase.words(ci - 1).word.length + 1
         ci = covered.nextSetBit(ci + 1)
       }
-      if (matchedLen < opts.minLength) None
+      if (matchedLen < opts.minLength) null
       else {
         // relevant extras (filter_by_variants, evaluation.pl:1159-1166):
         // uncovered meta words that key into the phrase's variant index
@@ -200,10 +267,99 @@ object Evaluator {
           if (e2 > extentHi) extentHi = e2
           runStart = covered.nextSetBit(runEnd + 1)
         }
-        Some(Candidate(score, e.cui, e.str, e.concept, metaWords,
+        Candidate(score, e.cui, e.str, e.concept, metaWords,
           umls.cuiSemTypes.getOrElse(e.cui, Vector.empty), mm, r.involvesHead,
           extentLo, extentHi, posInfoB.result(),
-          umls.cuiSources.getOrElse(e.cui, Vector.empty)))
+          umls.cuiSources.getOrElse(e.cui, Vector.empty))
+      }
+    }
+  }
+
+  /** The (word, table) pairs probed for one phrase. */
+  private final class ProbedSet {
+    private[this] val byTable = new Array[WordSet](5)
+    def add(w: String, table: Int): Boolean = {
+      var s = byTable(table)
+      if (s == null) { s = new WordSet; byTable(table) = s }
+      s.add(w)
+    }
+  }
+
+  /** A set of a phrase's words: a few, so a linear scan serves until it
+    * grows past 8, a hash set after that.
+    */
+  private[link] final class WordSet extends scala.collection.AbstractSet[String] {
+    private[this] var small = new Array[String](8)
+    private[this] var n = 0
+    private[this] var large: java.util.HashSet[String] = null
+
+    def add(w: String): Boolean =
+      if (large != null) large.add(w)
+      else if (contains(w)) false
+      else if (n < small.length) { small(n) = w; n += 1; true }
+      else {
+        large = new java.util.HashSet[String](32)
+        var i = 0
+        while (i < n) { large.add(small(i)); i += 1 }
+        small = null
+        large.add(w)
+      }
+
+    override def contains(w: String): Boolean =
+      if (large != null) large.contains(w)
+      else {
+        var i = 0
+        while (i < n && !small(i).equals(w)) i += 1
+        i < n
+      }
+
+    override def iterator: Iterator[String] =
+      if (large != null) large.iterator.asScala else small.iterator.take(n)
+
+    override def diff(that: scala.collection.Set[String]): scala.collection.Set[String] =
+      iterator.filterNot(that.contains).toSet
+  }
+
+  /** The (cui, str) pairs evaluated for one phrase: open addressing over
+    * the two strings' cached hash codes, no tuple per entry.
+    */
+  private final class StringPairSet {
+    private[this] var as = new Array[String](16)
+    private[this] var bs = new Array[String](16)
+    private[this] var n = 0
+    private def slot(a: String, b: String, mask: Int): Int = {
+      var h = a.hashCode * 31 + b.hashCode
+      h ^= h >>> 16
+      h * 0x85ebca6b & mask
+    }
+    def add(a: String, b: String): Boolean = {
+      val mask = as.length - 1
+      var j = slot(a, b, mask)
+      while (as(j) != null) {
+        if (as(j).equals(a) && bs(j).equals(b)) return false
+        j = (j + 1) & mask
+      }
+      as(j) = a
+      bs(j) = b
+      n += 1
+      if (2 * n > as.length) grow()
+      true
+    }
+    private def grow(): Unit = {
+      val oa = as
+      val ob = bs
+      as = new Array[String](oa.length * 2)
+      bs = new Array[String](oa.length * 2)
+      val mask = as.length - 1
+      var i = 0
+      while (i < oa.length) {
+        if (oa(i) != null) {
+          var j = slot(oa(i), ob(i), mask)
+          while (as(j) != null) j = (j + 1) & mask
+          as(j) = oa(i)
+          bs(j) = ob(i)
+        }
+        i += 1
       }
     }
   }
@@ -308,7 +464,8 @@ object Evaluator {
   def bestMappingCandidates(cands: Vector[Candidate], nPhrase: Int,
       opts: LinkOptions = LinkOptions.default,
       varIndexWords: Set[String] = Set.empty): Vector[Candidate] =
-    bestMappings(cands, nPhrase, opts, varIndexWords).flatMap(_._2)
+    if (cands.length <= 1) cands // its own one mapping
+    else bestMappings(cands, nPhrase, opts, varIndexWords).flatMap(_._2)
       .distinctBy(c => (c.cui, c.start, c.end))
 
   /** The kept mappings themselves, (score, candidates) per mapping —
@@ -320,7 +477,7 @@ object Evaluator {
       opts: LinkOptions = LinkOptions.default,
       varIndexWords: Set[String] = Set.empty): Vector[(Int, Vector[Candidate])] = {
     if (cands.isEmpty) return Vector.empty
-    if (cands.length == 1) return Vector((cands.head.score, cands))
+    if (cands.length == 1) return Vector.empty :+ ((cands.head.score, cands))
 
     def mappingScore(m: Vector[Candidate]): Int = {
       if (opts.conjMerge) {

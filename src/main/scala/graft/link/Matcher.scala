@@ -49,16 +49,25 @@ object Matcher {
   def matchPhraseOpt(metaWords: Vector[String],
       varIndex: Map[String, Vector[VInfo]],
       headless: Boolean, opts: LinkOptions,
-      lastWords: scala.collection.Set[String]): Option[MatchResult] = {
+      lastWords: scala.collection.Set[String]): Option[MatchResult] =
+    Option(matchPhrase(metaWords, varIndex, headless, opts, lastWords))
+
+  /** [[matchPhraseOpt]] with null for no match: the evaluator's per-string
+    * call, where most strings fail.
+    */
+  private[link] def matchPhrase(metaWords: Vector[String],
+      varIndex: Map[String, Vector[VInfo]],
+      headless: Boolean, opts: LinkOptions,
+      lastWords: scala.collection.Set[String]): MatchResult = {
     val nMeta = metaWords.length
-    if (nMeta == 0 || nMeta > 35) return None
+    if (nMeta == 0 || nMeta > 35) return null
     // guard: last meta word must end some variant (evaluation.pl:581-585),
     // waived under allow_overmatches
     if (!opts.allowOvermatches) {
       val lastOk =
         if (lastWords ne null) lastWords.contains(metaWords.last)
         else varIndex.valuesIterator.exists(_.exists(_.lastWord == metaWords.last))
-      if (!lastOk) return None
+      if (!lastOk) return null
     }
 
     // aux recursion state: `pos` = index of the next meta word to consume
@@ -138,20 +147,22 @@ object Matcher {
       else None
     }
 
-    aux(1, 1, Nil, headless).flatMap { case (mm, inv) =>
-      if (mm.isEmpty) None // empty map can never be complete nor kept
-      else {
-        val matchMap = mm.reverse.toVector
-        val bs = new java.util.BitSet(nMeta + 2)
-        matchMap.foreach(e => bs.set(e.mBegin, e.mEnd + 1))
-        val complete = bs.get(1) && bs.get(nMeta)
-        if (complete || opts.allowOvermatches) {
-          val extraB = Vector.newBuilder[Int]
-          var k = 1
-          while (k <= nMeta) { if (!bs.get(k)) extraB += k; k += 1 }
-          Some(MatchResult(matchMap, inv, isOvermatch = !complete, extraB.result()))
-        } else None
-      }
+    aux(1, 1, Nil, headless) match {
+      case None => null
+      case Some((mm, inv)) =>
+        if (mm.isEmpty) null // empty map can never be complete nor kept
+        else {
+          val matchMap = mm.reverse.toVector
+          val bs = new java.util.BitSet(nMeta + 2)
+          matchMap.foreach(e => bs.set(e.mBegin, e.mEnd + 1))
+          val complete = bs.get(1) && bs.get(nMeta)
+          if (complete || opts.allowOvermatches) {
+            val extraB = Vector.newBuilder[Int]
+            var k = 1
+            while (k <= nMeta) { if (!bs.get(k)) extraB += k; k += 1 }
+            MatchResult(matchMap, inv, isOvermatch = !complete, extraB.result())
+          } else null
+        }
     }
   }
 }

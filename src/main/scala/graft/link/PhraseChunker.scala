@@ -22,7 +22,14 @@ import graft.umls.UmlsTables
 object PhraseChunker {
 
   private def resolveCat(w: String, umls: UmlsTables): String = {
-    val cats = umls.lexCats.getOrElse(w, Set.empty)
+    val lw = umls.lexWords.get(w)
+    if (lw == null) "noun" else lw.taglessCat
+  }
+
+  /** The tagless category of a word with lexical categories `cats`
+    * (precomputed per lexicon word in [[UmlsTables.lexWords]]).
+    */
+  private[graft] def taglessCat(cats: Set[String]): String =
     if (cats.isEmpty) "noun"
     else if (cats.contains("det")) "det"
     else if (cats.contains("prep")) "prep"
@@ -40,7 +47,6 @@ object PhraseChunker {
     else if (cats.contains("verb")) "verb"
     else if (cats.contains("adv")) "adv"
     else "noun"
-  }
 
   /** Syntactic tags of a phrase's words (extract_syntactic_tags
     * analogue, used by the stop_analysis phrase skip): the tagger's
@@ -68,7 +74,8 @@ object PhraseChunker {
     * and -z term processing so the two paths cannot diverge).
     */
   def mmWord(t: Tok): String =
-    Tokenizer.tokenizeMmLc(t.lc) match {
+    if (Tokenizer.isMmWord(t.lc)) t.lc
+    else Tokenizer.tokenizeMmLc(t.lc) match {
       case Vector(single) => single
       case more if more.nonEmpty => more.head
       case _ => t.lc
@@ -123,8 +130,12 @@ object PhraseChunker {
     val words = Tokenizer.wordToks(toks)
     // content runs: adj/noun sequences
     val phrases = scala.collection.mutable.ArrayBuffer[Phrase]()
-    var cur = scala.collection.mutable.ArrayBuffer[PWord]()
-    var curCats = scala.collection.mutable.ArrayBuffer[String]()
+    val cur = scala.collection.mutable.ArrayBuffer[PWord]()
+    // the current run's last noun, last adjective and last category
+    // (adverbs joined in exact mode are never heads)
+    var curLastNoun = -1
+    var curLastAdj = -1
+    var curLastCat: String = null
     // track whether a pn token interrupts between word tokens
     var lastEnd = -1
 
@@ -137,20 +148,24 @@ object PhraseChunker {
 
     def flush(): Unit = {
       if (cur.nonEmpty) {
-        val headIdx = {
-          // potential heads are nouns, then adjectives (mark_boundaries:
-          // "Nouns and adjectives are labelled as potential heads");
-          // adverbs joined in exact mode are never heads
-          val lastNoun = curCats.lastIndexOf("noun")
-          val lastAdj = curCats.lastIndexOf("adj")
-          if (lastNoun >= 0) lastNoun
-          else if (lastAdj >= 0) lastAdj
+        // potential heads are nouns, then adjectives (mark_boundaries:
+        // "Nouns and adjectives are labelled as potential heads")
+        val headIdx =
+          if (curLastNoun >= 0) curLastNoun
+          else if (curLastAdj >= 0) curLastAdj
           else cur.length - 1
-        }
         phrases += Phrase(cur.toVector, headIdx)
+        cur.clear()
       }
-      cur = scala.collection.mutable.ArrayBuffer[PWord]()
-      curCats = scala.collection.mutable.ArrayBuffer[String]()
+      curLastNoun = -1
+      curLastAdj = -1
+      curLastCat = null
+    }
+    def add(w: PWord, cat: String): Unit = {
+      if (cat == "noun") curLastNoun = cur.length
+      else if (cat == "adj") curLastAdj = cur.length
+      cur += w
+      curLastCat = cat
     }
 
     // punctuation positions that break phrases. Pinned mode: any pn
@@ -165,17 +180,16 @@ object PhraseChunker {
     // every punct per word)
     val breakArr: Array[Int] = {
       val b = Array.newBuilder[Int]
-      if (!taglessExact)
-        toks.foreach(t => if (t.isPunct && t.text != "'" && t.text != "-") b += t.start)
-      else {
-        var k = 0
-        while (k < toks.length) {
-          val t = toks(k)
-          if (t.isPunct && (puncMark1.contains(t.text) ||
+      var k = 0
+      while (k < toks.length) {
+        val t = toks(k)
+        if (t.isPunct) {
+          if (!taglessExact) { if (t.text != "'" && t.text != "-") b += t.start }
+          else if (puncMark1.contains(t.text) ||
             (t.text == "-" && k + 1 < toks.length && toks(k + 1).isPunct &&
-              toks(k + 1).text == "-"))) b += t.start
-          k += 1
+              toks(k + 1).text == "-")) b += t.start
         }
+        k += 1
       }
       b.result()
     }
@@ -190,12 +204,20 @@ object PhraseChunker {
     var bi = 0
     var ci = 0
 
-    val wNorm = words.map(mmWord)
-    val cats = words.indices.map(wi =>
-      tagsByStart.getOrElse(words(wi).start,
-        if (taglessExact) resolveCatExact(wNorm(wi), umls) else resolveCat(wNorm(wi), umls)))
+    val nw = words.length
+    val wNorm = new Array[String](nw)
+    val cats = new Array[String](nw)
+    var wi = 0
+    while (wi < nw) {
+      val w = mmWord(words(wi))
+      wNorm(wi) = w
+      cats(wi) = tagsByStart.getOrElse(words(wi).start,
+        if (taglessExact) resolveCatExact(w, umls) else resolveCat(w, umls))
+      wi += 1
+    }
 
-    for (wi <- words.indices) {
+    wi = 0
+    while (wi < nw) {
       val t = words(wi)
       // breaking punctuation strictly between previous word and this one?
       val interrupted = lastEnd >= 0 && {
@@ -205,7 +227,7 @@ object PhraseChunker {
           // adjust_for_comma (mincoman.pl:428-443): a comma breaks unless
           // the item before it is an adjective
           while (ci < commaArr.length && commaArr(ci) < lastEnd) ci += 1
-          curCats.lastOption.exists(_ != "adj") &&
+          curLastCat != null && curLastCat != "adj" &&
             ci < commaArr.length && commaArr(ci) < t.start
         }
       }
@@ -215,10 +237,9 @@ object PhraseChunker {
       cat match {
         case "adj" | "noun" =>
           if (cur.length >= MaxPhraseWords) flush()
-          cur += PWord(w, t.start, t.end)
-          curCats += cat
+          add(PWord(w, t.start, t.end), cat)
         case "adv" if taglessExact && w != "not" &&
-          !(wi + 1 < cats.length && Set("verb", "aux", "modal").contains(cats(wi + 1))) =>
+          !(wi + 1 < nw && Set("verb", "aux", "modal").contains(cats(wi + 1))) =>
           // exact mode: adverbs are "labelled as such", NOT boundaries
           // ("The only adverb marking boundary is 'not'") — they join the
           // phrase as non-head words. Exception (adjust_boundaries,
@@ -226,36 +247,47 @@ object PhraseChunker {
           // modal boundary takes that boundary itself ("positively
           // regulates" brackets apart from "the receptor").
           if (cur.length >= MaxPhraseWords) flush()
-          cur += PWord(w, t.start, t.end)
-          curCats += "adv"
+          add(PWord(w, t.start, t.end), "adv")
         case "pastpart" if taglessExact =>
           // boundary(pastpart(...)): the past participle OPENS a new MSU
           // and joins it as an adj-labelled modifier (convert tags all
           // potential pp's as adj, mincoman.pl:215-220; mark_boundaries
           // then makes the adj-with-verb-tag a boundary, :346-349)
           flush()
-          cur += PWord(w, t.start, t.end)
-          curCats += "adj"
+          add(PWord(w, t.start, t.end), "adj")
         case _ =>
           flush()
       }
       lastEnd = t.end
+      wi += 1
     }
     flush()
 
     // composite gluing: NP + "of" + NP (keep first head). Detect via the
     // original token stream: the run of tokens between the two phrases
     // must be exactly the word "of".
-    val glued = scala.collection.mutable.ArrayBuffer[Phrase]()
+    val glued = Vector.newBuilder[Phrase]
     val wordSeq = words
+    val wordStarts = new Array[Int](nw)
+    wi = 0
+    while (wi < nw) { wordStarts(wi) = words(wi).start; wi += 1 }
+    // the first position in ascending `a` holding a value >= x
+    def lowerBound(a: Array[Int], x: Int): Int = {
+      var lo = 0
+      var hi = a.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (a(mid) < x) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
     def onlyOfBetween(a: Phrase, b: Phrase): Boolean = {
       // words are ordered by position: walk the slice between a's last
       // word and b's first word directly (was a full-array filter per
       // adjacent phrase pair — quadratic on phrase-dense sentences)
       val lo = a.words.last.end
       val hi = b.words.head.start
-      var k = 0
-      while (k < wordSeq.length && wordSeq(k).start < lo) k += 1
+      var k = lowerBound(wordStarts, lo)
       if (k >= wordSeq.length || wordSeq(k).end > hi || wordSeq(k).lc != "of")
         return false
       k += 1
@@ -264,7 +296,8 @@ object PhraseChunker {
           return false
         k += 1
       }
-      !breakArr.exists(p => p >= lo && p < hi)
+      val p = lowerBound(breakArr, lo)
+      !(p < breakArr.length && breakArr(p) < hi)
     }
     var i = 0
     while (i < phrases.length) {
@@ -284,7 +317,7 @@ object PhraseChunker {
       glued += p
       i = j
     }
-    glued.toVector
+    glued.result()
   }
 
   private def mergePair(a: Phrase, b: Phrase): Phrase =

@@ -34,10 +34,13 @@ object VariantGather {
       else if (opts.allDerivationalVariants && umls.variantsAllDeriv.nonEmpty)
         umls.variantsAllDeriv
       else umls.variants
-    val words = phrase.words.map(_.word)
-    val n = words.length
+    val n = phrase.words.length
     if (n == 0) return Map.empty
-    val headPos = (phrase.headIdx + 1, phrase.headIdx + 1)
+    val wordArr = new Array[String](n)
+    var wi = 0
+    while (wi < n) { wordArr(wi) = phrase.words(wi).word; wi += 1 }
+    val words = scala.collection.immutable.ArraySeq.unsafeWrapArray(wordArr)
+    val headPos = phrase.headIdx + 1
 
     // generators, in reference order: per word left-to-right, longest
     // multiword lexicon form first, then shorter, then the word itself
@@ -45,19 +48,26 @@ object VariantGather {
     // multiword forms starting at i in one walk (longest first) — no
     // per-phrase substring construction.
     val gens = scala.collection.mutable.ArrayBuffer[String]()
-    val seen = scala.collection.mutable.Set[String]()
-    for (i <- 0 until n) {
-      for (len <- umls.multiwordTrie.matchesAt(words, i, minLen = 2)) {
-        val mw = words.slice(i, i + len).mkString(" ")
-        if (seen.add(mw)) gens += mw
-      }
-      if (seen.add(words(i))) gens += words(i)
+    def addGen(g: String): Unit = {
+      var k = 0
+      while (k < gens.length && gens(k) != g) k += 1
+      if (k == gens.length) gens += g
+    }
+    var i = 0
+    while (i < n) {
+      for (len <- umls.multiwordTrie.matchesAt(words, i, minLen = 2))
+        addGen(words.slice(i, i + len).mkString(" "))
+      addGen(wordArr(i))
+      i += 1
     }
 
-    val buckets = scala.collection.mutable.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[VInfo]]()
-    var seq = 0
+    val index = new VariantIndex.Builder
 
-    def positions(genWords: Vector[String]): Vector[(Int, Int)] = {
+    var gi = 0
+    while (gi < gens.length) {
+      val gen = gens(gi)
+      gi += 1
+      val genWords = Tokenizer.tokenizeMmLc(gen)
       // all_pairs over first/last word positions with the right span
       // (metamap_variants.pl:1469-1520): for a fixed begin the span length
       // pins the end, so one left-to-right scan enumerates the same pairs
@@ -65,29 +75,25 @@ object VariantGather {
       val len = genWords.length
       val first = genWords.head
       val last = genWords.last
-      val out = Vector.newBuilder[(Int, Int)]
       var k = 0
+      var nPos = 0
       while (k + len <= n) {
-        if (words(k) == first && words(k + len - 1) == last) out += ((k + 1, k + len))
+        if (wordArr(k) == first && wordArr(k + len - 1) == last) nPos += 1
         k += 1
       }
-      out.result()
-    }
-
-    for (gen <- gens) {
-      val genWords = Tokenizer.tokenizeMmLc(gen)
-      val genPositions = positions(genWords)
-      if (genPositions.nonEmpty) {
+      if (nPos > 0) {
         // skip variants for closed-class or <=2-char single words
         // (no_variants_word, metamap_variants.pl:309-339), but the word
         // itself still generates (identity variant)
-        val isSingle = genWords.length == 1
-        val cats = umls.lexCats.getOrElse(gen, Set.empty)
-        val noVariants = isSingle &&
-          ((cats.nonEmpty && cats.subsetOf(UmlsTables.invariantCats)) || gen.length <= 2)
-        val base = Vector(Variant(gen, 0, ""))
+        val isSingle = len == 1
+        val noVariants = isSingle && (gen.length <= 2 || {
+          val lw = umls.lexWords.get(gen)
+          lw != null && lw.invariant
+        })
         // document-local AA expansion as a level-2 variant (A5 re-expression)
-        val aaVars = aas.get(gen).map(exp => Variant(exp.mkString(" "), 2, "a")).toVector
+        val aaVars =
+          if (aas.isEmpty) Vector.empty[Variant]
+          else aas.get(gen).map(exp => Variant(exp.mkString(" "), 2, "a")).toVector
         // split-word expansion (V8, metamap_variants.pl:1421-1454): a fused
         // phrase word matches index strings carrying its two-word form —
         // the two variant words consume two meta positions at ONE phrase
@@ -105,10 +111,14 @@ object VariantGather {
         // only alphabetic words >= 3 chars enter the closure: suffix
         // morphology is meaningless for numerics/alphanumerics, and a
         // web corpus floods unique number tokens (one per page id here)
-        // that would blow past the closure memo
+        // that would blow past the closure memo.
+        // A static entry lists the word itself, which the identity
+        // variant already emits: `skip` names the variant word to leave
+        // out of the returned set (null: keep all).
+        var skip: String = null
         def lookupVars(table: Map[String, Vector[Variant]]): Vector[Variant] = {
           val static = table.getOrElse(gen, Vector.empty)
-          if (static.nonEmpty) static.filterNot(_.word == gen)
+          if (static.nonEmpty) { skip = gen; static }
           else if (isSingle && gen.length >= 3 && gen.forall(_.isLetter))
             graft.umls.DynamicVariants.closure(gen, umls,
               allDeriv = opts.allDerivationalVariants,
@@ -119,45 +129,191 @@ object VariantGather {
           if (tagsByStart.nonEmpty) null
           else if (noVariants) Vector.empty[Variant]
           else lookupVars(mainTable)
-        val baseV = base.head
-        for (pos <- genPositions) {
-          // V10: a tagged single-word generator draws from its category's
-          // variant table (tag can differ per occurrence position)
-          val tableVars = if (untaggedTableVars != null) untaggedTableVars else {
-            val catTable =
-              if (isSingle)
-                tagsByStart.get(phrase.words(pos._1 - 1).start)
-                  .flatMap(umls.variantsByCat.get)
-              else None
-            if (noVariants) Vector.empty
-            else catTable match {
-              case Some(ct) =>
-                val vs = ct.getOrElse(gen, Vector.empty).filterNot(_.word == gen)
-                // -d in tagged mode: the per-category tables are built
-                // with deriv edges, so drop deriv-path variants here
-                if (opts.noDerivationalVariants) vs.filterNot(_.history.contains('d'))
-                else vs
-              case None => lookupVars(mainTable)
+        val untaggedSkip = skip
+        k = 0
+        while (k + len <= n) {
+          if (wordArr(k) == first && wordArr(k + len - 1) == last) {
+            val pos = (k + 1, k + len)
+            // V10: a tagged single-word generator draws from its category's
+            // variant table (tag can differ per occurrence position)
+            skip = untaggedSkip
+            val tableVars = if (untaggedTableVars != null) untaggedTableVars else {
+              skip = null
+              val catTable =
+                if (isSingle)
+                  tagsByStart.get(phrase.words(k).start)
+                    .flatMap(umls.variantsByCat.get)
+                else None
+              if (noVariants) Vector.empty
+              else catTable match {
+                case Some(ct) =>
+                  val vs = ct.getOrElse(gen, Vector.empty).filterNot(_.word == gen)
+                  // -d in tagged mode: the per-category tables are built
+                  // with deriv edges, so drop deriv-path variants here
+                  if (opts.noDerivationalVariants) vs.filterNot(_.history.contains('d'))
+                  else vs
+                case None => lookupVars(mainTable)
+              }
             }
+            val involvesHead = pos._1 <= headPos && headPos <= pos._2
+            // emission order base / table / aa / split; the identity
+            // variant reuses genWords, table variants their
+            // broadcast-resident tokenization (Variant.mmWords)
+            index.add(VInfo(gen, pos, involvesHead, 0, genWords, index.size))
+            var vi = 0
+            while (vi < tableVars.length) {
+              val v = tableVars(vi)
+              if ((skip eq null) || v.word != skip) {
+                val vWords = v.mmWords
+                if (vWords.nonEmpty)
+                  index.add(VInfo(gen, pos, involvesHead, v.varLevel, vWords, index.size))
+              }
+              vi += 1
+            }
+            aaVars.foreach(v => if (v.mmWords.nonEmpty)
+              index.add(VInfo(gen, pos, involvesHead, v.varLevel, v.mmWords, index.size)))
+            splitVars.foreach(v => if (v.mmWords.nonEmpty)
+              index.add(VInfo(gen, pos, involvesHead, v.varLevel, v.mmWords, index.size)))
           }
-          val involvesHead = pos._1 <= headPos._2 && headPos._1 <= pos._2
-          // emission order base / table / aa / split == the former
-          // concatenated vector, without materializing the concat; the
-          // identity variant reuses genWords, table variants their
-          // broadcast-resident tokenization (Variant.mmWords)
-          @inline def emit(v: Variant, vWords: Vector[String]): Unit =
-            if (vWords.nonEmpty) {
-              val vi = VInfo(gen, pos, involvesHead, v.varLevel, vWords, seq)
-              seq += 1
-              buckets.getOrElseUpdate(vWords.head, scala.collection.mutable.ArrayBuffer.empty) += vi
-            }
-          emit(baseV, genWords)
-          tableVars.foreach(v => emit(v, v.mmWords))
-          aaVars.foreach(v => emit(v, v.mmWords))
-          splitVars.foreach(v => emit(v, v.mmWords))
+          k += 1
         }
       }
     }
-    buckets.iterator.map { case (k, v) => k -> v.toVector }.toMap
+    index.result()
+  }
+}
+
+/** The per-phrase variant index [[VariantGather.gather]] returns: first
+  * variant word -> its vinfos in insertion (seq) order. Keys are found by
+  * a linear scan while few, through a hash map beyond that;
+  * `inSeqOrder` holds every vinfo in seq order (the evaluator's probe
+  * order) and `bucketOf` each one's key, so a key's vinfo vector is
+  * built on its first lookup only.
+  */
+final class VariantIndex private (
+    private val words: Array[String],
+    private val counts: Array[Int],
+    val inSeqOrder: Array[VInfo],
+    private val bucketOf: Array[Int],
+    private val byWord: java.util.HashMap[String, Integer])
+    extends scala.collection.immutable.AbstractMap[String, Vector[VInfo]] {
+
+  private[this] val vals = new Array[Vector[VInfo]](words.length)
+
+  private def find(key: String): Int = VariantIndex.find(words, words.length, byWord, key)
+
+  private def bucket(k: Int): Vector[VInfo] = {
+    var v = vals(k)
+    if (v == null) {
+      val b = new scala.collection.immutable.VectorBuilder[VInfo]
+      var i = 0
+      var left = counts(k)
+      while (left > 0) {
+        if (bucketOf(i) == k) { b += inSeqOrder(i); left -= 1 }
+        i += 1
+      }
+      v = b.result()
+      vals(k) = v
+    }
+    v
+  }
+
+  override def get(key: String): Option[Vector[VInfo]] = {
+    val i = find(key)
+    if (i < 0) None else Some(bucket(i))
+  }
+  override def getOrElse[V1 >: Vector[VInfo]](key: String, default: => V1): V1 = {
+    val i = find(key)
+    if (i < 0) default else bucket(i)
+  }
+  override def apply(key: String): Vector[VInfo] = {
+    val i = find(key)
+    if (i < 0) default(key) else bucket(i)
+  }
+  override def contains(key: String): Boolean = find(key) >= 0
+  override def knownSize: Int = words.length
+  override def size: Int = words.length
+  override def iterator: Iterator[(String, Vector[VInfo])] =
+    Iterator.range(0, words.length).map(i => (words(i), bucket(i)))
+  override def valuesIterator: Iterator[Vector[VInfo]] =
+    Iterator.range(0, words.length).map(bucket)
+  override def keysIterator: Iterator[String] = words.iterator
+  // an edited index is an ordinary map
+  override def removed(key: String): Map[String, Vector[VInfo]] =
+    scala.collection.immutable.HashMap.from(this).removed(key)
+  override def updated[V1 >: Vector[VInfo]](key: String, value: V1): Map[String, V1] =
+    scala.collection.immutable.HashMap.from[String, V1](this).updated(key, value)
+}
+
+object VariantIndex {
+
+  // up to this many keys a linear scan finds a key faster than hashing it
+  private val LinearMax = 8
+
+  /** Key -> position over the first `n` of `words`; null while few. */
+  private def positions(words: Array[String], n: Int): java.util.HashMap[String, Integer] =
+    if (n <= LinearMax) null
+    else {
+      val m = new java.util.HashMap[String, Integer](4 * n)
+      var i = 0
+      while (i < n) { m.put(words(i), i); i += 1 }
+      m
+    }
+
+  private def find(words: Array[String], n: Int,
+      byWord: java.util.HashMap[String, Integer], key: String): Int =
+    if (byWord != null) {
+      val i = byWord.get(key)
+      if (i == null) -1 else i
+    } else {
+      var i = 0
+      while (i < n && !words(i).equals(key)) i += 1
+      if (i < n) i else -1
+    }
+
+  /** Collects vinfos in seq order, keyed by first variant word. */
+  final class Builder {
+    private[this] var all = new Array[VInfo](16)
+    private[this] var bucketOf = new Array[Int](16)
+    private[this] var n = 0
+    private[this] var keys = new Array[String](8)
+    private[this] var counts = new Array[Int](8)
+    private[this] var nKeys = 0
+    private[this] var byWord: java.util.HashMap[String, Integer] = null
+
+    def size: Int = n
+
+    private def keyIndex(k: String): Int = {
+      val found = find(keys, nKeys, byWord, k)
+      if (found >= 0) found
+      else {
+        if (nKeys == keys.length) {
+          keys = java.util.Arrays.copyOf(keys, nKeys * 2)
+          counts = java.util.Arrays.copyOf(counts, nKeys * 2)
+        }
+        keys(nKeys) = k
+        nKeys += 1
+        if (byWord != null) byWord.put(k, nKeys - 1)
+        else byWord = positions(keys, nKeys)
+        nKeys - 1
+      }
+    }
+
+    def add(v: VInfo): Unit = {
+      if (n == all.length) {
+        all = java.util.Arrays.copyOf(all, n * 2)
+        bucketOf = java.util.Arrays.copyOf(bucketOf, n * 2)
+      }
+      val b = keyIndex(v.words.head)
+      all(n) = v
+      bucketOf(n) = b
+      counts(b) += 1
+      n += 1
+    }
+
+    def result(): VariantIndex =
+      new VariantIndex(java.util.Arrays.copyOf(keys, nKeys),
+        java.util.Arrays.copyOf(counts, nKeys), java.util.Arrays.copyOf(all, n),
+        java.util.Arrays.copyOf(bucketOf, n), byWord)
   }
 }

@@ -79,7 +79,12 @@ object Negex {
       : (Vector[Mention], Vector[NegRecord]) = {
     if (mentions.isEmpty) return (mentions, Vector.empty)
     val words = Tokenizer.wordToks(sentToks)
-    val lcs = words.map(_.lc)
+    val lcs = {
+      val a = new Array[String](words.length)
+      var k = 0
+      while (k < a.length) { a(k) = words(k).lc; k += 1 }
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+    }
 
     // classify the LONGEST trigger phrase at each position across all six
     // classes — one trie probe per class per position regardless of the
@@ -122,6 +127,9 @@ object Negex {
         }
       }
     }
+
+    // no trigger: nothing is negated and no record is made
+    if (preHits.isEmpty && postHits.isEmpty) return (mentions, Vector.empty)
 
     def wordIdxOfChar(pos: Int): Int = {
       val idx = words.indexWhere(w => w.end > pos)

@@ -305,14 +305,21 @@ object CorpusOps {
     * corpus growth within a source-count snapshot.
     *
     * Scale shape: source counts are a tiny keyed agg (map-side
-    * combined), broadcast back; the decision column is map-only.
+    * combined), broadcast back; the decision column is map-only. One
+    * global pass over the counts yields both the rows and their maximum
+    * (crossing the counts with their own max would compute and scan for
+    * them twice).
     */
   private[graft] def samplingPlanCompute(spark: SparkSession, sfDir: String): DataFrame = {
     val d = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("source"))
     val counts = d.groupBy(col("source")).agg(count(lit(1)).as("n_source_docs"))
-    val withMax = counts.crossJoin(
-      broadcast(counts.agg(max(col("n_source_docs")).as("n_max"))))
+    val withMax = counts
+      .agg(collect_list(struct(col("source"), col("n_source_docs"))).as("c"),
+        max(col("n_source_docs")).as("n_max"))
+      .select(explode(col("c")).as("c"), col("n_max"))
+      .select(col("c.source").as("source"), col("c.n_source_docs").as("n_source_docs"),
+        col("n_max"))
     val w = sqrt(col("n_source_docs").cast("double") / col("n_max").cast("double"))
     val h = conv(substring(md5(concat(lit("sample:"), col("doc_id").cast("string"))
       .cast("binary")), 1, 8), 16, 10).cast("long").cast("double") / lit(4294967296.0)

@@ -40,121 +40,169 @@ object JsonMmoOutput {
   /** `s` as a JSON string literal; also the string escaper of
     * [[graft.api.GraftServer]]'s responses. */
   private[graft] def js(s: String): String = {
-    val b = new StringBuilder(s.length + 10)
-    b.append('"')
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append('"').toString
+    val b = new java.lang.StringBuilder(s.length + 10)
+    str(b, s)
+    b.toString
   }
 
-  private def pair(k: String, v: String): String = js(k) + ":" + js(v)
-  private def rawPair(k: String, v: String): String = js(k) + ":" + v
-  private def obj(pairs: Seq[String]): String = pairs.mkString("{", ",", "}")
-  private def arr(items: Seq[String]): String = items.mkString("[", ",", "]")
-  private def strArr(items: Seq[String]): String = arr(items.map(js))
-  private def yn(b: Boolean): String = if (b) "yes" else "no"
+  private val Hex = "0123456789abcdef"
 
-  private def piObj(start: Int, len: Int): String =
-    obj(Seq(pair("StartPos", start.toString), pair("Length", len.toString)))
+  /** Appends `s` as a JSON string literal. */
+  private def str(b: java.lang.StringBuilder, s: String): Unit = {
+    b.append('"')
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      c match {
+        case '"' => b.append("\\\"")
+        case '\\' => b.append("\\\\")
+        case '\n' => b.append("\\n")
+        case '\r' => b.append("\\r")
+        case '\t' => b.append("\\t")
+        case _ =>
+          if (c < ' ') b.append("\\u00").append(Hex.charAt(c >> 4)).append(Hex.charAt(c & 15))
+          else b.append(c)
+      }
+      i += 1
+    }
+    b.append('"')
+  }
 
-  private def candidateObj(n: DocTree.CandNode): String = {
+  // every scalar prints as a JSON string, numbers and flags included
+  private def num(b: java.lang.StringBuilder, n: Int): Unit = b.append('"').append(n).append('"')
+  private def yn(b: java.lang.StringBuilder, v: Boolean): Unit =
+    b.append(if (v) "\"yes\"" else "\"no\"")
+
+  // `{"k":` and `,"k":` — the keys are constant identifiers, which JSON
+  // needs no escape for
+  private def first(b: java.lang.StringBuilder, k: String): Unit =
+    b.append("{\"").append(k).append("\":")
+  private def next(b: java.lang.StringBuilder, k: String): Unit =
+    b.append(",\"").append(k).append("\":")
+
+  /** Appends `[item, ...]`. */
+  private def arr[A](b: java.lang.StringBuilder, items: Seq[A])(item: A => Unit): Unit = {
+    b.append('[')
+    var i = 0
+    items.foreach { a =>
+      if (i > 0) b.append(',')
+      item(a)
+      i += 1
+    }
+    b.append(']')
+  }
+
+  private def strArr(b: java.lang.StringBuilder, items: Seq[String]): Unit =
+    arr(b, items)(str(b, _))
+
+  private def piObj(b: java.lang.StringBuilder, start: Int, len: Int): Unit = {
+    first(b, "StartPos"); num(b, start)
+    next(b, "Length"); num(b, len)
+    b.append('}')
+  }
+
+  private def candidateObj(b: java.lang.StringBuilder, n: DocTree.CandNode): Unit = {
     val c = n.c
-    val matchMaps = arr(c.matchMap.map(e => obj(Seq(
-      pair("TextMatchStart", e.pBegin.toString),
-      pair("TextMatchEnd", e.pEnd.toString),
-      pair("ConcMatchStart", e.mBegin.toString),
-      pair("ConcMatchEnd", e.mEnd.toString),
-      pair("LexVariation", e.varLevel.toString)))))
-    val pis =
-      if (c.posInfo.nonEmpty) arr(c.posInfo.map(p => piObj(p._1, p._2)))
-      else arr(Seq(piObj(c.start, c.end - c.start)))
-    obj(Seq(
-      pair("CandidateScore", (-c.score).toString),
-      pair("CandidateCUI", c.cui),
-      pair("CandidateMatched", c.str),
-      pair("CandidatePreferred", c.concept),
-      rawPair("MatchedWords", strArr(c.metaWords)),
-      rawPair("SemTypes", strArr(c.semTypes)),
-      rawPair("MatchMaps", matchMaps),
-      pair("IsHead", yn(c.involvesHead)),
-      pair("IsOverMatch", "no"),
-      rawPair("Sources", strArr(c.sources)),
-      rawPair("ConceptPIs", pis),
-      pair("Status", "0"),
-      pair("Negated", if (n.negated) "1" else "0")))
+    first(b, "CandidateScore"); num(b, -c.score)
+    next(b, "CandidateCUI"); str(b, c.cui)
+    next(b, "CandidateMatched"); str(b, c.str)
+    next(b, "CandidatePreferred"); str(b, c.concept)
+    next(b, "MatchedWords"); strArr(b, c.metaWords)
+    next(b, "SemTypes"); strArr(b, c.semTypes)
+    next(b, "MatchMaps")
+    arr(b, c.matchMap) { e =>
+      first(b, "TextMatchStart"); num(b, e.pBegin)
+      next(b, "TextMatchEnd"); num(b, e.pEnd)
+      next(b, "ConcMatchStart"); num(b, e.mBegin)
+      next(b, "ConcMatchEnd"); num(b, e.mEnd)
+      next(b, "LexVariation"); num(b, e.varLevel)
+      b.append('}')
+    }
+    next(b, "IsHead"); yn(b, c.involvesHead)
+    next(b, "IsOverMatch"); yn(b, false)
+    next(b, "Sources"); strArr(b, c.sources)
+    next(b, "ConceptPIs")
+    if (c.posInfo.nonEmpty) arr(b, c.posInfo)(p => piObj(b, p._1, p._2))
+    else { b.append('['); piObj(b, c.start, c.end - c.start); b.append(']') }
+    next(b, "Status"); num(b, 0)
+    next(b, "Negated"); num(b, if (n.negated) 1 else 0)
+    b.append('}')
   }
 
   /** Build one document's JSON tree. */
   def document(url: String, text: String, umls: UmlsTables,
       opts: graft.link.LinkOptions = graft.link.LinkOptions.default): String = {
+    val b = new java.lang.StringBuilder(4096)
+    render(b, url, text, umls, opts)
+    b.toString
+  }
+
+  /** Appends one document's JSON tree to `b`: [[document]] without its
+    * own buffer, for a writer that frames many documents.
+    */
+  private[graft] def render(b: java.lang.StringBuilder, url: String, text: String,
+      umls: UmlsTables, opts: graft.link.LinkOptions): Unit = {
     val doc = DocTree.build(url, text, umls, opts)
-
-    val aaObjs = doc.aas.map { a =>
-      obj(Seq(
-        pair("AAText", a.aa),
-        pair("AAExp", a.expText),
-        pair("AATokenNum", a.aaTokenNum.toString),
-        pair("AALen", a.aaLen.toString),
-        pair("AAExpTokenNum", a.expTokenNum.toString),
-        pair("AAExpLen", a.expLen.toString),
-        pair("AAStartPos", a.startPos.toString),
-        rawPair("AACUIs", arr(a.cuis.map(c => "\"" + c + "\"")))))
+    b.append("{\"Document\":{\"AAs\":")
+    arr(b, doc.aas) { a =>
+      first(b, "AAText"); str(b, a.aa)
+      next(b, "AAExp"); str(b, a.expText)
+      next(b, "AATokenNum"); num(b, a.aaTokenNum)
+      next(b, "AALen"); num(b, a.aaLen)
+      next(b, "AAExpTokenNum"); num(b, a.expTokenNum)
+      next(b, "AAExpLen"); num(b, a.expLen)
+      next(b, "AAStartPos"); num(b, a.startPos)
+      // the CUIs print unescaped, as the reference does
+      next(b, "AACUIs"); arr(b, a.cuis)(c => b.append('"').append(c).append('"'))
+      b.append('}')
     }
-
-    val negObjs = doc.negations.map { r =>
-      obj(Seq(
-        pair("NegType", r.negType),
-        pair("NegTrigger", r.trigger),
-        rawPair("NegTriggerPIs", arr(Seq(piObj(r.start, r.len)))),
-        rawPair("NegConcepts", arr(r.concepts.map(m => obj(Seq(
-          pair("NegConcCUI", m.cui),
-          pair("NegConcMatched", m.term)))))),
-        rawPair("NegConcPIs", arr(r.concepts.map(m => piObj(m.start, m.len))))))
-    }
-
-    val uttObjs = doc.utterances.map { u =>
-      val phraseObjs = u.phrases.map { p =>
-        val syntaxUnits = p.units.map { su =>
-          obj(Seq(
-            pair("SyntaxType", su.syntaxType),
-            pair("InputMatch", su.inputMatch),
-            pair("LexCat", su.lexCat),
-            rawPair("Tokens", strArr(su.tokens))))
-        }
-        val mappingObjs = p.mappings.map { m =>
-          obj(Seq(
-            pair("MappingScore", (-m.score).toString),
-            rawPair("MappingCandidates", arr(m.cands.map(candidateObj)))))
-        }
-        obj(Seq(
-          pair("PhraseText", p.text),
-          rawPair("SyntaxUnits", arr(syntaxUnits)),
-          pair("PhraseStartPos", p.startPos.toString),
-          pair("PhraseLength", p.length.toString),
-          rawPair("Candidates", arr(Seq.empty)),
-          rawPair("Mappings", arr(mappingObjs))))
+    b.append(",\"Negations\":")
+    arr(b, doc.negations) { r =>
+      first(b, "NegType"); str(b, r.negType)
+      next(b, "NegTrigger"); str(b, r.trigger)
+      next(b, "NegTriggerPIs"); b.append('['); piObj(b, r.start, r.len); b.append(']')
+      next(b, "NegConcepts")
+      arr(b, r.concepts) { m =>
+        first(b, "NegConcCUI"); str(b, m.cui)
+        next(b, "NegConcMatched"); str(b, m.term)
+        b.append('}')
       }
-      obj(Seq(
-        pair("PMID", u.pmid),
-        pair("UttSection", u.section),
-        pair("UttNum", u.num.toString),
-        pair("UttText", u.text),
-        pair("UttStartPos", u.startPos.toString),
-        pair("UttLength", u.length.toString),
-        rawPair("Phrases", arr(phraseObjs))))
+      next(b, "NegConcPIs"); arr(b, r.concepts)(m => piObj(b, m.start, m.len))
+      b.append('}')
     }
-
-    "{" + rawPair("Document", obj(Seq(
-      rawPair("AAs", arr(aaObjs)),
-      rawPair("Negations", arr(negObjs)),
-      rawPair("Utterances", arr(uttObjs))))) + "}"
+    b.append(",\"Utterances\":")
+    arr(b, doc.utterances) { u =>
+      first(b, "PMID"); str(b, u.pmid)
+      next(b, "UttSection"); str(b, u.section)
+      next(b, "UttNum"); num(b, u.num)
+      next(b, "UttText"); str(b, u.text)
+      next(b, "UttStartPos"); num(b, u.startPos)
+      next(b, "UttLength"); num(b, u.length)
+      next(b, "Phrases")
+      arr(b, u.phrases) { p =>
+        first(b, "PhraseText"); str(b, p.text)
+        next(b, "SyntaxUnits")
+        arr(b, p.units) { su =>
+          first(b, "SyntaxType"); str(b, su.syntaxType)
+          next(b, "InputMatch"); str(b, su.inputMatch)
+          next(b, "LexCat"); str(b, su.lexCat)
+          next(b, "Tokens"); strArr(b, su.tokens)
+          b.append('}')
+        }
+        next(b, "PhraseStartPos"); num(b, p.startPos)
+        next(b, "PhraseLength"); num(b, p.length)
+        next(b, "Candidates"); b.append("[]")
+        next(b, "Mappings")
+        arr(b, p.mappings) { m =>
+          first(b, "MappingScore"); num(b, -m.score)
+          next(b, "MappingCandidates"); arr(b, m.cands)(candidateObj(b, _))
+          b.append('}')
+        }
+        b.append('}')
+      }
+      b.append('}')
+    }
+    b.append("}}")
   }
 
   /** One row per url: the full --JSONf tree. */

@@ -76,7 +76,9 @@ object DocKernel {
       bestMappings: Vector[(Int, Vector[Candidate])]) {
     /** The mapping candidates, one per (cui, start, end). */
     def candidates: Vector[Candidate] =
-      bestMappings.flatMap(_._2).distinctBy(c => (c.cui, c.start, c.end))
+      if (bestMappings.isEmpty) Vector.empty
+      else if (bestMappings.length == 1 && bestMappings.head._2.length <= 1) bestMappings.head._2
+      else bestMappings.flatMap(_._2).distinctBy(c => (c.cui, c.start, c.end))
   }
 
   /** One sentence of an [[Analysis]]: its tagger categories (empty
@@ -207,18 +209,33 @@ object DocKernel {
     * NegEx-marked per sentence; -y keeps one concept per span, ranked
     * exactly like the corpus-level Pipeline.wsdDedup window.
     */
-  def mentions(a: Analysis, umls: UmlsTables): Vector[Mention] = {
-    val out = a.sentences.flatMap { s =>
-      val sentMentions = s.phrases.flatMap { t =>
-        lazy val syntax = PhraseChunker.syntaxMap(t.phrase, umls, s.tagsByStart)
-        t.candidates.map(c =>
-          mention(a.url, s.sent.sentNo, a.text, c, syntax, a.aas))
+  def mentions(a: Analysis, umls: UmlsTables): Vector[Mention] =
+    mentions(a, umls, lexCats = true)
+
+  /** [[mentions]], with each row's lexical category resolved only when
+    * `lexCats` is set (else "UNKNOWN"): the triples read no category.
+    */
+  private[pipeline] def mentions(a: Analysis, umls: UmlsTables,
+      lexCats: Boolean): Vector[Mention] = {
+    val out = Vector.newBuilder[Mention]
+    a.sentences.foreach { s =>
+      val sentMentions = Vector.newBuilder[Mention]
+      var any = false
+      s.phrases.foreach { t =>
+        val cands = t.candidates
+        if (cands.nonEmpty) {
+          any = true
+          val syntax =
+            if (lexCats) PhraseChunker.syntaxMap(t.phrase, umls, s.tagsByStart) else null
+          cands.foreach(c =>
+            sentMentions += mention(a.url, s.sent.sentNo, a.text, c, syntax, a.aas))
+        }
       }
-      Negex.mark(s.sent.toks, sentMentions, umls, a.opts)
+      if (any) out ++= Negex.mark(s.sent.toks, sentMentions.result(), umls, a.opts)
     }
     if (a.opts.wsd)
-      DocTriples.wsdLocal(out, umls).sortBy(m => (m.sentNo, m.start, m.len, m.cui))
-    else out
+      DocTriples.wsdLocal(out.result(), umls).sortBy(m => (m.sentNo, m.start, m.len, m.cui))
+    else out.result()
   }
 
   private def mention(url: String, sentNo: Int, text: String, c: Candidate,
@@ -226,7 +243,8 @@ object DocKernel {
     val mText = text.substring(c.start, c.end)
     Mention(url, sentNo, c.start, c.end - c.start, c.cui, c.score,
       c.semTypes, negated = false, mText, c.posInfo, c.sources,
-      term = c.str, lexCat = mentionLexCat(mText, c, syntax, aas))
+      term = c.str,
+      lexCat = if (syntax == null) "UNKNOWN" else mentionLexCat(mText, c, syntax, aas))
   }
 
   /** F1 threshold (-r), F5 numerical filter (--no_nums), F4 semtype

@@ -18,57 +18,144 @@ import graft.umls.UmlsTables
   */
 object DocTriples {
 
-  /** WSD: one CUI survives per span; identical rule to Pipeline.wsdDedup. */
-  def wsdLocal(mentions: Vector[Mention], umls: UmlsTables): Vector[Mention] =
-    mentions.groupBy(m => (m.sentNo, m.start, m.len)).valuesIterator.map { ms =>
-      // minBy on (-score, best semtype priority, cui), imperatively (the
-      // strict-improvement test keeps minBy's first-wins tie behavior)
-      var best: Mention = null
-      var bestPrio = 0
-      ms.foreach { m =>
-        var prio = 99
-        m.semTypes.foreach { st =>
-          val p = umls.semTypePriority.getOrElse(st, 99)
-          if (p < prio) prio = p
-        }
-        if (best == null || m.score > best.score ||
-          (m.score == best.score &&
-            (prio < bestPrio || (prio == bestPrio && m.cui < best.cui)))) {
-          best = m; bestPrio = prio
+  /** WSD: one CUI survives per span; identical rule to Pipeline.wsdDedup.
+    * The survivors come in the order their spans first occur. Every
+    * consumer orders them itself: [[pairsLocal]] regroups by sentence and
+    * sorts each sentence by (start, len, cui), and the -y mention rows
+    * sort by (sentNo, start, len, cui); spans are unique after WSD, so
+    * both orders are total.
+    */
+  def wsdLocal(mentions: Vector[Mention], umls: UmlsTables): Vector[Mention] = {
+    val n = mentions.length
+    if (n <= 1) return mentions
+    val groupOf = new java.util.HashMap[(Int, Int, Int), Integer](2 * n)
+    val best = new Array[Mention](n)
+    val bestPrio = new Array[Int](n)
+    var groups = 0
+    mentions.foreach { m =>
+      var prio = 99
+      m.semTypes.foreach { st =>
+        val p = umls.semTypePriority.getOrElse(st, 99)
+        if (p < prio) prio = p
+      }
+      val g = groupOf.putIfAbsent((m.sentNo, m.start, m.len), groups)
+      if (g == null) {
+        best(groups) = m
+        bestPrio(groups) = prio
+        groups += 1
+      } else {
+        // minBy on (-score, best semtype priority, cui); the strict
+        // improvement test keeps minBy's first-wins tie behavior
+        val b = best(g)
+        if (m.score > b.score ||
+          (m.score == b.score &&
+            (prio < bestPrio(g) || (prio == bestPrio(g) && m.cui < b.cui)))) {
+          best(g) = m; bestPrio(g) = prio
         }
       }
-      best
-    }.toVector
+    }
+    Vector.from(best.iterator.take(groups))
+  }
+
+  private val byStartLenCui: java.util.Comparator[Mention] = (a, b) => {
+    val c = Integer.compare(a.start, b.start)
+    if (c != 0) c
+    else {
+      val d = Integer.compare(a.len, b.len)
+      if (d != 0) d else a.cui.compareTo(b.cui)
+    }
+  }
 
   /** Sentence-window ordered pairs x semnet predicate licensing
     * (canonical direction both ways), identical to Pipeline.triples.
     */
   def pairsLocal(mentions: Vector[Mention], umls: UmlsTables)
       : Vector[(String, String, String, Int)] = {
-    mentions.filter(!_.negated).groupBy(_.sentNo).iterator.flatMap {
-      case (sentNo, sms) =>
-        val sorted = sms.sortBy(m => (m.start, m.len, m.cui))
-        val out = for {
-          i <- sorted.indices
-          j <- (i + 1) until sorted.length
-          a = sorted(i); b = sorted(j)
-          if a.start < b.start && a.cui != b.cui
-          sa <- a.semTypes; sb <- b.semTypes
-          trip <- umls.semnet.getOrElse((sa, sb), Vector.empty)
-            .filter(umls.preferredRelations.contains).map(r => (a.cui, r, b.cui)) ++
-            umls.semnet.getOrElse((sb, sa), Vector.empty)
-              .filter(umls.preferredRelations.contains).map(r => (b.cui, r, a.cui))
-        } yield trip
-        out.distinct.map { case (s, r, o) => (s, r, o, sentNo) }
-    }.toVector
+    val out = Vector.newBuilder[(String, String, String, Int)]
+    forEachPair(mentions, umls)((s, r, o, sn) => out += ((s, r, o, sn)))
+    out.result()
   }
 
-  /** Full per-document triple extraction. */
+  /** The triples of [[pairsLocal]], in its order, to `emit`. Sentences
+    * come in the iteration order of an immutable HashMap keyed by sentNo
+    * (the order a `groupBy(_.sentNo)` gives, which reaches the /triples
+    * bodies and the Pipeline.run rows); within a sentence the mentions
+    * sort by (start, len, cui) and each (subj, pred, obj) is emitted once.
+    */
+  private def forEachPair(mentions: Vector[Mention], umls: UmlsTables)(
+      emit: (String, String, String, Int) => Unit): Unit = {
+    val live = mentions.iterator.filter(!_.negated).toArray
+    if (live.length < 2) return
+    // sentence -> its mentions' positions in `live`; the HashMap's key
+    // order is a function of the key set alone
+    var sentOrder = scala.collection.immutable.HashMap.empty[Int, Int]
+    val count = new Array[Int](live.length)
+    var nSents = 0
+    var i = 0
+    while (i < live.length) {
+      val sn = live(i).sentNo
+      val g = sentOrder.getOrElse(sn, -1)
+      if (g < 0) { sentOrder = sentOrder.updated(sn, nSents); count(nSents) = 1; nSents += 1 }
+      else count(g) += 1
+      i += 1
+    }
+    if (nSents == live.length) return // one mention per sentence: no pairs
+    val pref = umls.preferredSemnet
+    val seen = new scala.collection.mutable.HashSet[(String, String, String)]
+    sentOrder.foreachEntry { (sentNo, g) =>
+      if (count(g) >= 2) {
+        val sorted = new Array[Mention](count(g))
+        var k = 0
+        i = 0
+        while (i < live.length) {
+          if (live(i).sentNo == sentNo) { sorted(k) = live(i); k += 1 }
+          i += 1
+        }
+        java.util.Arrays.sort(sorted, byStartLenCui)
+        seen.clear()
+        def licensed(st1: String, st2: String, subj: String, obj: String): Unit = {
+          val rels = pref.getOrElse(st1, null)
+          if (rels != null) {
+            val rs = rels.getOrElse(st2, null)
+            if (rs != null) rs.foreach { r =>
+              if (seen.add((subj, r, obj))) emit(subj, r, obj, sentNo)
+            }
+          }
+        }
+        var ai = 0
+        while (ai < sorted.length) {
+          val a = sorted(ai)
+          var bi = ai + 1
+          while (bi < sorted.length) {
+            val b = sorted(bi)
+            if (a.start < b.start && a.cui != b.cui) {
+              a.semTypes.foreach { sa =>
+                b.semTypes.foreach { sb =>
+                  licensed(sa, sb, a.cui, b.cui)
+                  licensed(sb, sa, b.cui, a.cui)
+                }
+              }
+            }
+            bi += 1
+          }
+          ai += 1
+        }
+      }
+    }
+  }
+
+  /** Full per-document triple extraction: WSD and the pairs over the
+    * analysis's mention rows, projected without the lexical category the
+    * pairs never read.
+    */
   def fromDoc(url: String, text: String, umls: UmlsTables,
       opts: graft.link.LinkOptions = graft.link.LinkOptions.default)
       : Vector[(String, String, String, String, Int)] = {
-    val ms = wsdLocal(DocKernel.mentions(url, text, umls, opts), umls)
-    pairsLocal(ms, umls).map { case (s, r, o, sn) => (s, r, o, url, sn) }
+    val ms = wsdLocal(
+      DocKernel.mentions(DocKernel.analyze(url, text, umls, opts), umls, lexCats = false), umls)
+    val out = Vector.newBuilder[(String, String, String, String, Int)]
+    forEachPair(ms, umls)((s, r, o, sn) => out += ((s, r, o, url, sn)))
+    out.result()
   }
 
   /** The triples of one input cell: the record path of

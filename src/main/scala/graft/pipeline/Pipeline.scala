@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 
 import graft.link.Mention
@@ -24,8 +25,23 @@ final case class Page(url: String, warc_ts: java.sql.Timestamp, html: Array[Byte
   */
 object Pipeline {
 
-  def broadcastUmls(spark: SparkSession): Broadcast[UmlsTables] =
-    spark.sparkContext.broadcast(MiniUmls.tables)
+  // the fixture tables' broadcast and the SparkContext it belongs to
+  private var tablesBroadcast: (SparkContext, Broadcast[UmlsTables]) = null
+
+  /** The broadcast of `MiniUmls.tables` on `spark`'s SparkContext: one per
+    * live context, made on first use and made again once that context has
+    * stopped, so every run, query and API call of a session shares it.
+    */
+  def broadcastUmls(spark: SparkSession): Broadcast[UmlsTables] = synchronized {
+    val sc = spark.sparkContext
+    val held = tablesBroadcast
+    if (held != null && (held._1 eq sc) && !sc.isStopped) held._2
+    else {
+      val bc = sc.broadcast(MiniUmls.tables)
+      tablesBroadcast = (sc, bc)
+      bc
+    }
+  }
 
   /** The page operator every page-level stage and writer runs through:
     * the broadcast tables dereferenced once per partition, non-English

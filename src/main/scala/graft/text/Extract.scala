@@ -123,7 +123,8 @@ object Extract {
             case "quot" => "\""
             case "apos" => "'"
             case "nbsp" => " "
-            case e if e.startsWith("#") && e.drop(1).forall(_.isDigit) =>
+            // "&#;" has no digits and stays literal text
+            case e if e.length > 1 && e.startsWith("#") && e.drop(1).forall(_.isDigit) =>
               val cp = e.drop(1).toInt
               if (cp < 128) cp.toChar.toString else foldChar(cp.toChar)
             case _ => null
@@ -136,43 +137,117 @@ object Extract {
     sb.toString
   }
 
+  /** Whether [[asciiFold]] would change `s`. */
+  private def needsFold(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c >= 128 || c == '\t' || (c < ' ' && c != '\n')) return true
+      i += 1
+    }
+    false
+  }
+
+  // what a tag name is to the extractor
+  private final val OtherTag = 0
+  private final val BlockTag = 1
+  private final val ScriptTag = 2
+  private final val StyleTag = 3
+
+  private def kindOf(lowerName: String): Int =
+    if (lowerName == "script") ScriptTag
+    else if (lowerName == "style") StyleTag
+    else if (blockTags.contains(lowerName)) BlockTag
+    else OtherTag
+
+  /** The lowercase names the extractor acts on, by length. */
+  private val namesByLength: Array[Array[String]] = {
+    val all = blockTags.toSeq ++ Seq("script", "style")
+    Array.tabulate(all.map(_.length).max + 1)(n => all.filter(_.length == n).sorted.toArray)
+  }
+
+  /** The kind of the tag whose name is `html[from, to)`, the name
+    * lowercased first. An ASCII name is matched in place, ignoring ASCII
+    * case; any other name goes through `String.toLowerCase`, whose
+    * Unicode mappings (the Kelvin sign lowercases to 'k') decide it.
+    */
+  private def tagKind(html: String, from: Int, to: Int): Int = {
+    var k = from
+    while (k < to && html.charAt(k) < 128) k += 1
+    val len = to - from
+    if (k < to) kindOf(html.substring(from, to).toLowerCase)
+    else if (len == 0 || len >= namesByLength.length) OtherTag
+    else {
+      val names = namesByLength(len)
+      var i = 0
+      while (i < names.length && !html.regionMatches(true, from, names(i), 0, len)) i += 1
+      if (i == names.length) OtherTag else kindOf(names(i))
+    }
+  }
+
   /** Extract visible text from html bytes (UTF-8). */
   def htmlToText(html: Array[Byte]): String =
     htmlToText(new String(html, java.nio.charset.StandardCharsets.UTF_8))
 
   def htmlToText(html: String): String = {
-    val sb = new StringBuilder(html.length / 2)
+    val sb = new java.lang.StringBuilder(html.length / 2)
     var i = 0
     val n = html.length
-    var skipUntil: String = null // closing tag we are skipping to (script/style)
+    var skipUntil = OtherTag // closing tag we are skipping to (script/style)
     while (i < n) {
       val c = html.charAt(i)
       if (c == '<') {
         val close = html.indexOf('>', i + 1)
         if (close < 0) { i = n } // malformed trailing tag: drop remainder
         else {
-          val inner = html.substring(i + 1, close).trim
-          val isEnd = inner.startsWith("/")
-          val name = inner.stripPrefix("/").takeWhile(ch => ch.isLetterOrDigit).toLowerCase
-          if (skipUntil != null) {
-            if (isEnd && name == skipUntil) skipUntil = null
-          } else if (!isEnd && (name == "script" || name == "style") && !inner.endsWith("/")) {
-            skipUntil = name
-          } else if (blockTags.contains(name)) {
-            if (sb.nonEmpty && sb.charAt(sb.length - 1) != '\n') sb.append('\n')
+          // the tag body [b, e), trimmed like String.trim
+          var b = i + 1
+          var e = close
+          while (b < e && html.charAt(b) <= ' ') b += 1
+          while (e > b && html.charAt(e - 1) <= ' ') e -= 1
+          val isEnd = b < e && html.charAt(b) == '/'
+          val ns = if (isEnd) b + 1 else b
+          var ne = ns
+          while (ne < e && Character.isLetterOrDigit(html.charAt(ne))) ne += 1
+          val kind = tagKind(html, ns, ne)
+          if (skipUntil != OtherTag) {
+            if (isEnd && kind == skipUntil) skipUntil = OtherTag
+          } else if (!isEnd && (kind == ScriptTag || kind == StyleTag) &&
+            html.charAt(e - 1) != '/') {
+            skipUntil = kind
+          } else if (kind == BlockTag) {
+            if (sb.length > 0 && sb.charAt(sb.length - 1) != '\n') sb.append('\n')
           }
           i = close + 1
         }
-      } else if (skipUntil != null) {
-        i += 1
       } else {
-        sb.append(c)
-        i += 1
+        // the text up to the next tag, kept unless inside script/style
+        var j = html.indexOf('<', i + 1)
+        if (j < 0) j = n
+        if (skipUntil == OtherTag) sb.append(html, i, j)
+        i = j
       }
     }
-    val decoded = asciiFold(decodeEntities(sb.toString))
-    // collapse newline runs, trim outer newlines/spaces around lines
-    val lines = decoded.split('\n').map(_.trim).filter(_.nonEmpty)
-    lines.mkString("\n")
+    val raw = sb.toString
+    val decoded = if (raw.indexOf('&') < 0) raw else decodeEntities(raw)
+    val folded = if (needsFold(decoded)) asciiFold(decoded) else decoded
+    // one pass over the lines: each trimmed, empty ones dropped, the rest
+    // joined by single newlines
+    val out = new java.lang.StringBuilder(folded.length)
+    var ls = 0
+    while (ls < folded.length) {
+      var le = folded.indexOf('\n', ls)
+      if (le < 0) le = folded.length
+      var a = ls
+      var z = le
+      while (a < z && folded.charAt(a) <= ' ') a += 1
+      while (z > a && folded.charAt(z - 1) <= ' ') z -= 1
+      if (a < z) {
+        if (out.length > 0) out.append('\n')
+        out.append(folded, a, z)
+      }
+      ls = le + 1
+    }
+    out.toString
   }
 }

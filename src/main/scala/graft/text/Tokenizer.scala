@@ -49,7 +49,7 @@ object Tokenizer {
 
   /** Tokenize `text` into the full stream including ws and pn tokens. */
   def tokenize(text: String): Vector[Tok] = {
-    val out = new ArrayBuffer[Tok](text.length / 4 + 4)
+    val out = Vector.newBuilder[Tok]
     var i = 0
     val n = text.length
     while (i < n) {
@@ -72,7 +72,7 @@ object Tokenizer {
         i = i + 1
       }
     }
-    out.toVector
+    out.result()
   }
 
   /** T3 tokenize_text (metamap_tokenization.pl:679-724): tokens are
@@ -113,6 +113,20 @@ object Tokenizer {
   def tokenizeUtterly(text: String): Vector[String] =
     tokenize(text).map(_.text)
 
+  /** A non-empty run of lowercase letters and digits: its own
+    * [[tokenizeMmLc]] token list, a single word.
+    */
+  private[graft] def isMmWord(text: String): Boolean = {
+    val n = text.length
+    var f = 0
+    while (f < n) {
+      val c = text.charAt(f)
+      if (!((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9'))) return false
+      f += 1
+    }
+    n > 0
+  }
+
   /** tokenize_text_mm analogue (metamap_tokenization.pl:765-903): maximal
     * alphanumeric word list, lowercased, with possessives stripped
     * ("crohn's" -> "crohn", "patients'" -> "patients").
@@ -123,15 +137,7 @@ object Tokenizer {
     // fast path: a single already-lowercase alnum run IS its token list
     // (no possessive possible without an apostrophe) — the common case
     // for phrase words and single-word generators
-    var f = 0
-    val fn = text.length
-    var simple = fn > 0
-    while (simple && f < fn) {
-      val c = text.charAt(f)
-      simple = (c >= 'a' && c <= 'z') || (c >= '0' && c <= '9')
-      f += 1
-    }
-    if (simple) return Vector(text)
+    if (isMmWord(text)) return Vector.empty :+ text
     // direct char scan — equivalent to tokenizing and walking the Tok
     // stream (possessive cases map 1:1: adjacency is automatic, a
     // following word token "s" is exactly [s/S then non-alnum], and
@@ -175,7 +181,7 @@ object Tokenizer {
     * metamap_tokenization.pl:956-1006).
     */
   def wordToks(toks: Vector[Tok]): Vector[Tok] = {
-    val out = new ArrayBuffer[Tok](toks.length)
+    val out = Vector.newBuilder[Tok]
     var i = 0
     while (i < toks.length) {
       val t = toks(i)
@@ -192,6 +198,6 @@ object Tokenizer {
         }
       } else i += 1
     }
-    out.toVector
+    out.result()
   }
 }

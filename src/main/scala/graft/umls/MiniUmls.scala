@@ -103,6 +103,31 @@ final case class UmlsTables(
     if (variantsNoDeriv.nonEmpty) variantsNoDeriv
     else variants.view.mapValues(_.filterNot(_.history.contains('d'))).toMap
 
+  /** Per lexicon word, what the kernel derives from its categories: the
+    * tagless chunking category ([[graft.link.PhraseChunker]]) and whether
+    * it takes no variants (every category closed-class). Computed once
+    * per table instance over `lexCats`, so chunking and variant gathering
+    * do one lookup per word instead of a category-set walk.
+    */
+  @transient lazy val lexWords: java.util.HashMap[String, LexWord] = {
+    val m = new java.util.HashMap[String, LexWord](lexCats.size * 2)
+    lexCats.foreach { case (w, cats) =>
+      m.put(w, LexWord(graft.link.PhraseChunker.taglessCat(cats),
+        cats.nonEmpty && cats.subsetOf(UmlsTables.invariantCats)))
+    }
+    m
+  }
+
+  /** The semantic network with only preferred relations, st1 -> st2 ->
+    * relations (empty lists left out): the triple pairing's licensing
+    * lookup, without a tuple key per probe.
+    */
+  @transient lazy val preferredSemnet: Map[String, Map[String, Vector[String]]] =
+    semnet.iterator
+      .map { case ((s1, s2), rels) => (s1, s2, rels.filter(preferredRelations.contains)) }
+      .filter(_._3.nonEmpty).toVector
+      .groupBy(_._1).map { case (s1, rs) => s1 -> rs.map(r => r._2 -> r._3).toMap }
+
   /** First words of all stop phrases — the O(1) gate the kernel checks
     * before building a phrase-text key for the stop_analysis lookup
     * (almost no phrase starts a stop phrase, so the common case must
@@ -202,6 +227,9 @@ final case class UmlsTables(
     (negexPre ++ negexPost ++ negexPseudo ++ negexPseudoPost ++ negexConj)
       .filter(_.nonEmpty).map(_.head).toSet
 }
+
+/** A lexicon word's derived categories, see [[UmlsTables.lexWords]]. */
+final case class LexWord(taglessCat: String, invariant: Boolean)
 
 object UmlsTables {
   val closedCats: Set[String] = Set("det", "prep", "conj", "pron", "aux", "modal", "compl")

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.aa.AaDetector
 import graft.corpus.CorpusGen
 import graft.link._
-import graft.pipeline.DocKernel
+import graft.pipeline.{DocKernel, DocTriples}
 import graft.text.{Extract, Sentences, Tokenizer}
 import graft.umls.MiniUmls
 
@@ -189,5 +189,27 @@ class KernelSpec extends AnyFunSuite {
       val extracted = Extract.htmlToText(page.html)
       assert(extracted == page.text, s"page $n extraction mismatch:\n$extracted\nvs\n${page.text}")
     }
+  }
+
+  test("kernel reproduces CorpusGen's ground truth, benchmark page range included") {
+    // pages from the range the benchmark draws its windows from (n from
+    // 1000 up to about 10^9)
+    val ns = (1000L until 1200L) ++ (123456789L until 123456989L) ++
+      (987654321L until 987654521L)
+    var checked = 0
+    for (n <- ns) {
+      val (page, ms, ts) = CorpusGen.genPage(n)
+      if (page.lang == "en") {
+        val got = DocKernel.mentions(page.url, page.text, umls)
+          .map(m => (m.url, m.sentNo, m.start, m.len, m.cui, m.score, m.negated)).sorted
+        val want = ms.map(m => (m.url, m.sentNo, m.start, m.len, m.cui, m.score, m.negated)).sorted
+        assert(got == want, s"page $n mentions")
+        val gotT = DocTriples.fromDoc(page.url, Extract.htmlToText(page.html), umls).sorted
+        val wantT = ts.map(t => (t.subj_cui, t.pred, t.obj_cui, t.url, t.sentNo)).sorted
+        assert(gotT == wantT, s"page $n triples")
+        checked += 1
+      }
+    }
+    assert(checked >= 500, s"only $checked English pages checked")
   }
 }

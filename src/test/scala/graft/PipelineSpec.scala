@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.CorpusGen
@@ -97,5 +98,60 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       "<html><body><p>The patient had pneumonia and fever.</p></body></html>".getBytes,
       "The patient had pneumonia and fever.", "es")).toDS()
     assert(Pipeline.mentions(es, umls).count() == 0L)
+  }
+
+  test("one table broadcast per SparkContext: runs share it, a new context gets its own") {
+    implicit val s = spark
+    val first = Pipeline.broadcastUmls(spark)
+    val pages = CorpusGen.pages(spark, 40)
+    val t1 = Pipeline.run(pages).collect().map(_.toString).sorted.toVector
+    val t2 = Pipeline.run(pages).collect().map(_.toString).sorted.toVector
+    assert(t1 == t2)
+    assert(Pipeline.broadcastUmls(spark) eq first)
+    assert(Pipeline.broadcastUmls(spark.newSession()).id == first.id)
+    // a stopped context's broadcast is never handed out again: the shared
+    // test context stays up, so the stop runs in a JVM of its own
+    val mx = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val jvmArgs = {
+      val in = mx.getInputArguments.asScala.toVector
+      in.indices.flatMap { i =>
+        val a = in(i)
+        if (a == "--add-opens" && i + 1 < in.length) Seq(a, in(i + 1))
+        else if (a.startsWith("--add-opens=") || a.startsWith("-D")) Seq(a)
+        else Seq.empty
+      }
+    }
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvmArgs ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.BroadcastLifecycleMain")
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toVector
+    assert(proc.waitFor() == 0, out.takeRight(20).mkString("\n"))
+    assert(out.contains("[bcast] shared=true fresh=true sameTriples=true"),
+      out.takeRight(20).mkString("\n"))
+  }
+}
+
+/** Runs [[Pipeline.broadcastUmls]] across a SparkContext stop (PipelineSpec):
+  * within a context every call returns one broadcast; after a stop the
+  * next context gets a broadcast of its own, and runs on it give the
+  * same triples.
+  */
+object BroadcastLifecycleMain {
+  private def session(): org.apache.spark.sql.SparkSession =
+    org.apache.spark.sql.SparkSession.builder().master("local[2]").appName("bcast")
+      .config("spark.ui.enabled", "false").config("spark.sql.shuffle.partitions", "2")
+      .getOrCreate()
+
+  def main(args: Array[String]): Unit = {
+    val s1 = session()
+    val b1 = Pipeline.broadcastUmls(s1)
+    val t1 = Pipeline.run(CorpusGen.pages(s1, 40))(s1).collect().map(_.toString).sorted.toVector
+    val shared = Pipeline.broadcastUmls(s1) eq b1
+    s1.stop()
+    val s2 = session()
+    val b2 = Pipeline.broadcastUmls(s2)
+    val t2 = Pipeline.run(CorpusGen.pages(s2, 40))(s2).collect().map(_.toString).sorted.toVector
+    println(s"[bcast] shared=$shared fresh=${!(b2 eq b1)} sameTriples=${t1 == t2}")
+    s2.stop()
   }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.link.{LinkOptions, MatchEntry, Matcher, Scorer, VInfo}
 import graft.pipeline.{DocKernel, DocTriples}
-import graft.text.Tokenizer
+import graft.text.{Extract, Tokenizer}
 import graft.umls.MiniUmls
 
 /** Property-based invariants (SURVEY §5 plan). scalatestplus is not in the
@@ -324,5 +324,41 @@ class PropertySpec extends AnyFunSuite {
         fail(f"foldChar(U+$c%04x) emitted non-ASCII: '$r'")
       c += 1
     }
+  }
+
+  /** Hostile html: tags in any case and padding, attributes, self-closed
+    * and unterminated tags, entities (decodable, unknown, bare '&'),
+    * control characters, CRLF, non-ASCII text (Kelvin sign and dotted
+    * capital I in tag names) and blank lines.
+    */
+  private val hostileHtml: Gen[String] = {
+    val fragment = Gen.frequency(
+      6 -> Gen.oneOf("<p>", "<P>", "< p >", "</p>", "<  DIV class=\"x\">", "</Div >",
+        "<br/>", "<BR>", "<br />", "<li>", "<h1>", "</H1>", "<title>T</title>", "<TR>",
+        "<table><tr><td>c</td></tr></table>", "<a href=\"u\">link</a>", "<!-- c -->",
+        "<!DOCTYPE html>", "<BLOC\u212AQUOTE>", "<t\u0130tle>", "<section/>", "</>",
+        "<", ">", "</", "<p", "<1>", "<_x>", "< /p>", "</scriptx>", "<scripts>"),
+      3 -> Gen.oneOf("<script/>", "<script>var a=1<2;</script>",
+        "<SCRIPT type='t'>x</SCRIPT >", "<style>p{}</style>", "<STYLE/>", "</script>",
+        "<script >y</ script>"),
+      4 -> Gen.oneOf("&#10;", "&#9;", "&nbsp;", "&amp;", "&lt;", "&gt;", "&quot;",
+        "&apos;", "&#233;", "&#x41;", "&bogus;", "&", "&#12345678;", "&#1234;", "&amp;lt;"),
+      4 -> Gen.oneOf("\r\n", "\n", "\n\n", "  ", "\t", " \n \n ", "\u0000", "\u0007",
+        "\u000b"),
+      6 -> Gen.oneOf("caf\u00e9", "\u03b1-blocker", "na\u00efve", "\u2014", "\u00a0",
+        "\u200b", "\ud83d\ude00", "Heart attack", "lung cancer", "The patient",
+        " word ", "x", ";"),
+      2 -> Gen.choose(0x80.toChar, 0x3000.toChar).map(_.toString),
+      3 -> Gen.alphaNumStr.map(_.take(12)))
+    Gen.listOf(fragment).map(_.mkString)
+  }
+
+  test("extraction: the one-pass htmlToText equals the reference on hostile html") {
+    forAllGen(hostileHtml, 3000) { html =>
+      val got = Extract.htmlToText(html)
+      assert(got == ExtractReference.htmlToText(html), s"html: ${html.take(200)}")
+    }
+    // "&#;" has no digits: the reference threw on it, it stays literal now
+    assert(Extract.htmlToText("<p>a &#; b</p>") == "a &#; b")
   }
 }
