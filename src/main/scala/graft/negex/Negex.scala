@@ -79,12 +79,7 @@ object Negex {
       : (Vector[Mention], Vector[NegRecord]) = {
     if (mentions.isEmpty) return (mentions, Vector.empty)
     val words = Tokenizer.wordToks(sentToks)
-    val lcs = {
-      val a = new Array[String](words.length)
-      var k = 0
-      while (k < a.length) { a(k) = words(k).lc; k += 1 }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
-    }
+    val lcs = words.map(_.lc)
 
     // classify the LONGEST trigger phrase at each position across all six
     // classes — one trie probe per class per position regardless of the

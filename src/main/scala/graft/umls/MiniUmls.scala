@@ -107,13 +107,16 @@ final case class UmlsTables(
     * tagless chunking category ([[graft.link.PhraseChunker]]) and whether
     * it takes no variants (every category closed-class). Computed once
     * per table instance over `lexCats`, so chunking and variant gathering
-    * do one lookup per word instead of a category-set walk.
+    * do one lookup per word instead of a category-set walk. It holds one
+    * map entry per lexicon word; the few distinct values are shared.
     */
   @transient lazy val lexWords: java.util.HashMap[String, LexWord] = {
     val m = new java.util.HashMap[String, LexWord](lexCats.size * 2)
+    val shared = scala.collection.mutable.HashMap.empty[LexWord, LexWord]
     lexCats.foreach { case (w, cats) =>
-      m.put(w, LexWord(graft.link.PhraseChunker.taglessCat(cats),
-        cats.nonEmpty && cats.subsetOf(UmlsTables.invariantCats)))
+      val lw = LexWord(graft.link.PhraseChunker.taglessCat(cats),
+        cats.nonEmpty && cats.subsetOf(UmlsTables.invariantCats))
+      m.put(w, shared.getOrElseUpdate(lw, lw))
     }
     m
   }
