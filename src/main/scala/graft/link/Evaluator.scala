@@ -23,7 +23,7 @@ object Evaluator {
     * distinct string once (CC-cache analogue).
     */
   def evaluatePhrase(phrase: Phrase, umls: UmlsTables,
-      varIndex: Map[String, Vector[VInfo]],
+      varIndex: VariantIndex,
       opts: LinkOptions = LinkOptions.default): Vector[Candidate] = {
     val nPhrase = phrase.words.length
     if (nPhrase == 0) return Vector.empty
@@ -38,33 +38,23 @@ object Evaluator {
         count > 4000 || (count > 2000 && w.length < 2)
       })
 
-    val probed = new ProbedSet
+    // the (word, table) pairs probed and the (cui, str) pairs evaluated
+    val probed = new Array[java.util.HashSet[String]](5)
     val seenStrings = new StringPairSet
     val out = Vector.newBuilder[Candidate]
     var nOut = 0
 
-    // deterministic probe order: vinfo sequence order (the gathered index
-    // holds its vinfos in that order already)
-    val (probeWords, probeInfos) = varIndex match {
-      case ix: VariantIndex => (null, ix.inSeqOrder)
-      case _ =>
-        val buf = new scala.collection.mutable.ArrayBuffer[(Int, String, VInfo)](varIndex.size)
-        varIndex.foreach { case (w, vis) => vis.foreach(vi => buf += ((vi.seq, w, vi))) }
-        buf.sortInPlaceBy(_._1)
-        (buf.iterator.map(_._2).toArray, buf.iterator.map(_._3).toArray)
-    }
-    // the probed word: the index key, which the gathered index keys by
-    // the variant's first word
-    @inline def probeWord(i: Int): String =
-      if (probeWords != null) probeWords(i) else probeInfos(i).words.head
+    // deterministic probe order: vinfo sequence order, which the index
+    // holds its vinfos in; each is probed under its first word, its key
+    val probeInfos = varIndex.inSeqOrder
 
     // last words of all gathered variants, for first_wordsb routing
     // (word_is_last_word_of_some_variant, metamap_candidates.pl:381-387)
     // and the matcher's last-meta-word guard — built once per phrase
     val lastVariantWords: scala.collection.Set[String] = {
-      val s = new WordSet
+      val s = new java.util.HashSet[String]
       probeInfos.foreach(v => s.add(v.lastWord))
-      s
+      s.asScala
     }
 
     // stop phrases (add_candidates, metamap_candidates.pl:138-143): in
@@ -91,10 +81,11 @@ object Evaluator {
     var pi = 0
     while (pi < probeInfos.length) {
       val vi = probeInfos(pi)
-      val w = probeWord(pi)
+      val w = vi.words.head
       if ((vi.genWord == firstGen || probeOk(w)) && !stopPhraseBlocked(vi.genWord)) {
         val table = tableFor(vi, nPhrase, lastVariantWords, umls, opts)
-        if (probed.add(w, table)) {
+        if (probed(table) == null) probed(table) = new java.util.HashSet[String]
+        if (probed(table).add(w)) {
           val entries = tableIndex(table, umls).getOrElse(w, Vector.empty)
           var ei = 0
           while (ei < entries.length) {
@@ -177,6 +168,15 @@ object Evaluator {
     bits.stream().toArray
   }
 
+  /** The index table at [[tableFor]]'s position. */
+  private def tableIndex(t: Int, umls: UmlsTables): Map[String, Vector[IndexEntry]] = t match {
+    case 0 => umls.allWordIndex
+    case 1 => umls.firstWordsOfOne
+    case 2 => umls.firstWordsOfTwo
+    case 3 => umls.firstWordIndex
+    case _ => umls.firstWordsB
+  }
+
   /** C2 full index selection (determine_table + get_meta_uscs_2,
     * metamap_candidates.pl:298-330; determine_first_word_index,
     * :371-387). `avail` = the variant's word count plus the phrase words
@@ -187,28 +187,11 @@ object Evaluator {
     * guard rejects incomplete matches). The first_wordsb route drops
     * frequent-pair strings <w1>...<w2> unless some gathered variant ends
     * with w2 — the only way those entries could complete a match.
+    * The table is returned as a position: 0 all_words, 1 of_one, 2 of_two,
+    * 3 first_words, 4 first_wordsb.
     */
-  private[graft] def indexFor(vi: VInfo, nPhrase: Int,
-      lastVariantWords: => scala.collection.Set[String], umls: UmlsTables, opts: LinkOptions)
-      : (String, Map[String, Vector[IndexEntry]]) = {
-    val t = tableFor(vi, nPhrase, lastVariantWords, umls, opts)
-    (TableNames(t), tableIndex(t, umls))
-  }
-
-  private val TableNames =
-    Array("all_words", "first_words_of_one", "first_words_of_two", "first_words", "first_wordsb")
-
-  private def tableIndex(t: Int, umls: UmlsTables): Map[String, Vector[IndexEntry]] = t match {
-    case 0 => umls.allWordIndex
-    case 1 => umls.firstWordsOfOne
-    case 2 => umls.firstWordsOfTwo
-    case 3 => umls.firstWordIndex
-    case _ => umls.firstWordsB
-  }
-
-  /** [[indexFor]]'s choice as a position in `TableNames`. */
-  private def tableFor(vi: VInfo, nPhrase: Int,
-      lastVariantWords: => scala.collection.Set[String], umls: UmlsTables, opts: LinkOptions)
+  private[graft] def tableFor(vi: VInfo, nPhrase: Int,
+      lastVariantWords: scala.collection.Set[String], umls: UmlsTables, opts: LinkOptions)
       : Int = {
     def firstWordsOrB(w: String): Int = {
       val hot = umls.frequentFirstWordPairs.getOrElse(w, Set.empty)
@@ -273,51 +256,6 @@ object Evaluator {
           umls.cuiSources.getOrElse(e.cui, Vector.empty))
       }
     }
-  }
-
-  /** The (word, table) pairs probed for one phrase. */
-  private final class ProbedSet {
-    private[this] val byTable = new Array[WordSet](5)
-    def add(w: String, table: Int): Boolean = {
-      var s = byTable(table)
-      if (s == null) { s = new WordSet; byTable(table) = s }
-      s.add(w)
-    }
-  }
-
-  /** A set of a phrase's words: a few, so a linear scan serves until it
-    * grows past 8, a hash set after that.
-    */
-  private[link] final class WordSet extends scala.collection.AbstractSet[String] {
-    private[this] var small = new Array[String](8)
-    private[this] var n = 0
-    private[this] var large: java.util.HashSet[String] = null
-
-    def add(w: String): Boolean =
-      if (large != null) large.add(w)
-      else if (contains(w)) false
-      else if (n < small.length) { small(n) = w; n += 1; true }
-      else {
-        large = new java.util.HashSet[String](32)
-        var i = 0
-        while (i < n) { large.add(small(i)); i += 1 }
-        small = null
-        large.add(w)
-      }
-
-    override def contains(w: String): Boolean =
-      if (large != null) large.contains(w)
-      else {
-        var i = 0
-        while (i < n && !small(i).equals(w)) i += 1
-        i < n
-      }
-
-    override def iterator: Iterator[String] =
-      if (large != null) large.iterator.asScala else small.iterator.take(n)
-
-    override def diff(that: scala.collection.Set[String]): scala.collection.Set[String] =
-      iterator.filterNot(that.contains).toSet
   }
 
   /** The (cui, str) pairs evaluated for one phrase: open addressing over

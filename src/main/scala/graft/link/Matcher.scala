@@ -39,21 +39,13 @@ object Matcher {
   def matchPhraseOpt(metaWords: Vector[String],
       varIndex: Map[String, Vector[VInfo]],
       headless: Boolean, opts: LinkOptions): Option[MatchResult] =
-    matchPhraseOpt(metaWords, varIndex, headless, opts, null)
-
-  /** Hot-path overload: `lastWords` (the set of every gathered variant's
-    * last word) is per-PHRASE state, so the caller evaluating many index
-    * strings against one phrase precomputes it once instead of walking
-    * the whole variant index per string.
-    */
-  def matchPhraseOpt(metaWords: Vector[String],
-      varIndex: Map[String, Vector[VInfo]],
-      headless: Boolean, opts: LinkOptions,
-      lastWords: scala.collection.Set[String]): Option[MatchResult] =
-    Option(matchPhrase(metaWords, varIndex, headless, opts, lastWords))
+    Option(matchPhrase(metaWords, varIndex, headless, opts, null))
 
   /** [[matchPhraseOpt]] with null for no match: the evaluator's per-string
-    * call, where most strings fail.
+    * call, where most strings fail. `lastWords` (the set of every gathered
+    * variant's last word) is per-PHRASE state, so the evaluator builds it
+    * once instead of walking the whole variant index per string; null
+    * walks the index.
     */
   private[link] def matchPhrase(metaWords: Vector[String],
       varIndex: Map[String, Vector[VInfo]],

@@ -73,13 +73,10 @@ object PhraseChunker {
     * first sub-word if normalization splits (shared by document chunking
     * and -z term processing so the two paths cannot diverge).
     */
-  def mmWord(t: Tok): String =
-    if (Tokenizer.isMmWord(t.lc)) t.lc
-    else Tokenizer.tokenizeMmLc(t.lc) match {
-      case Vector(single) => single
-      case more if more.nonEmpty => more.head
-      case _ => t.lc
-    }
+  def mmWord(t: Tok): String = {
+    val ws = Tokenizer.tokenizeMmLc(t.lc)
+    if (ws.isEmpty) t.lc else ws.head
+  }
 
   /** The punc_mark1 boundary set (lib/mincoman.pl:374-389): the ONLY
     * punctuation that unconditionally breaks a phrase in the reference's

@@ -25,7 +25,7 @@ object VariantGather {
     */
   def gather(phrase: Phrase, umls: UmlsTables, aas: AaDict,
       tagsByStart: Map[Int, String] = Map.empty,
-      opts: LinkOptions = LinkOptions.default): Map[String, Vector[VInfo]] = {
+      opts: LinkOptions = LinkOptions.default): VariantIndex = {
     // -d swaps in the deriv-free table (exact closure when present, the
     // history-filtered view otherwise — never a silent no-op; wins over
     // -D); --all_derivational_variants swaps in the full-dm.rul table
@@ -35,7 +35,7 @@ object VariantGather {
         umls.variantsAllDeriv
       else umls.variants
     val n = phrase.words.length
-    if (n == 0) return Map.empty
+    if (n == 0) return VariantIndex.empty
     val wordArr = new Array[String](n)
     var wi = 0
     while (wi < n) { wordArr(wi) = phrase.words(wi).word; wi += 1 }
@@ -184,34 +184,32 @@ object VariantGather {
 }
 
 /** The per-phrase variant index [[VariantGather.gather]] returns: first
-  * variant word -> its vinfos in insertion (seq) order. Keys are found by
-  * a linear scan while few, through a hash map beyond that;
-  * `inSeqOrder` holds every vinfo in seq order (the evaluator's probe
-  * order) and `bucketOf` each one's key, so a key's vinfo vector is
-  * built on its first lookup only.
+  * variant word -> its vinfos in insertion (seq) order. `inSeqOrder`
+  * holds every vinfo in seq order (the evaluator's probe order) and
+  * `nextOf` chains each one to the next vinfo of its key, so a key's
+  * vinfo vector is built on its first lookup only, from its own vinfos.
   */
 final class VariantIndex private (
     private val words: Array[String],
-    private val counts: Array[Int],
+    private val byWord: java.util.HashMap[String, Integer],
     val inSeqOrder: Array[VInfo],
-    private val bucketOf: Array[Int],
-    private val byWord: java.util.HashMap[String, Integer])
+    private val firstOf: Array[Int],
+    private val nextOf: Array[Int])
     extends scala.collection.immutable.AbstractMap[String, Vector[VInfo]] {
 
   private[this] val vals = new Array[Vector[VInfo]](words.length)
 
-  private def find(key: String): Int = VariantIndex.find(words, words.length, byWord, key)
+  private def find(key: String): Int = {
+    val i = byWord.get(key)
+    if (i == null) -1 else i
+  }
 
   private def bucket(k: Int): Vector[VInfo] = {
     var v = vals(k)
     if (v == null) {
       val b = new scala.collection.immutable.VectorBuilder[VInfo]
-      var i = 0
-      var left = counts(k)
-      while (left > 0) {
-        if (bucketOf(i) == k) { b += inSeqOrder(i); left -= 1 }
-        i += 1
-      }
+      var i = firstOf(k)
+      while (i >= 0) { b += inSeqOrder(i); i = nextOf(i) }
       v = b.result()
       vals(k) = v
     }
@@ -247,73 +245,55 @@ final class VariantIndex private (
 
 object VariantIndex {
 
-  // up to this many keys a linear scan finds a key faster than hashing it
-  private val LinearMax = 8
+  /** The index of a phrase with no words. */
+  val empty: VariantIndex = new Builder().result()
 
-  /** Key -> position over the first `n` of `words`; null while few. */
-  private def positions(words: Array[String], n: Int): java.util.HashMap[String, Integer] =
-    if (n <= LinearMax) null
-    else {
-      val m = new java.util.HashMap[String, Integer](4 * n)
-      var i = 0
-      while (i < n) { m.put(words(i), i); i += 1 }
-      m
-    }
-
-  private def find(words: Array[String], n: Int,
-      byWord: java.util.HashMap[String, Integer], key: String): Int =
-    if (byWord != null) {
-      val i = byWord.get(key)
-      if (i == null) -1 else i
-    } else {
-      var i = 0
-      while (i < n && !words(i).equals(key)) i += 1
-      if (i < n) i else -1
-    }
-
-  /** Collects vinfos in seq order, keyed by first variant word. */
+  /** Collects vinfos in seq order, keyed by first variant word; the
+    * index it returns takes over its key map, so it is used once.
+    */
   final class Builder {
     private[this] var all = new Array[VInfo](16)
-    private[this] var bucketOf = new Array[Int](16)
+    private[this] var nextOf = new Array[Int](16)
     private[this] var n = 0
     private[this] var keys = new Array[String](8)
-    private[this] var counts = new Array[Int](8)
+    private[this] var firstOf = new Array[Int](8)
+    private[this] var lastOf = new Array[Int](8)
     private[this] var nKeys = 0
-    private[this] var byWord: java.util.HashMap[String, Integer] = null
+    private[this] val byWord = new java.util.HashMap[String, Integer]
 
     def size: Int = n
-
-    private def keyIndex(k: String): Int = {
-      val found = find(keys, nKeys, byWord, k)
-      if (found >= 0) found
-      else {
-        if (nKeys == keys.length) {
-          keys = java.util.Arrays.copyOf(keys, nKeys * 2)
-          counts = java.util.Arrays.copyOf(counts, nKeys * 2)
-        }
-        keys(nKeys) = k
-        nKeys += 1
-        if (byWord != null) byWord.put(k, nKeys - 1)
-        else byWord = positions(keys, nKeys)
-        nKeys - 1
-      }
-    }
 
     def add(v: VInfo): Unit = {
       if (n == all.length) {
         all = java.util.Arrays.copyOf(all, n * 2)
-        bucketOf = java.util.Arrays.copyOf(bucketOf, n * 2)
+        nextOf = java.util.Arrays.copyOf(nextOf, n * 2)
       }
-      val b = keyIndex(v.words.head)
       all(n) = v
-      bucketOf(n) = b
-      counts(b) += 1
+      nextOf(n) = -1
+      val k = v.words.head
+      val found = byWord.get(k)
+      if (found == null) {
+        if (nKeys == keys.length) {
+          keys = java.util.Arrays.copyOf(keys, nKeys * 2)
+          firstOf = java.util.Arrays.copyOf(firstOf, nKeys * 2)
+          lastOf = java.util.Arrays.copyOf(lastOf, nKeys * 2)
+        }
+        keys(nKeys) = k
+        firstOf(nKeys) = n
+        lastOf(nKeys) = n
+        byWord.put(k, nKeys)
+        nKeys += 1
+      } else {
+        val b: Int = found
+        nextOf(lastOf(b)) = n
+        lastOf(b) = n
+      }
       n += 1
     }
 
     def result(): VariantIndex =
-      new VariantIndex(java.util.Arrays.copyOf(keys, nKeys),
-        java.util.Arrays.copyOf(counts, nKeys), java.util.Arrays.copyOf(all, n),
-        java.util.Arrays.copyOf(bucketOf, n), byWord)
+      new VariantIndex(java.util.Arrays.copyOf(keys, nKeys), byWord,
+        java.util.Arrays.copyOf(all, n), java.util.Arrays.copyOf(firstOf, nKeys),
+        java.util.Arrays.copyOf(nextOf, n))
   }
 }

@@ -25,8 +25,10 @@ final case class Page(url: String, warc_ts: java.sql.Timestamp, html: Array[Byte
   */
 object Pipeline {
 
-  // the fixture tables' broadcast and the SparkContext it belongs to
-  private var tablesBroadcast: (SparkContext, Broadcast[UmlsTables]) = null
+  // the fixture tables' broadcast and, weakly so that a stopped context
+  // is not kept reachable from here, the SparkContext it belongs to
+  private var tablesContext = new java.lang.ref.WeakReference[SparkContext](null)
+  private var tablesBroadcast: Broadcast[UmlsTables] = null
 
   /** The broadcast of `MiniUmls.tables` on `spark`'s SparkContext: one per
     * live context, made on first use and made again once that context has
@@ -34,12 +36,11 @@ object Pipeline {
     */
   def broadcastUmls(spark: SparkSession): Broadcast[UmlsTables] = synchronized {
     val sc = spark.sparkContext
-    val held = tablesBroadcast
-    if (held != null && (held._1 eq sc) && !sc.isStopped) held._2
+    if ((tablesContext.get eq sc) && !sc.isStopped) tablesBroadcast
     else {
-      val bc = sc.broadcast(MiniUmls.tables)
-      tablesBroadcast = (sc, bc)
-      bc
+      tablesBroadcast = sc.broadcast(MiniUmls.tables)
+      tablesContext = new java.lang.ref.WeakReference(sc)
+      tablesBroadcast
     }
   }
 

@@ -116,7 +116,7 @@ object Tokenizer {
   /** A non-empty run of lowercase letters and digits: its own
     * [[tokenizeMmLc]] token list, a single word.
     */
-  private[graft] def isMmWord(text: String): Boolean = {
+  private def isMmWord(text: String): Boolean = {
     val n = text.length
     var f = 0
     while (f < n) {

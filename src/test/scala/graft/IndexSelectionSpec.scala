@@ -23,6 +23,10 @@ class IndexSelectionSpec extends AnyFunSuite {
     Phrase(pws, pws.length - 1)
   }
 
+  // the tables by Evaluator.tableFor's position
+  private val tableNames =
+    Vector("all_words", "first_words_of_one", "first_words_of_two", "first_words", "first_wordsb")
+
   private def routes(phraseWords: Vector[String], opts: LinkOptions = LinkOptions.default)
       : Map[String, String] = {
     val phrase = mkPhrase(phraseWords: _*)
@@ -30,7 +34,7 @@ class IndexSelectionSpec extends AnyFunSuite {
     val lastWords = varIndex.valuesIterator.flatten.map(_.words.last).toSet
     varIndex.valuesIterator.flatten.toVector.sortBy(_.seq).map { vi =>
       vi.words.mkString(" ") ->
-        Evaluator.indexFor(vi, phrase.words.length, lastWords, t, opts)._1
+        tableNames(Evaluator.tableFor(vi, phrase.words.length, lastWords, t, opts))
     }.toMap
   }
 

@@ -191,11 +191,21 @@ class KernelSpec extends AnyFunSuite {
     }
   }
 
-  test("kernel reproduces CorpusGen's ground truth, benchmark page range included") {
-    // pages from the range the benchmark draws its windows from (n from
-    // 1000 up to about 10^9)
-    val ns = (1000L until 1200L) ++ (123456789L until 123456989L) ++
+  test("kernel reproduces CorpusGen's ground truth on low and benchmark-range pages") {
+    // the first 1000 pages (the hand-written special pages included) and
+    // pages from the range the benchmark draws its windows from (n up to
+    // about 10^9)
+    val ns = (0L until 1000L) ++ (123456789L until 123456989L) ++
       (987654321L until 987654521L)
+    // the two pages where kernel and ground truth differ, pinned exactly so
+    // that a change on either side shows. Page 4: "cold" has two readings
+    // before WSD, and the special page lists the one corpus-level WSD keeps.
+    // Page 13: the ground truth lacks the co-occurs_with pair the kernel
+    // draws between the sentence's two disorder mentions.
+    val extraMentions = Map(4L -> Vector(("https://ex.test/p/4", 1, 34, 4, "C0009264", 1000, false)))
+    val extraTriples = Map(13L -> Vector(
+      ("C0003864", "co-occurs_with", "C0033860", "https://ex.test/p/13", 1),
+      ("C0033860", "co-occurs_with", "C0003864", "https://ex.test/p/13", 1)))
     var checked = 0
     for (n <- ns) {
       val (page, ms, ts) = CorpusGen.genPage(n)
@@ -203,13 +213,15 @@ class KernelSpec extends AnyFunSuite {
         val got = DocKernel.mentions(page.url, page.text, umls)
           .map(m => (m.url, m.sentNo, m.start, m.len, m.cui, m.score, m.negated)).sorted
         val want = ms.map(m => (m.url, m.sentNo, m.start, m.len, m.cui, m.score, m.negated)).sorted
-        assert(got == want, s"page $n mentions")
+        assert(got.diff(want) == extraMentions.getOrElse(n, Vector.empty) &&
+          want.diff(got).isEmpty, s"page $n mentions")
         val gotT = DocTriples.fromDoc(page.url, Extract.htmlToText(page.html), umls).sorted
         val wantT = ts.map(t => (t.subj_cui, t.pred, t.obj_cui, t.url, t.sentNo)).sorted
-        assert(gotT == wantT, s"page $n triples")
+        assert(gotT.diff(wantT) == extraTriples.getOrElse(n, Vector.empty) &&
+          wantT.diff(gotT).isEmpty, s"page $n triples")
         checked += 1
       }
     }
-    assert(checked >= 500, s"only $checked English pages checked")
+    assert(checked >= 1000, s"only $checked English pages checked")
   }
 }
