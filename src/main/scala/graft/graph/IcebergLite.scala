@@ -168,7 +168,8 @@ object IcebergLite {
     // instead of aggregating the (possibly very expensive) input plan a
     // second time. At 100 TB the input here is the full kernel pipeline;
     // running it twice would double the most expensive job in the system.
-    todo.write.mode("append").partitionBy("part_bucket").parquet(dataDir.toString)
+    todo.write.options(LocalFs.writerOptions).mode("append").partitionBy("part_bucket")
+      .parquet(dataDir.toString)
 
     // first-ever write of an empty input leaves only _SUCCESS behind —
     // checked EXPLICITLY (a broad AnalysisException catch here would turn

@@ -861,19 +861,17 @@ object DocOps {
     * lexical-plus-dense retrieval composition. Deterministic: fixed query
     * terms, query vector = embedding of id 0, ties broken by doc id.
     * The candidate CUT comes first: only docs with a lexical hit OR
-    * cosine above threshold enter the rank windows, so the global
-    * row_number ranks a score-bounded candidate set, never the corpus —
-    * the shape that survives 100x (the corpus-wide scan is map-only; the
-    * single-partition window sees only survivors). The oracle applies the
-    * identical cut.
+    * cosine above threshold enter the rankings, and each ranking reads a
+    * top-N list, never the corpus — the shape that survives 100x (the
+    * corpus-wide scan is map-only). The oracle applies the identical cut.
     */
   private val hybridCosCut = 0.15
 
   /** Per-side candidate-list bound for RRF fusion: each retrieval side
     * contributes its TOP-N only (classic bounded-list RRF), so the
-    * single-partition rank windows see at most N rows per side no matter
-    * the corpus size — the threshold filter alone is a score cut, not a
-    * size bound, and would grow linearly with the corpus.
+    * rankings see at most N rows per side no matter the corpus size —
+    * the threshold filter alone is a score cut, not a size bound, and
+    * would grow linearly with the corpus.
     */
   private[graft] val hybridTopN = 1000
 
@@ -903,13 +901,9 @@ object DocOps {
       .localCheckpoint(false)
     // orderBy+limit compiles to TakeOrderedAndProject: per-partition
     // partial top-N then a bounded merge — no global sort exchange. The
-    // rank windows below therefore operate on <= N rows per side.
-    val kwTop = scored.orderBy(col("kw_score").desc, col("doc_id")).limit(hybridTopN)
-      .withColumn("kw_rank",
-        row_number().over(Window.orderBy(col("kw_score").desc, col("doc_id"))))
-    val vecTop = scored.orderBy(col("cos6").desc, col("doc_id")).limit(hybridTopN)
-      .withColumn("vec_rank",
-        row_number().over(Window.orderBy(col("cos6").desc, col("doc_id"))))
+    // rankings below therefore read <= N rows per side.
+    val kwTop = rankTop(scored, "kw_score", hybridTopN, "kw_rank")
+    val vecTop = rankTop(scored, "cos6", hybridTopN, "vec_rank")
       .select(col("doc_id").as("v_doc_id"), col("kw_score").as("v_kw_score"),
         col("cos6").as("v_cos6"), col("vec_rank"))
     // bounded-list RRF: a document absent from one side's list gets no
@@ -922,10 +916,24 @@ object DocOps {
         round(
           coalesce(lit(1.0) / (lit(60) + col("kw_rank")), lit(0.0)) +
             coalesce(lit(1.0) / (lit(60) + col("vec_rank")), lit(0.0)), 8).as("rrf"))
-      .withColumn("rk", row_number().over(Window.orderBy(col("rrf").desc, col("doc_id"))))
-      .filter(col("rk") <= 20)
+      .transform(rankTop(_, "rrf", 20, "rk"))
       .select(col("rk"), col("doc_id"), col("kw_score"), col("cos6"), col("rrf"))
       .orderBy(col("rk"))
+  }
+
+  /** `row_number()` over (key DESC, doc_id) as `rank`, for the top `n`
+    * rows only, without a partition-less window: the top-n list is
+    * gathered into one array, sorted descending on (key, -doc_id) — the
+    * same order, with a null key last — and exploded with positions.
+    */
+  private def rankTop(df: DataFrame, key: String, n: Int, rank: String): DataFrame = {
+    val cols = df.columns.toSeq
+    df.orderBy(col(key).desc, col("doc_id")).limit(n)
+      .agg(sort_array(collect_list(struct(
+        (col(key).as("_key") +: (-col("doc_id")).as("_neg_id") +: cols.map(col)): _*)),
+        asc = false).as("top"))
+      .select(posexplode(col("top")).as(Seq("pos", "row")))
+      .select(((col("pos") + 1).as(rank) +: cols.map(c => col(s"row.$c").as(c))): _*)
   }
 
   val hybridSearchSql: String =

@@ -4,6 +4,8 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.graph.LocalFs
+
 /** Per-corpus-snapshot materialization of derived tables: the expensive
   * curation signals and the kg oracle checkpoint (`KgOracleTables`).
   *
@@ -94,7 +96,7 @@ object SnapshotCache {
     val onDisk = versionDirs(base)
     val v = math.max(versions.getOrElse(base, 0), onDisk.lastOption.map(_._1).getOrElse(0)) + 1
     val p = s"$base/v$v"
-    compute.write.mode("overwrite").parquet(p)
+    compute.write.options(LocalFs.writerOptions).mode("overwrite").parquet(p)
     versions(base) = v
     // GC: keep vN and v(N-1); anything older has had a full
     // materialization cycle for held plans to drain

@@ -4,19 +4,23 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.{MeasureBus, SparkContext}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.SparkEntry
 import graft.corpus.CorpusGen
+import graft.graph.IcebergLite
 import graft.ops.{CorpusOps, DocOps}
-import graft.pipeline.Pipeline
+import graft.pipeline.{Page, Pipeline}
+import graft.umls.MiniUmls
 
 /** The measurement tool. It is not part of the driver contract
   * (`graft.Bench`, `graft.Verify`) and never feeds the gate.
@@ -24,6 +28,7 @@ import graft.pipeline.Pipeline
   * {{{
   * sbt "runMain graft.tools.Measure queries <outDir> [query ...]"
   * sbt "runMain graft.tools.Measure scale [nPages]"
+  * sbt "runMain graft.tools.Measure kgop [rounds]"
   * }}}
   *
   * `queries` runs each query (default: the bench headline list) 3 times
@@ -38,7 +43,11 @@ import graft.pipeline.Pipeline
   * the same levels as the box's own ceiling, and writes
   * `BENCH/scale_<N>to<4N>.json`.
   *
-  * Both modes run `local[c]` with c = SPARK_GRAFT_CPUS, else the JVM's
+  * `kgop` attributes the `kg_batch` operation (see [[kgop]]) job by job
+  * at N and 4N cores, each level in its own child JVM, and writes
+  * `BENCH/kgop_<N>to<4N>.json`.
+  *
+  * Every mode runs `local[c]` with c = SPARK_GRAFT_CPUS, else the JVM's
   * available processors.
   */
 object Measure {
@@ -95,9 +104,13 @@ object Measure {
       finally spark.stop()
     case "scale" :: rest if rest.length <= 1 =>
       scale(rest.headOption.fold(200000L)(_.toLong))
+    case "kgop" :: rest if rest.length <= 1 =>
+      kgop(rest.headOption.fold(Runs)(_.toInt))
+    case "kgop-child" :: level :: sizes =>
+      kgopChild(level.toInt, sizes.map(_.toLong))
     case _ =>
       System.err.println(
-        "usage: graft.tools.Measure queries <outDir> [query ...] | scale [nPages]")
+        "usage: graft.tools.Measure queries <outDir> [query ...] | scale [nPages] | kgop [rounds]")
       sys.exit(2)
   }
 
@@ -106,15 +119,26 @@ object Measure {
   private final case class StageRow(job: Int, stage: Int, name: String, tasks: Int,
       runMs: Long, cpuMs: Long, shuffleBytes: Long)
 
+  /** A job's start and end, as the listener events stamp them (epoch ms;
+    * the end is the start until the job ends), and the job description
+    * it was submitted under ("" if none).
+    */
+  private final case class JobRow(job: Int, startMs: Long, endMs: Long, desc: String)
+
   /** Jobs started and stages completed since the last [[take]]. */
   private final class StageLog extends SparkListener {
     private val stageJob = mutable.Map[Int, Int]()
-    private val jobs = mutable.ArrayBuffer[Int]()
+    private val jobs = mutable.LinkedHashMap[Int, JobRow]()
     private val rows = mutable.ArrayBuffer[StageRow]()
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      jobs += e.jobId
+      jobs(e.jobId) = JobRow(e.jobId, e.time, e.time, Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
       e.stageIds.foreach(stageJob.getOrElseUpdate(_, e.jobId))
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(e.jobId).foreach(j => jobs(e.jobId) = j.copy(endMs = e.time))
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
@@ -126,10 +150,10 @@ object Measure {
     }
 
     /** Waits for every posted event, then hands over and forgets the log. */
-    def take(sc: SparkContext): (Vector[Int], Vector[StageRow]) = {
+    def take(sc: SparkContext): (Vector[JobRow], Vector[StageRow]) = {
       MeasureBus.drain(sc)
       synchronized {
-        val r = (jobs.toVector, rows.sortBy(_.stage).toVector)
+        val r = (jobs.values.toVector, rows.sortBy(_.stage).toVector)
         jobs.clear(); rows.clear(); stageJob.clear()
         r
       }
@@ -161,7 +185,7 @@ object Measure {
         val wallMs = (t2 - t0) / 1e6
         val runMs = stages.map(_.runMs).sum
         obj("rows" -> n, "build_ms" -> (t1 - t0) / 1e6, "exec_ms" -> (t2 - t1) / 1e6,
-          "wall_ms" -> wallMs, "jobs" -> jobs.size, "job_ids" -> jobs,
+          "wall_ms" -> wallMs, "jobs" -> jobs.size, "job_ids" -> jobs.map(_.job),
           "stages" -> stages.size, "tasks" -> stages.map(_.tasks).sum,
           "task_run_ms" -> runMs, "task_cpu_ms" -> stages.map(_.cpuMs).sum,
           "shuffle_bytes" -> stages.map(_.shuffleBytes).sum,
@@ -236,10 +260,6 @@ object Measure {
     val counts = samples.map(_.triples).distinct
     require(counts.size == 1, s"triple counts differ across levels: $counts")
 
-    def median(xs: Seq[Double]): Double = {
-      val v = xs.sorted
-      (v((v.length - 1) / 2) + v(v.length / 2)) / 2
-    }
     // per level the times, their min/median/max and the rate at the
     // median; the efficiency (T_N / T_4N) / (4N / N) is taken on medians
     def report(f: Sample => Double, work: Double, unit: String): (ListMap[String, Any], Double) = {
@@ -262,6 +282,225 @@ object Measure {
     println(write(out, json))
     println(f"[measure] local[$lo] -> local[$hi]: kg efficiency $kgEff%.3f, " +
       f"cpu loop $cpuEff%.3f; wrote $out")
+  }
+
+  // ---- kgop ----------------------------------------------------------
+
+  /** Pages per operation at the lower level, and files of its pages table. */
+  private val KgopPages = 50000L
+  private val KgopFiles = 32
+
+  /** Warm-up and timed operations per size in one child JVM. The first
+    * size pays the JIT's compilation of the kernel; a later size in the
+    * same JVM needs only a short warm-up.
+    */
+  private val KgopWarm = Seq(8, 2)
+  private val KgopTimed = Seq(12, 6)
+
+  /** A Spark job within one operation: the operation's phase ("write":
+    * pages read, `Pipeline.run` and `IcebergLite.write`; "rollup":
+    * `Pipeline.graph` and count), its stages, tasks, wall time from its
+    * own start and end events, summed task run time, and the driver time
+    * between the previous job's end (or the operation's start) and its
+    * start.
+    */
+  private final case class OpJob(phase: String, stages: String, tasks: Int, wallMs: Long,
+      taskMs: Long, gapMs: Long)
+
+  /** One timed operation: wall, time outside every job, the processes
+    * the JVM started during it (by command name), and its jobs.
+    */
+  private final case class Op(ms: Long, driverMs: Long, processes: Map[String, Int],
+      jobs: Vector[OpJob])
+
+  /** The `kg_batch` operation shape, job by job. At each level of
+    * [[scaleLevels]], in rounds (lo, hi, lo, hi, ...), a child JVM
+    * (`kgop-child`, the heap of perfbench's JVMs) writes a pages table of
+    * `genPage(1000..)` pages, `KgopFiles` parquet files per
+    * `KgopPages`, and times operations: read the table → `Pipeline.run` →
+    * `IcebergLite.write` into a fresh root → `Pipeline.graph` over the
+    * snapshot → count. The low level runs N = `KgopPages` pages; the high
+    * level runs N (strong scaling) and N·hi/lo (weak scaling). A JFR
+    * recording of `jdk.ProcessStart` in the child counts the processes
+    * each operation starts.
+    *
+    * Per level and size the report has the operation's median and
+    * spread, its jobs in order (stage names, tasks, medians of wall, task
+    * and preceding driver time), the driver time outside jobs, and the
+    * processes per operation. Strong efficiency is T_lo(N) / (T_hi(N) ·
+    * hi/lo), weak efficiency T_lo(N) / T_hi(N·hi/lo), each per round and
+    * as min/median/max.
+    */
+  private def kgop(rounds: Int): Unit = {
+    val (lo, hi) = scaleLevels(cores)
+    val weak = KgopPages * hi / lo
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filterNot(a => a.startsWith("-Xm") || a.startsWith("-agentlib")).toSeq
+    def child(level: Int, sizes: Seq[Long]): Seq[(Long, Vector[Op])] = {
+      val err = Files.createTempFile("graft_kgop", ".log")
+      val cmd = Seq(javaBin, "-Xms2g", "-Xmx2g") ++ jvmArgs ++
+        Seq("-cp", System.getProperty("java.class.path"), "graft.tools.Measure",
+          "kgop-child", level.toString) ++ sizes.map(_.toString)
+      val p = new ProcessBuilder(cmd: _*).redirectError(err.toFile).start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+      val code = p.waitFor()
+      val line = out.linesIterator.find(_.startsWith(KgopLine))
+      if (code != 0 || line.isEmpty) {
+        val log = Files.readAllLines(err).asScala.takeRight(40).mkString("\n")
+        throw new IllegalStateException(s"kgop child local[$level] exited $code:\n$log")
+      }
+      Files.delete(err)
+      new ObjectMapper().readTree(line.get.stripPrefix(KgopLine)).elements().asScala.map { m =>
+        m.get("pages").asLong -> m.get("ops").elements().asScala.map { o =>
+          Op(o.get("ms").asLong, o.get("driver_ms").asLong,
+            o.get("processes").properties().asScala.map(f => f.getKey -> f.getValue.asInt).toMap,
+            o.get("jobs").elements().asScala.map(j =>
+              OpJob(j.get("phase").asText, j.get("stages").asText, j.get("tasks").asInt,
+                j.get("wall_ms").asLong, j.get("task_ms").asLong, j.get("gap_ms").asLong))
+              .toVector)
+        }.toVector
+      }.toVector
+    }
+    // (round, level, pages) -> operations
+    val runs = (1 to rounds).flatMap { r =>
+      val plan = Seq(lo -> Seq(KgopPages), hi -> Seq(KgopPages, weak).distinct)
+      (if (lo == hi) plan.tail else plan).flatMap {
+        case (lvl, sizes) =>
+          val got = child(lvl, sizes)
+          got.foreach { case (n, ops) =>
+            println(f"[measure] kgop round $r local[$lvl] $n pages: median op " +
+              f"${median(ops.map(_.ms.toDouble))}%.0f ms")
+          }
+          got.map { case (n, ops) => (r, lvl, n) -> ops }
+      }
+    }.toMap
+
+    def med(xs: Seq[Long]): Double = median(xs.map(_.toDouble))
+    def spread(xs: Seq[Double]): ListMap[String, Any] =
+      obj("runs" -> xs, "min" -> xs.min, "median" -> median(xs), "max" -> xs.max)
+    def level(lvl: Int, n: Long): ListMap[String, Any] = {
+      val ops = (1 to rounds).flatMap(r => runs((r, lvl, n)))
+      val nJobs = ops.map(_.jobs.length)
+      val jobs = (0 until nJobs.max).map { k =>
+        val js = ops.flatMap(_.jobs.lift(k))
+        val mode = js.groupBy(j => (j.phase, j.stages)).maxBy(_._2.length)._1
+        obj("job" -> k, "phase" -> mode._1, "stages" -> mode._2,
+          "ops" -> js.length, "tasks" -> med(js.map(_.tasks.toLong)),
+          "wall_ms" -> med(js.map(_.wallMs)), "task_ms" -> med(js.map(_.taskMs)),
+          "gap_before_ms" -> med(js.map(_.gapMs)))
+      }
+      val commands = ops.flatMap(_.processes.keys).distinct.sorted
+      obj("level" -> s"local[$lvl]", "pages" -> n, "ops" -> ops.length,
+        "op_ms" -> spread((1 to rounds).map(r => med(runs((r, lvl, n)).map(_.ms)))),
+        "jobs_per_op" -> obj("min" -> nJobs.min, "max" -> nJobs.max),
+        "job_wall_ms" -> med(ops.map(_.jobs.map(_.wallMs).sum)),
+        "task_ms" -> med(ops.map(_.jobs.map(_.taskMs).sum)),
+        "driver_ms" -> med(ops.map(_.driverMs)),
+        "processes_per_op" -> med(ops.map(_.processes.values.sum.toLong)),
+        "processes_by_command" -> obj(commands.map(c =>
+          c -> med(ops.map(_.processes.getOrElse(c, 0).toLong))): _*),
+        "jobs" -> jobs)
+    }
+    // strong: N pages at both levels, ideal T_hi = T_lo·lo/hi; weak:
+    // N·hi/lo pages at hi, ideal T_hi = T_lo
+    def eff(hiPages: Long, ideal: Double): Seq[Double] = (1 to rounds).map(r =>
+      med(runs((r, lo, KgopPages)).map(_.ms)) * ideal / med(runs((r, hi, hiPages)).map(_.ms)))
+    val strong = eff(KgopPages, lo.toDouble / hi)
+    val weakEff = eff(weak, 1.0)
+    val json = obj("tool" -> "graft.tools.Measure", "mode" -> "kgop", "sha" -> sha,
+      "nproc" -> Runtime.getRuntime.availableProcessors, "cores" -> cores,
+      "rounds" -> rounds, "levels" -> Seq(lo, hi),
+      "warmup_ops" -> KgopWarm, "timed_ops" -> KgopTimed,
+      "strong_efficiency" -> spread(strong),
+      "weak_efficiency" -> spread(weakEff),
+      "runs" -> (Seq(lo -> KgopPages, hi -> KgopPages, hi -> weak).distinct
+        .map { case (l, n) => level(l, n) }))
+    val out = Paths.get("BENCH", s"kgop_${lo}to$hi.json")
+    write(out, json)
+    println(f"[measure] kgop local[$lo] -> local[$hi]: strong efficiency " +
+      f"${median(strong)}%.3f, weak ${median(weakEff)}%.3f; wrote $out")
+  }
+
+  private val KgopLine = "[kgop] "
+
+  /** One child JVM of [[kgop]]: operations at `level` cores for each page
+    * count, printed as one JSON line.
+    */
+  private def kgopChild(level: Int, sizes: Seq[Long]): Unit = {
+    implicit val spark: SparkSession = session(level)
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val work = Files.createTempDirectory("graft_kgop")
+    val bc = sc.broadcast(MiniUmls.tables)
+    val log = new StageLog
+    sc.addSparkListener(log)
+    val recording = new jdk.jfr.Recording()
+    recording.enable("jdk.ProcessStart")
+    recording.start()
+    val out = try sizes.zipWithIndex.map { case (n, i) =>
+      val pagesDir = work.resolve(s"pages-$n").toString
+      spark.range(1000, 1000 + n, 1, (KgopFiles * n / KgopPages).toInt)
+        .map(k => CorpusGen.genPage(k)._1).write.parquet(pagesDir)
+      val ops = (1 to KgopWarm(i) + KgopTimed(i)).map { k =>
+        val root = work.resolve(s"graph-$n-$k").toString
+        log.take(sc)
+        val t0 = System.currentTimeMillis()
+        sc.setJobDescription("write")
+        IcebergLite.write(Pipeline.run(spark.read.parquet(pagesDir).as[Page]), root)
+        sc.setJobDescription("rollup")
+        Pipeline.graph(IcebergLite.read(spark, root), bc).count()
+        val t1 = System.currentTimeMillis()
+        sc.setJobDescription(null)
+        val (jobs, stages) = log.take(sc)
+        deleteTree(Paths.get(root))
+        (t0, t1, jobs, stages)
+      }.drop(KgopWarm(i))
+      n -> ops
+    } finally recording.stop()
+    val starts = {
+      val file = work.resolve("processes.jfr")
+      recording.dump(file)
+      recording.close()
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toVector
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(e => e.getStartTime.toEpochMilli -> e.getString("command").takeWhile(_ != ' '))
+    }
+    val json = out.map { case (n, ops) =>
+      obj("pages" -> n, "ops" -> ops.map { case (t0, t1, jobs, stages) =>
+        var last = t0
+        var busy = 0L
+        val js = jobs.sortBy(_.startMs).map { j =>
+          val gap = math.max(0L, j.startMs - last)
+          busy += math.max(0L, j.endMs - math.max(j.startMs, last))
+          last = math.max(last, j.endMs)
+          val own = stages.filter(_.job == j.job)
+          obj("phase" -> j.desc, "stages" -> own.map(_.name).mkString(" | "),
+            "tasks" -> own.map(_.tasks).sum,
+            "wall_ms" -> (j.endMs - j.startMs), "task_ms" -> own.map(_.runMs).sum,
+            "gap_ms" -> gap)
+        }
+        val procs = starts.filter { case (t, _) => t >= t0 && t <= t1 }
+          .groupBy(_._2).map { case (c, v) => c -> v.length }
+        obj("ms" -> (t1 - t0), "driver_ms" -> (t1 - t0 - busy), "processes" -> procs,
+          "jobs" -> js)
+      })
+    }
+    spark.stop()
+    deleteTree(work)
+    println(KgopLine + new ObjectMapper().registerModule(DefaultScalaModule)
+      .writeValueAsString(json))
+  }
+
+  private def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+    val walk = Files.walk(p)
+    try walk.iterator().asScala.toVector.reverseIterator.foreach(Files.delete)
+    finally walk.close()
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val v = xs.sorted
+    (v((v.length - 1) / 2) + v(v.length / 2)) / 2
   }
 
   // ---- JSON and stamp ------------------------------------------------

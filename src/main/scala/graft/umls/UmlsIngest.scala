@@ -3,6 +3,8 @@ package graft.umls
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.graph.LocalFs
+
 /** Real-UMLS ingestion: build a broadcastable [[UmlsTables]] from
   * MRCONSO / MRSTY / SRSTRE / SPECIALIST-shaped DataFrames instead of the
   * synthetic fixture. This is the path a user with an actual Metathesaurus
@@ -535,7 +537,8 @@ object UmlsIngest {
   def dump(t: UmlsTables, dir: String)(implicit spark: SparkSession): Unit = {
     import spark.implicits._
     def write(df: DataFrame, name: String): Unit =
-      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
+      df.coalesce(1).write.options(LocalFs.writerOptions).mode("overwrite")
+        .parquet(s"$dir/$name")
 
     val indexed: Set[(String, String)] =
       t.firstWordIndex.valuesIterator.flatten.map(e => (e.cui, e.str)).toSet

@@ -244,22 +244,25 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       s"canonical should read the per-snapshot cluster table:\n$pc")
   }
 
-  test("hybrid search: fusion windows read bounded top-N lists, not the corpus") {
-    // each retrieval side must pass through TakeOrderedAndProject(limit=N)
-    // BEFORE its rank window: per-partition partial top-N + bounded merge,
-    // so the single-partition window input is a constant (<= hybridTopN)
-    // regardless of corpus size — a score-threshold filter alone grows
-    // linearly with keyword-hit documents
+  test("hybrid search: rankings read bounded top-N lists, no global window") {
+    // each ranking (per retrieval side, and the fused top 20) must pass
+    // through TakeOrderedAndProject(limit=N) BEFORE it is numbered:
+    // per-partition partial top-N + bounded merge, so what is numbered is
+    // a constant (<= hybridTopN) regardless of corpus size — a
+    // score-threshold filter alone grows linearly with keyword-hit
+    // documents. The numbering is a sorted array exploded with positions,
+    // not a partition-less window.
     val p = plan(DocOps.hybridSearch(spark, sf))
     val takes = "TakeOrderedAndProject".r.findAllIn(p).size
-    assert(takes >= 2, s"per-side top-N cut missing ($takes):\n$p")
+    assert(takes >= 3, s"top-N cut missing ($takes):\n$p")
     assert(p.contains(s"limit=${DocOps.hybridTopN}"), p)
-    val firstWindow = p.indexOf("Window")
-    val firstTake = p.indexOf("TakeOrderedAndProject")
-    assert(firstTake >= 0 && firstWindow >= 0)
-    // plan trees print consumers above producers: every window must sit
-    // ABOVE (before, textually) a TakeOrderedAndProject feeding it
-    assert(p.lastIndexOf("TakeOrderedAndProject") > firstWindow,
-      s"rank window not fed by a bounded top-N:\n$p")
+    assert(!p.contains("Window"), s"a ranking runs as a global window:\n$p")
+    // plan trees print consumers above producers: every numbering
+    // (Generate posexplode) sits above a TakeOrderedAndProject feeding it
+    val generates = "Generate posexplode".r.findAllMatchIn(p).map(_.start).toVector
+    assert(generates.size == 3, p)
+    generates.foreach(g => assert(p.indexOf("TakeOrderedAndProject", g) > g,
+      s"a ranking not fed by a bounded top-N:\n$p"))
   }
+
 }
