@@ -5,9 +5,13 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.AccumulatorV2
+
+import graft.output.JsonMmoOutput
 
 /** Iceberg-style partitioned table layout with snapshot manifests and
   * per-partition lineage/metrics rows enabling checkpoint-resume
@@ -45,18 +49,76 @@ object IcebergLite {
 
   private val TripleColumns = TableSchema.fields.init.map(f => f.name -> f.dataType).toSeq
 
+  private val SubjColumn = TableSchema.fieldIndex("subj_cui")
+  private val BucketColumn = TableSchema.fieldIndex("part_bucket")
+
   private def scan(spark: SparkSession, dataDir: Path): DataFrame =
     spark.read.schema(TableSchema).parquet(dataDir.toString)
 
-  /** Whether a table's data dir holds any parquet file (bucket dirs are
-    * one level down).
+  /** Per-bucket metrics of the rows a write job hands to its writer,
+    * gathered in that job's own tasks: rows, distinct subjects, and the
+    * least and greatest subject. Semantics are those of `count`,
+    * `countDistinct`, `min` and `max`: a null subject counts as a row and
+    * nowhere else, and subjects order by their UTF-8 bytes, as Spark
+    * orders strings (`String.compareTo` orders UTF-16 units, which
+    * differs once a surrogate pair meets a char at U+E000 or above).
+    *
+    * The driver's copy folds each task's update into per-bucket unions
+    * as it arrives, so it holds one set of distinct subjects per bucket,
+    * never one per task. Spark applies a result-stage task's update once
+    * per partition and never a failed attempt's, so the metrics stay
+    * exact under task retries as long as the tally runs in the write's
+    * result stage.
     */
-  private def hasParquet(dataDir: Path): Boolean =
-    Files.isDirectory(dataDir) && {
-      val walk = Files.walk(dataDir, 2)
-      try walk.iterator().asScala.exists(_.getFileName.toString.endsWith(".parquet"))
-      finally walk.close()
+  private[graft] final class Tally(nBuckets: Int)
+      extends AccumulatorV2[Row, Vector[PartitionMeta]] {
+    private val rows = new Array[Long](nBuckets)
+    private val subjects = new Array[java.util.HashSet[String]](nBuckets)
+
+    private def subjectsOf(b: Int): java.util.HashSet[String] = {
+      if (subjects(b) == null) subjects(b) = new java.util.HashSet[String]
+      subjects(b)
     }
+
+    override def isZero: Boolean = rows.forall(_ == 0L)
+    override def copyAndReset(): Tally = new Tally(nBuckets)
+    override def copy(): Tally = {
+      val t = new Tally(nBuckets)
+      t.merge(this)
+      t
+    }
+    override def reset(): Unit = {
+      java.util.Arrays.fill(rows, 0L)
+      java.util.Arrays.fill(subjects.asInstanceOf[Array[AnyRef]], null)
+    }
+
+    /** Tallies one row of the table's schema. */
+    override def add(r: Row): Unit = {
+      val b = r.getInt(BucketColumn)
+      rows(b) += 1
+      if (!r.isNullAt(SubjColumn)) subjectsOf(b).add(r.getString(SubjColumn))
+    }
+
+    override def merge(other: AccumulatorV2[Row, Vector[PartitionMeta]]): Unit = other match {
+      case t: Tally =>
+        for (b <- 0 until nBuckets) {
+          rows(b) += t.rows(b)
+          if (t.subjects(b) != null) subjectsOf(b).addAll(t.subjects(b))
+        }
+      case _ => throw new UnsupportedOperationException(s"cannot merge ${other.getClass}")
+    }
+
+    /** The tallied buckets in bucket order. */
+    override def value: Vector[PartitionMeta] =
+      (0 until nBuckets).filter(rows(_) > 0L).map { b =>
+        val subj = Option(subjects(b)).fold(Iterable.empty[String])(_.asScala)
+        if (subj.isEmpty) PartitionMeta(b, rows(b), 0L, null, null)
+        else PartitionMeta(b, rows(b), subj.size, subj.min(Utf8Order), subj.max(Utf8Order))
+      }.toVector
+  }
+
+  /** Spark's string order: by UTF-8 bytes. */
+  private val Utf8Order: Ordering[String] = Ordering.by(UTF8String.fromString)
 
   def latestSnapshot(root: String): Option[Snapshot] = {
     val dir = manifestDir(root)
@@ -77,23 +139,56 @@ object IcebergLite {
     }
   }
 
-  // minimal JSON (de)serialization — the manifest schema is ours
+  // minimal JSON (de)serialization — the manifest schema is ours. A
+  // subject is any string: min/max are escaped JSON strings, or null for
+  // a bucket whose rows all have a null subject
   private def renderSnapshot(s: Snapshot): String = {
+    def str(v: String) = if (v == null) "null" else JsonMmoOutput.js(v)
     val parts = s.partitions.map(p =>
       s"""{"bucket":${p.bucket},"rows":${p.rows},"n_subj_cuis":${p.nSubjCuis},""" +
-        s""""min_subj":"${p.minSubj}","max_subj":"${p.maxSubj}"}""").mkString(",")
+        s""""min_subj":${str(p.minSubj)},"max_subj":${str(p.maxSubj)}}""").mkString(",")
     s"""{"snapshot_id":${s.snapshotId},"partitions":[$parts]}"""
   }
+
+  /** A JSON string literal (unrolled, so a long one cannot overflow the
+    * regex engine's stack), or null.
+    */
+  private val JsonStr = """(null|"[^"\\]*+(?:\\.[^"\\]*+)*+")"""
 
   private def parseSnapshot(json: String): Snapshot = {
     val id = """"snapshot_id":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(0)
     val part = ("""\{"bucket":(\d+),"rows":(\d+),"n_subj_cuis":(\d+),""" +
-      """"min_subj":"([^"]*)","max_subj":"([^"]*)"\}""").r
+      s""""min_subj":$JsonStr,"max_subj":$JsonStr\\}""").r
     val ps = part.findAllMatchIn(json).map(m =>
       PartitionMeta(m.group(1).toInt, m.group(2).toLong, m.group(3).toLong,
-        m.group(4), m.group(5))).toVector
+        unescape(m.group(4)), unescape(m.group(5)))).toVector
     Snapshot(id, ps)
   }
+
+  private val Escaped = "\"\\/bfnrt"
+  private val Unescaped = "\"\\/\b\f\n\r\t"
+
+  /** The value of a JSON string literal matched by [[JsonStr]]. */
+  private def unescape(lit: String): String =
+    if (lit == "null") null
+    else {
+      val b = new java.lang.StringBuilder(lit.length)
+      var i = 1
+      while (i < lit.length - 1) {
+        val c = lit.charAt(i)
+        if (c != '\\') { b.append(c); i += 1 }
+        else if (lit.charAt(i + 1) == 'u') {
+          b.append(Integer.parseInt(lit.substring(i + 2, i + 6), 16).toChar)
+          i += 6
+        } else {
+          val k = Escaped.indexOf(lit.charAt(i + 1))
+          require(k >= 0, s"bad escape in manifest string $lit")
+          b.append(Unescaped.charAt(k))
+          i += 2
+        }
+      }
+      b.toString
+    }
 
   /** Write `triples` (columns subj_cui, pred, obj_cui, url, sentNo) to the
     * table at `root`, bucketed on subj_cui. Buckets already committed in
@@ -134,7 +229,7 @@ object IcebergLite {
     // self-heal orphaned buckets: a crash between a successful append
     // job and the manifest write leaves data for buckets the manifest
     // never committed; retrying without cleanup would append a SECOND
-    // copy of those rows (metrics then scan both). Before writing,
+    // copy of those rows (reads then return both). Before writing,
     // delete any bucket directory on disk that is not committed — all
     // legitimately-present data is, by construction.
     {
@@ -162,35 +257,20 @@ object IcebergLite {
     val todo = if (committed.isEmpty) bucketed
       else bucketed.filter(!col("part_bucket").isin(committed.toSeq: _*))
 
-    // SINGLE execution of the input: write first, then derive the
-    // per-partition lineage/metrics from the just-written parquet — a
-    // cheap columnar re-scan of only the new buckets (partition-pruned),
-    // instead of aggregating the (possibly very expensive) input plan a
-    // second time. At 100 TB the input here is the full kernel pipeline;
-    // running it twice would double the most expensive job in the system.
-    todo.write.options(LocalFs.writerOptions).mode("append").partitionBy("part_bucket")
+    // SINGLE execution of the input, and no second job: the write's own
+    // tasks tally each row on its way to the writer. At 100 TB the input
+    // here is the full kernel pipeline; running it twice would double the
+    // most expensive job in the system, and re-scanning the written
+    // parquet costs jobs whose time does not shrink with cores. The
+    // tally is the top of the write's plan, so it runs in the result
+    // stage, where Spark applies each partition's update exactly once.
+    val tally = new Tally(nBuckets)
+    spark.sparkContext.register(tally)
+    todo.mapPartitions(_.map { r => tally.add(r); r })(Encoders.row(todo.schema))
+      .write.options(LocalFs.writerOptions).mode("append").partitionBy("part_bucket")
       .parquet(dataDir.toString)
 
-    // first-ever write of an empty input leaves only _SUCCESS behind —
-    // checked EXPLICITLY (a broad AnalysisException catch here would turn
-    // any unrelated read failure into an empty snapshot that orphans the
-    // just-written buckets and duplicates them on the next write)
-    val metrics =
-      if (!hasParquet(dataDir)) Vector.empty[PartitionMeta]
-      else {
-        val written = scan(spark, dataDir)
-        val fresh = if (committed.isEmpty) written
-          else written.filter(!col("part_bucket").isin(committed.toSeq: _*))
-        fresh.groupBy(col("part_bucket"))
-          .agg(count(lit(1)).as("rows"), countDistinct(col("subj_cui")).as("n_subj"),
-            min(col("subj_cui")).as("min_subj"), max(col("subj_cui")).as("max_subj"))
-          .collect()
-          .map(r => PartitionMeta(r.getInt(0), r.getLong(1), r.getLong(2),
-            r.getString(3), r.getString(4)))
-          .toVector.sortBy(_.bucket)
-      }
-
-    commit(metrics)
+    commit(tally.value)
   }
 
   /** Union-read every per-batch table under `root` (the streaming layout

@@ -12,8 +12,10 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.{MeasureBus, SparkContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkEntry
 import graft.corpus.CorpusGen
@@ -29,6 +31,7 @@ import graft.umls.MiniUmls
   * sbt "runMain graft.tools.Measure queries <outDir> [query ...]"
   * sbt "runMain graft.tools.Measure scale [nPages]"
   * sbt "runMain graft.tools.Measure kgop [rounds]"
+  * sbt "runMain graft.tools.Measure tally [subjects] [tasks]"
   * }}}
   *
   * `queries` runs each query (default: the bench headline list) 3 times
@@ -47,7 +50,11 @@ import graft.umls.MiniUmls
   * at N and 4N cores, each level in its own child JVM, and writes
   * `BENCH/kgop_<N>to<4N>.json`.
   *
-  * Every mode runs `local[c]` with c = SPARK_GRAFT_CPUS, else the JVM's
+  * `tally` measures the driver heap that an `IcebergLite.write`'s
+  * metrics tally retains at a number of distinct subjects (see
+  * [[tally]]) and writes `BENCH/tally_heap.json`.
+  *
+  * Every mode but `tally` runs `local[c]` with c = SPARK_GRAFT_CPUS, else the JVM's
   * available processors.
   */
 object Measure {
@@ -108,9 +115,11 @@ object Measure {
       kgop(rest.headOption.fold(Runs)(_.toInt))
     case "kgop-child" :: level :: sizes =>
       kgopChild(level.toInt, sizes.map(_.toLong))
+    case "tally" :: rest if rest.length <= 2 =>
+      tally(rest.headOption.fold(4400000)(_.toInt), rest.lift(1).fold(64)(_.toInt))
     case _ =>
-      System.err.println(
-        "usage: graft.tools.Measure queries <outDir> [query ...] | scale [nPages] | kgop [rounds]")
+      System.err.println("usage: graft.tools.Measure queries <outDir> [query ...] | " +
+        "scale [nPages] | kgop [rounds] | tally [subjects] [tasks]")
       sys.exit(2)
   }
 
@@ -490,6 +499,55 @@ object Measure {
     deleteTree(work)
     println(KgopLine + new ObjectMapper().registerModule(DefaultScalaModule)
       .writeValueAsString(json))
+  }
+
+  // ---- tally ---------------------------------------------------------
+
+  /** The driver heap an `IcebergLite.write` metrics tally retains once it
+    * has merged `tasks` task updates over `subjects` distinct synthetic
+    * subject CUIs (`C0000000`, ...; UMLS has about 4.4M concepts) into
+    * 32 buckets. Task t covers subjects t·s/tasks up to (t+2)·s/tasks, so
+    * every subject arrives in two updates, and each update is dropped
+    * once merged, as the scheduler drops a task's result. Beside it, a
+    * plain `java.util.HashSet[String]` of the same subjects. Retained
+    * heap is used heap after full GCs, minus the same before.
+    */
+  private def tally(subjects: Int, tasks: Int): Unit = {
+    require(subjects > 0 && tasks > 0, s"need subjects and tasks > 0, got $subjects, $tasks")
+    val buckets = 32
+    def cui(k: Long): String = { val d = k.toString; "C" + "0000000".drop(d.length) + d }
+    def used(): Long = {
+      (1 to 3).foreach(_ => System.gc())
+      java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
+    }
+    val base = used()
+    val driver = new IcebergLite.Tally(buckets)
+    var mergeNs = 0L
+    for (t <- 0 until tasks) {
+      val update = new IcebergLite.Tally(buckets)
+      for (k <- t.toLong * subjects / tasks until (t + 2L) * subjects / tasks) {
+        val s = cui(k % subjects)
+        val b = Math.floorMod(XXH64.hashUTF8String(UTF8String.fromString(s), 42L), buckets.toLong)
+        update.add(Row(s, "p", "o", "u", 0, b.toInt))
+      }
+      val t0 = System.nanoTime()
+      driver.merge(update)
+      mergeNs += System.nanoTime() - t0
+    }
+    val tallyBytes = used() - base
+    val metrics = driver.value
+    require(metrics.map(_.nSubjCuis).sum == subjects, "every subject counted once")
+    val plainBase = used()
+    val plain = new java.util.HashSet[String]
+    for (k <- 0L until subjects) plain.add(cui(k))
+    val plainBytes = used() - plainBase
+    require(plain.size == subjects)
+    val mb = (b: Long) => math.round(b / 1e5) / 10.0
+    val json = obj("tool" -> "graft.tools.Measure", "mode" -> "tally", "sha" -> sha,
+      "subjects" -> subjects, "tasks" -> tasks, "buckets" -> buckets,
+      "tally_retained_mb" -> mb(tallyBytes), "tally_bytes_per_subject" -> tallyBytes / subjects,
+      "merge_ms" -> mergeNs / 1000000, "plain_hashset_mb" -> mb(plainBytes))
+    println("[measure] tally " + write(Paths.get("BENCH", "tally_heap.json"), json))
   }
 
   private def deleteTree(p: Path): Unit = if (Files.exists(p)) {

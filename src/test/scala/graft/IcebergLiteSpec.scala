@@ -19,25 +19,86 @@ class IcebergLiteSpec extends AnyFunSuite with SparkTestBase {
 
   test("write + read roundtrip with per-partition metrics") {
     implicit val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    // every manifest metric equals the same aggregate over the read-back,
+    // and the committed manifest reads back as the returned snapshot
+    def check(snap: IcebergLite.Snapshot, root: String): Vector[IcebergLite.PartitionMeta] = {
+      val fromData = TableMetrics.of(IcebergLite.read(spark, root))
+      assert(snap.partitions.nonEmpty)
+      assert(snap.partitions == fromData)
+      assert(IcebergLite.latestSnapshot(root).contains(snap))
+      fromData
+    }
+
     val root = tmpDir().toString
     val triples = Pipeline.run(CorpusGen.pages(spark, 150))
     val expected = triples.count()
     val snap = IcebergLite.write(triples, root)
     assert(snap.snapshotId == 1)
     assert(snap.partitions.map(_.rows).sum == expected)
-    val back = IcebergLite.read(spark, root)
-    assert(back.count() == expected)
-    // every manifest metric equals the same aggregate over the read-back
-    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
-    val fromData = back.groupBy(col("part_bucket"))
-      .agg(count(lit(1)), countDistinct(col("subj_cui")), min(col("subj_cui")), max(col("subj_cui")))
-      .collect().toVector
-      .map(r => IcebergLite.PartitionMeta(r.getInt(0), r.getLong(1), r.getLong(2),
-        r.getString(3), r.getString(4)))
-      .sortBy(_.bucket)
-    assert(snap.partitions.nonEmpty)
-    assert(snap.partitions == fromData)
+    assert(IcebergLite.read(spark, root).count() == expected)
+    check(snap, root)
     rm(java.nio.file.Paths.get(root))
+
+    // subjects whose UTF-16 and UTF-8 orders differ (U+FF21 sorts above a
+    // surrogate pair in UTF-16, below it in UTF-8), null subjects, and a
+    // resume write over the buckets a first write committed
+    val odd = spark.sparkContext.parallelize(
+      (0 until 48).flatMap(i => Seq(s"\uFF21$i", s"\uD83D\uDE00$i", f"C$i%07d")) ++
+        Seq("\uFF21", "\uD83D\uDE00", null, null), 4)
+      .map(subj => (subj, "treats", "C0000001", "u", 0))
+      .toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
+    val oddRoot = tmpDir().toString
+    val first = IcebergLite.write(
+      odd.filter(pmod(xxhash64(col("subj_cui")), lit(32)) < 16), oddRoot)
+    assert(first.partitions.map(_.bucket).forall(_ < 16))
+    val resumed = IcebergLite.write(odd, oddRoot)
+    assert(resumed.partitions.take(first.partitions.length) == first.partitions)
+    assert(resumed.partitions.map(_.rows).sum == odd.count())
+    val oddMetrics = check(resumed, oddRoot)
+    // the two null subjects are the only repeated ones
+    assert(oddMetrics.count(m => m.rows > m.nSubjCuis) == 1)
+    // the case has teeth: in some bucket the UTF-16 order picks another
+    // min or max than Spark's UTF-8 order
+    val bySubj = IcebergLite.read(spark, oddRoot).as[(String, String, String, String, Int, Int)]
+      .collect().toVector.filter(_._1 != null).groupBy(_._6)
+    assert(oddMetrics.exists { m =>
+      val subs = bySubj(m.bucket).map(_._1)
+      subs.min != m.minSubj || subs.max != m.maxSubj
+    })
+    rm(java.nio.file.Paths.get(oddRoot))
+  }
+
+  test("manifest strings round-trip: quotes, backslashes, control chars, non-ASCII, null") {
+    implicit val s = spark
+    import s.implicits._
+    val subjects = Seq("C2", "C\"9", "C3", "C\\4", "C\u00015", "C\u00e96", "C\u65e57",
+      "\uD83D\uDE008", "C\"\\\"9", null)
+    val rows = subjects.map(subj => (subj, "treats", "C0000001", "u", 0))
+    val input = rows.toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
+    val root = tmpDir().toString
+    val snap = IcebergLite.write(input, root)
+    assert(IcebergLite.latestSnapshot(root).contains(snap))
+    // the null subject has a bucket of its own: its min/max are null
+    assert(snap.partitions.exists(p => p.minSubj == null && p.maxSubj == null))
+    def back = IcebergLite.read(spark, root).select("subj_cui", "pred", "obj_cui", "url", "sentNo")
+      .as[(String, String, String, String, Int)].collect().toSet
+    assert(back == rows.toSet)
+    // a second write sees every bucket committed: nothing is dropped as
+    // an orphan, every row stays
+    val again = IcebergLite.write(input, root)
+    assert(again.partitions == snap.partitions)
+    assert(IcebergLite.latestSnapshot(root).contains(again))
+    assert(back == rows.toSet)
+    rm(java.nio.file.Paths.get(root))
+  }
+
+  test("metrics are exact under a task retry (local[2,2], one injected failure)") {
+    val (code, out) = ChildJvm.run("graft.TallyRetryMain")
+    assert(code == 0, out.takeRight(20).mkString("\n"))
+    assert(out.contains("[tally] failedAttempts=1 equalsClean=true equalsData=true"),
+      out.takeRight(20).mkString("\n"))
   }
 
   test("write rejects input whose columns are not the five triple columns") {
@@ -141,7 +202,7 @@ class IcebergLiteSpec extends AnyFunSuite with SparkTestBase {
     IcebergLite.write(triples, root)
     rm(java.nio.file.Paths.get(root, "_manifest"))
     // the retry must DELETE the orphaned bucket data before appending,
-    // or every row would be counted twice by the metrics scan
+    // or every row would be read back twice
     val retried = IcebergLite.write(triples, root)
     assert(retried.partitions.map(_.rows).sum == total)
     assert(IcebergLite.read(spark, root).count() == total)
@@ -171,5 +232,66 @@ class IcebergLiteSpec extends AnyFunSuite with SparkTestBase {
     Files.createDirectories(root.resolve("batch-tmp")) // operator residue
     assert(IcebergLite.readAll(spark, root.toString).count() == n)
     rm(root)
+  }
+}
+
+/** The per-bucket metrics a manifest must hold, aggregated by Spark over
+  * a read-back table.
+  */
+object TableMetrics {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
+
+  def of(back: DataFrame): Vector[IcebergLite.PartitionMeta] =
+    back.groupBy(col("part_bucket"))
+      .agg(count(lit(1)), countDistinct(col("subj_cui")), min(col("subj_cui")), max(col("subj_cui")))
+      .collect().toVector
+      .map(r => IcebergLite.PartitionMeta(r.getInt(0), r.getLong(1), r.getLong(2),
+        r.getString(3), r.getString(4)))
+      .sortBy(_.bucket)
+}
+
+/** Writes one input twice at local[2,2] (IcebergLiteSpec): once cleanly,
+  * once with attempt 0 of partition 1 failing after it has emitted rows.
+  * The retried write's manifest must equal the clean one's and the
+  * read-back aggregate: a failed attempt's partial tally never counts.
+  */
+object TallyRetryMain {
+  import org.apache.spark.TaskContext
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+  import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+  import org.apache.spark.sql.types.StructType
+
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[2,2]").appName("tally-retry")
+      .config("spark.ui.enabled", "false").config("spark.sql.shuffle.partitions", "2")
+      .getOrCreate()
+    val failed = new java.util.concurrent.atomic.AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (!e.taskInfo.successful) failed.incrementAndGet()
+    })
+    val schema = StructType.fromDDL(
+      "subj_cui STRING, pred STRING, obj_cui STRING, url STRING, sentNo INT")
+    def input(inject: Boolean): DataFrame =
+      spark.range(0, 4000, 1, 4).mapPartitions { ids =>
+        val ctx = TaskContext.get()
+        val rows = ids.map { i =>
+          val subj = if (i % 97 == 0) null else f"C${i % 700}%07d"
+          Row(subj, "treats", "C0000001", s"u$i", (i % 5).toInt)
+        }
+        if (inject && ctx.partitionId == 1 && ctx.attemptNumber == 0)
+          rows.take(300) ++ Iterator.fill(1)(
+            throw new IllegalStateException("injected failure of attempt 0"))
+        else rows
+      }(Encoders.row(schema))
+    val work = java.nio.file.Files.createTempDirectory("graft_tally_retry")
+    val clean = IcebergLite.write(input(inject = false), work.resolve("clean").toString)
+    val retried = IcebergLite.write(input(inject = true), work.resolve("retried").toString)
+    val data = TableMetrics.of(IcebergLite.read(spark, work.resolve("retried").toString))
+    println(s"[tally] failedAttempts=${failed.get} equalsClean=${retried.partitions == clean.partitions} " +
+      s"equalsData=${retried.partitions == data}")
+    spark.stop()
+    org.apache.commons.io.FileUtils.deleteDirectory(work.toFile)
   }
 }

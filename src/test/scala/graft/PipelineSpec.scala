@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.corpus.CorpusGen
@@ -111,21 +110,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(Pipeline.broadcastUmls(spark.newSession()).id == first.id)
     // a stopped context's broadcast is never handed out again: the shared
     // test context stays up, so the stop runs in a JVM of its own
-    val mx = java.lang.management.ManagementFactory.getRuntimeMXBean
-    val jvmArgs = {
-      val in = mx.getInputArguments.asScala.toVector
-      in.indices.flatMap { i =>
-        val a = in(i)
-        if (a == "--add-opens" && i + 1 < in.length) Seq(a, in(i + 1))
-        else if (a.startsWith("--add-opens=") || a.startsWith("-D")) Seq(a)
-        else Seq.empty
-      }
-    }
-    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx1g") ++ jvmArgs ++
-      Seq("-cp", System.getProperty("java.class.path"), "graft.BroadcastLifecycleMain")
-    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toVector
-    assert(proc.waitFor() == 0, out.takeRight(20).mkString("\n"))
+    val (code, out) = ChildJvm.run("graft.BroadcastLifecycleMain")
+    assert(code == 0, out.takeRight(20).mkString("\n"))
     assert(out.contains("[bcast] shared=true fresh=true sameTriples=true"),
       out.takeRight(20).mkString("\n"))
   }
