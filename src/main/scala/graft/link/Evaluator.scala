@@ -1,7 +1,5 @@
 package graft.link
 
-import scala.jdk.CollectionConverters._
-
 import graft.umls.{IndexEntry, UmlsTables}
 
 /** Per-phrase candidate retrieval, evaluation, filtering and mapping
@@ -28,18 +26,7 @@ object Evaluator {
     val nPhrase = phrase.words.length
     if (nPhrase == 0) return Vector.empty
 
-    // stop-variant rule (metamap_candidates.pl:189-205 + stop_variant,
-    // :191-205): skip probes for closed-class stop words and very short
-    // very-frequent words (test_count_and_length: count>4000 for len<3,
-    // count>2000 for len<2)
-    def probeOk(w: String): Boolean =
-      !umls.stopWords.contains(w) && !(w.length < 3 && {
-        val count = umls.wordCounts.getOrElse(w, 0)
-        count > 4000 || (count > 2000 && w.length < 2)
-      })
-
-    // the (word, table) pairs probed and the (cui, str) pairs evaluated
-    val probed = new Array[java.util.HashSet[String]](5)
+    // the (cui, str) pairs evaluated
     val seenStrings = new StringPairSet
     val out = Vector.newBuilder[Candidate]
     var nOut = 0
@@ -50,12 +37,31 @@ object Evaluator {
 
     // last words of all gathered variants, for first_wordsb routing
     // (word_is_last_word_of_some_variant, metamap_candidates.pl:381-387)
-    // and the matcher's last-meta-word guard — built once per phrase
-    val lastVariantWords: scala.collection.Set[String] = {
-      val s = new java.util.HashSet[String]
-      probeInfos.foreach(v => s.add(v.lastWord))
-      s.asScala
+    // and the matcher's last-meta-word guard — built once per phrase, on
+    // first use (a phrase whose probes find no entries needs none)
+    var lastWordTable: StrTable = null
+    def lastVariantWords: StrTable = {
+      if (lastWordTable == null) {
+        lastWordTable = new StrTable
+        probeInfos.foreach(v => lastWordTable.add(v.lastWord))
+      }
+      lastWordTable
     }
+    val isLastWord: String => Boolean = w => lastVariantWords.contains(w)
+
+    // per key: its word id (from gathering, else one dictionary probe),
+    // and the tables already probed with it as bits — the reference
+    // probes once per (word, table)
+    val dict = umls.dict
+    val nKeys = varIndex.size
+    val keyIds = new Array[Int](nKeys)
+    var k = 0
+    while (k < nKeys) {
+      val id = varIndex.keyId(k)
+      keyIds(k) = if (id != graft.text.Tok.Unresolved) id else dict.id(varIndex.keyAt(k))
+      k += 1
+    }
+    val probed = new Array[Int](nKeys)
 
     // stop phrases (add_candidates, metamap_candidates.pl:138-143): in
     // overmatch mode, a generator that is a stop phrase under one of its
@@ -77,16 +83,21 @@ object Evaluator {
     // probe once per (word, table): narrower tables are retrieval
     // optimizations — the union of per-variant retrievals is evaluated,
     // exactly as the reference's per-variant get_meta_uscs with its USC
-    // cache keyed on (word, table)
+    // cache keyed on (word, table). The stop-variant rule
+    // (metamap_candidates.pl:189-205 + stop_variant, :191-205) skips
+    // probes for closed-class stop words and very short very frequent
+    // words: one flag per word id.
     var pi = 0
     while (pi < probeInfos.length) {
       val vi = probeInfos(pi)
-      val w = vi.words.head
-      if ((vi.genWord == firstGen || probeOk(w)) && !stopPhraseBlocked(vi.genWord)) {
-        val table = tableFor(vi, nPhrase, lastVariantWords, umls, opts)
-        if (probed(table) == null) probed(table) = new java.util.HashSet[String]
-        if (probed(table).add(w)) {
-          val entries = tableIndex(table, umls).getOrElse(w, Vector.empty)
+      val key = varIndex.keyOf(pi)
+      val id = keyIds(key)
+      if ((vi.genWord == firstGen || !umls.hasFlag(id, UmlsTables.ProbeSkip)) &&
+        !stopPhraseBlocked(vi.genWord)) {
+        val table = tableFor(vi, id, nPhrase, isLastWord, umls, opts)
+        if ((probed(key) & (1 << table)) == 0) {
+          probed(key) |= 1 << table
+          val entries = tableEntries(table, id, vi.words.head, umls)
           var ei = 0
           while (ei < entries.length) {
             val e = entries(ei)
@@ -168,14 +179,17 @@ object Evaluator {
     bits.stream().toArray
   }
 
-  /** The index table at [[tableFor]]'s position. */
-  private def tableIndex(t: Int, umls: UmlsTables): Map[String, Vector[IndexEntry]] = t match {
-    case 0 => umls.allWordIndex
-    case 1 => umls.firstWordsOfOne
-    case 2 => umls.firstWordsOfTwo
-    case 3 => umls.firstWordIndex
-    case _ => umls.firstWordsB
-  }
+  /** The entries of word `w` (dictionary id `id`) in the index table at
+    * [[tableFor]]'s position: all_words by string, the others by id.
+    */
+  private def tableEntries(t: Int, id: Int, w: String, umls: UmlsTables)
+      : Vector[IndexEntry] =
+    if (t == 0) umls.allWordIndex.getOrElse(w, Vector.empty)
+    else {
+      val byId = umls.indexById(t)
+      val es = if (id >= 0 && id < byId.length) byId(id) else null
+      if (es == null) Vector.empty else es
+    }
 
   /** C2 full index selection (determine_table + get_meta_uscs_2,
     * metamap_candidates.pl:298-330; determine_first_word_index,
@@ -191,23 +205,27 @@ object Evaluator {
     * 3 first_words, 4 first_wordsb.
     */
   private[graft] def tableFor(vi: VInfo, nPhrase: Int,
-      lastVariantWords: scala.collection.Set[String], umls: UmlsTables, opts: LinkOptions)
-      : Int = {
-    def firstWordsOrB(w: String): Int = {
-      val hot = umls.frequentFirstWordPairs.getOrElse(w, Set.empty)
-      if (hot.nonEmpty && hot.exists(lastVariantWords)) 3 else 4
-    }
+      lastVariantWords: String => Boolean, umls: UmlsTables, opts: LinkOptions): Int =
+    tableFor(vi, umls.dict.id(vi.words.head), nPhrase, lastVariantWords, umls, opts)
+
+  /** [[tableFor]] of a vinfo whose first word has dictionary id `id`. */
+  private def tableFor(vi: VInfo, id: Int, nPhrase: Int,
+      lastVariantWords: String => Boolean, umls: UmlsTables, opts: LinkOptions): Int = {
+    def firstWordsOrB: Int =
+      if (umls.hasFlag(id, UmlsTables.HotFirst) &&
+        umls.frequentFirstWordPairs(vi.words.head).exists(lastVariantWords)) 3
+      else 4
     val avail = vi.words.length + (nPhrase - vi.genPos._2)
     if (opts.allowOvermatches) 0
     else if (avail == 1 && !opts.ignoreWordOrder) 1
-    else if (opts.allowConceptGaps || opts.ignoreWordOrder) firstWordsOrB(vi.words.head)
+    else if (opts.allowConceptGaps || opts.ignoreWordOrder) firstWordsOrB
     else if (avail == 2) 2
-    else firstWordsOrB(vi.words.head)
+    else firstWordsOrB
   }
 
   private def evaluateOne(e: IndexEntry, phrase: Phrase, nPhrase: Int,
       umls: UmlsTables, varIndex: Map[String, Vector[VInfo]],
-      opts: LinkOptions, lastWords: scala.collection.Set[String]): Candidate = {
+      opts: LinkOptions, lastWords: StrTable): Candidate = {
     val metaWords = e.nmWords
     val headless = false // chunker always assigns a head
     val r = Matcher.matchPhrase(metaWords, varIndex, headless, opts, lastWords)

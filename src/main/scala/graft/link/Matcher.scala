@@ -50,7 +50,7 @@ object Matcher {
   private[link] def matchPhrase(metaWords: Vector[String],
       varIndex: Map[String, Vector[VInfo]],
       headless: Boolean, opts: LinkOptions,
-      lastWords: scala.collection.Set[String]): MatchResult = {
+      lastWords: StrTable): MatchResult = {
     val nMeta = metaWords.length
     if (nMeta == 0 || nMeta > 35) return null
     // guard: last meta word must end some variant (evaluation.pl:581-585),

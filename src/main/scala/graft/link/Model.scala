@@ -1,7 +1,11 @@
 package graft.link
 
-/** A phrase word with its char span in the utterance text. */
-final case class PWord(word: String, start: Int, end: Int)
+/** A phrase word with its char span in the utterance text and its word
+  * dictionary id (as on [[graft.text.Tok]]: -1 outside the dictionary,
+  * `Tok.Unresolved` when none numbered it).
+  */
+final case class PWord(word: String, start: Int, end: Int,
+    id: Int = graft.text.Tok.Unresolved)
 
 /** A phrase produced by the minimal-commitment chunker
   * (lib/mincoman.pl:93-103 analogue). `headIdx` is the 0-based index of the

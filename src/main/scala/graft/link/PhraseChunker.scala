@@ -1,7 +1,7 @@
 package graft.link
 
-import graft.text.{Tok, Tokenizer}
-import graft.umls.UmlsTables
+import graft.text.{Sentence, Tok, Tokenizer}
+import graft.umls.{LexWord, UmlsTables}
 
 /** Minimal-commitment phrase chunker, re-expressing the boundary rules of
   * lib/mincoman.pl:93-103,262-381 with tagless category resolution
@@ -21,13 +21,14 @@ import graft.umls.UmlsTables
   */
 object PhraseChunker {
 
-  private def resolveCat(w: String, umls: UmlsTables): String = {
-    val lw = umls.lexWords.get(w)
+  private def resolveCat(lw: LexWord): String =
     if (lw == null) "noun" else lw.taglessCat
-  }
+
+  private def resolveCat(w: PWord, umls: UmlsTables): String =
+    resolveCat(umls.lexOf(umls.dict.resolve(w.id, w.word)))
 
   /** The tagless category of a word with lexical categories `cats`
-    * (precomputed per lexicon word in [[UmlsTables.lexWords]]).
+    * (precomputed per lexicon word in [[UmlsTables.wordLex]]).
     */
   private[graft] def taglessCat(cats: Set[String]): String =
     if (cats.isEmpty) "noun"
@@ -56,7 +57,7 @@ object PhraseChunker {
   def phraseTags(p: Phrase, umls: UmlsTables,
       tagsByStart: Map[Int, String] = Map.empty): Set[String] =
     p.words.iterator
-      .map(w => tagsByStart.getOrElse(w.start, resolveCat(w.word, umls))).toSet
+      .map(w => tagsByStart.getOrElse(w.start, resolveCat(w, umls))).toSet
 
   /** Word -> category map of a phrase (the Syntax pair-list analogue the
     * MMI lexcat resolution probes, mmi.pl:484-491): the tagger's category
@@ -66,17 +67,19 @@ object PhraseChunker {
   def syntaxMap(p: Phrase, umls: UmlsTables,
       tagsByStart: Map[Int, String] = Map.empty): Map[String, String] =
     p.words.iterator
-      .map(w => w.word -> tagsByStart.getOrElse(w.start, resolveCat(w.word, umls)))
+      .map(w => w.word -> tagsByStart.getOrElse(w.start, resolveCat(w, umls)))
       .toMap
 
   /** Lexical form of a word token for matching: mm-normalized lowercase,
     * first sub-word if normalization splits (shared by document chunking
     * and -z term processing so the two paths cannot diverge).
     */
-  def mmWord(t: Tok): String = {
-    val ws = Tokenizer.tokenizeMmLc(t.lc)
-    if (ws.isEmpty) t.lc else ws.head
-  }
+  def mmWord(t: Tok): String =
+    if (Tokenizer.isMmWord(t.lc)) t.lc
+    else {
+      val ws = Tokenizer.tokenizeMmLc(t.lc)
+      if (ws.isEmpty) t.lc else ws.head
+    }
 
   /** The punc_mark1 boundary set (lib/mincoman.pl:374-389): the ONLY
     * punctuation that unconditionally breaks a phrase in the reference's
@@ -125,6 +128,41 @@ object PhraseChunker {
       maxComposite: Int = 4,
       taglessExact: Boolean = false): Vector[Phrase] = {
     val words = Tokenizer.wordToks(toks)
+    val wNorm = new Array[String](words.length)
+    val wIds = new Array[Int](words.length)
+    var i = 0
+    while (i < words.length) {
+      wNorm(i) = mmWord(words(i))
+      wIds(i) = umls.dict.id(wNorm(i))
+      i += 1
+    }
+    chunkWords(toks, words, wNorm, wIds, umls, tagsByStart, maxComposite, taglessExact)
+  }
+
+  /** [[chunk]] of a sentence, over its word tokens made once: a token the
+    * tokenizer numbered is a word whose lc is already mm-normalized.
+    */
+  def chunk(sent: Sentence, umls: UmlsTables, tagsByStart: Map[Int, String],
+      maxComposite: Int, taglessExact: Boolean): Vector[Phrase] = {
+    val words = sent.words
+    val wNorm = new Array[String](words.length)
+    val wIds = new Array[Int](words.length)
+    var i = 0
+    while (i < words.length) {
+      val t = words(i)
+      if (t.id != Tok.Unresolved) { wNorm(i) = t.lc; wIds(i) = t.id }
+      else { wNorm(i) = mmWord(t); wIds(i) = umls.dict.id(wNorm(i)) }
+      i += 1
+    }
+    chunkWords(sent.toks, words, wNorm, wIds, umls, tagsByStart, maxComposite, taglessExact)
+  }
+
+  /** Chunking over the word tokens `words` of `toks`, with each word's
+    * mm-normalized form and dictionary id.
+    */
+  private def chunkWords(toks: Vector[Tok], words: Vector[Tok], wNorm: Array[String],
+      wIds: Array[Int], umls: UmlsTables, tagsByStart: Map[Int, String],
+      maxComposite: Int, taglessExact: Boolean): Vector[Phrase] = {
     // content runs: adj/noun sequences
     val phrases = scala.collection.mutable.ArrayBuffer[Phrase]()
     val cur = scala.collection.mutable.ArrayBuffer[PWord]()
@@ -202,14 +240,15 @@ object PhraseChunker {
     var ci = 0
 
     val nw = words.length
-    val wNorm = new Array[String](nw)
     val cats = new Array[String](nw)
+    val tagged = tagsByStart.nonEmpty
     var wi = 0
     while (wi < nw) {
-      val w = mmWord(words(wi))
-      wNorm(wi) = w
-      cats(wi) = tagsByStart.getOrElse(words(wi).start,
-        if (taglessExact) resolveCatExact(w, umls) else resolveCat(w, umls))
+      val tag = if (tagged) tagsByStart.getOrElse(words(wi).start, null) else null
+      cats(wi) =
+        if (tag != null) tag
+        else if (taglessExact) resolveCatExact(wNorm(wi), umls)
+        else resolveCat(umls.lexOf(wIds(wi)))
       wi += 1
     }
 
@@ -234,7 +273,7 @@ object PhraseChunker {
       cat match {
         case "adj" | "noun" =>
           if (cur.length >= MaxPhraseWords) flush()
-          add(PWord(w, t.start, t.end), cat)
+          add(PWord(w, t.start, t.end, wIds(wi)), cat)
         case "adv" if taglessExact && w != "not" &&
           !(wi + 1 < nw && Set("verb", "aux", "modal").contains(cats(wi + 1))) =>
           // exact mode: adverbs are "labelled as such", NOT boundaries
@@ -244,14 +283,14 @@ object PhraseChunker {
           // modal boundary takes that boundary itself ("positively
           // regulates" brackets apart from "the receptor").
           if (cur.length >= MaxPhraseWords) flush()
-          add(PWord(w, t.start, t.end), "adv")
+          add(PWord(w, t.start, t.end, wIds(wi)), "adv")
         case "pastpart" if taglessExact =>
           // boundary(pastpart(...)): the past participle OPENS a new MSU
           // and joins it as an adj-labelled modifier (convert tags all
           // potential pp's as adj, mincoman.pl:215-220; mark_boundaries
           // then makes the adj-with-verb-tag a boundary, :346-349)
           flush()
-          add(PWord(w, t.start, t.end), "adj")
+          add(PWord(w, t.start, t.end, wIds(wi)), "adj")
         case _ =>
           flush()
       }
@@ -334,9 +373,8 @@ object PhraseChunker {
     * (maxComposite = 0) — this glom replaces it.
     */
   def compositeGlomExact(phrases: Vector[Phrase], sentToks: Vector[Tok],
-      umls: UmlsTables, maxPrep: Int): Vector[Phrase] = {
+      words: Vector[Tok], umls: UmlsTables, maxPrep: Int): Vector[Phrase] = {
     if (maxPrep <= 0 || phrases.length < 2) return phrases
-    val words = Tokenizer.wordToks(sentToks)
     val breaking: Set[Int] = sentToks.iterator
       .filter(t => t.isPunct && t.text != "'" && t.text != "-")
       .map(_.start).toSet
@@ -389,8 +427,7 @@ object PhraseChunker {
     * < 21 words (skr.pl:416-419).
     */
   def conjGlue(phrases: Vector[Phrase], sentToks: Vector[Tok],
-      umls: UmlsTables): Vector[Phrase] = {
-    val words = Tokenizer.wordToks(sentToks)
+      words: Vector[Tok], umls: UmlsTables): Vector[Phrase] = {
     // phrase-breaking punctuation blocks the merge, same as composite
     // gluing — "lung and, liver cancer" must NOT merge across the comma
     val breaking: Set[Int] = sentToks.iterator

@@ -1,6 +1,6 @@
 package graft.link
 
-import graft.text.Tokenizer
+import graft.text.{Tok, Tokenizer}
 import graft.umls.{UmlsTables, Variant}
 
 /** Variant generator computation + per-phrase gather, re-expressing
@@ -36,9 +36,16 @@ object VariantGather {
       else umls.variants
     val n = phrase.words.length
     if (n == 0) return VariantIndex.empty
+    val dict = umls.dict
     val wordArr = new Array[String](n)
+    val idArr = new Array[Int](n)
     var wi = 0
-    while (wi < n) { wordArr(wi) = phrase.words(wi).word; wi += 1 }
+    while (wi < n) {
+      val pw = phrase.words(wi)
+      wordArr(wi) = pw.word
+      idArr(wi) = dict.resolve(pw.id, pw.word)
+      wi += 1
+    }
     val words = scala.collection.immutable.ArraySeq.unsafeWrapArray(wordArr)
     val headPos = phrase.headIdx + 1
 
@@ -46,18 +53,30 @@ object VariantGather {
     // multiword lexicon form first, then shorter, then the word itself
     // (compute_variant_generators_2/3). The broadcast word trie finds all
     // multiword forms starting at i in one walk (longest first) — no
-    // per-phrase substring construction.
+    // per-phrase substring construction. Each generator keeps its word
+    // id for the table tests.
     val gens = scala.collection.mutable.ArrayBuffer[String]()
-    def addGen(g: String): Unit = {
+    var genIds = new Array[Int](n + 4)
+    def addGen(g: String, id: Int): Unit = {
       var k = 0
-      while (k < gens.length && gens(k) != g) k += 1
-      if (k == gens.length) gens += g
+      // ids are equal exactly when dictionary words are
+      if (id >= 0) while (k < gens.length && genIds(k) != id) k += 1
+      else while (k < gens.length && gens(k) != g) k += 1
+      if (k == gens.length) {
+        if (k == genIds.length) genIds = java.util.Arrays.copyOf(genIds, 2 * k)
+        genIds(k) = id
+        gens += g
+      }
     }
     var i = 0
     while (i < n) {
-      for (len <- umls.multiwordTrie.matchesAt(words, i, minLen = 2))
-        addGen(words.slice(i, i + len).mkString(" "))
-      addGen(wordArr(i))
+      var lens = umls.multiwordTrie.matchesAt(idArr, i, minLen = 2)
+      while (lens.nonEmpty) {
+        val g = words.slice(i, i + lens.head).mkString(" ")
+        addGen(g, dict.id(g))
+        lens = lens.tail
+      }
+      addGen(wordArr(i), idArr(i))
       i += 1
     }
 
@@ -66,6 +85,7 @@ object VariantGather {
     var gi = 0
     while (gi < gens.length) {
       val gen = gens(gi)
+      val genId = genIds(gi)
       gi += 1
       val genWords = Tokenizer.tokenizeMmLc(gen)
       // all_pairs over first/last word positions with the right span
@@ -75,10 +95,16 @@ object VariantGather {
       val len = genWords.length
       val first = genWords.head
       val last = genWords.last
+      val firstId = if (first eq gen) genId else dict.id(first)
+      val lastId = if (last eq first) firstId else dict.id(last)
+      // phrase word k is `w` (dictionary id `wId`): by id for a
+      // dictionary word, else by string
+      def isAt(k: Int, w: String, wId: Int): Boolean =
+        if (wId >= 0) idArr(k) == wId else wordArr(k) == w
       var k = 0
       var nPos = 0
       while (k + len <= n) {
-        if (wordArr(k) == first && wordArr(k + len - 1) == last) nPos += 1
+        if (isAt(k, first, firstId) && isAt(k + len - 1, last, lastId)) nPos += 1
         k += 1
       }
       if (nPos > 0) {
@@ -87,7 +113,7 @@ object VariantGather {
         // itself still generates (identity variant)
         val isSingle = len == 1
         val noVariants = isSingle && (gen.length <= 2 || {
-          val lw = umls.lexWords.get(gen)
+          val lw = umls.lexOf(genId)
           lw != null && lw.invariant
         })
         // document-local AA expansion as a level-2 variant (A5 re-expression)
@@ -98,9 +124,10 @@ object VariantGather {
         // phrase word matches index strings carrying its two-word form —
         // the two variant words consume two meta positions at ONE phrase
         // position (same letters, so spelling level 0)
-        val splitVars = if (isSingle) umls.splitWords.get(gen)
-          .map { case (a, b) => Variant(s"$a $b", 0, "p") }.toVector
-        else Vector.empty
+        val splitVars =
+          if (isSingle && umls.hasFlag(genId, UmlsTables.SplitWord)) umls.splitWords.get(gen)
+            .map { case (a, b) => Variant(s"$a $b", 0, "p") }.toVector
+          else Vector.empty
         // and the reverse: if gen is an expansion's first word we do not
         // add anything — AA occurrences carry the expansion variant.
         // untagged (the pinned default): one variant set per generator —
@@ -117,12 +144,21 @@ object VariantGather {
         // out of the returned set (null: keep all).
         var skip: String = null
         def lookupVars(table: Map[String, Vector[Variant]]): Vector[Variant] = {
-          val static = table.getOrElse(gen, Vector.empty)
+          // the default table by id: every key is in the dictionary
+          val static =
+            if (table ne umls.variants) table.getOrElse(gen, Vector.empty)
+            else {
+              val vs = if (genId < 0) null else umls.wordVariants(genId)
+              if (vs == null) Vector.empty else vs
+            }
           if (static.nonEmpty) { skip = gen; static }
-          else if (isSingle && gen.length >= 3 && gen.forall(_.isLetter))
-            graft.umls.DynamicVariants.closure(gen, umls,
+          else if (isSingle && gen.length >= 3 && gen.forall(_.isLetter)) {
+            if (genId >= 0 && !opts.allDerivationalVariants && !opts.noDerivationalVariants)
+              graft.umls.DynamicVariants.closureOf(genId, gen, umls)
+            else graft.umls.DynamicVariants.closure(gen, umls,
               allDeriv = opts.allDerivationalVariants,
               noDeriv = opts.noDerivationalVariants)
+          }
           else Vector.empty
         }
         val untaggedTableVars =
@@ -132,7 +168,7 @@ object VariantGather {
         val untaggedSkip = skip
         k = 0
         while (k + len <= n) {
-          if (wordArr(k) == first && wordArr(k + len - 1) == last) {
+          if (isAt(k, first, firstId) && isAt(k + len - 1, last, lastId)) {
             val pos = (k + 1, k + len)
             // V10: a tagged single-word generator draws from its category's
             // variant table (tag can differ per occurrence position)
@@ -159,21 +195,22 @@ object VariantGather {
             // emission order base / table / aa / split; the identity
             // variant reuses genWords, table variants their
             // broadcast-resident tokenization (Variant.mmWords)
-            index.add(VInfo(gen, pos, involvesHead, 0, genWords, index.size))
+            index.add(VInfo(gen, pos, involvesHead, 0, genWords, index.size), firstId)
             var vi = 0
             while (vi < tableVars.length) {
               val v = tableVars(vi)
               if ((skip eq null) || v.word != skip) {
                 val vWords = v.mmWords
                 if (vWords.nonEmpty)
-                  index.add(VInfo(gen, pos, involvesHead, v.varLevel, vWords, index.size))
+                  index.add(VInfo(gen, pos, involvesHead, v.varLevel, vWords, index.size),
+                    Tok.Unresolved)
               }
               vi += 1
             }
-            aaVars.foreach(v => if (v.mmWords.nonEmpty)
-              index.add(VInfo(gen, pos, involvesHead, v.varLevel, v.mmWords, index.size)))
-            splitVars.foreach(v => if (v.mmWords.nonEmpty)
-              index.add(VInfo(gen, pos, involvesHead, v.varLevel, v.mmWords, index.size)))
+            aaVars.foreach(v => if (v.mmWords.nonEmpty) index.add(
+              VInfo(gen, pos, involvesHead, v.varLevel, v.mmWords, index.size), Tok.Unresolved))
+            splitVars.foreach(v => if (v.mmWords.nonEmpty) index.add(
+              VInfo(gen, pos, involvesHead, v.varLevel, v.mmWords, index.size), Tok.Unresolved))
           }
           k += 1
         }
@@ -185,24 +222,30 @@ object VariantGather {
 
 /** The per-phrase variant index [[VariantGather.gather]] returns: first
   * variant word -> its vinfos in insertion (seq) order. `inSeqOrder`
-  * holds every vinfo in seq order (the evaluator's probe order) and
-  * `nextOf` chains each one to the next vinfo of its key, so a key's
-  * vinfo vector is built on its first lookup only, from its own vinfos.
+  * holds every vinfo in seq order (the evaluator's probe order),
+  * `keyOf` its key's position and `nextOf` chains it to the next vinfo
+  * of its key, so a key's vinfo vector is built on its first lookup
+  * only, from its own vinfos.
   */
 final class VariantIndex private (
-    private val words: Array[String],
-    private val byWord: java.util.HashMap[String, Integer],
+    private val byWord: StrTable,
+    private val keyIds: Array[Int],
     val inSeqOrder: Array[VInfo],
+    private val keyOfArr: Array[Int],
     private val firstOf: Array[Int],
     private val nextOf: Array[Int])
     extends scala.collection.immutable.AbstractMap[String, Vector[VInfo]] {
 
-  private[this] val vals = new Array[Vector[VInfo]](words.length)
+  private[this] val vals = new Array[Vector[VInfo]](byWord.size)
 
-  private def find(key: String): Int = {
-    val i = byWord.get(key)
-    if (i == null) -1 else i
-  }
+  /** The position of the key of `inSeqOrder(i)`. */
+  private[link] def keyOf(i: Int): Int = keyOfArr(i)
+  /** The key at position `k`. */
+  private[link] def keyAt(k: Int): String = byWord.keyAt(k)
+  /** The dictionary id of the key at position `k`, when gathering knew
+    * it, else `Tok.Unresolved`.
+    */
+  private[link] def keyId(k: Int): Int = keyIds(k)
 
   private def bucket(k: Int): Vector[VInfo] = {
     var v = vals(k)
@@ -217,25 +260,24 @@ final class VariantIndex private (
   }
 
   override def get(key: String): Option[Vector[VInfo]] = {
-    val i = find(key)
+    val i = byWord.get(key)
     if (i < 0) None else Some(bucket(i))
   }
   override def getOrElse[V1 >: Vector[VInfo]](key: String, default: => V1): V1 = {
-    val i = find(key)
+    val i = byWord.get(key)
     if (i < 0) default else bucket(i)
   }
   override def apply(key: String): Vector[VInfo] = {
-    val i = find(key)
+    val i = byWord.get(key)
     if (i < 0) default(key) else bucket(i)
   }
-  override def contains(key: String): Boolean = find(key) >= 0
-  override def knownSize: Int = words.length
-  override def size: Int = words.length
+  override def contains(key: String): Boolean = byWord.get(key) >= 0
+  override def knownSize: Int = byWord.size
+  override def size: Int = byWord.size
   override def iterator: Iterator[(String, Vector[VInfo])] =
-    Iterator.range(0, words.length).map(i => (words(i), bucket(i)))
-  override def valuesIterator: Iterator[Vector[VInfo]] =
-    Iterator.range(0, words.length).map(bucket)
-  override def keysIterator: Iterator[String] = words.iterator
+    Iterator.range(0, size).map(i => (byWord.keyAt(i), bucket(i)))
+  override def valuesIterator: Iterator[Vector[VInfo]] = Iterator.range(0, size).map(bucket)
+  override def keysIterator: Iterator[String] = Iterator.range(0, size).map(byWord.keyAt)
   // an edited index is an ordinary map
   override def removed(key: String): Map[String, Vector[VInfo]] =
     scala.collection.immutable.HashMap.from(this).removed(key)
@@ -249,51 +291,113 @@ object VariantIndex {
   val empty: VariantIndex = new Builder().result()
 
   /** Collects vinfos in seq order, keyed by first variant word; the
-    * index it returns takes over its key map, so it is used once.
+    * index it returns takes over its key table, so it is used once.
     */
   final class Builder {
     private[this] var all = new Array[VInfo](16)
+    private[this] var keyOf = new Array[Int](16)
     private[this] var nextOf = new Array[Int](16)
     private[this] var n = 0
-    private[this] var keys = new Array[String](8)
-    private[this] var firstOf = new Array[Int](8)
-    private[this] var lastOf = new Array[Int](8)
-    private[this] var nKeys = 0
-    private[this] val byWord = new java.util.HashMap[String, Integer]
+    private[this] var firstOf = new Array[Int](16)
+    private[this] var lastOf = new Array[Int](16)
+    private[this] var keyIds = new Array[Int](16)
+    private[this] val byWord = new StrTable
 
     def size: Int = n
 
-    def add(v: VInfo): Unit = {
+    /** Adds `v`, whose first word has dictionary id `firstId` when known
+      * (`Tok.Unresolved` when not).
+      */
+    def add(v: VInfo, firstId: Int): Unit = {
       if (n == all.length) {
         all = java.util.Arrays.copyOf(all, n * 2)
+        keyOf = java.util.Arrays.copyOf(keyOf, n * 2)
         nextOf = java.util.Arrays.copyOf(nextOf, n * 2)
       }
       all(n) = v
       nextOf(n) = -1
-      val k = v.words.head
-      val found = byWord.get(k)
-      if (found == null) {
-        if (nKeys == keys.length) {
-          keys = java.util.Arrays.copyOf(keys, nKeys * 2)
+      val nKeys = byWord.size
+      val b = byWord.add(v.words.head)
+      if (b == nKeys) {
+        if (nKeys == firstOf.length) {
           firstOf = java.util.Arrays.copyOf(firstOf, nKeys * 2)
           lastOf = java.util.Arrays.copyOf(lastOf, nKeys * 2)
+          keyIds = java.util.Arrays.copyOf(keyIds, nKeys * 2)
         }
-        keys(nKeys) = k
-        firstOf(nKeys) = n
-        lastOf(nKeys) = n
-        byWord.put(k, nKeys)
-        nKeys += 1
+        firstOf(b) = n
+        keyIds(b) = firstId
       } else {
-        val b: Int = found
         nextOf(lastOf(b)) = n
-        lastOf(b) = n
+        if (firstId != Tok.Unresolved) keyIds(b) = firstId
       }
+      lastOf(b) = n
+      keyOf(n) = b
       n += 1
     }
 
     def result(): VariantIndex =
-      new VariantIndex(java.util.Arrays.copyOf(keys, nKeys), byWord,
-        java.util.Arrays.copyOf(all, n), java.util.Arrays.copyOf(firstOf, nKeys),
+      new VariantIndex(byWord, java.util.Arrays.copyOf(keyIds, byWord.size),
+        java.util.Arrays.copyOf(all, n),
+        java.util.Arrays.copyOf(keyOf, n), java.util.Arrays.copyOf(firstOf, byWord.size),
         java.util.Arrays.copyOf(nextOf, n))
+  }
+}
+
+/** A per-phrase string table: each distinct string gets the next
+  * position, found by open addressing over the strings' cached hash
+  * codes (no map node or boxed position per key).
+  */
+private[link] final class StrTable {
+  private[this] var keys = new Array[String](16)
+  private[this] var slots = new Array[Int](32) // 0 = empty, else 1 + position
+  private[this] var n = 0
+
+  def size: Int = n
+  def keyAt(k: Int): String = keys(k)
+
+  private def slot(k: String, mask: Int): Int = {
+    val h = k.hashCode
+    (h ^ (h >>> 16)) * 0x85ebca6b & mask
+  }
+
+  /** The position of `k`, or -1. */
+  def get(k: String): Int = {
+    val mask = slots.length - 1
+    var j = slot(k, mask)
+    while (slots(j) != 0) {
+      if (keys(slots(j) - 1).equals(k)) return slots(j) - 1
+      j = (j + 1) & mask
+    }
+    -1
+  }
+
+  def contains(k: String): Boolean = get(k) >= 0
+
+  /** The position of `k`, added at position `size` when new. */
+  def add(k: String): Int = {
+    val mask = slots.length - 1
+    var j = slot(k, mask)
+    while (slots(j) != 0) {
+      if (keys(slots(j) - 1).equals(k)) return slots(j) - 1
+      j = (j + 1) & mask
+    }
+    if (n == keys.length) keys = java.util.Arrays.copyOf(keys, 2 * n)
+    keys(n) = k
+    slots(j) = n + 1
+    n += 1
+    if (2 * n > slots.length) grow()
+    n - 1
+  }
+
+  private def grow(): Unit = {
+    slots = new Array[Int](slots.length * 2)
+    val mask = slots.length - 1
+    var i = 0
+    while (i < n) {
+      var j = slot(keys(i), mask)
+      while (slots(j) != 0) j = (j + 1) & mask
+      slots(j) = i + 1
+      i += 1
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.negex
 
 import graft.link.{LinkOptions, Mention}
-import graft.text.{Tok, Tokenizer}
+import graft.text.{Sentence, Tok, Tokenizer}
 import graft.umls.UmlsTables
 
 /** NegEx re-expression (/root/reference/lib/negex.pl:124-330; trigger
@@ -76,10 +76,36 @@ object Negex {
     */
   def markWithRecords(sentToks: Vector[Tok], mentions: Vector[Mention],
       umls: UmlsTables, opts: LinkOptions = LinkOptions.default)
-      : (Vector[Mention], Vector[NegRecord]) = {
-    if (mentions.isEmpty) return (mentions, Vector.empty)
-    val words = Tokenizer.wordToks(sentToks)
-    val lcs = words.map(_.lc)
+      : (Vector[Mention], Vector[NegRecord]) =
+    if (mentions.isEmpty) (mentions, Vector.empty)
+    else {
+      val words = Tokenizer.wordToks(sentToks)
+      markWords(words, Array.tabulate(words.length)(i => umls.dict.id(words(i).lc)),
+        mentions, umls, opts)
+    }
+
+  /** [[markWithRecords]] of a sentence, over its word tokens made once
+    * and the ids the tokenizer gave them.
+    */
+  def markWithRecords(sent: Sentence, mentions: Vector[Mention], umls: UmlsTables,
+      opts: LinkOptions): (Vector[Mention], Vector[NegRecord]) =
+    if (mentions.isEmpty) (mentions, Vector.empty)
+    else {
+      val words = sent.words
+      val ids = new Array[Int](words.length)
+      var i = 0
+      while (i < ids.length) {
+        val t = words(i)
+        ids(i) = if (t.id != Tok.Unresolved) t.id else umls.dict.id(t.lc)
+        i += 1
+      }
+      markWords(words, ids, mentions, umls, opts)
+    }
+
+  /** The NegEx pass over a sentence's word tokens and their word ids. */
+  private def markWords(words: Vector[Tok], ids: Array[Int], mentions: Vector[Mention],
+      umls: UmlsTables, opts: LinkOptions): (Vector[Mention], Vector[NegRecord]) = {
+    val nWords = words.length
 
     // classify the LONGEST trigger phrase at each position across all six
     // classes — one trie probe per class per position regardless of the
@@ -96,17 +122,20 @@ object Negex {
     val termStarts = scala.collection.mutable.ArrayBuffer[Int]() // conj word idx
     val trigStarts = scala.collection.mutable.ArrayBuffer[Int]() // any pre/post trigger start
     var i = 0
-    while (i < lcs.length) {
-      // one set-membership test gates the five trie probes: almost no
-      // word starts a trigger, so the common case is a single hash lookup
-      if (!umls.negexFirstWords.contains(lcs(i))) i += 1
+    while (i < nWords) {
+      // one flag test per word id gates the five trie probes: almost no
+      // word starts a trigger
+      if (!umls.hasFlag(ids(i), UmlsTables.NegexFirst)) i += 1
       else {
-        val pseudoLen = math.max(
-          umls.negexPseudoTrie.matchesAt(lcs, i).headOption.getOrElse(0),
-          umls.negexPseudoPostTrie.matchesAt(lcs, i).headOption.getOrElse(0))
-        val conjLen = umls.negexConjTrie.matchesAt(lcs, i).headOption.getOrElse(0)
-        val preLen = umls.negexPreTrie.matchesAt(lcs, i).headOption.getOrElse(0)
-        val postLen = umls.negexPostTrie.matchesAt(lcs, i).headOption.getOrElse(0)
+        def longest(t: graft.umls.WordTrie): Int = {
+          val m = t.matchesAt(ids, i)
+          if (m.isEmpty) 0 else m.head
+        }
+        val pseudoLen = math.max(longest(umls.negexPseudoTrie),
+          longest(umls.negexPseudoPostTrie))
+        val conjLen = longest(umls.negexConjTrie)
+        val preLen = longest(umls.negexPreTrie)
+        val postLen = longest(umls.negexPostTrie)
         val best = math.max(math.max(pseudoLen, conjLen), math.max(preLen, postLen))
         if (best == 0) i += 1
         else if (pseudoLen == best) i += pseudoLen // suppressed: no negation
@@ -155,7 +184,7 @@ object Negex {
     // (TriggerLastTokenPos, negex.pl:905-918)
     def inWindow(triggerLastW: Int, dist: Int): Boolean =
       if (!refMode) dist <= window
-      else (lcs.length - 1 - triggerLastW) <= uttMax || dist <= conceptMax
+      else (nWords - 1 - triggerLastW) <= uttMax || dist <= conceptMax
 
     // semtype gating (negex.pl:667-676): a mention whose semtypes are
     // disjoint from the gate set is never negated; engaged only when a

@@ -47,7 +47,7 @@ private[output] object DocTree {
           Mention(url, s.sent.sentNo, c.start, c.end - c.start, c.cui, c.score,
             c.semTypes, negated = false, text.substring(c.start, c.end),
             c.posInfo, c.sources, term = c.str))
-        val (marked, records) = Negex.markWithRecords(s.sent.toks, ms, umls, opts)
+        val (marked, records) = Negex.markWithRecords(s.sent, ms, umls, opts)
         (marked.filter(_.negated).map(m => (m.start, m.cui)).toSet, records)
       }
 

@@ -31,8 +31,10 @@ object DocKernel {
       tagsByStart: Map[Int, String], opts: LinkOptions): Boolean = {
     val active = !opts.allowOvermatches && !opts.allowConceptGaps &&
       !opts.ignoreStopPhrases && !opts.allDerivationalVariants
-    active && phrase.words.nonEmpty &&
-      umls.stopPhraseFirstWords.contains(phrase.words.head.word) && {
+    active && phrase.words.nonEmpty && {
+        val head = phrase.words.head
+        umls.hasFlag(umls.dict.resolve(head.id, head.word), UmlsTables.StopPhraseFirst)
+      } && {
         val phraseText = phrase.words.map(_.word).mkString(" ")
         umls.stopPhrases.get(phraseText).exists(stopTags =>
           stopTags.exists(PhraseChunker.phraseTags(phrase, umls, tagsByStart)))
@@ -102,7 +104,7 @@ object DocKernel {
     */
   def analyze(url: String, text: String, umls: UmlsTables,
       opts: LinkOptions = LinkOptions.default): Analysis = {
-    val toks = Tokenizer.tokenize(text)
+    val toks = Tokenizer.tokenize(text, umls.dict)
     val sents = if (toks.isEmpty) Vector.empty[Sentence] else Sentences.split(toks)
     // A6: user-defined AAs overlay the document-discovered ones
     val aaRecs = AaDetector.findAaRecords(toks, sents)
@@ -122,17 +124,17 @@ object DocKernel {
       val tagsByStart: Map[Int, String] =
         if (!opts.tagged) Map.empty
         else {
-          val ws = Tokenizer.wordToks(sent.toks)
+          val ws = sent.words
           val tags = Tagger.tag(ws.map(PhraseChunker.mmWord), umls)
           ws.map(_.start).zip(tags).toMap
         }
       // --composite_exact replaces the pinned of-gluing with the
       // reference glom (chunk runs glue-free, then compositeGlomExact)
-      val phrasesR = PhraseChunker.chunk(sent.toks, umls, tagsByStart,
+      val phrasesR = PhraseChunker.chunk(sent, umls, tagsByStart,
         if (opts.compositeExact) 0 else opts.compositePhrases, opts.taglessExact)
       val phrases0 =
         if (opts.compositeExact)
-          PhraseChunker.compositeGlomExact(phrasesR, sent.toks, umls,
+          PhraseChunker.compositeGlomExact(phrasesR, sent.toks, sent.words, umls,
             opts.compositePhrases)
         else phrasesR
       // optional phrase merges (P7 --conj, P8 AA-span; off in pinned mode)
@@ -140,7 +142,7 @@ object DocKernel {
         if (opts.aaSpanMerge) PhraseChunker.aaSpanGlue(phrases0, sent.toks, aas)
         else phrases0
       val phrases2 =
-        if (opts.conjMerge) PhraseChunker.conjGlue(phrases1, sent.toks, umls)
+        if (opts.conjMerge) PhraseChunker.conjGlue(phrases1, sent.toks, sent.words, umls)
         else phrases1
       val phrases = if (defSpans.isEmpty) phrases2 else phrases2.filterNot(inAaDef)
       SentenceAnalysis(sent, tagsByStart, phrases.map { phrase =>
@@ -231,7 +233,7 @@ object DocKernel {
             sentMentions += mention(a.url, s.sent.sentNo, a.text, c, syntax, a.aas))
         }
       }
-      if (any) out ++= Negex.mark(s.sent.toks, sentMentions.result(), umls, a.opts)
+      if (any) out ++= Negex.markWithRecords(s.sent, sentMentions.result(), umls, a.opts)._1
     }
     if (a.opts.wsd)
       DocTriples.wsdLocal(out.result(), umls).sortBy(m => (m.sentNo, m.start, m.len, m.cui))

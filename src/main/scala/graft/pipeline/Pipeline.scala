@@ -149,27 +149,26 @@ object Pipeline {
     */
   def graph(triples: DataFrame, umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    // preferred names via broadcast hash join (~10^7 CUIs at real scale:
-    // codegen'd probe, constant plan size — not a UDF over a driver map)
-    val prefDf = umls.value.cuiPreferred.toSeq.toDF("pc", "pname")
-    def prefJoin(df: DataFrame, cuiCol: String, out: String): DataFrame =
-      df.join(broadcast(prefDf), col(cuiCol) === col("pc"), "left")
-        .withColumn(out, coalesce(col("pname"), col(cuiCol)))
-        .drop("pc", "pname")
+    // preferred names from the table broadcast the job already holds
+    // (coalesce(name, cui): a CUI without one keeps its CUI, a null stays
+    // null) — no driver-side relation of every CUI and no second
+    // broadcast of the same map; a count prunes the lookup
+    val pref = udf((cui: String) =>
+      if (cui == null) null else umls.value.cuiPreferred.getOrElse(cui, cui))
     // Two-stage aggregation: stage 1 keys on (triple, url), whose
     // cardinality grows with the corpus — a hot triple (popular CUI pair)
     // cannot pile onto one reducer, which is the explicit skew defusal
     // the north_rule asks for (the (triple) key alone would skew at
     // 10^12 docs). Stage 2 then folds the per-url partials; countDistinct
     // becomes a plain count over the stage-1 keys.
-    val rolled = triples
+    triples
       .groupBy(col("subj_cui"), col("pred"), col("obj_cui"), col("url"))
       .agg(count(lit(1)).as("n_url_evidence"))
       .groupBy(col("subj_cui"), col("pred"), col("obj_cui"))
       .agg(sum(col("n_url_evidence")).as("n_evidence"),
         count(lit(1)).as("n_docs"))
-    prefJoin(prefJoin(rolled, "subj_cui", "subj_name"), "obj_cui", "obj_name")
+      .withColumn("subj_name", pref(col("subj_cui")))
+      .withColumn("obj_name", pref(col("obj_cui")))
   }
 
   /** Full run: pages -> triples, fully map-side (DocTriples scaladoc):

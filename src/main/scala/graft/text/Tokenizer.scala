@@ -17,30 +17,24 @@ object Tokenizer {
   @inline private def isAlnum(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
 
-  private def alnumType(s: String): String = {
-    var hasLower = false; var hasUpper = false; var hasDigit = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c >= 'a' && c <= 'z') hasLower = true
-      else if (c >= 'A' && c <= 'Z') hasUpper = true
-      else hasDigit = true
-      i += 1
-    }
+  /** The case shape of the alnum run `s[from, to)` with the given kinds of
+    * chars.
+    */
+  private def alnumType(s: String, from: Int, to: Int, hasLower: Boolean,
+      hasUpper: Boolean, hasDigit: Boolean): String =
     if (hasDigit && (hasLower || hasUpper)) "an"
     else if (hasDigit) "nu"
     else if (hasLower && !hasUpper) "lc"
     else if (hasUpper && !hasLower) "uc"
     else {
       // mixed case: ic iff leading upper + all-lower tail (ASCII input)
-      var ic = s.charAt(0) >= 'A' && s.charAt(0) <= 'Z'
-      var j = 1
-      while (ic && j < s.length) {
+      var ic = s.charAt(from) >= 'A' && s.charAt(from) <= 'Z'
+      var j = from + 1
+      while (ic && j < to) {
         val c = s.charAt(j); ic = c >= 'a' && c <= 'z'; j += 1
       }
       if (ic) "ic" else "mc"
     }
-  }
 
   /** Interned single-char strings — `pn` tokens and single-space `ws`
     * runs dominate a token stream; ASCII-folded input keeps c < 128.
@@ -48,7 +42,14 @@ object Tokenizer {
   private val singleChar: Array[String] = Array.tabulate(128)(i => String.valueOf(i.toChar))
 
   /** Tokenize `text` into the full stream including ws and pn tokens. */
-  def tokenize(text: String): Vector[Tok] = {
+  def tokenize(text: String): Vector[Tok] = tokenize(text, null)
+
+  /** [[tokenize]], with each word token numbered by `dict` in the same
+    * pass that lowercases it: the token carries its id, or -1 for a word
+    * outside the dictionary ([[Tok.Unresolved]] when `dict` is null), and
+    * an in-dictionary word's `lc` is the dictionary's own string.
+    */
+  def tokenize(text: String, dict: graft.umls.WordDict): Vector[Tok] = {
     val out = Vector.newBuilder[Tok]
     var i = 0
     val n = text.length
@@ -61,10 +62,30 @@ object Tokenizer {
         out += Tok("ws", t, t, i, j)
         i = j
       } else if (isAlnum(c)) {
-        var j = i + 1
-        while (j < n && isAlnum(text.charAt(j))) j += 1
-        val t = text.substring(i, j)
-        out += Tok(alnumType(t), t, t.toLowerCase, i, j)
+        // one scan: the char kinds and the lowercase run's String hash,
+        // then one dictionary probe over the chars; an in-dictionary word
+        // takes the dictionary's string as its lc (and as its text when
+        // already lowercase), allocating none
+        var j = i
+        var h = 0
+        var lower = false; var upper = false; var digit = false
+        while (j < n && isAlnum(text.charAt(j))) {
+          var ch = text.charAt(j)
+          if (ch >= 'a') lower = true
+          else if (ch >= 'A') { upper = true; ch = (ch + 32).toChar }
+          else digit = true
+          h = 31 * h + ch
+          j += 1
+        }
+        val id = if (dict eq null) Tok.Unresolved else dict.idOfLower(text, i, j, h, upper)
+        val typ = alnumType(text, i, j, lower, upper, digit)
+        if (id >= 0) {
+          val w = dict.word(id)
+          out += Tok(typ, if (upper) text.substring(i, j) else w, w, i, j, id)
+        } else {
+          val t = text.substring(i, j)
+          out += Tok(typ, t, t.toLowerCase, i, j, id)
+        }
         i = j
       } else {
         val t = if (c < 128) singleChar(c) else text.substring(i, i + 1)
@@ -116,7 +137,7 @@ object Tokenizer {
   /** A non-empty run of lowercase letters and digits: its own
     * [[tokenizeMmLc]] token list, a single word.
     */
-  private def isMmWord(text: String): Boolean = {
+  private[graft] def isMmWord(text: String): Boolean = {
     val n = text.length
     var f = 0
     while (f < n) {
@@ -190,7 +211,7 @@ object Tokenizer {
           toks(i + 1).start == t.end && toks(i + 2).lc == "s" &&
           toks(i + 2).start == toks(i + 1).end
         if (hasApos) {
-          out += Tok(t.typ, t.text + "'s", t.lc, t.start, toks(i + 2).end)
+          out += Tok(t.typ, t.text + "'s", t.lc, t.start, toks(i + 2).end, t.id)
           i += 3
         } else {
           out += t

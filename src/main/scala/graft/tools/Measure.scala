@@ -125,8 +125,11 @@ object Measure {
 
   // ---- queries -------------------------------------------------------
 
+  /** One completed stage, from its summed task metrics: run, CPU,
+    * deserialization and GC time of its tasks, and shuffle bytes written.
+    */
   private final case class StageRow(job: Int, stage: Int, name: String, tasks: Int,
-      runMs: Long, cpuMs: Long, shuffleBytes: Long)
+      runMs: Long, cpuMs: Long, shuffleBytes: Long, deserMs: Long, gcMs: Long)
 
   /** A job's start and end, as the listener events stamp them (epoch ms;
     * the end is the start until the job ends), and the job description
@@ -155,7 +158,7 @@ object Measure {
       val tm = si.taskMetrics
       rows += StageRow(stageJob.getOrElse(si.stageId, -1), si.stageId, si.name,
         si.numTasks, tm.executorRunTime, tm.executorCpuTime / 1000000L,
-        tm.shuffleWriteMetrics.bytesWritten)
+        tm.shuffleWriteMetrics.bytesWritten, tm.executorDeserializeTime, tm.jvmGCTime)
     }
 
     /** Waits for every posted event, then hands over and forgets the log. */
@@ -309,12 +312,12 @@ object Measure {
   /** A Spark job within one operation: the operation's phase ("write":
     * pages read, `Pipeline.run` and `IcebergLite.write`; "rollup":
     * `Pipeline.graph` and count), its stages, tasks, wall time from its
-    * own start and end events, summed task run time, and the driver time
-    * between the previous job's end (or the operation's start) and its
-    * start.
+    * own start and end events, its tasks' summed run, CPU,
+    * deserialization and GC time, and the driver time between the
+    * previous job's end (or the operation's start) and its start.
     */
   private final case class OpJob(phase: String, stages: String, tasks: Int, wallMs: Long,
-      taskMs: Long, gapMs: Long)
+      taskMs: Long, cpuMs: Long, deserMs: Long, gcMs: Long, gapMs: Long)
 
   /** One timed operation: wall, time outside every job, the processes
     * the JVM started during it (by command name), and its jobs.
@@ -335,7 +338,9 @@ object Measure {
     *
     * Per level and size the report has the operation's median and
     * spread, its jobs in order (stage names, tasks, medians of wall, task
-    * and preceding driver time), the driver time outside jobs, and the
+    * run, task CPU, task deserialization, task GC and preceding driver
+    * time), the same task sums per operation, the driver time outside
+    * jobs, and the
     * processes per operation. Strong efficiency is T_lo(N) / (T_hi(N) ·
     * hi/lo), weak efficiency T_lo(N) / T_hi(N·hi/lo), each per round and
     * as min/median/max.
@@ -366,7 +371,8 @@ object Measure {
             o.get("processes").properties().asScala.map(f => f.getKey -> f.getValue.asInt).toMap,
             o.get("jobs").elements().asScala.map(j =>
               OpJob(j.get("phase").asText, j.get("stages").asText, j.get("tasks").asInt,
-                j.get("wall_ms").asLong, j.get("task_ms").asLong, j.get("gap_ms").asLong))
+                j.get("wall_ms").asLong, j.get("task_ms").asLong, j.get("cpu_ms").asLong,
+                j.get("deser_ms").asLong, j.get("gc_ms").asLong, j.get("gap_ms").asLong))
               .toVector)
         }.toVector
       }.toVector
@@ -397,7 +403,8 @@ object Measure {
         obj("job" -> k, "phase" -> mode._1, "stages" -> mode._2,
           "ops" -> js.length, "tasks" -> med(js.map(_.tasks.toLong)),
           "wall_ms" -> med(js.map(_.wallMs)), "task_ms" -> med(js.map(_.taskMs)),
-          "gap_before_ms" -> med(js.map(_.gapMs)))
+          "task_cpu_ms" -> med(js.map(_.cpuMs)), "task_deser_ms" -> med(js.map(_.deserMs)),
+          "task_gc_ms" -> med(js.map(_.gcMs)), "gap_before_ms" -> med(js.map(_.gapMs)))
       }
       val commands = ops.flatMap(_.processes.keys).distinct.sorted
       obj("level" -> s"local[$lvl]", "pages" -> n, "ops" -> ops.length,
@@ -405,6 +412,9 @@ object Measure {
         "jobs_per_op" -> obj("min" -> nJobs.min, "max" -> nJobs.max),
         "job_wall_ms" -> med(ops.map(_.jobs.map(_.wallMs).sum)),
         "task_ms" -> med(ops.map(_.jobs.map(_.taskMs).sum)),
+        "task_cpu_ms" -> med(ops.map(_.jobs.map(_.cpuMs).sum)),
+        "task_deser_ms" -> med(ops.map(_.jobs.map(_.deserMs).sum)),
+        "task_gc_ms" -> med(ops.map(_.jobs.map(_.gcMs).sum)),
         "driver_ms" -> med(ops.map(_.driverMs)),
         "processes_per_op" -> med(ops.map(_.processes.values.sum.toLong)),
         "processes_by_command" -> obj(commands.map(c =>
@@ -487,7 +497,8 @@ object Measure {
           obj("phase" -> j.desc, "stages" -> own.map(_.name).mkString(" | "),
             "tasks" -> own.map(_.tasks).sum,
             "wall_ms" -> (j.endMs - j.startMs), "task_ms" -> own.map(_.runMs).sum,
-            "gap_ms" -> gap)
+            "cpu_ms" -> own.map(_.cpuMs).sum, "deser_ms" -> own.map(_.deserMs).sum,
+            "gc_ms" -> own.map(_.gcMs).sum, "gap_ms" -> gap)
         }
         val procs = starts.filter { case (t, _) => t >= t0 && t <= t1 }
           .groupBy(_._2).map { case (c, v) => c -> v.length }

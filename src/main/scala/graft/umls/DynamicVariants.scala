@@ -58,6 +58,22 @@ object DynamicVariants {
     result
   }
 
+  /** [[closure]] under the default flags of the word with dictionary id
+    * `id`, memoized per id on the table set instead of in the word memo
+    * (an array read instead of a hash probe; racing writers store equal
+    * values).
+    */
+  private[graft] def closureOf(id: Int, word: String, umls: UmlsTables): Vector[Variant] = {
+    val memo = umls.dynVariantsById
+    val cached = memo(id)
+    if (cached ne null) cached
+    else {
+      val result = compute(word, umls, allDeriv = false, noDeriv = false)
+      memo(id) = result
+      result
+    }
+  }
+
   private def compute(word: String, umls: UmlsTables,
       allDeriv: Boolean, noDeriv: Boolean): Vector[Variant] = {
     val table =

@@ -103,22 +103,105 @@ final case class UmlsTables(
     if (variantsNoDeriv.nonEmpty) variantsNoDeriv
     else variants.view.mapValues(_.filterNot(_.history.contains('d'))).toMap
 
-  /** Per lexicon word, what the kernel derives from its categories: the
-    * tagless chunking category ([[graft.link.PhraseChunker]]) and whether
-    * it takes no variants (every category closed-class). Computed once
-    * per table instance over `lexCats`, so chunking and variant gathering
-    * do one lookup per word instead of a category-set walk. It holds one
-    * map entry per lexicon word; the few distinct values are shared.
+  /** The kernel's word dictionary ([[WordDict]]): every word it probes
+    * a table with by string — lexicon words, stop words, `wordCounts`,
+    * the first-word index's keys, the variant tables' keys, split words,
+    * multiword lexicon forms, NegEx trigger words and stop-phrase first
+    * words. Tokens are numbered once ([[graft.text.Tokenizer.tokenize]]);
+    * the per-id arrays below answer each table test by array read. Lazy +
+    * transient like every derived table: built per deserialized copy.
     */
-  @transient lazy val lexWords: java.util.HashMap[String, LexWord] = {
-    val m = new java.util.HashMap[String, LexWord](lexCats.size * 2)
+  @transient lazy val dict: WordDict = WordDict.build(firstWordIndex,
+    lexCats.keysIterator ++ stopWords.iterator ++ wordCounts.keysIterator ++
+      variants.keysIterator ++ variantsByCat.valuesIterator.flatMap(_.keysIterator) ++
+      variantsAllDeriv.keysIterator ++ variantsNoDeriv.keysIterator ++
+      splitWords.keysIterator ++ multiwordForms.iterator.flatten ++
+      (negexPre ++ negexPost ++ negexPseudo ++ negexPseudoPost ++ negexConj)
+        .iterator.flatten ++ stopPhraseFirstWords.iterator)
+
+  /** Per word id, what the kernel derives from a lexicon word's
+    * categories: the tagless chunking category
+    * ([[graft.link.PhraseChunker]]) and whether it takes no variants
+    * (every category closed-class); null for a word outside the
+    * lexicon. The few distinct values are shared.
+    */
+  @transient lazy val wordLex: Array[LexWord] = {
+    val a = new Array[LexWord](dict.size)
     val shared = scala.collection.mutable.HashMap.empty[LexWord, LexWord]
     lexCats.foreach { case (w, cats) =>
       val lw = LexWord(graft.link.PhraseChunker.taglessCat(cats),
         cats.nonEmpty && cats.subsetOf(UmlsTables.invariantCats))
-      m.put(w, shared.getOrElseUpdate(lw, lw))
+      a(dict.id(w)) = shared.getOrElseUpdate(lw, lw)
     }
-    m
+    a
+  }
+
+  /** The lexicon entry of a word id, or null (also for id -1). */
+  def lexOf(id: Int): LexWord = if (id < 0) null else wordLex(id)
+
+  /** Per word id, the [[UmlsTables]] flag bits (`ProbeSkip`,
+    * `NegexFirst`, `StopPhraseFirst`, `SplitWord`, `HotFirst`).
+    */
+  @transient lazy val wordFlags: Array[Byte] = {
+    val f = new Array[Byte](dict.size)
+    def set(w: String, bit: Int): Unit = {
+      val i = dict.id(w)
+      if (i >= 0) f(i) = (f(i) | bit).toByte
+    }
+    // stop-variant rule (metamap_candidates.pl:189-205): closed-class stop
+    // words and very short very frequent words (test_count_and_length:
+    // count > 4000 for length < 3, count > 2000 for length < 2)
+    stopWords.foreach(set(_, UmlsTables.ProbeSkip))
+    wordCounts.foreach { case (w, count) =>
+      if (w.length < 3 && (count > 4000 || (count > 2000 && w.length < 2)))
+        set(w, UmlsTables.ProbeSkip)
+    }
+    (negexPre ++ negexPost ++ negexPseudo ++ negexPseudoPost ++ negexConj)
+      .foreach(t => if (t.nonEmpty) set(t.head, UmlsTables.NegexFirst))
+    stopPhraseFirstWords.foreach(set(_, UmlsTables.StopPhraseFirst))
+    splitWords.keysIterator.foreach(set(_, UmlsTables.SplitWord))
+    frequentFirstWordPairs.keysIterator.foreach(set(_, UmlsTables.HotFirst))
+    f
+  }
+
+  /** Whether word id `id` carries flag `bit` (never for id -1). */
+  def hasFlag(id: Int, bit: Int): Boolean = id >= 0 && (wordFlags(id) & bit) != 0
+
+  /** The default static variant table by word id (null: no entry). */
+  @transient lazy val wordVariants: Array[Vector[Variant]] = {
+    val a = new Array[Vector[Variant]](dict.size)
+    variants.foreach { case (w, vs) => a(dict.id(w)) = vs }
+    a
+  }
+
+  /** The index tables of `graft.link.Evaluator.tableFor`'s positions 1-4
+    * by word id: of_one and of_two ([[firstWordsOfOne]],
+    * [[firstWordsOfTwo]]), first_words ([[firstWordIndex]]) and
+    * first_wordsb ([[firstWordsB]]). An entry vector no filter changes is
+    * shared, and first_words over a [[WordIndex]] is the index's own
+    * array. Null or past the end: no entries.
+    */
+  @transient lazy val indexById: Array[Array[Vector[IndexEntry]]] = {
+    val full: Array[Vector[IndexEntry]] = firstWordIndex match {
+      case wi: WordIndex => wi.entriesByPos
+      case m =>
+        val a = new Array[Vector[IndexEntry]](dict.size)
+        m.foreach { case (w, es) => a(dict.id(w)) = es }
+        a
+    }
+    def derive(f: (Int, Vector[IndexEntry]) => Vector[IndexEntry]) =
+      Array.tabulate(full.length)(i => if (full(i) == null) null else f(i, full(i)))
+    Array(null,
+      derive((_, es) => UmlsTables.keep(es)(_.nmWords.length == 1)),
+      derive((_, es) => UmlsTables.keep(es)(_.nmWords.length <= 2)),
+      full,
+      derive { (i, es) =>
+        if (!hasFlag(i, UmlsTables.HotFirst)) es
+        else {
+          val hot = frequentFirstWordPairs(dict.word(i))
+          UmlsTables.keep(es)(e => !(e.nmWords.length >= 2 && hot.contains(e.nmWords.last)))
+        }
+      })
   }
 
   /** The semantic network with only preferred relations, st1 -> st2 ->
@@ -153,6 +236,11 @@ final case class UmlsTables(
   @transient lazy val dynVariantMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Vector[Variant]]()
 
+  /** The same memo under the default flags for dictionary words, by id
+    * ([[DynamicVariants.closureOf]]).
+    */
+  @transient lazy val dynVariantsById = new Array[Vector[Variant]](dict.size)
+
   /** all_words index (lib/word_index.pl:80-85): word -> entries whose
     * normalized string contains the word ANYWHERE. Only probed in
     * overmatch mode (metamap_candidates.pl:298-310); derived lazily per
@@ -172,15 +260,18 @@ final case class UmlsTables(
     * the remaining phrase room caps the matchable string length is a pure
     * retrieval optimization — result parity is asserted in KernelSpec.
     * (first_words_of_two must include 1-word strings or mid-phrase words
-    * would lose their single-word concepts.)
+    * would lose their single-word concepts.) By word, for inspection: the
+    * kernel reads them by id ([[indexById]]).
     */
-  @transient lazy val firstWordsOfOne: Map[String, Vector[IndexEntry]] =
-    firstWordIndex.view.mapValues(_.filter(_.nmWords.length == 1))
-      .filter(_._2.nonEmpty).toMap
+  @transient lazy val firstWordsOfOne: Map[String, Vector[IndexEntry]] = indexByWord(1)
 
-  @transient lazy val firstWordsOfTwo: Map[String, Vector[IndexEntry]] =
-    firstWordIndex.view.mapValues(_.filter(_.nmWords.length <= 2))
-      .filter(_._2.nonEmpty).toMap
+  @transient lazy val firstWordsOfTwo: Map[String, Vector[IndexEntry]] = indexByWord(2)
+
+  /** The non-empty entry vectors of [[indexById]] table `t`, by word. */
+  private def indexByWord(t: Int): Map[String, Vector[IndexEntry]] = {
+    val byId = indexById(t)
+    firstWordIndex.keysIterator.map(w => w -> byId(dict.id(w))).filter(_._2.nonEmpty).toMap
+  }
 
   /** frequent_first_word_pair/2 analogue
     * (metamap/frequent_first_word_pair.pl:39-116): (first word -> last
@@ -201,37 +292,27 @@ final case class UmlsTables(
     * pair (w1, w2) — the reference's own hot-key defense. Probed instead
     * of first_words whenever no gathered variant could complete a frequent
     * pair (determine_first_word_index), so the skipped entries provably
-    * could not have matched.
+    * could not have matched. By word, like [[firstWordsOfOne]].
     */
-  @transient lazy val firstWordsB: Map[String, Vector[IndexEntry]] =
-    firstWordIndex.map { case (w, es) =>
-      val hot = frequentFirstWordPairs.getOrElse(w, Set.empty)
-      if (hot.isEmpty) w -> es
-      else w -> es.filterNot(e => e.nmWords.length >= 2 && hot.contains(e.nmWords.last))
-    }
+  @transient lazy val firstWordsB: Map[String, Vector[IndexEntry]] = indexByWord(4)
+
+  /** Multiword lexicon forms (variant generators), tokenized. */
+  private def multiwordForms: Iterable[Vector[String]] =
+    lexiconForms.toSeq.map(f => graft.text.Tokenizer.tokenizeMmLc(f)).filter(_.length >= 2)
 
   /** Trie over multiword lexicon forms (variant generators) — per-position
     * walk instead of O(n^2) substring construction per phrase.
     */
-  @transient lazy val multiwordTrie: WordTrie =
-    WordTrie.build(lexiconForms.toSeq.map(f =>
-      graft.text.Tokenizer.tokenizeMmLc(f)).filter(_.length >= 2))
+  @transient lazy val multiwordTrie: WordTrie = WordTrie.build(multiwordForms, dict)
 
-  @transient lazy val negexPreTrie: WordTrie = WordTrie.build(negexPre)
-  @transient lazy val negexPostTrie: WordTrie = WordTrie.build(negexPost)
-  @transient lazy val negexPseudoTrie: WordTrie = WordTrie.build(negexPseudo)
-  @transient lazy val negexPseudoPostTrie: WordTrie = WordTrie.build(negexPseudoPost)
-  @transient lazy val negexConjTrie: WordTrie = WordTrie.build(negexConj)
-  /** First words of ANY negex trigger class: one set membership test per
-    * word position gates the five per-class trie probes (the overwhelming
-    * majority of words start no trigger).
-    */
-  @transient lazy val negexFirstWords: Set[String] =
-    (negexPre ++ negexPost ++ negexPseudo ++ negexPseudoPost ++ negexConj)
-      .filter(_.nonEmpty).map(_.head).toSet
+  @transient lazy val negexPreTrie: WordTrie = WordTrie.build(negexPre, dict)
+  @transient lazy val negexPostTrie: WordTrie = WordTrie.build(negexPost, dict)
+  @transient lazy val negexPseudoTrie: WordTrie = WordTrie.build(negexPseudo, dict)
+  @transient lazy val negexPseudoPostTrie: WordTrie = WordTrie.build(negexPseudoPost, dict)
+  @transient lazy val negexConjTrie: WordTrie = WordTrie.build(negexConj, dict)
 }
 
-/** A lexicon word's derived categories, see [[UmlsTables.lexWords]]. */
+/** A lexicon word's derived categories, see [[UmlsTables.wordLex]]. */
 final case class LexWord(taglessCat: String, invariant: Boolean)
 
 object UmlsTables {
@@ -243,6 +324,20 @@ object UmlsTables {
     * Metathesaurus scale.
     */
   val FrequentPairCutoff: Int = 5
+
+  /** [[UmlsTables.wordFlags]] bits: the stop-variant rule skips probing
+    * the word; it may start a NegEx trigger; it starts a stop phrase; it
+    * is a split word; it is the first word of a frequent first/last pair.
+    */
+  val ProbeSkip = 1
+  val NegexFirst = 2
+  val StopPhraseFirst = 4
+  val SplitWord = 8
+  val HotFirst = 16
+
+  /** `es` filtered by `p`, the same vector when `p` keeps every entry. */
+  private def keep(es: Vector[IndexEntry])(p: IndexEntry => Boolean): Vector[IndexEntry] =
+    if (es.forall(p)) es else es.filter(p)
 }
 
 /** Deterministic synthetic mini-Metathesaurus + lexicon (FIXTURES.md §2).

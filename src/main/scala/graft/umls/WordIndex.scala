@@ -27,36 +27,20 @@ final class WordIndex private (
     private val entries: Array[Vector[IndexEntry]])
     extends AbstractMap[String, Vector[IndexEntry]] with Serializable {
 
-  // slot table: 0 = empty, else 1 + the key's position; load factor <= 0.5
-  private[this] val slots: Array[Int] = {
-    var cap = 2
-    while (cap < 2 * words.length) cap <<= 1
-    val s = new Array[Int](cap)
-    var i = 0
-    while (i < words.length) {
-      var j = WordIndex.spread(words(i).hashCode) & (cap - 1)
-      while (s(j) != 0) j = (j + 1) & (cap - 1)
-      s(j) = i + 1
-      i += 1
-    }
-    s
-  }
+  private[this] val slots: Array[Int] = StrSlots.build(words)
 
   /** The key's position in `words`, or -1. */
-  private def find(key: String): Int =
-    if (key == null) -1
-    else {
-      val mask = slots.length - 1
-      var j = WordIndex.spread(key.hashCode) & mask
-      var r = -2
-      while (r == -2) {
-        val s = slots(j)
-        if (s == 0) r = -1
-        else if (words(s - 1).equals(key)) r = s - 1
-        else j = (j + 1) & mask
-      }
-      r
-    }
+  private[umls] def find(key: String): Int = StrSlots.find(slots, words, key)
+  /** [[find]] of the lowercase of `text[from, to)` ([[StrSlots.findLower]]). */
+  private[umls] def findLower(text: String, from: Int, to: Int, h: Int,
+      upper: Boolean): Int =
+    StrSlots.findLower(slots, words, text, from, to, h, upper)
+
+  /** The number of keys; positions run from 0 to `size - 1`. */
+  private[umls] def keyCount: Int = words.length
+  private[umls] def keyAt(i: Int): String = words(i)
+  /** The entries of every key by position: shared, not copied. */
+  private[umls] def entriesByPos: Array[Vector[IndexEntry]] = entries
 
   override def get(key: String): Option[Vector[IndexEntry]] = {
     val i = find(key)
@@ -91,16 +75,6 @@ final class WordIndex private (
 }
 
 object WordIndex {
-
-  // murmur3's finalizer: String hashes of similar words are near-sequential,
-  // which would pile linear probes into long runs
-  private def spread(h0: Int): Int = {
-    var h = h0 ^ (h0 >>> 16)
-    h *= 0x85ebca6b
-    h ^= h >>> 13
-    h *= 0xc2b2ae35
-    h ^ (h >>> 16)
-  }
 
   private val canonical: Ordering[IndexEntry] = (a, b) => {
     val c = Integer.compare(a.nmWords.length, b.nmWords.length)

@@ -46,6 +46,36 @@ class GraphOpsSpec extends AnyFunSuite with SparkTestBase {
     assert(a.nonEmpty)
   }
 
+  test("graph preferred names: the join form's values, no broadcast exchange") {
+    implicit val s = spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col}
+    val umls = graft.pipeline.Pipeline.broadcastUmls(spark)
+    // a named CUI, a CUI without a preferred name, and a null CUI
+    val triples = Seq(
+      ("C0027051", "causes", "C9999999", "u1", 1),
+      ("C0027051", "causes", "C9999999", "u2", 1),
+      ("C9999999", "treats", null, "u1", 2),
+      (null, "treats", "C0018787", "u3", 0)).toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
+    val g = graft.pipeline.Pipeline.graph(triples, umls)
+    assert(g.columns.toSeq == Seq("subj_cui", "pred", "obj_cui", "n_evidence", "n_docs",
+      "subj_name", "obj_name"))
+    // the former form: two broadcast joins against a relation of the map
+    val prefDf = umls.value.cuiPreferred.toSeq.toDF("pc", "pname")
+    def prefJoin(df: org.apache.spark.sql.DataFrame, cuiCol: String, out: String) =
+      df.join(broadcast(prefDf), col(cuiCol) === col("pc"), "left")
+        .withColumn(out, coalesce(col("pname"), col(cuiCol))).drop("pc", "pname")
+    val rolled = g.drop("subj_name", "obj_name")
+    val joined = prefJoin(prefJoin(rolled, "subj_cui", "subj_name"), "obj_cui", "obj_name")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toVector.sorted
+    assert(rows(g) == rows(joined))
+    assert(rows(g).contains("[C0027051,causes,C9999999,2,2,Myocardial Infarction,C9999999]"))
+    assert(rows(g).contains("[C9999999,treats,null,1,1,C9999999,null]"))
+    assert(rows(g).contains("[null,treats,C0018787,1,1,null,Heart]"))
+    val plan = g.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange"), plan)
+  }
+
   test("connected components: chains merge, self-loops drop, strings order") {
     import spark.implicits._
     // chain C3-C2-C1 (multi-hop), pair C9-C8, self-loop C5 (ignored)

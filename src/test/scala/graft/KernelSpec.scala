@@ -224,4 +224,12 @@ class KernelSpec extends AnyFunSuite {
     }
     assert(checked >= 1000, s"only $checked English pages checked")
   }
+
+  test("kernel output digest: 2,000 generated pages under every option profile") {
+    // KernelDigest hashes the extracted text, every mention field, every
+    // triple and the MMO/JSONf/XMLf bytes in order; a kernel change that
+    // keeps its outputs bit for bit keeps this value
+    assert(KernelDigest.digest(umls, 2000) ==
+      "eb01da6f9888513f30475d8957ba8c4c967cd4b93f6affb1237b87bb12a7a677")
+  }
 }

@@ -621,7 +621,8 @@ class OptionsSpec extends AnyFunSuite {
     val raw = PhraseChunker.chunk(toks, umls, Map.empty, 0)
     assert(raw.map(_.words.map(_.word)) == Vector(Vector("patient"),
       Vector("pain"), Vector("left", "side"), Vector("chest")))
-    val glom = PhraseChunker.compositeGlomExact(raw, toks, umls, 4)
+    val glom = PhraseChunker.compositeGlomExact(raw, toks,
+      graft.text.Tokenizer.wordToks(toks), umls, 4)
     assert(glom.map(p => (p.words.map(_.word), p.composite)) ==
       Vector((Vector("patient"), false),
         (Vector("pain", "left", "side", "chest"), true)))
