@@ -276,7 +276,7 @@ object KgQueries {
     // folded by a keyed agg — one Spark job instead of one sequential
     // full-corpus job per profile (a zero count per profile survives
     // because every document emits every mode).
-    Pipeline.perPage(CorpusGen.pages(spark, 100), umls) { (p, text, t) =>
+    Pipeline.perDocument(CorpusGen.pages(spark, 100), umls)(Pipeline.pageText) { (p, text, t) =>
       profiles.iterator.map { case (name, o) =>
         // negex_negated_* profiles pin the semtype GATE: they count
         // negated mentions, every other profile counts mentions

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 
 import graft.link.{LinkOptions, Mention}
@@ -212,38 +212,29 @@ object Graft {
         else DocTriples.fromText(id, text, bc.value, opts)))
   }
 
-  /** The table operator annotate and triples run through: ANY id type is
-    * cast to string (a bigint doc_id would otherwise fail encoder
-    * resolution before any work runs), rows with a null text are
-    * skipped, and `f` is one of the record functions
-    * ([[DocKernel.annotate]], [[DocTriples.fromText]]).
+  /** A table's cells as the documents of [[Pipeline.perDocument]]: (id
+    * cast to string, text cast to string), so ANY id type works (a bigint
+    * doc_id would otherwise fail encoder resolution before any work runs).
     */
-  private def perRecord[T: Encoder](df: DataFrame, idCol: String, textCol: String,
-      umls: Broadcast[UmlsTables])(
-      f: (String, String, UmlsTables) => IterableOnce[T]): Dataset[T] = {
+  private def cells(df: DataFrame, idCol: String, textCol: String): Dataset[(String, String)] = {
     import df.sparkSession.implicits._
-    df.select(df.col(idCol).cast("string"), df.col(textCol).cast("string"))
-      .as[(String, String)].mapPartitions { it =>
-        val t = umls.value
-        it.flatMap { case (id, text) =>
-          if (text == null) Iterator.empty else f(id, text, t)
-        }
-      }
+    df.select(df.col(idCol).cast("string"), df.col(textCol).cast("string")).as[(String, String)]
   }
 
   /** Annotate any table: one mention row per linked concept occurrence.
     * `textCol` must hold plain text (use Extract.htmlToText upstream for
     * html). Runs the record path ([[DocKernel.annotate]]: segmentation,
     * then running text or -z terms) map-side against the broadcast
-    * tables — shape-identical to Pipeline.mentions but free of the Page
-    * schema.
+    * tables, through the operator and record function of
+    * Pipeline.mentions, free of the Page schema.
     */
   def annotate(df: DataFrame, idCol: String, textCol: String,
       opts: LinkOptions = LinkOptions.default,
       umls: Option[Broadcast[UmlsTables]] = None): DataFrame = {
     import df.sparkSession.implicits._
-    perRecord(df, idCol, textCol, umls.getOrElse(Pipeline.broadcastUmls(df.sparkSession)))(
-      (id, text, t) => DocKernel.annotate(id, text, t, opts)).toDF()
+    Pipeline.perDocument(cells(df, idCol, textCol),
+      umls.getOrElse(Pipeline.broadcastUmls(df.sparkSession)))(_._2)((c, text, t) =>
+      DocKernel.annotate(c._1, text, t, opts)).toDF()
   }
 
   /** Term processing (-z): each row's text is ONE dictionary term; the
@@ -262,8 +253,9 @@ object Graft {
       opts: LinkOptions = LinkOptions.default,
       umls: Option[Broadcast[UmlsTables]] = None): DataFrame = {
     import df.sparkSession.implicits._
-    perRecord(df, idCol, textCol, umls.getOrElse(Pipeline.broadcastUmls(df.sparkSession)))(
-      (id, text, t) => DocTriples.fromText(id, text, t, opts))
+    Pipeline.perDocument(cells(df, idCol, textCol),
+      umls.getOrElse(Pipeline.broadcastUmls(df.sparkSession)))(_._2)((c, text, t) =>
+      DocTriples.fromText(c._1, text, t, opts))
       .toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
   }
 

@@ -13,6 +13,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 
 import graft.link.LinkOptions
+import graft.output.{JsonMmoOutput, MmoOutput, XmlMmoOutput}
 import graft.output.JsonMmoOutput.{js => jsonStr}
 import graft.pipeline.{DocKernel, DocTriples, Pipeline}
 import graft.umls.UmlsTables
@@ -226,8 +227,8 @@ object GraftServer {
       // <MMOs>-framed --XMLf stream, `mmo` the machine-output term
       // lines; default = the mention rows
       val format = params.getOrElse("format", "mentions")
-      // the reference writers print one document per segmented record
-      lazy val records = graft.sources.MedlineReader.records(id, req.body, opts)
+      // each format's record function prints one document per segmented
+      // record, as the reference writers do
       format match {
         case "mentions" =>
           DocKernel.annotate(id, req.body, bc.value, opts).map { m =>
@@ -240,19 +241,16 @@ object GraftServer {
         case "jsonf" =>
           val b = new java.lang.StringBuilder(4096)
           b.append('[')
-          records.zipWithIndex.foreach { case ((url, rt), i) =>
-            if (i > 0) b.append(',')
-            graft.output.JsonMmoOutput.render(b, url, rt, bc.value, opts)
-          }
-          b.append(']').toString
+          JsonMmoOutput.records(b, id, req.body, bc.value, opts)(_ => b.append(','))
+          // the separator after the last tree becomes the closing bracket
+          if (b.length > 1) b.setCharAt(b.length - 1, ']') else b.append(']')
+          b.toString
         case "xmlf" =>
-          records.map { case (url, rt) =>
-            graft.output.XmlMmoOutput.document(url, rt, bc.value, opts)
-          }.mkString("<MMOs>", "", "</MMOs>")
+          XmlMmoOutput.records(id, req.body, bc.value, opts).map(_._2)
+            .mkString("<MMOs>", "", "</MMOs>")
         case "mmo" =>
-          records.flatMap { case (url, rt) =>
-            graft.output.MmoOutput.document(url, rt, bc.value, opts = opts)
-          }.mkString("", "\n", "\n")
+          MmoOutput.records(id, req.body, bc.value, opts).flatMap(_._2)
+            .mkString("", "\n", "\n")
         case other =>
           throw new IllegalArgumentException(s"unknown format: $other")
       }

@@ -1,17 +1,15 @@
 package graft.graph
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.AccumulatorV2
-
-import graft.output.JsonMmoOutput
 
 /** Iceberg-style partitioned table layout with snapshot manifests and
   * per-partition lineage/metrics rows enabling checkpoint-resume
@@ -135,60 +133,32 @@ object IcebergLite {
     else {
       val latest = snaps.maxBy(p =>
         p.getFileName.toString.stripPrefix("snapshot-").stripSuffix(".json").toInt)
-      Some(parseSnapshot(new String(Files.readAllBytes(latest), StandardCharsets.UTF_8)))
+      Some(parseSnapshot(latest))
     }
   }
 
-  // minimal JSON (de)serialization — the manifest schema is ours. A
-  // subject is any string: min/max are escaped JSON strings, or null for
-  // a bucket whose rows all have a null subject
-  private def renderSnapshot(s: Snapshot): String = {
-    def str(v: String) = if (v == null) "null" else JsonMmoOutput.js(v)
-    val parts = s.partitions.map(p =>
-      s"""{"bucket":${p.bucket},"rows":${p.rows},"n_subj_cuis":${p.nSubjCuis},""" +
-        s""""min_subj":${str(p.minSubj)},"max_subj":${str(p.maxSubj)}}""").mkString(",")
-    s"""{"snapshot_id":${s.snapshotId},"partitions":[$parts]}"""
-  }
+  private val Json = new ObjectMapper()
 
-  /** A JSON string literal (unrolled, so a long one cannot overflow the
-    * regex engine's stack), or null.
-    */
-  private val JsonStr = """(null|"[^"\\]*+(?:\\.[^"\\]*+)*+")"""
-
-  private def parseSnapshot(json: String): Snapshot = {
-    val id = """"snapshot_id":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(0)
-    val part = ("""\{"bucket":(\d+),"rows":(\d+),"n_subj_cuis":(\d+),""" +
-      s""""min_subj":$JsonStr,"max_subj":$JsonStr\\}""").r
-    val ps = part.findAllMatchIn(json).map(m =>
-      PartitionMeta(m.group(1).toInt, m.group(2).toLong, m.group(3).toLong,
-        unescape(m.group(4)), unescape(m.group(5)))).toVector
-    Snapshot(id, ps)
-  }
-
-  private val Escaped = "\"\\/bfnrt"
-  private val Unescaped = "\"\\/\b\f\n\r\t"
-
-  /** The value of a JSON string literal matched by [[JsonStr]]. */
-  private def unescape(lit: String): String =
-    if (lit == "null") null
-    else {
-      val b = new java.lang.StringBuilder(lit.length)
-      var i = 1
-      while (i < lit.length - 1) {
-        val c = lit.charAt(i)
-        if (c != '\\') { b.append(c); i += 1 }
-        else if (lit.charAt(i + 1) == 'u') {
-          b.append(Integer.parseInt(lit.substring(i + 2, i + 6), 16).toChar)
-          i += 6
-        } else {
-          val k = Escaped.indexOf(lit.charAt(i + 1))
-          require(k >= 0, s"bad escape in manifest string $lit")
-          b.append(Unescaped.charAt(k))
-          i += 2
-        }
-      }
-      b.toString
+  // the manifest schema is ours; a subject is any string, and min/max
+  // are null for a bucket whose rows all have a null subject
+  private def renderSnapshot(s: Snapshot): Array[Byte] = {
+    val root = Json.createObjectNode().put("snapshot_id", s.snapshotId)
+    val parts = root.putArray("partitions")
+    s.partitions.foreach { p =>
+      parts.addObject().put("bucket", p.bucket).put("rows", p.rows)
+        .put("n_subj_cuis", p.nSubjCuis).put("min_subj", p.minSubj).put("max_subj", p.maxSubj)
     }
+    Json.writeValueAsBytes(root)
+  }
+
+  private def parseSnapshot(manifest: Path): Snapshot = {
+    val root = Json.readTree(Files.readAllBytes(manifest))
+    def str(n: JsonNode): String = if (n == null || n.isNull) null else n.asText
+    Snapshot(root.path("snapshot_id").asInt(0),
+      root.path("partitions").asScala.map(p =>
+        PartitionMeta(p.get("bucket").asInt, p.get("rows").asLong, p.get("n_subj_cuis").asLong,
+          str(p.get("min_subj")), str(p.get("max_subj")))).toVector)
+  }
 
   /** Write `triples` (columns subj_cui, pred, obj_cui, url, sentNo) to the
     * table at `root`, bucketed on subj_cui. Buckets already committed in
@@ -211,11 +181,11 @@ object IcebergLite {
         (prev.map(_.partitions).getOrElse(Vector.empty) ++ metrics).sortBy(_.bucket))
       Files.createDirectories(manifestDir(root))
       // write-temp + ATOMIC_MOVE: a crash mid-write must never leave a
-      // truncated-but-regex-parseable manifest (it would under-list the
-      // committed buckets and defeat the orphan cleanup on replay)
+      // truncated manifest (it would under-list the committed buckets
+      // and defeat the orphan cleanup on replay)
       val target = manifestDir(root).resolve(s"snapshot-${snap.snapshotId}.json")
       val tmp = manifestDir(root).resolve(s".snapshot-${snap.snapshotId}.json.tmp")
-      Files.write(tmp, renderSnapshot(snap).getBytes(StandardCharsets.UTF_8))
+      Files.write(tmp, renderSnapshot(snap))
       Files.move(tmp, target,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -294,7 +264,7 @@ object IcebergLite {
   def snapshot(root: String, id: Int): Option[Snapshot] = {
     val p = manifestDir(root).resolve(s"snapshot-$id.json")
     if (!Files.exists(p)) None
-    else Some(parseSnapshot(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
+    else Some(parseSnapshot(p))
   }
 
   /** Read back only the buckets the latest snapshot committed (a reader

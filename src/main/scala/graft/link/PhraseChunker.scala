@@ -126,21 +126,12 @@ object PhraseChunker {
   def chunk(toks: Vector[Tok], umls: UmlsTables,
       tagsByStart: Map[Int, String] = Map.empty,
       maxComposite: Int = 4,
-      taglessExact: Boolean = false): Vector[Phrase] = {
-    val words = Tokenizer.wordToks(toks)
-    val wNorm = new Array[String](words.length)
-    val wIds = new Array[Int](words.length)
-    var i = 0
-    while (i < words.length) {
-      wNorm(i) = mmWord(words(i))
-      wIds(i) = umls.dict.id(wNorm(i))
-      i += 1
-    }
-    chunkWords(toks, words, wNorm, wIds, umls, tagsByStart, maxComposite, taglessExact)
-  }
+      taglessExact: Boolean = false): Vector[Phrase] =
+    chunk(Sentence(0, 0, 0, toks), umls, tagsByStart, maxComposite, taglessExact)
 
-  /** [[chunk]] of a sentence, over its word tokens made once: a token the
-    * tokenizer numbered is a word whose lc is already mm-normalized.
+  /** [[chunk]] of a sentence (only its tokens are read), over its word
+    * tokens made once: a token the tokenizer numbered is a word whose lc
+    * is already mm-normalized, any other is normalized and probed here.
     */
   def chunk(sent: Sentence, umls: UmlsTables, tagsByStart: Map[Int, String],
       maxComposite: Int, taglessExact: Boolean): Vector[Phrase] = {

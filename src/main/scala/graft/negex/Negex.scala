@@ -1,7 +1,7 @@
 package graft.negex
 
 import graft.link.{LinkOptions, Mention}
-import graft.text.{Sentence, Tok, Tokenizer}
+import graft.text.{Sentence, Tok}
 import graft.umls.UmlsTables
 
 /** NegEx re-expression (/root/reference/lib/negex.pl:124-330; trigger
@@ -77,15 +77,11 @@ object Negex {
   def markWithRecords(sentToks: Vector[Tok], mentions: Vector[Mention],
       umls: UmlsTables, opts: LinkOptions = LinkOptions.default)
       : (Vector[Mention], Vector[NegRecord]) =
-    if (mentions.isEmpty) (mentions, Vector.empty)
-    else {
-      val words = Tokenizer.wordToks(sentToks)
-      markWords(words, Array.tabulate(words.length)(i => umls.dict.id(words(i).lc)),
-        mentions, umls, opts)
-    }
+    markWithRecords(Sentence(0, 0, 0, sentToks), mentions, umls, opts)
 
-  /** [[markWithRecords]] of a sentence, over its word tokens made once
-    * and the ids the tokenizer gave them.
+  /** [[markWithRecords]] of a sentence (only its tokens are read), over
+    * its word tokens made once and the ids the tokenizer gave them; a
+    * token without one is probed here.
     */
   def markWithRecords(sent: Sentence, mentions: Vector[Mention], umls: UmlsTables,
       opts: LinkOptions): (Vector[Mention], Vector[NegRecord]) =

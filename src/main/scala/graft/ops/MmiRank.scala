@@ -146,14 +146,14 @@ object MmiRank {
     * (columns: url, sentNo, cui, score, negated...).
     */
   def rank(mentions: DataFrame, umls: Broadcast[UmlsTables]): DataFrame = {
-    // dimension lookups as BROADCAST JOINS, not UDFs over driver maps and
-    // not plan-embedded map literals: at real Metathesaurus scale the
-    // preferred-name map holds ~10^7 CUIs — a broadcast hash join keeps
-    // the probe codegen'd and the plan size constant
+    // preferred names come from the table broadcast the job already holds
+    // (Pipeline.preferredName): at real Metathesaurus scale the map holds
+    // ~10^7 CUIs, and a driver-side relation of it would be collected,
+    // planned and broadcast a second time. Tree depths, one row per CUI
+    // with MeSH codes, join as a broadcast relation.
     val spark = mentions.sparkSession
     import spark.implicits._
     val depthDf = treecodeDepths(umls.value).toDF("cui", "tree_depth")
-    val prefDf = umls.value.cuiPreferred.toSeq.toDF("cui", "concept_name")
 
     // mm_value = MEAN of the mention scores (r6 audit): the reference
     // averages Values at tf0 consolidation (compute_average, mmi.pl:588)
@@ -169,25 +169,23 @@ object MmiRank {
         // makes the display column deterministic (and oracle-comparable)
         array_sort(array_distinct(flatten(collect_list(col("semTypes")))))
           .as("sem_types"))
-      .join(broadcast(prefDf), Seq("cui"), "left")
+      .withColumn("concept", graft.pipeline.Pipeline.preferredName(umls)(col("cui")))
       .join(broadcast(depthDf), Seq("cui"), "left")
     val withMax = tf.withColumn("max_freq",
       greatest(lit(13), max(col("freq_count"))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("url")))))
 
     val depth = coalesce(col("tree_depth"), lit(1))
-    val concept = coalesce(col("concept_name"), col("cui"))
     val nFreq = normalizeValue(-5, col("freq_count").cast("double") / col("max_freq"))
     val nmmSpec = normalizeValue(-10, col("mm_value").cast("double") / 1000.0)
     val mSpec = normalizeValue(0, depth.cast("double") / 9.0)
     val wSpec = normalizeValue(0,
-      size(split(concept, " ")).cast("double") / 26.0)
-    val cSpec = normalizeValue(0, length(concept).cast("double") / 102.0)
+      size(split(col("concept"), " ")).cast("double") / 26.0)
+    val cSpec = normalizeValue(0, length(col("concept")).cast("double") / 102.0)
     // compute_weighted_value([wmm=1, wm=14, ww=0, wc=0], ...) / 15
     val spec = (nmmSpec * 1.0 + mSpec * 14.0 + wSpec * 0.0 + cSpec * 0.0) / 15.0
 
     withMax
-      .withColumn("concept", concept)
       .withColumn("mmi_score", round(nFreq * spec * 1000.0, 2))
       .select(col("url"), col("cui"), col("concept"), col("sem_types"),
         col("freq_count"), col("mm_value"), col("mmi_score"))

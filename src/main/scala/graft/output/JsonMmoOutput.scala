@@ -3,7 +3,9 @@ package graft.output
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 
+import graft.link.LinkOptions
 import graft.pipeline.{Page, Pipeline}
+import graft.sources.MedlineReader
 import graft.umls.UmlsTables
 
 /** The reference's --JSONf document tree (generate_and_print_json,
@@ -131,7 +133,7 @@ object JsonMmoOutput {
 
   /** Build one document's JSON tree. */
   def document(url: String, text: String, umls: UmlsTables,
-      opts: graft.link.LinkOptions = graft.link.LinkOptions.default): String = {
+      opts: LinkOptions = LinkOptions.default): String = {
     val b = new java.lang.StringBuilder(4096)
     render(b, url, text, umls, opts)
     b.toString
@@ -141,7 +143,7 @@ object JsonMmoOutput {
     * own buffer, for a writer that frames many documents.
     */
   private[graft] def render(b: java.lang.StringBuilder, url: String, text: String,
-      umls: UmlsTables, opts: graft.link.LinkOptions): Unit = {
+      umls: UmlsTables, opts: LinkOptions): Unit = {
     val doc = DocTree.build(url, text, umls, opts)
     b.append("{\"Document\":{\"AAs\":")
     arr(b, doc.aas) { a =>
@@ -205,11 +207,29 @@ object JsonMmoOutput {
     b.append("}}")
   }
 
+  /** This output's record function, which the server and [[jsonDocs]]
+    * call: each record of one input cell ([[MedlineReader.records]]) is
+    * rendered into `b`, then `done` gets its url.
+    */
+  private[graft] def records(b: java.lang.StringBuilder, id: String, text: String,
+      umls: UmlsTables, opts: LinkOptions)(done: String => Unit): Unit =
+    MedlineReader.records(id, text, opts).foreach { case (url, rt) =>
+      render(b, url, rt, umls, opts)
+      done(url)
+    }
+
   /** One row per url: the full --JSONf tree. */
   def jsonDocs(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Pipeline.perPage(pages, umls)((p, text, t) => Iterator((p.url, document(p.url, text, t))))
-      .toDF("url", "json")
+    Pipeline.perDocument(pages, umls)(Pipeline.pageText) { (p, text, t) =>
+      val b = new java.lang.StringBuilder(4096)
+      val docs = Vector.newBuilder[(String, String)]
+      records(b, p.url, text, t, LinkOptions.default) { url =>
+        docs += ((url, b.toString))
+        b.setLength(0)
+      }
+      docs.result()
+    }.toDF("url", "json")
   }
 }

@@ -36,17 +36,14 @@ object JsonOutput {
   /** Human-readable output (the default CLI listing shape,
     * the reference candidate line per mention, grouped per utterance) —
     * one text block per document, built as column algebra; preferred
-    * names resolved by broadcast join like the reference's concept
-    * display. The per-phrase "Phrase:"/"Meta Mapping (score):" headers
+    * names come from the table broadcast ([[Pipeline.preferredName]]) like
+    * the reference's concept display. The per-phrase "Phrase:"/"Meta Mapping (score):" headers
     * are deliberately absent (phrase grouping lives in the MMO output,
     * which is byte-parity golden-pinned); the candidate LINE itself is
     * the reference's exact N=0 layout.
     */
   def humanReadable(mentions: DataFrame, umls: Broadcast[UmlsTables]): DataFrame = {
-    import mentions.sparkSession.implicits._
-    val prefDf = umls.value.cuiPreferred.toSeq.toDF("pc", "pname")
-    val named = mentions.join(broadcast(prefDf), col("cui") === col("pc"), "left")
-      .withColumn("concept", coalesce(col("pname"), col("cui")))
+    val named = mentions.withColumn("concept", Pipeline.preferredName(umls)(col("cui")))
     // the reference candidate line (num_display_concept_info,
     // metamap_utilities.pl:468-495, N=0 format '~t~d ~w~8| ~w~w~w~p ~w'):
     // score + status symbol right-aligned to column 8 ('N' = negated,
@@ -106,7 +103,7 @@ object JsonOutput {
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val udas = opts.udas
-    Pipeline.perPage(pages, umls) { (p, text, _) =>
+    Pipeline.perDocument(pages, umls)(Pipeline.pageText) { (p, text, _) =>
       val toks = Tokenizer.tokenize(text)
       val recs = AaDetector.findAaRecords(toks)
       val seen = scala.collection.mutable.Set[String]()

@@ -3,8 +3,9 @@ package graft.output
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 
-import graft.link.Candidate
+import graft.link.{Candidate, LinkOptions}
 import graft.pipeline.{DocKernel, Page, Pipeline}
+import graft.sources.MedlineReader
 import graft.umls.UmlsTables
 
 /** MMO machine-output term writer: the reference's --machine_output
@@ -64,12 +65,11 @@ object MmoOutput {
 
   /** Format one document's MMO term lines. */
   def document(url: String, text: String, umls: UmlsTables,
-      label: String => Int => String = u => n => s"$u.tx.$n",
-      opts: graft.link.LinkOptions = graft.link.LinkOptions.default): Vector[String] = {
+      opts: LinkOptions = LinkOptions.default): Vector[String] = {
     DocKernel.analyze(url, text, umls, opts).sentences.flatMap { sa =>
       val sent = sa.sent
       val sentText = text.substring(sent.start, sent.end)
-      val utt = s"utterance(${q(label(url)(sent.sentNo + 1))},${dq(sentText)}," +
+      val utt = s"utterance(${q(s"$url.tx.${sent.sentNo + 1}")},${dq(sentText)}," +
         s"${sent.start}/${sent.end - sent.start},[])."
       val phraseLines = sa.phrases.flatMap { p =>
         if (p.phrase.words.isEmpty) Vector.empty
@@ -95,14 +95,26 @@ object MmoOutput {
     }
   }
 
+  /** This output's record function, which the server and [[mmoLines]]
+    * call: each record of one input cell ([[MedlineReader.records]]) with
+    * its [[document]] lines.
+    */
+  def records(id: String, text: String, umls: UmlsTables,
+      opts: LinkOptions): Vector[(String, Vector[String])] =
+    MedlineReader.records(id, text, opts).map { case (url, rt) =>
+      (url, document(url, rt, umls, opts))
+    }
+
   /** Distributed writer: one row per MMO term line, in document order —
     * the shape a parity-tooling consumer diffs against the Prolog CLI.
     */
   def mmoLines(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Pipeline.perPage(pages, umls) { (p, text, t) =>
-      document(p.url, text, t).zipWithIndex.iterator.map { case (l, i) => (p.url, i, l) }
+    Pipeline.perDocument(pages, umls)(Pipeline.pageText) { (p, text, t) =>
+      records(p.url, text, t, LinkOptions.default).iterator.flatMap { case (url, lines) =>
+        lines.iterator.zipWithIndex.map { case (l, i) => (url, i, l) }
+      }
     }.toDF("url", "line_no", "mmo")
   }
 }

@@ -3,7 +3,9 @@ package graft.output
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 
+import graft.link.LinkOptions
 import graft.pipeline.{Page, Pipeline}
+import graft.sources.MedlineReader
 import graft.umls.UmlsTables
 
 /** The reference's --XMLf document element (generate_and_print_xml,
@@ -95,7 +97,7 @@ object XmlMmoOutput {
 
   /** Build one document's `<MMO>` element. */
   def document(url: String, text: String, umls: UmlsTables,
-      opts: graft.link.LinkOptions = graft.link.LinkOptions.default): String = {
+      opts: LinkOptions = LinkOptions.default): String = {
     val doc = DocTree.build(url, text, umls, opts)
 
     val aaEls = doc.aas.map { a =>
@@ -158,11 +160,21 @@ object XmlMmoOutput {
         counted("Utterances", uttEls))
   }
 
+  /** This output's record function, which the server and [[xmlDocs]]
+    * call: each record of one input cell ([[MedlineReader.records]]) with
+    * its [[document]].
+    */
+  def records(id: String, text: String, umls: UmlsTables,
+      opts: LinkOptions): Vector[(String, String)] =
+    MedlineReader.records(id, text, opts).map { case (url, rt) =>
+      (url, document(url, rt, umls, opts))
+    }
+
   /** One row per url: the full --XMLf `<MMO>` element. */
   def xmlDocs(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Pipeline.perPage(pages, umls)((p, text, t) => Iterator((p.url, document(p.url, text, t))))
-      .toDF("url", "xml")
+    Pipeline.perDocument(pages, umls)(Pipeline.pageText)((p, text, t) =>
+      records(p.url, text, t, LinkOptions.default)).toDF("url", "xml")
   }
 }

@@ -194,7 +194,7 @@ object DocKernel {
     mentions(analyze(url, text, umls, opts), umls)
 
   /** The mention rows of one input cell, the record path every entry
-    * (Graft.annotate, graft_mentions, the server) runs: the cell is
+    * (Pipeline.mentions, Graft.annotate, graft_mentions, the server) runs: the cell is
     * segmented into records under --sldi / --sldiID / --blanklines N
     * (skr_text_processing.pl:142-178; AAs stay record-local; a null id is
     * the empty id), then each record is linked as running text, or as one

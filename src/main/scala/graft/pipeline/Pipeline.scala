@@ -2,11 +2,11 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 
-import graft.link.Mention
+import graft.link.{LinkOptions, Mention}
 import graft.text.Extract
 import graft.umls.{MiniUmls, UmlsTables}
 
@@ -44,26 +44,32 @@ object Pipeline {
     }
   }
 
-  /** The page operator every page-level stage and writer runs through:
-    * the broadcast tables dereferenced once per partition, non-English
-    * rows skipped (FIXTURES.md: they yield nothing), the text extracted
-    * from the html, then `f` per page.
+  /** The per-document operator every page, table, streaming and writer
+    * entry runs through: the broadcast tables dereferenced once per
+    * partition, a row whose `text` is null skipped, then `f`, which calls
+    * a record function over the row's id and text.
     */
-  def perPage[T: Encoder](pages: Dataset[Page], umls: Broadcast[UmlsTables])(
-      f: (Page, String, UmlsTables) => IterableOnce[T]): Dataset[T] =
-    pages.mapPartitions { it =>
+  def perDocument[I, T: Encoder](rows: Dataset[I], umls: Broadcast[UmlsTables])(
+      text: I => String)(f: (I, String, UmlsTables) => IterableOnce[T]): Dataset[T] =
+    rows.mapPartitions { it =>
       val t = umls.value
-      it.flatMap(p =>
-        if (p.lang != "en") Iterator.empty else f(p, Extract.htmlToText(p.html), t))
+      it.flatMap { r =>
+        val s = text(r)
+        if (s == null) Iterator.empty else f(r, s, t)
+      }
     }
 
-  /** Stage 2: per-document mention detection. Non-English rows pass
-    * through unprocessed (FIXTURES.md: must yield no mentions).
+  /** A page's text for [[perDocument]]: extracted from its html, or null
+    * for a non-English page (FIXTURES.md: it yields nothing).
     */
+  def pageText(p: Page): String = if (p.lang != "en") null else Extract.htmlToText(p.html)
+
+  /** Stage 2: per-document mention detection on the record path. */
   def mentions(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): Dataset[Mention] = {
     import spark.implicits._
-    perPage(pages, umls)((p, text, t) => DocKernel.mentions(p.url, text, t))
+    perDocument(pages, umls)(pageText)((p, text, t) =>
+      DocKernel.annotate(p.url, text, t, LinkOptions.default))
   }
 
   /** Stage 3: WSD as window-ranked dedup per mention span (SURVEY §2.11 W1):
@@ -101,8 +107,8 @@ object Pipeline {
     * /root/reference/lib/semnet_access_2020AA.pl:37-128).
     *
     * Physical shape: the pair join is an equi-join on (url, sentNo) —
-    * partition-local after one shuffle; the semnet and preferred-name
-    * joins are broadcasts. AQE handles skew; high-frequency CUIs cannot
+    * partition-local after one shuffle; the semnet joins are
+    * broadcasts. AQE handles skew; high-frequency CUIs cannot
     * blow a single key because the join key is (url, sentNo), whose
     * cardinality scales with the corpus, not with CUI popularity.
     */
@@ -143,18 +149,22 @@ object Pipeline {
     fwd.unionByName(rev).distinct()
   }
 
+  /** A CUI column's preferred name from the table broadcast the job
+    * already holds, as `coalesce(name, cui)`: no driver-side relation of
+    * every CUI and no join. Every name lookup uses it.
+    */
+  def preferredName(umls: Broadcast[UmlsTables]): UserDefinedFunction =
+    udf((cui: String) =>
+      if (cui == null) null else umls.value.cuiPreferred.getOrElse(cui, cui))
+
   /** Stage 5: canonicalized graph materialization — one row per
     * (subj, pred, obj) with evidence counts and preferred names from the
     * broadcast MRCONSO-style map.
     */
   def graph(triples: DataFrame, umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): DataFrame = {
-    // preferred names from the table broadcast the job already holds
-    // (coalesce(name, cui): a CUI without one keeps its CUI, a null stays
-    // null) — no driver-side relation of every CUI and no second
-    // broadcast of the same map; a count prunes the lookup
-    val pref = udf((cui: String) =>
-      if (cui == null) null else umls.value.cuiPreferred.getOrElse(cui, cui))
+    // a count prunes the name lookup
+    val pref = preferredName(umls)
     // Two-stage aggregation: stage 1 keys on (triple, url), whose
     // cardinality grows with the corpus — a hot triple (popular CUI pair)
     // cannot pile onto one reducer, which is the explicit skew defusal
@@ -180,7 +190,8 @@ object Pipeline {
     */
   def run(pages: Dataset[Page])(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    perPage(pages, broadcastUmls(spark))((p, text, t) => DocTriples.fromDoc(p.url, text, t))
+    perDocument(pages, broadcastUmls(spark))(pageText)((p, text, t) =>
+      DocTriples.fromText(p.url, text, t, LinkOptions.default))
       .toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
   }
 

@@ -246,8 +246,8 @@ object MedlineReader {
     else opts.blankLines.map(SegMode.BlankLines(_))
 
   /** THE segmentation dispatch, shared by the record functions
-    * (DocKernel.annotate, DocTriples.fromText) and the server's reference
-    * writers (one copy — the id scheme must not drift between entry
+    * (DocKernel.annotate, DocTriples.fromText and the MMO/JSONf/XMLf
+    * `records`; one copy — the id scheme must not drift between entry
     * points): no mode → the text IS one document under the row id;
     * sldiID record ids are AUTHORITATIVE (the reference labels output
     * with the provided ID verbatim — id collisions across rows are the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
 
+import graft.link.LinkOptions
 import graft.pipeline.{DocTriples, Page, Pipeline}
 import graft.umls.UmlsTables
 
@@ -49,14 +50,15 @@ object StreamingPipeline {
   }
 
   /** Streaming triples: the sentence-window pair "join" never crosses a
-    * document, so it runs inside the page operator — no stream-stream join,
-    * no shuffle; the plan stays map-side until the sink.
+    * document, so it runs inside the per-document operator, on the record
+    * path of the batch run — no stream-stream join, no shuffle; the plan
+    * stays map-side until the sink. Every row keeps its page's warc_ts.
     */
   def triplesStream(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    Pipeline.perPage(pages, umls) { (p, text, t) =>
-      DocTriples.fromDoc(p.url, text, t)
+    Pipeline.perDocument(pages, umls)(Pipeline.pageText) { (p, text, t) =>
+      DocTriples.fromText(p.url, text, t, LinkOptions.default)
         .iterator.map { case (s, r, o, url, sn) => (s, r, o, url, sn, p.warc_ts) }
     }.toDF("subj_cui", "pred", "obj_cui", "url", "sentNo", "warc_ts")
   }

@@ -36,8 +36,7 @@ final case class Variant(word: String, varLevel: Int, history: String) {
   */
 final case class UmlsTables(
     // word -> index entries whose normalized string STARTS with that word
-    // (every table set here builds it with WordIndex.from)
-    firstWordIndex: Map[String, Vector[IndexEntry]],
+    firstWordIndex: WordIndex,
     // word -> index entries whose normalized string CONTAINS that word
     // (all_words analogue, used only in overmatch mode; kept for parity)
     wordCounts: Map[String, Int],
@@ -178,17 +177,11 @@ final case class UmlsTables(
     * by word id: of_one and of_two ([[firstWordsOfOne]],
     * [[firstWordsOfTwo]]), first_words ([[firstWordIndex]]) and
     * first_wordsb ([[firstWordsB]]). An entry vector no filter changes is
-    * shared, and first_words over a [[WordIndex]] is the index's own
-    * array. Null or past the end: no entries.
+    * shared, and first_words is the [[WordIndex]]'s own array. Null or
+    * past the end: no entries.
     */
   @transient lazy val indexById: Array[Array[Vector[IndexEntry]]] = {
-    val full: Array[Vector[IndexEntry]] = firstWordIndex match {
-      case wi: WordIndex => wi.entriesByPos
-      case m =>
-        val a = new Array[Vector[IndexEntry]](dict.size)
-        m.foreach { case (w, es) => a(dict.id(w)) = es }
-        a
-    }
+    val full = firstWordIndex.entriesByPos
     def derive(f: (Int, Vector[IndexEntry]) => Vector[IndexEntry]) =
       Array.tabulate(full.length)(i => if (full(i) == null) null else f(i, full(i)))
     Array(null,

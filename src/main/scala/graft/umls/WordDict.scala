@@ -92,7 +92,7 @@ private[umls] object StrSlots {
   */
 final class WordDict private (index: WordIndex, extra: Array[String]) {
 
-  private[this] val base = if (index eq null) 0 else index.keyCount
+  private[this] val base = index.keyCount
   private[this] val slots = StrSlots.build(extra)
 
   /** The number of ids. */
@@ -103,9 +103,7 @@ final class WordDict private (index: WordIndex, extra: Array[String]) {
     // the small table first: a miss there is cheap, one in a large index
     // is a cache miss
     val j = StrSlots.find(slots, extra, w)
-    if (j >= 0) base + j
-    else if (index eq null) -1
-    else index.find(w)
+    if (j >= 0) base + j else index.find(w)
   }
 
   /** [[id]] of the ASCII lowercase of the ASCII alphanumeric run
@@ -114,9 +112,7 @@ final class WordDict private (index: WordIndex, extra: Array[String]) {
     */
   def idOfLower(text: String, from: Int, to: Int, h: Int, upper: Boolean): Int = {
     val j = StrSlots.findLower(slots, extra, text, from, to, h, upper)
-    if (j >= 0) base + j
-    else if (index eq null) -1
-    else index.findLower(text, from, to, h, upper)
+    if (j >= 0) base + j else index.findLower(text, from, to, h, upper)
   }
 
   /** The word of an id; for an id from [[id]], an equal string. */
@@ -133,14 +129,9 @@ object WordDict {
   /** The dictionary over the keys of `index` and `words` (duplicates
     * and index keys among `words` are skipped).
     */
-  def build(index: Map[String, Vector[IndexEntry]], words: Iterator[String]): WordDict = {
-    val wi = index match {
-      case w: WordIndex => w
-      case _ => null
-    }
+  def build(index: WordIndex, words: Iterator[String]): WordDict = {
     val more = new java.util.LinkedHashSet[String]
-    val all = if (wi eq null) index.keysIterator ++ words else words
-    all.foreach(w => if (w != null && ((wi eq null) || wi.find(w) < 0)) more.add(w))
-    new WordDict(wi, more.toArray(new Array[String](0)))
+    words.foreach(w => if (w != null && index.find(w) < 0) more.add(w))
+    new WordDict(index, more.toArray(new Array[String](0)))
   }
 }

@@ -3,7 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.Graft
+import graft.corpus.CorpusGen
 import graft.link.LinkOptions
+import graft.pipeline.{Page, Pipeline}
+import graft.text.Extract
 
 /** The user-facing API: annotate/triples/graph over arbitrary tables and
   * the reference-flag parser.
@@ -459,6 +462,49 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
         assert(outputs("default")._1.exists(_._1 == ""))
         assert(outputs("--sldi")._1.map(_._1).toSet.intersect(Set(".0", ".1")) == Set(".0", ".1"))
         assert(!outputs.valuesIterator.exists(_._1.exists(_._1.startsWith("null"))))
+
+        // the page entries take the same record path: over the pages'
+        // (url, extracted text), Pipeline.run and Pipeline.mentions equal
+        // Graft.triples and Graft.annotate, and the Spark MMO/JSONf/XMLf
+        // writers' rows are the server's bodies. The last page has a null
+        // url, which every entry turns into the empty url
+        val nullUrl = Page(null, new java.sql.Timestamp(0L),
+          "<html><body><p>The patient had pneumonia and fever.</p></body></html>".getBytes,
+          "The patient had pneumonia and fever.", "en")
+        val pageRows = CorpusGen.pages(spark, 18, partitions = 3).collect().toVector :+
+          nullUrl.copy(url = "es", lang = "es") :+ nullUrl
+        val pages = pageRows.toDS()
+        val english = pageRows.filter(_.lang == "en") // the others yield nothing
+        val cells = english.map(p => (p.url, Extract.htmlToText(p.html))).toDF("url", "text")
+        def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toVector
+        implicit val session: org.apache.spark.sql.SparkSession = spark
+        val runT = sorted(Pipeline.run(pages))
+        assert(runT == sorted(Graft.triples(cells, "url", "text", umls = Some(serverUmls))))
+        val pageM = Pipeline.mentions(pages, serverUmls).toDF()
+        assert(sorted(pageM) == sorted(Graft.annotate(cells, "url", "text", umls = Some(serverUmls))))
+        assert(pageM.filter($"url" === "").count() > 0 && pageM.filter($"url".isNull).count() == 0)
+        assert(runT.exists(_.matches(".*,,\\d+\\]")), runT.take(3)) // the null-url page's triple
+        def grouped(df: org.apache.spark.sql.DataFrame): Map[String, Vector[String]] =
+          df.collect().toVector.groupBy(_.getString(0)).map { case (u, rs) =>
+            u -> rs.sortBy(r => if (r.length > 2) r.getInt(1) else 0).map(r => r.getString(r.length - 1))
+          }
+        val mmo = grouped(graft.output.MmoOutput.mmoLines(pages, serverUmls))
+        val jsonf = grouped(graft.output.JsonMmoOutput.jsonDocs(pages, serverUmls))
+        val xmlf = grouped(graft.output.XmlMmoOutput.xmlDocs(pages, serverUmls))
+        assert(Seq(mmo, jsonf, xmlf).forall(_.keySet == english.map(p => Option(p.url).getOrElse("")).toSet))
+        english.foreach { p =>
+          val url = Option(p.url).getOrElse("")
+          def body(format: String): String = {
+            c.send(postReq(s"/annotate?id=${java.net.URLEncoder.encode(url, "UTF-8")}&format=$format",
+              Extract.htmlToText(p.html)))
+            val (code, resp) = c.read()
+            assert(code == 200, resp)
+            resp
+          }
+          assert(body("mmo") == mmo(url).mkString("", "\n", "\n"), url)
+          assert(body("jsonf") == jsonf(url).mkString("[", ",", "]"), url)
+          assert(body("xmlf") == xmlf(url).mkString("<MMOs>", "", "</MMOs>"), url)
+        }
       }
     }
   }

@@ -65,6 +65,11 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     implicit val s = spark
     val p = plan(graft.pipeline.Pipeline.run(graft.corpus.CorpusGen.pages(spark, 10)))
     assert(!p.contains("Exchange"), s"map-side triple path acquired a shuffle:\n$p")
+    // one per-document operator, extraction inside it: one MapPartitions
+    // and one object (de)serialization around the page generator's map
+    def count(node: String) = s"\\b$node\\b".r.findAllIn(p).length
+    assert(count("MapPartitions") == 1 && count("DeserializeToObject") == 1 &&
+      count("SerializeFromObject") == 1, p)
   }
 
   test("dedup LSH: single signature pass, bucket-grouped pairs, no self-join") {
