@@ -37,17 +37,9 @@ object KgQueries {
     * DuckDB oracle — this is the shuffle stage the 100 TB plan cares
     * about, now under the hard rows+schema+hash signal.
     */
-  def kgWsdDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("url"), col("sentNo"), col("start"), col("len"))
-      .orderBy(col("score").desc, col("st_prio"), col("cui"))
-    KgOracleTables.ensure(spark, sfDir)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("url"), col("sentNo"), col("start"), col("len"),
-        col("cui"), col("score"), col("negated"))
-  }
+  def kgWsdDedup(spark: SparkSession, sfDir: String): DataFrame =
+    Pipeline.wsdWindow(KgOracleTables.ensure(spark, sfDir), "st_prio")
+      .select("url", "sentNo", "start", "len", "cui", "score", "negated")
 
   def kgTriples(spark: SparkSession, sfDir: String): DataFrame = {
     implicit val s = spark
@@ -327,7 +319,7 @@ object KgQueries {
     // url = "<pmid>.<field>", so (url, sentNo) is the `<id>.<ti|ab>.<n>` label
     val fields = sources.MedlineReader.textFields(raw)
       .select(concat_ws(".", col("pmid"), col("field")).as("url"), col("text"))
-    graft.api.Graft.annotate(fields, "url", "text", umls = Some(umls))
+    graft.api.Graft.annotate(fields, "url", "text", umls)
       .orderBy("url", "sentNo", "start", "cui")
   }
 
@@ -338,7 +330,8 @@ object KgQueries {
     import spark.implicits._
     val terms = graft.umls.MiniUmls.concepts
       .flatMap { case (cui, _, _, strs) => strs.map(s => (cui + "|" + s, s)) }
-    graft.api.Graft.annotateTerms(terms.toDF("id", "term"), "id", "term")
+    graft.api.Graft.annotateTerms(terms.toDF("id", "term"), "id", "term",
+      Pipeline.broadcastUmls(spark))
   }
 
   /** Negated mentions only (N1 NegEx at the driver gate). */
@@ -399,7 +392,7 @@ object KgQueries {
     // streaming==batch equivalence under the driver's hard signal (the
     // sbt StreamingSpec pins it too)
     KgOracleTables.ensure(spark, sfDir)
-    streaming.StreamingPipeline.runBounded(spark, pagesFor(sfDir))
+    streaming.StreamingPipeline.runBounded(spark, pagesFor(sfDir), Pipeline.broadcastUmls(spark))
       .orderBy("subj_cui", "pred", "obj_cui", "url", "sentNo")
   }
 

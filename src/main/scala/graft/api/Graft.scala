@@ -189,27 +189,26 @@ object Graft {
   /** Register the NLP surface as SQL functions on a session, so pure-SQL
     * users get the same kernel:
     * {{{
-    *   Graft.registerSql(spark)
+    *   Graft.registerSql(spark, umls)
     *   spark.sql("""SELECT id, m.cui, m.score, m.negated
     *                FROM docs LATERAL VIEW explode(graft_mentions(id, body)) AS m""")
     * }}}
     * `graft_mentions(id, text)` returns the full typed mention array;
     * `graft_triples(id, text)` the document-local triples. Both run the
     * same record path as [[annotate]] and [[triples]], so `opts`'
-    * segmentation, -z and the null-id rule apply. The broadcast tables
-    * are captured once at registration.
+    * segmentation, -z and the null-id rule apply, over the table set
+    * `umls`.
     */
-  def registerSql(spark: SparkSession, opts: LinkOptions = LinkOptions.default,
-      umls: Option[Broadcast[UmlsTables]] = None): Unit = {
-    val bc = umls.getOrElse(Pipeline.broadcastUmls(spark))
+  def registerSql(spark: SparkSession, umls: Broadcast[UmlsTables],
+      opts: LinkOptions = LinkOptions.default): Unit = {
     spark.udf.register("graft_mentions",
       org.apache.spark.sql.functions.udf((id: String, text: String) =>
         if (text == null) Seq.empty[Mention]
-        else DocKernel.annotate(id, text, bc.value, opts)))
+        else DocKernel.annotate(id, text, umls.value, opts)))
     spark.udf.register("graft_triples",
       org.apache.spark.sql.functions.udf((id: String, text: String) =>
         if (text == null) Seq.empty[(String, String, String, String, Int)]
-        else DocTriples.fromText(id, text, bc.value, opts)))
+        else DocTriples.fromText(id, text, umls.value, opts)))
   }
 
   /** A table's cells as the documents of [[Pipeline.perDocument]]: (id
@@ -228,12 +227,10 @@ object Graft {
     * tables, through the operator and record function of
     * Pipeline.mentions, free of the Page schema.
     */
-  def annotate(df: DataFrame, idCol: String, textCol: String,
-      opts: LinkOptions = LinkOptions.default,
-      umls: Option[Broadcast[UmlsTables]] = None): DataFrame = {
+  def annotate(df: DataFrame, idCol: String, textCol: String, umls: Broadcast[UmlsTables],
+      opts: LinkOptions = LinkOptions.default): DataFrame = {
     import df.sparkSession.implicits._
-    Pipeline.perDocument(cells(df, idCol, textCol),
-      umls.getOrElse(Pipeline.broadcastUmls(df.sparkSession)))(_._2)((c, text, t) =>
+    Pipeline.perDocument(cells(df, idCol, textCol), umls)(_._2)((c, text, t) =>
       DocKernel.annotate(c._1, text, t, opts)).toDF()
   }
 
@@ -241,30 +238,23 @@ object Graft {
     * best-coverage candidates (F6) link it to concepts. The batch
     * dictionary-lookup mode.
     */
-  def annotateTerms(df: DataFrame, idCol: String, termCol: String,
-      opts: LinkOptions = LinkOptions.default,
-      umls: Option[Broadcast[UmlsTables]] = None): DataFrame =
-    annotate(df, idCol, termCol, opts.copy(termProcessing = true), umls)
+  def annotateTerms(df: DataFrame, idCol: String, termCol: String, umls: Broadcast[UmlsTables],
+      opts: LinkOptions = LinkOptions.default): DataFrame =
+    annotate(df, idCol, termCol, umls, opts.copy(termProcessing = true))
 
   /** Triples from any table, map-side end to end (document-local WSD +
     * sentence-window pairing; see DocTriples).
     */
-  def triples(df: DataFrame, idCol: String, textCol: String,
-      opts: LinkOptions = LinkOptions.default,
-      umls: Option[Broadcast[UmlsTables]] = None): DataFrame = {
+  def triples(df: DataFrame, idCol: String, textCol: String, umls: Broadcast[UmlsTables],
+      opts: LinkOptions = LinkOptions.default): DataFrame = {
     import df.sparkSession.implicits._
-    Pipeline.perDocument(cells(df, idCol, textCol),
-      umls.getOrElse(Pipeline.broadcastUmls(df.sparkSession)))(_._2)((c, text, t) =>
+    Pipeline.perDocument(cells(df, idCol, textCol), umls)(_._2)((c, text, t) =>
       DocTriples.fromText(c._1, text, t, opts))
       .toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
   }
 
   /** Canonicalized graph from any table (annotate -> triples -> rollup). */
-  def graph(df: DataFrame, idCol: String, textCol: String,
-      opts: LinkOptions = LinkOptions.default): DataFrame = {
-    val spark = df.sparkSession
-    implicit val s: SparkSession = spark
-    val bc = Pipeline.broadcastUmls(spark)
-    Pipeline.graph(triples(df, idCol, textCol, opts, Some(bc)), bc)
-  }
+  def graph(df: DataFrame, idCol: String, textCol: String, umls: Broadcast[UmlsTables],
+      opts: LinkOptions = LinkOptions.default): DataFrame =
+    Pipeline.graph(triples(df, idCol, textCol, umls, opts), umls)(df.sparkSession)
 }

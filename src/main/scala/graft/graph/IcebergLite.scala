@@ -199,26 +199,26 @@ object IcebergLite {
     // self-heal orphaned buckets: a crash between a successful append
     // job and the manifest write leaves data for buckets the manifest
     // never committed; retrying without cleanup would append a SECOND
-    // copy of those rows (reads then return both). Before writing,
-    // delete any bucket directory on disk that is not committed — all
-    // legitimately-present data is, by construction.
-    {
-      if (Files.isDirectory(dataDir)) {
-        val stream = Files.list(dataDir)
-        val orphans =
-          try stream.iterator().asScala.filter { d =>
-            val n = d.getFileName.toString
-            n.startsWith("part_bucket=") &&
-              scala.util.Try(n.stripPrefix("part_bucket=").toInt).toOption
-                .exists(b => !committed.contains(b))
-          }.toVector
-          finally stream.close()
-        orphans.foreach { d =>
-          val walk = Files.walk(d)
-          try walk.iterator().asScala.toVector.reverseIterator
-            .foreach(Files.deleteIfExists(_))
-          finally walk.close()
-        }
+    // copy of those rows (reads then return both). A job killed after a
+    // task commit but before its job commit leaves the committer's
+    // staging dir, `data/_temporary`, whose task dirs the next job
+    // commit would merge into the table. Before writing, delete both:
+    // all legitimately-present data is committed, and a successful job
+    // commit removes its own staging dir.
+    if (Files.isDirectory(dataDir)) {
+      val stream = Files.list(dataDir)
+      val orphans =
+        try stream.iterator().asScala.filter { d =>
+          val n = d.getFileName.toString
+          n == "_temporary" || (n.startsWith("part_bucket=") &&
+            n.stripPrefix("part_bucket=").toIntOption.exists(b => !committed.contains(b)))
+        }.toVector
+        finally stream.close()
+      orphans.foreach { d =>
+        val walk = Files.walk(d)
+        try walk.iterator().asScala.toVector.reverseIterator
+          .foreach(Files.deleteIfExists(_))
+        finally walk.close()
       }
     }
 

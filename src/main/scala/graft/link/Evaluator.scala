@@ -7,13 +7,6 @@ import graft.umls.{IndexEntry, UmlsTables}
   */
 object Evaluator {
 
-  /** The reference's documented --prune recommendation (skr.pl:2776-2781).
-    * NOT the live default: absent an explicit --prune, the threshold is
-    * adaptive ([[Pruning.adaptivePrune]], G1) — it backtracks from the
-    * candidate count until the grid sparseness test passes.
-    */
-  val PruneThreshold = 30
-
   /** Candidate retrieval (add_candidates/9, metamap_candidates.pl:107-205):
     * probe the broadcast first-word index with every variant first word,
     * post-filter retrieved strings whose normalized words must contain the

@@ -15,9 +15,9 @@ import graft.umls.UmlsTables
   * generate_MMO_terms. Pure function over one document plus the broadcast
   * UMLS tables — embarrassingly parallel, no cross-document state (AAs
   * are document-local, SURVEY §2.3). Runs inside `mapPartitions` on
-  * executors; emits ALL best-mapping candidates — the WSD pass
-  * (window-ranked dedup per span) happens corpus-level in the DataFrame
-  * plan (SURVEY §2.11 W1).
+  * executors; emits ALL best-mapping candidates unless -y is on. The WSD
+  * pass (one concept per span, SURVEY §2.11 W1) runs inside the document
+  * too: -y and every triple path call [[DocTriples.wsdLocal]].
   */
 object DocKernel {
 

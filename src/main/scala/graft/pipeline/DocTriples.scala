@@ -11,10 +11,11 @@ import graft.umls.UmlsTables
   * map eliminates the corpus-level shuffle entirely: the batch plan stays
   * map-side from scan to sink, which is why the pipeline scales linearly
   * with executors (BENCH/BASELINE.md). The equivalent corpus-level
-  * DataFrame forms (window-ranked dedup, salted self-join) are kept in
-  * Pipeline and verified to produce identical results (PipelineSpec) —
-  * they are the right shape when mentions arrive WITHOUT document
-  * locality, e.g. reading a pre-extracted mention table.
+  * DataFrame forms (window-ranked dedup; `Pipeline.triples`, a plain
+  * equi-join on (url, sentNo)) are kept in Pipeline and verified to
+  * produce identical results (PipelineSpec) — they are the right shape
+  * when mentions arrive WITHOUT document locality, e.g. reading a
+  * pre-extracted mention table.
   */
 object DocTriples {
 

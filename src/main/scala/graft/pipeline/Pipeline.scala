@@ -32,7 +32,8 @@ object Pipeline {
 
   /** The broadcast of `MiniUmls.tables` on `spark`'s SparkContext: one per
     * live context, made on first use and made again once that context has
-    * stopped, so every run, query and API call of a session shares it.
+    * stopped, so every gate query and test of a session shares it. No
+    * library entry calls it: each takes the table broadcast it runs on.
     */
   def broadcastUmls(spark: SparkSession): Broadcast[UmlsTables] = synchronized {
     val sc = spark.sparkContext
@@ -72,11 +73,6 @@ object Pipeline {
       DocKernel.annotate(p.url, text, t, LinkOptions.default))
   }
 
-  /** Stage 3: WSD as window-ranked dedup per mention span (SURVEY §2.11 W1):
-    * exactly one CUI survives per (url, sent, start, len); ties broken by
-    * score desc, then semantic-type prior, then CUI — all deterministic, so
-    * results are invariant under repartitioning.
-    */
   /** The WSD tie-break prior over a mention's semTypes column, as pure
     * column algebra (no UDF): the priority table is ~130 entries at real
     * scale — a map literal keeps the plan constant and the projection
@@ -88,16 +84,23 @@ object Pipeline {
       st => coalesce(element_at(prioMap, st), lit(99)))), lit(99))
   }
 
+  /** Stage 3: WSD as window-ranked dedup per mention span (SURVEY §2.11 W1):
+    * exactly one CUI survives per (url, sent, start, len); ties broken by
+    * score desc, then semantic-type prior, then CUI — all deterministic, so
+    * results are invariant under repartitioning.
+    */
   def wsdDedup(mentions: Dataset[Mention], umls: Broadcast[UmlsTables])(
-      implicit spark: SparkSession): DataFrame = {
-    val stPrio = stPrioCol(umls.value)
+      implicit spark: SparkSession): DataFrame =
+    wsdWindow(mentions.toDF().withColumn("stPrio", stPrioCol(umls.value)), "stPrio")
+      .drop("stPrio")
+
+  /** [[wsdDedup]]'s window over a mention table whose prior is column
+    * `prio`; the gate's `kg_wsd_dedup` reads that column from its checkpoint.
+    */
+  def wsdWindow(mentions: DataFrame, prio: String): DataFrame = {
     val w = Window.partitionBy(col("url"), col("sentNo"), col("start"), col("len"))
-      .orderBy(col("score").desc, col("stPrio"), col("cui"))
-    mentions.toDF()
-      .withColumn("stPrio", stPrio)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .drop("rk", "stPrio")
+      .orderBy(col("score").desc, col(prio), col("cui"))
+    mentions.withColumn("rk", row_number().over(w)).filter(col("rk") === 1).drop("rk")
   }
 
   /** Stage 4: triples. Non-negated mentions pair within (url, sentNo) in
@@ -188,21 +191,23 @@ object Pipeline {
     * that arrive without document locality, and runShuffled() verifies
     * both paths agree (PipelineSpec).
     */
-  def run(pages: Dataset[Page])(implicit spark: SparkSession): DataFrame = {
+  def run(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
+      implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    perDocument(pages, broadcastUmls(spark))(pageText)((p, text, t) =>
+    perDocument(pages, umls)(pageText)((p, text, t) =>
       DocTriples.fromText(p.url, text, t, LinkOptions.default))
       .toDF("subj_cui", "pred", "obj_cui", "url", "sentNo")
   }
+
+  /** [[run]] on the fixture tables ([[broadcastUmls]]). */
+  def run(pages: Dataset[Page])(implicit spark: SparkSession): DataFrame =
+    run(pages, broadcastUmls(spark))
 
   /** The corpus-level shuffled form: window-ranked WSD + sentence-window
     * self-join. Result-identical to run(); used when mentions are read
     * from a table rather than produced in-document.
     */
-  def runShuffled(pages: Dataset[Page])(implicit spark: SparkSession): DataFrame = {
-    val umls = broadcastUmls(spark)
-    val ms = mentions(pages, umls)
-    val deduped = wsdDedup(ms, umls)
-    triples(deduped, umls)
-  }
+  def runShuffled(pages: Dataset[Page], umls: Broadcast[UmlsTables])(
+      implicit spark: SparkSession): DataFrame =
+    triples(wsdDedup(mentions(pages, umls), umls), umls)
 }

@@ -29,13 +29,12 @@ object StreamingPipeline {
     * equality; this entry keeps the streaming subsystem visible in the
     * driver's hard signal (rows-only).
     */
-  def runBounded(spark: SparkSession, nPages: Long): DataFrame = {
+  def runBounded(spark: SparkSession, nPages: Long, umls: Broadcast[UmlsTables]): DataFrame = {
     implicit val s: SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val stream = MemoryStream[Page]
-    val umls = graft.pipeline.Pipeline.broadcastUmls(spark)
     val name = s"kg_stream_gate_${boundedRuns.incrementAndGet()}"
     val q = triplesStream(stream.toDS(), umls).writeStream
       .format("memory").queryName(name).outputMode("append").start()
@@ -70,9 +69,9 @@ object StreamingPipeline {
     * at-least-once window):
     *  - earlier attempt fully committed (manifest present): write() resume
     *    makes the replay a no-op;
-    *  - earlier attempt died between parquet append and manifest commit
-    *    (orphan data, no manifest): the batch dir is wiped and rewritten —
-    *    uncommitted data was never readable, so the rewrite is safe.
+    *  - earlier attempt died before its manifest commit (orphan data, no
+    *    manifest): write()'s orphan cleanup deletes what it left and the
+    *    batch is rewritten — uncommitted data was never readable.
     * The checkpoint defaults to root/_checkpoint so batch ids stay
     * monotonic across restarts (a FRESH checkpoint against an existing
     * root would reuse batch ids for different data — callers overriding
@@ -87,13 +86,8 @@ object StreamingPipeline {
       .option("checkpointLocation",
         java.nio.file.Paths.get(root, "_checkpoint").toString)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val dir = java.nio.file.Paths.get(root, s"batch-$batchId")
-        if (java.nio.file.Files.exists(dir) &&
-          graft.graph.IcebergLite.latestSnapshot(dir.toString).isEmpty) {
-          // orphaned partial attempt: never committed, never readable
-          org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-        }
-        graft.graph.IcebergLite.write(batch, dir.toString)
+        graft.graph.IcebergLite.write(batch,
+          java.nio.file.Paths.get(root, s"batch-$batchId").toString)
         ()
       }
 

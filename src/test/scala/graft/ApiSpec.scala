@@ -2,16 +2,23 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import graft.api.Graft
 import graft.corpus.CorpusGen
 import graft.link.LinkOptions
-import graft.pipeline.{Page, Pipeline}
+import graft.pipeline.{DocKernel, DocTriples, Page, Pipeline}
+import graft.streaming.StreamingPipeline
 import graft.text.Extract
+import graft.umls.{MiniUmls, UmlsTables, WordIndex}
 
 /** The user-facing API: annotate/triples/graph over arbitrary tables and
   * the reference-flag parser.
   */
 class ApiSpec extends AnyFunSuite with SparkTestBase {
+
+  private lazy val umls = Pipeline.broadcastUmls(spark)
 
   test("parseFlags maps reference CLI options to LinkOptions") {
     assert(Graft.parseFlags(Seq("-i", "-o", "--conj")) ==
@@ -30,7 +37,7 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
   test("annotate accepts non-string id columns (bigint doc_id)") {
     import spark.implicits._
     val df = Seq((7L, "The patient had a heart attack.")).toDF("doc_id", "body")
-    val ms = Graft.annotate(df, "doc_id", "body").collect()
+    val ms = Graft.annotate(df, "doc_id", "body", umls).collect()
     assert(ms.exists(r => r.getAs[String]("url") == "7" &&
       r.getAs[String]("cui") == "C0027051"))
   }
@@ -39,25 +46,25 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     // -z dispatches from the flag-driven annotate entry too
     val viaFlags = Graft.annotate(
-      Seq(("t1", "heart attack")).toDF("id", "term"), "id", "term",
+      Seq(("t1", "heart attack")).toDF("id", "term"), "id", "term", umls,
       Graft.parseFlags(Seq("-z")))
     assert(viaFlags.collect().map(_.getAs[String]("cui")).toSet == Set("C0027051"))
     // F4 filters apply in term mode: excluding dsyn drops C0027051 and
     // the bpoc Heart partial becomes the best-coverage survivor
     val excl = Graft.annotateTerms(
-      Seq(("t1", "heart attack")).toDF("id", "term"), "id", "term",
+      Seq(("t1", "heart attack")).toDF("id", "term"), "id", "term", umls,
       Graft.parseFlags(Seq("-k", "dsyn")))
     assert(excl.collect().map(_.getAs[String]("cui")).toSet == Set("C0018787"))
     // and a threshold kills everything
     assert(Graft.annotateTerms(
-      Seq(("t1", "heart attack")).toDF("id", "term"), "id", "term",
+      Seq(("t1", "heart attack")).toDF("id", "term"), "id", "term", umls,
       Graft.parseFlags(Seq("-r", "1001"))).count() == 0)
     val df = Seq(
       ("t1", "heart attack"),
       ("t2", "myocardial infarction"),
       ("t3", "coronary artery disease"),
       ("t4", "zzz unknown zzz")).toDF("id", "term")
-    val rows = Graft.annotateTerms(df, "id", "term").collect()
+    val rows = Graft.annotateTerms(df, "id", "term", umls).collect()
     def cuis(id: String) = rows.filter(_.getAs[String]("url") == id)
       .map(_.getAs[String]("cui")).toSet
     assert(cuis("t1") == Set("C0027051")) // synonym variant; no partial 'heart' hit
@@ -74,7 +81,7 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
     val terms = graft.umls.MiniUmls.concepts
       .flatMap { case (cui, _, _, strs) => strs.map(str => (cui, str)) }
     val df = terms.toDF("id", "term")
-    val got = Graft.annotateTerms(df, "id", "term")
+    val got = Graft.annotateTerms(df, "id", "term", umls)
       .select("url", "cui", "score").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
     terms.foreach { case (cui, str) =>
@@ -85,7 +92,7 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
 
   test("SQL registration: graft_mentions/graft_triples run from pure SQL") {
     import spark.implicits._
-    Graft.registerSql(spark)
+    Graft.registerSql(spark, umls)
     Seq(("d1", "The patient had a heart attack."),
       ("d2", "No evidence of myocardial infarction."))
       .toDF("id", "body").createOrReplaceTempView("g_docs")
@@ -101,7 +108,7 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
       """SELECT t.* FROM g_docs LATERAL VIEW explode(graft_triples(id, body)) AS t""")
       .collect()
     // SQL path must agree with the library path on the same rows
-    val lib = Graft.triples(spark.table("g_docs"), "id", "body").count()
+    val lib = Graft.triples(spark.table("g_docs"), "id", "body", umls).count()
     assert(ts.length.toLong == lib)
   }
 
@@ -111,7 +118,7 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
       ("d1", "The patient had a heart attack."),
       ("d2", "No evidence of myocardial infarction."),
       ("d3", null.asInstanceOf[String])).toDF("id", "body")
-    val ms = Graft.annotate(df, "id", "body")
+    val ms = Graft.annotate(df, "id", "body", umls)
     val rows = ms.collect()
     assert(rows.exists(r => r.getAs[String]("url") == "d1" &&
       r.getAs[String]("cui") == "C0027051" && !r.getAs[Boolean]("negated")))
@@ -125,15 +132,15 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
     val df = Seq(
       ("d1", "The patient had pneumonia and fever."),
       ("d2", "The patient had pneumonia and fever.")).toDF("id", "body")
-    val t = Graft.triples(df, "id", "body").collect()
+    val t = Graft.triples(df, "id", "body", umls).collect()
     assert(t.exists(r => r.getAs[String]("subj_cui") == "C0032285" &&
       r.getAs[String]("pred") == "causes" && r.getAs[String]("obj_cui") == "C0015967"))
-    val g = Graft.graph(df, "id", "body")
+    val g = Graft.graph(df, "id", "body", umls)
     val row = g.filter("subj_cui = 'C0032285' and pred = 'causes'").collect()
     assert(row.length == 1 && row.head.getAs[Long]("n_docs") == 2L)
     assert(row.head.getAs[String]("subj_name") == "Pneumonia")
     // a threshold of 1001 kills every mention -> no triples
-    val none = Graft.triples(df, "id", "body", Graft.parseFlags(Seq("-r", "1001")))
+    val none = Graft.triples(df, "id", "body", umls, Graft.parseFlags(Seq("-r", "1001")))
     assert(none.count() == 0)
   }
 
@@ -262,10 +269,10 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
     s"POST $path HTTP/1.1\r\nHost: 127.0.0.1\r\n$headers" +
       s"Content-Length: ${body.getBytes("UTF-8").length}\r\n\r\n$body"
 
-  private lazy val serverUmls = graft.pipeline.Pipeline.broadcastUmls(spark)
+  private def withServer[T](f: graft.api.GraftServer.Handle => T): T = withServerOn(umls)(f)
 
-  private def withServer(f: graft.api.GraftServer.Handle => Unit): Unit = {
-    val handle = graft.api.GraftServer.start(spark, umls = Some(serverUmls))
+  private def withServerOn[T](tables: Broadcast[UmlsTables])(f: graft.api.GraftServer.Handle => T): T = {
+    val handle = graft.api.GraftServer.start(spark, umls = Some(tables))
     try f(handle) finally handle.stop()
   }
 
@@ -376,9 +383,23 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
   /** (subj_cui, pred, obj_cui, url, sentNo) */
   private type RecordTriple = (String, String, String, String, Int)
 
+  /** The fixture tables without the index entries of one concept the
+    * documents below link (Fever) and with another one (Pneumonia)
+    * renamed: an entry that fell back to the fixture would show both.
+    */
+  private val Dropped = "C0015967"
+  private val NewName = "Probe Pneumonia"
+  private lazy val probeUmls = {
+    val t = MiniUmls.tables
+    spark.sparkContext.broadcast(t.copy(
+      firstWordIndex = WordIndex.from(t.firstWordIndex.valuesIterator.flatten.filter(_.cui != Dropped)),
+      cuiPreferred = t.cuiPreferred.updated("C0032285", NewName)))
+  }
+
   test("the record path agrees: annotate/triples, graft_* SQL and the server under segmentation and -z") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
+    implicit val session: SparkSession = spark
     // every line is ID|Text so --sldiID accepts each document; "aa"
     // defines CA on line 1 and reuses it on line 2, "tx" has a blank
     // line for --blanklines 1, and the last row has a null id (the
@@ -392,120 +413,188 @@ class ApiSpec extends AnyFunSuite with SparkTestBase {
     val json = new com.fasterxml.jackson.databind.ObjectMapper()
     def rows(body: String) = json.readTree(body).elements.asScala.toVector
     val df = docs.toDF("id", "body")
-    withServer { handle =>
-      withConn(handle.port) { c =>
-        def post(path: String, id: String, flags: Seq[String], body: String): String = {
-          val q = if (flags.isEmpty) "" else "&flags=" + flags.mkString("%20")
-          c.send(postReq(s"$path?id=$id$q", body))
-          val (code, resp) = c.read()
-          assert(code == 200, resp)
-          resp
-        }
-        val outputs = profiles.map { flags =>
-          val opts = Graft.parseFlags(flags)
-          val lib: Vector[RecordMention] = Graft.annotate(df, "id", "body", opts, Some(serverUmls))
-            .as[graft.link.Mention].collect().toVector
-            .map(m => (String.valueOf(m.url), m.sentNo, m.start, m.len, m.cui, m.score, m.negated))
-          val libT = Graft.triples(df, "id", "body", opts, Some(serverUmls))
-            .as[(String, String, String, String, Int)].collect().toVector
-          // a fresh session per profile: re-registering graft_* on one
-          // session would replace its functions
-          val session = spark.newSession()
-          Graft.registerSql(session, opts, Some(serverUmls))
-          session.createDataFrame(docs).toDF("id", "body").createOrReplaceTempView("rp_docs")
-          val sql = session.sql(
-            "SELECT graft_mentions(id, body) AS ms, graft_triples(id, body) AS ts FROM rp_docs")
-            .collect().toVector
-          val sqlM: Vector[RecordMention] = sql.flatMap(_.getSeq[org.apache.spark.sql.Row](0)).map(r =>
-            (String.valueOf(r.getAs[String]("url")), r.getAs[Int]("sentNo"), r.getAs[Int]("start"),
-              r.getAs[Int]("len"), r.getAs[String]("cui"), r.getAs[Int]("score"),
-              r.getAs[Boolean]("negated")))
-          val sqlT: Vector[RecordTriple] = sql.flatMap(_.getSeq[org.apache.spark.sql.Row](1)).map(r =>
-            (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
-          val srvM: Vector[RecordMention] = docs.flatMap { case (id, body) =>
-            rows(post("/annotate", Option(id).getOrElse(""), flags, body)).map(n =>
-              (n.get("url").asText, n.get("sentNo").asInt, n.get("start").asInt,
-                n.get("len").asInt, n.get("cui").asText, n.get("score").asInt,
-                n.get("negated").asBoolean))
-          }.toVector
-          val srvT: Vector[RecordTriple] = docs.flatMap { case (id, body) =>
-            rows(post("/triples", Option(id).getOrElse(""), flags, body)).map(n =>
-              (n.get("subj_cui").asText, n.get("pred").asText, n.get("obj_cui").asText,
-                n.get("url").asText, n.get("sentNo").asInt))
-          }.toVector
-          val name = if (flags.isEmpty) "default" else flags.mkString(" ")
-          val m = lib.sorted
-          assert(m.nonEmpty, name)
-          assert(sqlM.sorted == m, s"$name: graft_mentions ${sqlM.sorted} vs annotate $m")
-          assert(srvM.sorted == m, s"$name: /annotate ${srvM.sorted} vs annotate $m")
-          val t = libT.sorted
-          assert(sqlT.sorted == t, s"$name: graft_triples ${sqlT.sorted} vs triples $t")
-          assert(srvT.sorted == t, s"$name: /triples ${srvT.sorted} vs triples $t")
-          name -> (m, t)
-        }.toMap
-        // the profiles really differ: segmentation qualifies urls and
-        // breaks the cross-line AA, -z links terms
-        val default = outputs("default")._1
-        Seq("--sldi", "--sldiID", "--blanklines 1", "-z").foreach { p =>
-          assert(outputs(p)._1 != default, p)
-        }
-        // line 2's CA links through line 1's AA only when both lines are
-        // one record
-        val aaText = docs.head._2
-        assert(outputs("default")._1.exists(m =>
-          m._1 == "aa" && m._3 == aaText.lastIndexOf("CA") && m._4 == 2))
-        assert(!outputs("--sldi")._1.exists(m => m._1 == "aa.1" && m._3 == 3 && m._4 == 2))
-        assert(outputs("default")._2.exists(_._2 == "causes"))
-        assert(outputs("--sldi")._2.exists(_._4 == "tx.0"))
-        // a null id is the empty id at every entry, never null or "null"
-        // (urls above pass through String.valueOf so a null shows as one)
-        assert(outputs("default")._1.exists(_._1 == ""))
-        assert(outputs("--sldi")._1.map(_._1).toSet.intersect(Set(".0", ".1")) == Set(".0", ".1"))
-        assert(!outputs.valuesIterator.exists(_._1.exists(_._1.startsWith("null"))))
+    val terms = Seq("t1" -> "fever", "t2" -> "heart attack")
+    // the page entries run over the pages' (url, extracted text) cells;
+    // the last page has a null url, which every entry turns into the
+    // empty url
+    val nullUrl = Page(null, new java.sql.Timestamp(0L),
+      "<html><body><p>The patient had pneumonia and fever.</p></body></html>".getBytes,
+      "The patient had pneumonia and fever.", "en")
+    val nStream = 18
+    val pageRows = CorpusGen.pages(spark, nStream, partitions = 3).collect().toVector :+
+      nullUrl.copy(url = "es", lang = "es") :+ nullUrl
+    val pages = pageRows.toDS()
+    val english = pageRows.filter(_.lang == "en") // the others yield nothing
+    val cells = english.map(p => (p.url, Extract.htmlToText(p.html))).toDF("url", "text")
+    def strings(df: DataFrame) = df.collect().map(_.toString).sorted.toVector
+    def triplesOf(df: DataFrame): Vector[RecordTriple] =
+      df.select("subj_cui", "pred", "obj_cui", "url", "sentNo").as[RecordTriple].collect().toVector.sorted
+    def record(m: graft.link.Mention): RecordMention =
+      (String.valueOf(m.url), m.sentNo, m.start, m.len, m.cui, m.score, m.negated)
 
-        // the page entries take the same record path: over the pages'
-        // (url, extracted text), Pipeline.run and Pipeline.mentions equal
-        // Graft.triples and Graft.annotate, and the Spark MMO/JSONf/XMLf
-        // writers' rows are the server's bodies. The last page has a null
-        // url, which every entry turns into the empty url
-        val nullUrl = Page(null, new java.sql.Timestamp(0L),
-          "<html><body><p>The patient had pneumonia and fever.</p></body></html>".getBytes,
-          "The patient had pneumonia and fever.", "en")
-        val pageRows = CorpusGen.pages(spark, 18, partitions = 3).collect().toVector :+
-          nullUrl.copy(url = "es", lang = "es") :+ nullUrl
-        val pages = pageRows.toDS()
-        val english = pageRows.filter(_.lang == "en") // the others yield nothing
-        val cells = english.map(p => (p.url, Extract.htmlToText(p.html))).toDF("url", "text")
-        def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toVector
-        implicit val session: org.apache.spark.sql.SparkSession = spark
-        val runT = sorted(Pipeline.run(pages))
-        assert(runT == sorted(Graft.triples(cells, "url", "text", umls = Some(serverUmls))))
-        val pageM = Pipeline.mentions(pages, serverUmls).toDF()
-        assert(sorted(pageM) == sorted(Graft.annotate(cells, "url", "text", umls = Some(serverUmls))))
-        assert(pageM.filter($"url" === "").count() > 0 && pageM.filter($"url".isNull).count() == 0)
-        assert(runT.exists(_.matches(".*,,\\d+\\]")), runT.take(3)) // the null-url page's triple
-        def grouped(df: org.apache.spark.sql.DataFrame): Map[String, Vector[String]] =
-          df.collect().toVector.groupBy(_.getString(0)).map { case (u, rs) =>
-            u -> rs.sortBy(r => if (r.length > 2) r.getInt(1) else 0).map(r => r.getString(r.length - 1))
-          }
-        val mmo = grouped(graft.output.MmoOutput.mmoLines(pages, serverUmls))
-        val jsonf = grouped(graft.output.JsonMmoOutput.jsonDocs(pages, serverUmls))
-        val xmlf = grouped(graft.output.XmlMmoOutput.xmlDocs(pages, serverUmls))
-        assert(Seq(mmo, jsonf, xmlf).forall(_.keySet == english.map(p => Option(p.url).getOrElse("")).toSet))
-        english.foreach { p =>
-          val url = Option(p.url).getOrElse("")
-          def body(format: String): String = {
-            c.send(postReq(s"/annotate?id=${java.net.URLEncoder.encode(url, "UTF-8")}&format=$format",
-              Extract.htmlToText(p.html)))
+    /** Every entry's rows on `tables`, by entry, once each equals the
+      * record functions' output on `tables`; and per profile the
+      * (mentions, triples) of the table entries.
+      */
+    def entries(tables: Broadcast[UmlsTables])
+        : (Map[String, Vector[String]], Map[String, (Vector[RecordMention], Vector[RecordTriple])]) =
+      withServerOn(tables) { handle =>
+        withConn(handle.port) { c =>
+          val t = tables.value
+          val seen = scala.collection.mutable.Map.empty[String, Vector[String]]
+          def saw(entry: String, rows: Iterable[Any]): Unit =
+            seen(entry) = seen.getOrElse(entry, Vector.empty) ++ rows.map(_.toString)
+          def post(path: String, id: String, flags: Seq[String], body: String): String = {
+            val q = if (flags.isEmpty) "" else "&flags=" + flags.mkString("%20")
+            c.send(postReq(s"$path?id=$id$q", body))
             val (code, resp) = c.read()
             assert(code == 200, resp)
             resp
           }
-          assert(body("mmo") == mmo(url).mkString("", "\n", "\n"), url)
-          assert(body("jsonf") == jsonf(url).mkString("[", ",", "]"), url)
-          assert(body("xmlf") == xmlf(url).mkString("<MMOs>", "", "</MMOs>"), url)
+          val outputs = profiles.map { flags =>
+            val opts = Graft.parseFlags(flags)
+            val lib: Vector[RecordMention] = Graft.annotate(df, "id", "body", tables, opts)
+              .as[graft.link.Mention].collect().toVector.map(record)
+            val libT = Graft.triples(df, "id", "body", tables, opts)
+              .as[(String, String, String, String, Int)].collect().toVector
+            // a fresh session per profile: re-registering graft_* on one
+            // session would replace its functions
+            val session = spark.newSession()
+            Graft.registerSql(session, tables, opts)
+            session.createDataFrame(docs).toDF("id", "body").createOrReplaceTempView("rp_docs")
+            val sql = session.sql(
+              "SELECT graft_mentions(id, body) AS ms, graft_triples(id, body) AS ts FROM rp_docs")
+              .collect().toVector
+            val sqlM: Vector[RecordMention] = sql.flatMap(_.getSeq[org.apache.spark.sql.Row](0)).map(r =>
+              (String.valueOf(r.getAs[String]("url")), r.getAs[Int]("sentNo"), r.getAs[Int]("start"),
+                r.getAs[Int]("len"), r.getAs[String]("cui"), r.getAs[Int]("score"),
+                r.getAs[Boolean]("negated")))
+            val sqlT: Vector[RecordTriple] = sql.flatMap(_.getSeq[org.apache.spark.sql.Row](1)).map(r =>
+              (r.getString(0), r.getString(1), r.getString(2), r.getString(3), r.getInt(4)))
+            val srvM: Vector[RecordMention] = docs.flatMap { case (id, body) =>
+              rows(post("/annotate", Option(id).getOrElse(""), flags, body)).map(n =>
+                (n.get("url").asText, n.get("sentNo").asInt, n.get("start").asInt,
+                  n.get("len").asInt, n.get("cui").asText, n.get("score").asInt,
+                  n.get("negated").asBoolean))
+            }.toVector
+            val srvT: Vector[RecordTriple] = docs.flatMap { case (id, body) =>
+              rows(post("/triples", Option(id).getOrElse(""), flags, body)).map(n =>
+                (n.get("subj_cui").asText, n.get("pred").asText, n.get("obj_cui").asText,
+                  n.get("url").asText, n.get("sentNo").asInt))
+            }.toVector
+            val name = if (flags.isEmpty) "default" else flags.mkString(" ")
+            val m = lib.sorted
+            assert(m.nonEmpty, name)
+            assert(m == docs.flatMap { case (id, body) => DocKernel.annotate(id, body, t, opts) }
+              .map(record).sorted, s"$name: annotate vs DocKernel.annotate")
+            assert(sqlM.sorted == m, s"$name: graft_mentions ${sqlM.sorted} vs annotate $m")
+            assert(srvM.sorted == m, s"$name: /annotate ${srvM.sorted} vs annotate $m")
+            val t3 = libT.sorted
+            assert(t3 == docs.flatMap { case (id, body) => DocTriples.fromText(id, body, t, opts) }
+              .sorted, s"$name: triples vs DocTriples.fromText")
+            assert(sqlT.sorted == t3, s"$name: graft_triples ${sqlT.sorted} vs triples $t3")
+            assert(srvT.sorted == t3, s"$name: /triples ${srvT.sorted} vs triples $t3")
+            saw("annotate", m); saw("triples", t3); saw("graft_mentions", sqlM)
+            saw("graft_triples", sqlT); saw("server", srvM ++ srvT)
+            name -> ((m, t3))
+          }.toMap
+
+          val termsM = Graft.annotateTerms(terms.toDF("id", "term"), "id", "term", tables)
+            .as[graft.link.Mention].collect().toVector.map(record).sorted
+          assert(termsM == terms.flatMap { case (id, term) =>
+            DocKernel.annotate(id, term, t, LinkOptions(termProcessing = true))
+          }.map(record).sorted)
+
+          // the page entries take the same record path: Pipeline.run,
+          // runShuffled, the stream and Graft.triples give the pages'
+          // DocTriples.fromText rows, Pipeline.mentions and Graft.annotate
+          // their DocKernel.annotate rows, and the Spark MMO/JSONf/XMLf
+          // writers' rows are the server's bodies
+          def fromPages(ps: Seq[Page]): Vector[RecordTriple] = ps.filter(_.lang == "en")
+            .flatMap(p => DocTriples.fromText(p.url, Extract.htmlToText(p.html), t, LinkOptions.default))
+            .toVector.sorted
+          val runT = triplesOf(Pipeline.run(pages, tables))
+          assert(runT == fromPages(pageRows))
+          assert(triplesOf(Pipeline.runShuffled(pages, tables)) == runT)
+          assert(triplesOf(Graft.triples(cells, "url", "text", tables)) == runT)
+          val streamT = triplesOf(StreamingPipeline.runBounded(spark, nStream, tables))
+          assert(streamT == fromPages(pageRows.take(nStream)))
+          val pageMs = Pipeline.mentions(pages, tables)
+          val pageM = pageMs.toDF()
+          assert(pageMs.collect().map(_.toString).sorted.toVector == english.flatMap(p =>
+            DocKernel.annotate(p.url, Extract.htmlToText(p.html), t, LinkOptions.default))
+            .map(_.toString).sorted)
+          assert(strings(pageM) == strings(Graft.annotate(cells, "url", "text", tables)))
+          assert(pageM.filter($"url" === "").count() > 0 && pageM.filter($"url".isNull).count() == 0)
+          // the graph: the triples rolled up, named from `tables`
+          def name(cui: String) = t.cuiPreferred.getOrElse(cui, cui)
+          val graph = Graft.graph(cells, "url", "text", tables)
+            .select("subj_cui", "pred", "obj_cui", "n_evidence", "n_docs", "subj_name", "obj_name")
+            .as[(String, String, String, Long, Long, String, String)].collect().toVector.sorted
+          assert(graph == runT.groupBy(r => (r._1, r._2, r._3)).toVector.map { case ((s, p, o), rs) =>
+            (s, p, o, rs.size.toLong, rs.map(_._4).distinct.size.toLong, name(s), name(o))
+          }.sorted)
+          def grouped(df: DataFrame): Map[String, Vector[String]] =
+            df.collect().toVector.groupBy(_.getString(0)).map { case (u, rs) =>
+              u -> rs.sortBy(r => if (r.length > 2) r.getInt(1) else 0).map(r => r.getString(r.length - 1))
+            }
+          val mmo = grouped(graft.output.MmoOutput.mmoLines(pages, tables))
+          val jsonf = grouped(graft.output.JsonMmoOutput.jsonDocs(pages, tables))
+          val xmlf = grouped(graft.output.XmlMmoOutput.xmlDocs(pages, tables))
+          assert(Seq(mmo, jsonf, xmlf).forall(_.keySet == english.map(p => Option(p.url).getOrElse("")).toSet))
+          english.foreach { p =>
+            val url = Option(p.url).getOrElse("")
+            def body(format: String): String = {
+              c.send(postReq(s"/annotate?id=${java.net.URLEncoder.encode(url, "UTF-8")}&format=$format",
+                Extract.htmlToText(p.html)))
+              val (code, resp) = c.read()
+              assert(code == 200, resp)
+              resp
+            }
+            assert(body("mmo") == mmo(url).mkString("", "\n", "\n"), url)
+            assert(body("jsonf") == jsonf(url).mkString("[", ",", "]"), url)
+            assert(body("xmlf") == xmlf(url).mkString("<MMOs>", "", "</MMOs>"), url)
+          }
+
+          saw("annotateTerms", termsM); saw("run", runT); saw("stream", streamT)
+          saw("mentions", strings(pageM)); saw("graph", graph)
+          saw("mmo", mmo.values.flatten); saw("jsonf", jsonf.values.flatten)
+          saw("xmlf", xmlf.values.flatten)
+          (seen.toMap, outputs)
         }
       }
+
+    val (fixture, outputs) = entries(umls)
+    assert(fixture("run").exists(_.matches(".*,,\\d+\\)"))) // the null-url page's triple
+    // the profiles really differ: segmentation qualifies urls and
+    // breaks the cross-line AA, -z links terms
+    val default = outputs("default")._1
+    Seq("--sldi", "--sldiID", "--blanklines 1", "-z").foreach { p =>
+      assert(outputs(p)._1 != default, p)
     }
+    // line 2's CA links through line 1's AA only when both lines are
+    // one record
+    val aaText = docs.head._2
+    assert(outputs("default")._1.exists(m =>
+      m._1 == "aa" && m._3 == aaText.lastIndexOf("CA") && m._4 == 2))
+    assert(!outputs("--sldi")._1.exists(m => m._1 == "aa.1" && m._3 == 3 && m._4 == 2))
+    assert(outputs("default")._2.exists(_._2 == "causes"))
+    assert(outputs("--sldi")._2.exists(_._4 == "tx.0"))
+    // a null id is the empty id at every entry, never null or "null"
+    // (urls above pass through String.valueOf so a null shows as one)
+    assert(outputs("default")._1.exists(_._1 == ""))
+    assert(outputs("--sldi")._1.map(_._1).toSet.intersect(Set(".0", ".1")) == Set(".0", ".1"))
+    assert(!outputs.valuesIterator.exists(_._1.exists(_._1.startsWith("null"))))
+
+    // every entry follows the table set it is handed: on the probe set
+    // the dropped concept is gone from each output and the graph names
+    // the renamed one anew
+    val (probe, _) = entries(probeUmls)
+    assert(probe.keySet == fixture.keySet)
+    fixture.keys.foreach { e =>
+      assert(fixture(e).exists(_.contains(Dropped)), e)
+      assert(!probe(e).exists(_.contains(Dropped)), e)
+    }
+    assert(probe("graph").exists(_.contains(NewName)) && !fixture("graph").exists(_.contains(NewName)))
   }
 }

@@ -210,6 +210,24 @@ class IcebergLiteSpec extends AnyFunSuite with SparkTestBase {
     rm(java.nio.file.Paths.get(root))
   }
 
+  test("crash between task and job commit: the committer's staged files never reach the table") {
+    implicit val s = spark
+    val triples = Pipeline.run(CorpusGen.pages(spark, 150)).cache()
+    val total = triples.count()
+    val scratch = tmpDir()
+    IcebergLite.write(triples, scratch.toString)
+    // the job died after one task commit: its file waits in the output
+    // committer's staging dir, where the next job commit would merge it
+    val root = tmpDir()
+    Leftovers.plant(scratch, root.resolve("data"), bucketDir = false)
+    val snap = IcebergLite.write(triples, root.toString)
+    assert(snap.partitions.map(_.rows).sum == total)
+    assert(IcebergLite.read(spark, root.toString).count() == total)
+    triples.unpersist()
+    rm(scratch)
+    rm(root)
+  }
+
   test("empty committed table reads as an empty view, never throws") {
     implicit val s = spark
     import s.implicits._
@@ -232,6 +250,25 @@ class IcebergLiteSpec extends AnyFunSuite with SparkTestBase {
     Files.createDirectories(root.resolve("batch-tmp")) // operator residue
     assert(IcebergLite.readAll(spark, root.toString).count() == n)
     rm(root)
+  }
+}
+
+/** What a write job killed before its manifest commit leaves in a
+  * table's data dir (IcebergLiteSpec, StreamingSpec): one parquet file of
+  * the table at `from`, in the output committer's staging dir as a
+  * committed task's output and, with `bucketDir`, in its bucket dir.
+  */
+object Leftovers {
+  def plant(from: Path, dataDir: Path, bucketDir: Boolean): Unit = {
+    val bucket = from.resolve("data").toFile.listFiles()
+      .filter(_.getName.startsWith("part_bucket=")).minBy(_.getName)
+    val file = bucket.listFiles().filter(_.getName.endsWith(".parquet")).minBy(_.getName).toPath
+    def put(dir: Path): Unit = {
+      Files.createDirectories(dir)
+      Files.copy(file, dir.resolve(file.getFileName))
+    }
+    put(dataDir.resolve("_temporary/0/task_202601010000_0001_m_000000").resolve(bucket.getName))
+    if (bucketDir) put(dataDir.resolve(bucket.getName))
   }
 }
 

@@ -83,7 +83,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     implicit val s = spark
     val pages = CorpusGen.pages(spark, 150)
     val local = Pipeline.run(pages).collect().map(_.toString).sorted.toVector
-    val shuffled = Pipeline.runShuffled(pages)
+    val shuffled = Pipeline.runShuffled(pages, Pipeline.broadcastUmls(spark))
       .select("subj_cui", "pred", "obj_cui", "url", "sentNo")
       .collect().map(_.toString).sorted.toVector
     assert(local == shuffled)

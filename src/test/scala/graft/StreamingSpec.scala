@@ -76,11 +76,18 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString
+    val pagesVec = (0L until 60L).map(CorpusGen.genPage(_)._1)
+    // a dead earlier attempt of batch 0 left files but no manifest: an
+    // uncommitted bucket dir and a committed task in the committer's
+    // staging dir. The batch's write must drop both.
+    val scratch = java.nio.file.Files.createTempDirectory("graft_stream_scratch")
+    graft.graph.IcebergLite.write(Pipeline.run(spark.createDataset(pagesVec.take(30))),
+      scratch.toString)
+    Leftovers.plant(scratch, java.nio.file.Paths.get(root, "batch-0", "data"), bucketDir = true)
     val stream = MemoryStream[Page]
     val umls = Pipeline.broadcastUmls(spark)
     val triples = StreamingPipeline.triplesStream(stream.toDS(), umls)
     val q = StreamingPipeline.sinkStream(triples, root).start()
-    val pagesVec = (0L until 60L).map(CorpusGen.genPage(_)._1)
     stream.addData(pagesVec.take(30))
     q.processAllAvailable()
     stream.addData(pagesVec.drop(30))
@@ -96,6 +103,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       java.nio.file.Paths.get(root, "batch-0").toString)
     assert(graft.graph.IcebergLite.readAll(spark, root).count() == expected)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    org.apache.commons.io.FileUtils.deleteQuietly(scratch.toFile)
   }
 
   test("windowed graph rollup with watermark runs in append mode") {
