@@ -16,13 +16,22 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `Files.setPosixFilePermissions`, so the files, their modes and the
   * commit protocol stay as they were.
   *
+  * It also writes no `.crc` checksum side files, each one more file to
+  * create and rename at every commit. So a read of a file this program
+  * wrote is not checksum-verified: parquet writes page checksums, but its
+  * reader checks them only when `parquet.page.verify-checksum.enabled`
+  * is set, and nothing here sets it. A file with a `.crc` beside it, such
+  * as one the stock file system wrote, is still verified on read.
+  *
   * Writers pass [[LocalFs.writerOptions]] to `DataFrameWriter.options`.
   * Spark copies writer options into the write job's Hadoop configuration,
   * which the driver's committer and every task of the job use; the keys
   * name the `file` scheme only, so a write to any other file system is
   * unaffected.
   */
-class LocalFs extends LocalFileSystem(new LocalFs.Raw)
+class LocalFs extends LocalFileSystem(new LocalFs.Raw) {
+  setWriteChecksum(false)
+}
 
 object LocalFs {
 

@@ -178,11 +178,7 @@ object Evaluator {
   private def tableEntries(t: Int, id: Int, w: String, umls: UmlsTables)
       : Vector[IndexEntry] =
     if (t == 0) umls.allWordIndex.getOrElse(w, Vector.empty)
-    else {
-      val byId = umls.indexById(t)
-      val es = if (id >= 0 && id < byId.length) byId(id) else null
-      if (es == null) Vector.empty else es
-    }
+    else umls.firstWordIndex.table(t, id)
 
   /** C2 full index selection (determine_table + get_meta_uscs_2,
     * metamap_candidates.pl:298-330; determine_first_word_index,

@@ -32,6 +32,7 @@ import graft.umls.MiniUmls
   * sbt "runMain graft.tools.Measure scale [nPages]"
   * sbt "runMain graft.tools.Measure kgop [rounds]"
   * sbt "runMain graft.tools.Measure tally [subjects] [tasks]"
+  * sbt "runMain graft.tools.Measure tables [nExtra]"
   * }}}
   *
   * `queries` runs each query (default: the bench headline list) 3 times
@@ -54,7 +55,10 @@ import graft.umls.MiniUmls
   * metrics tally retains at a number of distinct subjects (see
   * [[tally]]) and writes `BENCH/tally_heap.json`.
   *
-  * Every mode but `tally` runs `local[c]` with c = SPARK_GRAFT_CPUS, else the JVM's
+  * `tables` measures the fixture table set and `MiniUmls.scaledTables`
+  * (see [[tables]]) and writes `BENCH/tables_heap.json`.
+  *
+  * Every mode but `tally` and `tables` runs `local[c]` with c = SPARK_GRAFT_CPUS, else the JVM's
   * available processors.
   */
 object Measure {
@@ -117,9 +121,11 @@ object Measure {
       kgopChild(level.toInt, sizes.map(_.toLong))
     case "tally" :: rest if rest.length <= 2 =>
       tally(rest.headOption.fold(4400000)(_.toInt), rest.lift(1).fold(64)(_.toInt))
+    case "tables" :: rest if rest.length <= 1 =>
+      tables(rest.headOption.fold(500000)(_.toInt))
     case _ =>
       System.err.println("usage: graft.tools.Measure queries <outDir> [query ...] | " +
-        "scale [nPages] | kgop [rounds] | tally [subjects] [tasks]")
+        "scale [nPages] | kgop [rounds] | tally [subjects] [tasks] | tables [nExtra]")
       sys.exit(2)
   }
 
@@ -527,11 +533,7 @@ object Measure {
     require(subjects > 0 && tasks > 0, s"need subjects and tasks > 0, got $subjects, $tasks")
     val buckets = 32
     def cui(k: Long): String = { val d = k.toString; "C" + "0000000".drop(d.length) + d }
-    def used(): Long = {
-      (1 to 3).foreach(_ => System.gc())
-      java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
-    }
-    val base = used()
+    val base = usedHeap()
     val driver = new IcebergLite.Tally(buckets)
     var mergeNs = 0L
     for (t <- 0 until tasks) {
@@ -545,13 +547,13 @@ object Measure {
       driver.merge(update)
       mergeNs += System.nanoTime() - t0
     }
-    val tallyBytes = used() - base
+    val tallyBytes = usedHeap() - base
     val metrics = driver.value
     require(metrics.map(_.nSubjCuis).sum == subjects, "every subject counted once")
-    val plainBase = used()
+    val plainBase = usedHeap()
     val plain = new java.util.HashSet[String]
     for (k <- 0L until subjects) plain.add(cui(k))
-    val plainBytes = used() - plainBase
+    val plainBytes = usedHeap() - plainBase
     require(plain.size == subjects)
     val mb = (b: Long) => math.round(b / 1e5) / 10.0
     val json = obj("tool" -> "graft.tools.Measure", "mode" -> "tally", "sha" -> sha,
@@ -559,6 +561,75 @@ object Measure {
       "tally_retained_mb" -> mb(tallyBytes), "tally_bytes_per_subject" -> tallyBytes / subjects,
       "merge_ms" -> mergeNs / 1000000, "plain_hashset_mb" -> mb(plainBytes))
     println("[measure] tally " + write(Paths.get("BENCH", "tally_heap.json"), json))
+  }
+
+  // ---- tables --------------------------------------------------------
+
+  /** Used heap after full GCs, in bytes. */
+  private def usedHeap(): Long = {
+    (1 to 3).foreach(_ => System.gc())
+    java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
+  }
+
+  /** What a table set costs the JVM that builds or receives it, for the
+    * fixture (`MiniUmls.build()`) and `MiniUmls.scaledTables(nExtra)`,
+    * in [[Runs]] rounds after one untimed warm-up round: build time, the
+    * heap the set retains (used heap after full GCs, minus the same
+    * before the build; the scaled set shares every table but its index
+    * with the fixture, so its figure is mostly the index), Spark's size
+    * estimate of its first-word index (what a broadcast's memory store
+    * counts), the time to probe every key of the four tables the kernel
+    * reads by id and the heap retained after it (the most the index's
+    * per-key memo can hold, traffic that probes every key), and its
+    * Java-serialized size with serialize and deserialize times.
+    */
+  private def tables(nExtra: Int): Unit = {
+    require(nExtra >= 0, s"need nExtra >= 0, got $nExtra")
+    val sets: Seq[(String, () => graft.umls.UmlsTables)] = Seq(
+      "fixture" -> (() => MiniUmls.build()),
+      s"scaled_$nExtra" -> (() => MiniUmls.scaledTables(nExtra)))
+    MiniUmls.tables
+    def secs(ns: Long): Double = math.round(ns / 1e6) / 1e3
+    val mb = (b: Long) => math.round(b / 1e5) / 10.0
+    def round(mk: () => graft.umls.UmlsTables): (ListMap[String, Any], Long) = {
+      val before = usedHeap()
+      val t0 = System.nanoTime()
+      val t = mk()
+      val buildNs = System.nanoTime() - t0
+      val retained = usedHeap() - before
+      val estimate = org.apache.spark.util.SizeEstimator.estimate(t.firstWordIndex)
+      val p0 = System.nanoTime()
+      for (k <- 1 to 4; i <- 0 until t.firstWordIndex.size) t.firstWordIndex.table(k, i)
+      val probeNs = System.nanoTime() - p0
+      val retainedProbed = usedHeap() - before
+      val t1 = System.nanoTime()
+      val bytes = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(t)
+      out.close()
+      val t2 = System.nanoTime()
+      val back = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[graft.umls.UmlsTables]
+      val t3 = System.nanoTime()
+      require(back.firstWordIndex.size == t.firstWordIndex.size, "the round trip keeps every key")
+      (obj("build_s" -> secs(buildNs), "retained_mb" -> mb(retained),
+        "index_estimate_mb" -> mb(estimate), "probe_all_s" -> secs(probeNs),
+        "retained_all_probed_mb" -> mb(retainedProbed), "serialized_mb" -> mb(bytes.size.toLong),
+        "serialize_s" -> secs(t2 - t1), "deserialize_s" -> secs(t3 - t2)),
+        t.firstWordIndex.valuesIterator.map(_.length.toLong).sum)
+    }
+    sets.foreach { case (_, mk) => round(mk) } // warm-up
+    val rows = sets.map { case (name, mk) =>
+      val rs = (1 to Runs).map(_ => round(mk))
+      val keys = rs.head._1.keys.toSeq
+      obj("table_set" -> name, "index_entries" -> rs.head._2,
+        "median" -> ListMap(keys.map(k => k -> median(rs.map(_._1(k).asInstanceOf[Double]))): _*),
+        "rounds" -> rs.map(_._1))
+    }
+    val json = obj("tool" -> "graft.tools.Measure", "mode" -> "tables", "sha" -> sha,
+      "cores" -> Runtime.getRuntime.availableProcessors, "n_extra" -> nExtra,
+      "jvm_max_heap_mb" -> mb(Runtime.getRuntime.maxMemory), "table_sets" -> rows)
+    println("[measure] tables " + write(Paths.get("BENCH", "tables_heap.json"), json))
   }
 
   private def deleteTree(p: Path): Unit = if (Files.exists(p)) {

@@ -173,30 +173,6 @@ final case class UmlsTables(
     a
   }
 
-  /** The index tables of `graft.link.Evaluator.tableFor`'s positions 1-4
-    * by word id: of_one and of_two ([[firstWordsOfOne]],
-    * [[firstWordsOfTwo]]), first_words ([[firstWordIndex]]) and
-    * first_wordsb ([[firstWordsB]]). An entry vector no filter changes is
-    * shared, and first_words is the [[WordIndex]]'s own array. Null or
-    * past the end: no entries.
-    */
-  @transient lazy val indexById: Array[Array[Vector[IndexEntry]]] = {
-    val full = firstWordIndex.entriesByPos
-    def derive(f: (Int, Vector[IndexEntry]) => Vector[IndexEntry]) =
-      Array.tabulate(full.length)(i => if (full(i) == null) null else f(i, full(i)))
-    Array(null,
-      derive((_, es) => UmlsTables.keep(es)(_.nmWords.length == 1)),
-      derive((_, es) => UmlsTables.keep(es)(_.nmWords.length <= 2)),
-      full,
-      derive { (i, es) =>
-        if (!hasFlag(i, UmlsTables.HotFirst)) es
-        else {
-          val hot = frequentFirstWordPairs(dict.word(i))
-          UmlsTables.keep(es)(e => !(e.nmWords.length >= 2 && hot.contains(e.nmWords.last)))
-        }
-      })
-  }
-
   /** The semantic network with only preferred relations, st1 -> st2 ->
     * relations (empty lists left out): the triple pairing's licensing
     * lookup, without a tuple key per probe.
@@ -247,47 +223,15 @@ final case class UmlsTables(
       .groupBy(_._1).map { case (w, es) => w -> es.map(_._2) }
   }
 
-  /** C2 narrow word indexes (metamap_candidates.pl:298-330 +
-    * word_index.pl:80-85): strings of exactly one / at most two normalized
-    * words, keyed by first word. Probing these instead of first_words when
-    * the remaining phrase room caps the matchable string length is a pure
-    * retrieval optimization — result parity is asserted in KernelSpec.
-    * (first_words_of_two must include 1-word strings or mid-phrase words
-    * would lose their single-word concepts.) By word, for inspection: the
-    * kernel reads them by id ([[indexById]]).
-    */
-  @transient lazy val firstWordsOfOne: Map[String, Vector[IndexEntry]] = indexByWord(1)
-
-  @transient lazy val firstWordsOfTwo: Map[String, Vector[IndexEntry]] = indexByWord(2)
-
-  /** The non-empty entry vectors of [[indexById]] table `t`, by word. */
-  private def indexByWord(t: Int): Map[String, Vector[IndexEntry]] = {
-    val byId = indexById(t)
-    firstWordIndex.keysIterator.map(w => w -> byId(dict.id(w))).filter(_._2.nonEmpty).toMap
-  }
-
   /** frequent_first_word_pair/2 analogue
     * (metamap/frequent_first_word_pair.pl:39-116): (first word -> last
     * words) of multiword normalized strings occurring at least
     * [[UmlsTables.FrequentPairCutoff]] times in the index. The reference
     * curates a static 79-pair table from Metathesaurus frequency stats;
-    * here the same definition is computed from the index at build time.
+    * here the same definition is computed from the index, once per
+    * index copy ([[WordIndex.frequentPairs]]).
     */
-  @transient lazy val frequentFirstWordPairs: Map[String, Set[String]] =
-    firstWordIndex.valuesIterator.flatten
-      .filter(_.nmWords.length >= 2)
-      .toVector.groupBy(e => (e.nmWords.head, e.nmWords.last))
-      .collect { case ((w1, w2), es) if es.length >= UmlsTables.FrequentPairCutoff => (w1, w2) }
-      .groupBy(_._1).map { case (w1, ps) => w1 -> ps.map(_._2).toSet }
-
-  /** first_wordsb (word_index.pl:83; metamap_candidates.pl:371-387):
-    * first_words MINUS strings of the form <w1> ... <w2> for a frequent
-    * pair (w1, w2) — the reference's own hot-key defense. Probed instead
-    * of first_words whenever no gathered variant could complete a frequent
-    * pair (determine_first_word_index), so the skipped entries provably
-    * could not have matched. By word, like [[firstWordsOfOne]].
-    */
-  @transient lazy val firstWordsB: Map[String, Vector[IndexEntry]] = indexByWord(4)
+  def frequentFirstWordPairs: Map[String, Set[String]] = firstWordIndex.frequentPairs
 
   /** Multiword lexicon forms (variant generators), tokenized. */
   private def multiwordForms: Iterable[Vector[String]] =
@@ -327,10 +271,6 @@ object UmlsTables {
   val StopPhraseFirst = 4
   val SplitWord = 8
   val HotFirst = 16
-
-  /** `es` filtered by `p`, the same vector when `p` keeps every entry. */
-  private def keep(es: Vector[IndexEntry])(p: IndexEntry => Boolean): Vector[IndexEntry] =
-    if (es.forall(p)) es else es.filter(p)
 }
 
 /** Deterministic synthetic mini-Metathesaurus + lexicon (FIXTURES.md §2).
@@ -746,8 +686,13 @@ object MiniUmls {
       WordIndex.from(base.firstWordIndex.valuesIterator.flatten ++ extra))
   }
 
-  /** Assemble the full broadcastable table set. */
-  lazy val tables: UmlsTables = {
+  /** The full broadcastable table set, assembled once per JVM. */
+  lazy val tables: UmlsTables = build()
+
+  /** Assemble the full broadcastable table set anew (`graft.tools.Measure
+    * tables` times it; everything else reads [[tables]]).
+    */
+  def build(): UmlsTables = {
     val entries = for {
       (cui, pref, _, strs) <- concepts
       s <- strs

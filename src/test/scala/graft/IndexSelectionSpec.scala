@@ -38,21 +38,24 @@ class IndexSelectionSpec extends AnyFunSuite {
     }.toMap
   }
 
+  // index table `k` (Evaluator.tableFor's position) of word `w`, as the
+  // kernel probes it
+  private def table(k: Int, w: String) = t.firstWordIndex.table(k, t.dict.id(w))
+
   test("narrow index contents: of_one, of_two, frequent pairs, first_wordsb") {
-    assert(t.firstWordsOfOne("heart").forall(_.nmWords.length == 1))
-    assert(t.firstWordsOfOne("heart").exists(_.cui == "C0018787"))
-    assert(t.firstWordsOfTwo("heart").forall(_.nmWords.length <= 2))
+    assert(table(1, "heart").forall(_.nmWords.length == 1))
+    assert(table(1, "heart").exists(_.cui == "C0018787"))
+    assert(table(2, "heart").forall(_.nmWords.length <= 2))
     // "shortness of breath" (3 words) must be excluded from of_two
     assert(t.firstWordIndex("shortness").exists(_.nmWords.length == 3))
-    assert(!t.firstWordsOfTwo.getOrElse("shortness", Vector.empty)
-      .exists(_.nmWords.length == 3))
+    assert(!table(2, "shortness").exists(_.nmWords.length == 3))
     // the staging fixture is the only frequent pair
     assert(t.frequentFirstWordPairs == Map("stage" -> Set("lymphoma")))
     // first_wordsb drops the six hot entries but keeps the 1-word "Stage"
     assert(t.firstWordIndex("stage").length == 7)
-    assert(t.firstWordsB("stage").map(_.cui) == Vector("C4000008"))
+    assert(table(4, "stage").map(_.cui) == Vector("C4000008"))
     // non-hot keys are untouched
-    assert(t.firstWordsB("heart") == t.firstWordIndex("heart"))
+    assert(table(4, "heart") == t.firstWordIndex("heart"))
   }
 
   test("probe routing follows determine_table") {

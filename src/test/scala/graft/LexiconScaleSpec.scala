@@ -22,6 +22,12 @@ class LexiconScaleSpec extends AnyFunSuite with SparkTestBase {
     val big = MiniUmls.scaledTables(500000)
     assert(big.firstWordIndex.valuesIterator.map(_.size).sum >=
       small.firstWordIndex.valuesIterator.map(_.size).sum + 500000)
+    // the heap the index itself retains (Spark's estimate, what a
+    // broadcast's memory store counts): about 162 MB as an object per
+    // entry, about 50 MB as encoded records
+    val indexMb = org.apache.spark.util.SizeEstimator.estimate(big.firstWordIndex) / 1e6
+    info(f"scaledTables(500000).firstWordIndex retains $indexMb%.1f MB")
+    assert(indexMb <= 60.0, f"the first-word index grew to $indexMb%.1f MB")
 
     // results on fixture pages are identical (synthetic vocab is disjoint)
     val pages = CorpusGen.pages(spark, 200).collect()

@@ -4,13 +4,13 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, 
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.umls.{IndexEntry, MiniUmls, WordIndex}
+import graft.umls.{IndexEntry, MiniUmls, UmlsIngest, WordIndex}
 
-/** The array-backed first-word index: one construction path with the
-  * canonical per-key order, map semantics, and an exact flat serialized
-  * form.
+/** The compact first-word index: one construction path with the
+  * canonical per-key order, map semantics, a per-key memo that only the
+  * kernel's probes fill, and exact serialized and parquet forms.
   */
-class WordIndexSpec extends AnyFunSuite {
+class WordIndexSpec extends AnyFunSuite with SparkTestBase {
 
   private def roundTrip[T](x: T): T = {
     val bytes = new ByteArrayOutputStream()
@@ -60,5 +60,75 @@ class WordIndexSpec extends AnyFunSuite {
     assert(back.forall { case (k, es) => es.forall(_.nmWords.head eq k) })
     assert(back("café").forall(e => e.concept != e.str || (e.concept eq e.str)))
     assert(roundTrip(WordIndex.from(Nil)).isEmpty)
+  }
+
+  test("a whole-index pass decodes into temporaries; only table probes fill the memo") {
+    val idx = WordIndex.from(fixture)
+    assert(idx.iterator.map(_._2.length).sum == fixture.length)
+    assert(idx.valuesIterator.map(_.length).sum == fixture.length)
+    assert(idx == WordIndex.from(fixture.reverse) && idx.hashCode == WordIndex.from(fixture).hashCode)
+    assert(idx.memoized == 0)
+    assert(idx.table(3, idx.keysIterator.indexOf("heart")) == idx("heart"))
+    assert(idx.memoized == 1)
+    // positions past the keys (dictionary-only words) and -1 have no entries
+    assert(idx.table(3, -1).isEmpty && idx.table(1, idx.size).isEmpty && idx.memoized == 1)
+  }
+
+  test("8 threads making first probes of the same keys get equal vectors") {
+    val expected = WordIndex.from(fixture)
+    val want = (1 to 4).map(t => Vector.tabulate(expected.size)(expected.table(t, _)))
+    val idx = WordIndex.from(fixture)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val got = (0 until 8).map { k =>
+        pool.submit(() => {
+          start.await()
+          // each thread starts at its own key, so first probes collide
+          (1 to 4).map { t =>
+            val res = new Array[Vector[IndexEntry]](idx.size)
+            (0 until idx.size).map(i => (k * 7 + i) % idx.size).foreach(i => res(i) = idx.table(t, i))
+            res.toVector
+          }
+        })
+      }
+      start.countDown()
+      got.foreach(f => assert(f.get() == want))
+    } finally pool.shutdown()
+    assert(idx.memoized == idx.size)
+    // the narrow tables are the full list's prefixes and first_wordsb
+    assert(want(0).zip(want(2)).forall { case (one, full) =>
+      one == full.filter(_.nmWords.length == 1) })
+    assert(want(1).zip(want(2)).forall { case (two, full) =>
+      two == full.filter(_.nmWords.length <= 2) })
+  }
+
+  test("serialized and dump/load round trips keep UTF-8 strings, concepts and the order") {
+    implicit val s = spark
+    val odd = Vector(
+      ("Café au lait", "C7000001", "Café au lait spots"),
+      ("Café au lait macchiato", "C7000002", "Café au lait macchiato"),
+      ("Naïve T-cell, NOS", "C7000003", "Naïve T-cell"),
+      ("Größe", "C7000004", "Größe")).map { case (str, cui, pref) =>
+      IndexEntry(MiniUmls.normalizeString(str), str, cui, pref)
+    }
+    val t = MiniUmls.tables
+    val idx = WordIndex.from(fixture ++ odd)
+    val tables = t.copy(firstWordIndex = idx,
+      cuiPreferred = t.cuiPreferred ++ odd.map(e => e.cui -> e.concept))
+    val counts = idx.valuesIterator.map(_.length).toSet
+    assert(counts.contains(1) && counts.max >= 5, counts)
+    assert(odd.exists(e => e.concept != e.str) && odd.exists(e => e.concept == e.str))
+    assert(odd.forall(_.str.exists(_ > 127)))
+    val dir = java.nio.file.Files.createTempDirectory("wordindex_dump").toString
+    UmlsIngest.dump(tables, dir)
+    val loaded = UmlsIngest.load(dir).firstWordIndex
+    Seq(loaded, roundTrip(idx), roundTrip(loaded)).foreach { back =>
+      assert(back == idx)
+      idx.foreach { case (k, es) => assert(back(k) == es, k) }
+      odd.foreach(e => assert(back(e.nmWords.head).contains(e), e))
+    }
+    assert(loaded(odd(0).nmWords.head).filter(_.cui.startsWith("C7")).map(_.str) ==
+      Vector("Café au lait", "Café au lait macchiato"))
   }
 }
